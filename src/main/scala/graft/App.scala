@@ -35,6 +35,12 @@ object App {
   /** Sink one committed micro-batch: dedup, render checksummed
     * addresses, upsert transactions + contracts (reference: dump task
     * main.rs:88-141).
+    *
+    * `txs` and `contracts` must already be materialized (for instance
+    * by [[TraceEtl.withCommits]]): this takes three actions on them,
+    * the two upserts and the `max(block_number)` of the stats. The
+    * upserts' bound rows are the `results_<chain>` counter; without a
+    * JDBC URL the rendered rows are counted instead.
     */
   def sinkCommits(txs: DataFrame, contracts: DataFrame, sinks: Sinks, chainId: Long): Unit = {
     val txOut = serializeArrays(
@@ -42,22 +48,24 @@ object App {
         Seq("from_address", "to_address"),
         Seq("closest_address", "ec_recover_addresses")),
       Seq("closest_address", "ec_recover_addresses", "ec_pairing_input_sizes"))
+      .selectExpr(Tables.transactionColumns: _*)
     val contractsOut = serializeArrays(
       Tables.renderChecksummed(
         StreamingEtl.dedupContracts(contracts), Seq("address"), Seq.empty),
       Seq("function_signatures", "ec_pairing_input_sizes", "call"))
-    sinks.jdbcUrl.foreach { url =>
-      JdbcUpsert.upsert(txOut.selectExpr(Tables.transactionColumns: _*),
-        url, Tables.transactions, sinks.dialect)
-      JdbcUpsert.upsert(contractsOut.selectExpr(Tables.contractColumns: _*),
-        url, Tables.contracts, sinks.dialect)
+      .selectExpr(Tables.contractColumns: _*)
+    val results = sinks.jdbcUrl match {
+      case Some(url) =>
+        JdbcUpsert.upsert(txOut, url, Tables.transactions, sinks.dialect) +
+          JdbcUpsert.upsert(contractsOut, url, Tables.contracts, sinks.dialect)
+      case None => txOut.count() + contractsOut.count()
     }
     // O2/O6: stats maintained like the reference's stats task
     txs.agg(max("block_number")).collect().headOption
       .flatMap(r => Option(r.get(0)))
       .foreach(m => sinks.stats.setGauge(s"latest_transaction_block_$chainId",
         m.asInstanceOf[Long]))
-    sinks.stats.add(s"results_$chainId", txOut.count() + contractsOut.count())
+    sinks.stats.add(s"results_$chainId", results)
   }
 
   /** Provider-chain path (SRC3/SRC4): poll a block range, flatten,
@@ -70,8 +78,8 @@ object App {
       RpcPoller.fetchBlock(client, n.toLong, chain.indexTx, preTraceSleep))
     if (chain.indexTx) {
       val traces = RpcPoller.tracesFrom(spark, chain.chainId, fetches)
-      val (txs, contracts) = TraceEtl.transform(traces)
-      sinkCommits(txs.toDF(), contracts.toDF(), sinks, chain.chainId)
+      TraceEtl.withCommits(traces)((txs, contracts) =>
+        sinkCommits(txs.toDF(), contracts.toDF(), sinks, chain.chainId))
     }
     if (chain.indexBlock) {
       fetches.lastOption.foreach(f =>

@@ -134,8 +134,9 @@ object TraceEtl {
   }
 
   /** Split a committed stream into the (transactions, contracts)
-    * output tables. Caller should persist `commits` first if both
-    * sides are consumed in the same job.
+    * output tables. Both sides re-run the whole commit unless
+    * `commits` is persisted first: [[withCommits]] does that for a
+    * batch whose sides are consumed by more than one action.
     */
   def split(commits: Dataset[TxCommit]): (Dataset[TransactionOut], Dataset[ContractOut]) = {
     val spark = commits.sparkSession
@@ -143,7 +144,21 @@ object TraceEtl {
     (commits.flatMap(_.transaction), commits.flatMap(_.contracts))
   }
 
-  /** End-to-end batch transform used by entry/bench/foreachBatch. */
+  /** Commit one batch (or micro-batch) once and hand its
+    * (transactions, contracts) to `use`: the commits are persisted, so
+    * every action `use` takes reads them instead of re-running decode,
+    * normalize, prune and aggregate. Released when `use` returns.
+    */
+  def withCommits[A](raw: DataFrame)(
+      use: (Dataset[TransactionOut], Dataset[ContractOut]) => A): A = {
+    val commits = commitTraces(normalize(raw)).persist()
+    try {
+      val (txs, contracts) = split(commits)
+      use(txs, contracts)
+    } finally commits.unpersist()
+  }
+
+  /** End-to-end batch transform used by entry/bench. */
   def transform(raw: DataFrame): (Dataset[TransactionOut], Dataset[ContractOut]) = {
     val commits = commitTraces(normalize(raw))
     split(commits)

@@ -28,7 +28,11 @@ case class UpsertSpec(
   *
   * Dialects: `postgres` emits INSERT .. ON CONFLICT; `derby` emits an
   * equivalent MERGE (used by the in-process integration test, since
-  * Derby ships with Spark).
+  * Derby ships with Spark). Derby's MERGE is only safe from concurrent
+  * partitions with the database booted under
+  * `derby.language.statementCacheSize=0`: with the cache on, every
+  * connection runs one shared compiled plan, and concurrent MERGEs on
+  * distinct keys then fail, lose committed rows or deadlock.
   */
 /** A prepared upsert statement plus the column order its `?`
   * placeholders bind in (dialects differ).
@@ -84,10 +88,13 @@ object JdbcUpsert {
 
   /** Upsert a DataFrame. Executor-side: one connection + prepared
     * statement per partition, addBatch/executeBatch in `batchSize`
-    * chunks, commit per partition.
+    * chunks, commit per partition. Returns the rows bound, counted by
+    * the partitions that committed (rows offered, not rows inserted:
+    * a conflict still counts).
     */
   def upsert(df: DataFrame, url: String, spec: UpsertSpec,
-      dialect: String, batchSize: Int = 1000): Unit = {
+      dialect: String, batchSize: Int = 1000): Long = {
+    val bound = df.sparkSession.sparkContext.longAccumulator
     val stmt = upsertStatement(spec, dialect)
     val cols = spec.columns
     // bind positions: index of each param column in the selected row
@@ -111,6 +118,7 @@ object JdbcUpsert {
         }
         st.executeBatch()
         conn.commit()
+        bound.add(n)
         st.close()
         ok = true
       } finally {
@@ -119,5 +127,6 @@ object JdbcUpsert {
         try conn.close() catch { case _: Throwable => if (ok) throw new RuntimeException("close failed") }
       }
     }
+    bound.value
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model._
-import graft.operators.{TraceTreeAggregator, TreeBuf}
+import graft.operators.{TraceEtl, TraceTreeAggregator, TreeBuf}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -42,6 +42,11 @@ object StreamingEtl {
   /** Stateful sessionizer with event-time semantics: a transaction is
     * committed once the watermark passes its latest trace timestamp
     * plus `gapSeconds`. State per open tx is one TreeBuf.
+    *
+    * Every action a `foreachBatch` callback takes on the emitted batch
+    * re-runs the stateful operator. Persist the batch before handing
+    * its [[TraceEtl.split]] to `App.sinkCommits`, which takes three
+    * actions, and unpersist it after.
     */
   def sessionCommit(traces: Dataset[TraceRow],
       gapSeconds: Long = 30L,
@@ -84,16 +89,17 @@ object StreamingEtl {
         GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Micro-batch path: run the batch core per micro-batch and hand the
-    * (transactions, contracts) pair to the sink callback.
+  /** Micro-batch path: run the batch core once per micro-batch and
+    * hand the (transactions, contracts) pair to the sink callback. The
+    * pair reads persisted commits ([[TraceEtl.withCommits]]), so each
+    * action the callback takes costs no re-scan of the batch.
     */
   def microBatchCommit(rawTraces: DataFrame,
       sink: (Dataset[TransactionOut], Dataset[ContractOut], Long) => Unit) = {
     rawTraces.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val (txs, contracts) = graft.operators.TraceEtl.transform(batch)
-        sink(txs, contracts, id)
+        TraceEtl.withCommits(batch)((txs, contracts) => sink(txs, contracts, id))
       }
   }
 

@@ -44,30 +44,7 @@ class AppSpec extends SparkSpec {
 
   test("mini app run: poll -> commit -> checksummed upsert -> health") {
     val node = startStubNode()
-    val url = "jdbc:derby:memory:appdb;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    conn.createStatement().execute(
-      "CREATE TABLE transactions (" +
-        graft.sinks.Tables.transactionColumns.map {
-          case c @ ("chain_id" | "transaction_index" | "block_number" | "block_timestamp" |
-            "gas_used_total" | "gas_used_first_degree" | "gas_used_second_degree" |
-            "ec_recover_count" | "ec_add_count" | "ec_mul_count" | "ec_pairing_count") =>
-            s""""$c" BIGINT"""
-          case c @ ("closest_address" | "ec_pairing_input_sizes" | "ec_recover_addresses") =>
-            s""""$c" VARCHAR(2000)"""
-          case c => s""""$c" VARCHAR(2000)"""
-        }.mkString(", ") +
-        """, PRIMARY KEY ("chain_id", "transaction_hash"))""")
-    conn.createStatement().execute(
-      "CREATE TABLE contracts (" +
-        graft.sinks.Tables.contractColumns.map {
-          case c @ ("chain_id" | "degree" | "ec_recover_count" | "ec_add_count" |
-            "ec_mul_count" | "ec_pairing_count") => s""""$c" BIGINT"""
-          case c => s""""$c" VARCHAR(2000)"""
-        }.mkString(", ") +
-        """, PRIMARY KEY ("chain_id", "address", "function_signatures"))""")
-    conn.close()
-
+    val url = SinkFixtures.derbySink("appdb")
     try {
       val chain = ProviderChain(42L, s"http://localhost:${node.getAddress.getPort}/",
         "ws://unused", indexBlock = true, indexTx = true)
@@ -101,5 +78,26 @@ class AppSpec extends SparkSpec {
         assert(body.contains("latest_transaction_block_42"))
       } finally health.stop()
     } finally node.stop(0)
+  }
+
+  test("sinkCommits stats: results are the upserted rows, latest block the batch max") {
+    import spark.implicits._
+    import SinkFixtures.{tx, zkCallee, plainCallee}
+    val raw = SinkFixtures.decoded((
+      tx("0xz1", zkCallee, 7L) ++ tx("0xz2", zkCallee, 9L) ++ tx("0xz3", zkCallee, 9L) ++
+        tx("0xp1", plainCallee, 30L)).toDF())
+    val (txs, contracts) = graft.operators.TraceEtl.transform(raw)
+    val deduped = graft.streaming.StreamingEtl.dedupContracts(contracts.toDF()).count()
+    assert(txs.count() == 3 && contracts.count() > deduped) // the dedup has work to do
+    val expected = txs.count() + deduped
+    val url = SinkFixtures.derbySink("statsdb")
+    for (sinks <- Seq(App.Sinks(Some(url), dialect = "derby"), App.Sinks(None))) {
+      graft.operators.TraceEtl.withCommits(raw)((t, c) =>
+        App.sinkCommits(t.toDF(), c.toDF(), sinks, 5L))
+      assert(sinks.stats.snapshot("results_5") == expected, sinks.jdbcUrl)
+      // non-ZK transactions are pruned: block 30 never reaches the sink
+      assert(sinks.stats.snapshot("latest_transaction_block_5") == 9L, sinks.jdbcUrl)
+    }
+    assert(SinkFixtures.sunkRows(url) == expected)
   }
 }

@@ -41,6 +41,7 @@ class CheckpointSpec extends SparkSpec {
           .agg(count(lit(1)).as("n"))
           .toDF("chain_id", "hash", "n")
         JdbcUpsert.upsert(rows, url, spec, "derby")
+        () // foreachBatch is overloaded, so its body must be Unit
       }.start()
     q1.processAllAvailable()
     q1.stop()
@@ -58,6 +59,7 @@ class CheckpointSpec extends SparkSpec {
           .agg(count(lit(1)).as("n"))
           .toDF("chain_id", "hash", "n")
         JdbcUpsert.upsert(rows, url, spec, "derby")
+        () // foreachBatch is overloaded, so its body must be Unit
       }.start()
     q2.processAllAvailable()
     q2.stop()

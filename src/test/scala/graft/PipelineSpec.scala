@@ -214,9 +214,12 @@ class SinkSpec extends SparkSpec {
     val spec = UpsertSpec("txs", Seq("chain_id", "hash", "gas"),
       Seq("chain_id", "hash"), DoNothing)
     val batch = Seq((1L, "0xa", 10L), (1L, "0xb", 20L)).toDF("chain_id", "hash", "gas")
-    JdbcUpsert.upsert(batch, url, spec, "derby")
-    // re-deliver the same batch (at-least-once) -> no dup, no error
-    JdbcUpsert.upsert(batch, url, spec, "derby")
+    // upsert returns the rows it bound, summed over partitions
+    assert(JdbcUpsert.upsert(batch, url, spec, "derby", batchSize = 1) == 2L)
+    // re-deliver the same batch (at-least-once) -> no dup, no error;
+    // the conflicting rows are still bound
+    assert(JdbcUpsert.upsert(batch, url, spec, "derby") == 2L)
+    assert(JdbcUpsert.upsert(batch.limit(0), url, spec, "derby") == 0L)
     val c1 = java.sql.DriverManager.getConnection(url)
     val rs = c1.createStatement().executeQuery("""SELECT count(*), sum("gas") FROM txs""")
     rs.next()
@@ -224,8 +227,8 @@ class SinkSpec extends SparkSpec {
 
     // overwrite policy updates in place (blocks table semantics)
     val spec2 = spec.copy(policy = Overwrite)
-    JdbcUpsert.upsert(Seq((1L, "0xa", 99L)).toDF("chain_id", "hash", "gas"),
-      url, spec2, "derby")
+    assert(JdbcUpsert.upsert(Seq((1L, "0xa", 99L)).toDF("chain_id", "hash", "gas"),
+      url, spec2, "derby") == 1L)
     val rs2 = c1.createStatement().executeQuery("""SELECT "gas" FROM txs WHERE "hash" = '0xa'""")
     rs2.next()
     assert(rs2.getLong(1) == 99L)

@@ -94,20 +94,8 @@ class RobustnessSpec extends SparkSpec {
     val spec = UpsertSpec("txs_out", Seq("chain_id", "hash", "rec"),
       Seq("chain_id", "hash"), DoNothing)
 
-    val mem = MemoryStream[(Long, String, String, String, String, Seq[Int], Long)]
-    val raw = mem.toDF().toDF("chain_id", "transaction_hash", "from_address",
-        "to_address", "input", "trace_address", "block_number")
-      .withColumn("transaction_index", lit(0))
-      .withColumn("value", lit("0"))
-      .withColumn("output", lit(null).cast("string"))
-      .withColumn("trace_type", lit("call"))
-      .withColumn("call_type", lit("call"))
-      .withColumn("reward_type", lit(null).cast("string"))
-      .withColumn("gas", lit(10L)).withColumn("gas_used", lit(5L))
-      .withColumn("subtraces", lit(0))
-      .withColumn("error", lit(null).cast("string"))
-      .withColumn("block_timestamp", lit(100L))
-      .withColumn("block_hash", lit("0xb"))
+    val mem = MemoryStream[SinkFixtures.Call]
+    val raw = SinkFixtures.decoded(mem.toDF())
     val q = StreamingEtl.microBatchCommit(raw, (txs, contracts, _) => {
       val rows = txs.toDF().select(col("chain_id"), col("transaction_hash").as("hash"),
         col("ec_recover_count").as("rec"))
@@ -128,6 +116,33 @@ class RobustnessSpec extends SparkSpec {
       assert(rs.getInt(1) == 1 && rs.getLong(2) == 1L)
       c1.close()
     } finally q.stop()
+  }
+
+  test("microBatchCommit -> App.sinkCommits scans each micro-batch at most twice") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import SinkFixtures.{tx, zkCallee, plainCallee}
+    val url = SinkFixtures.derbySink("scanamp")
+    val sinks = App.Sinks(Some(url), dialect = "derby")
+    val zk = Seq("0xz1", "0xz2", "0xz3")
+    val staged = zk.zipWithIndex.flatMap { case (h, i) => tx(h, zkCallee, 10L + i) } ++
+      Seq("0xp1", "0xp2", "0xp3").flatMap(tx(_, plainCallee, 20L))
+    val mem = MemoryStream[SinkFixtures.Call]
+    val q = StreamingEtl.microBatchCommit(SinkFixtures.decoded(mem.toDF()),
+      (txs, contracts, _) => App.sinkCommits(txs.toDF(), contracts.toDF(), sinks, 1L)).start()
+    try {
+      mem.addData(staged)
+      q.processAllAvailable()
+      // the prune's semi-join reads the batch twice; every further read
+      // is the commit re-running for one more sink action
+      val scanned = q.recentProgress.map(_.numInputRows).sum
+      assert(scanned > 0 && scanned <= 2 * staged.size,
+        s"scanned $scanned rows for ${staged.size} staged")
+    } finally q.stop()
+    assert(SinkFixtures.column(url, "transactions", "transaction_hash").sorted == zk)
+    assert(SinkFixtures.column(url, "contracts", "address").nonEmpty)
+    assert(sinks.stats.snapshot("results_1") == SinkFixtures.sunkRows(url))
+    assert(sinks.stats.snapshot("latest_transaction_block_1") == 12L)
   }
 
   test("IVF ANN: recall comparable to LSH path, candidates bounded") {
