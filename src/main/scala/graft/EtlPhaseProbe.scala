@@ -40,17 +40,6 @@ object EtlPhaseProbe {
       val (rtx, rcs) = graft.operators.TraceEtlRelational.transform(TraceEtl.normalize(bronze))
       time("rel_tx")(noop(rtx))
       time("rel_contracts")(noop(rcs))
-      // relational groupBy + udaf-wrapped aggregator: no groupByKey
-      // lambda, so no AppendColumns key-serialization pass
-      time("commit_relgroup") {
-        import org.apache.spark.sql.functions.{col, udaf}
-        val pruned = TraceEtl.pruneNonZk(norm)
-        val fn = udaf(new graft.operators.TraceTreeAggregator(),
-          org.apache.spark.sql.Encoders.product[graft.model.TraceRow])
-        val cols = pruned.toDF().columns.toIndexedSeq.map(col)
-        noop(pruned.groupBy(col("chain_id"), col("transaction_hash"))
-          .agg(fn(cols: _*).as("commit")).select(col("commit.*")))
-      }
     }
     spark.stop()
   }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming load rehearsal — the streaming twin of graft.ScaleRehearsal:
-  * drives the stateful operators (TwsSessionizer, the classic
-  * flatMapGroupsWithState sessionizer, TwsAsof) with a real file
+  * drives the stateful operators (the flatMapGroupsWithState
+  * sessionizer, TwsAsof, TwsNearDup, ...) with a real file
   * stream at sf1 volume and records, per micro-batch: duration, input
   * rows, state-store rows/memory, and the event-time watermark — plus
   * an end-state parity checksum against the batch path (computed
@@ -37,7 +37,7 @@ object StreamRehearsal {
     val sfDir = args.headOption.getOrElse("/root/repo/tmp/sf1")
     val nSlices = if (args.length > 1) args(1).toInt else 20
     // optional scenario filter: comma-separated subset of
-    // 1..8 (e.g. "6" re-runs only the interval joins, "7" the SCD-2
+    // 2..13 (e.g. "6" re-runs only the interval joins, "7" the SCD-2
     // CDC merge loop, "8" the mergeable sketch streams)
     val only: Int => Boolean =
       if (args.length > 2) args(2).split(',').map(_.toInt).toSet else (_ => true)
@@ -159,10 +159,10 @@ object StreamRehearsal {
       only: Int => Boolean = _ => true): Unit = {
     import spark.implicits._
 
-    // ---- corpus: normalized traces, staged once, shared by both sessionizers
+    // ---- corpus: normalized traces, staged once for the sessionizer
     val norm = TraceEtl.normalize(graft.sources.SyntheticTraces.fromTpch(spark, sfDir))
       .filter(col("transaction_hash").isNotNull && col("block_timestamp").isNotNull)
-    if (only(1) || only(2)) locally {
+    if (only(2)) locally {
     val traceWatch = s"$work/traces_in"
     stageSlices(norm.toDF(), "block_timestamp", nSlices, s"$work/traces_stage", traceWatch)
     val mx = spark.read.parquet(traceWatch).agg(max("block_timestamp")).head().getLong(0)
@@ -204,24 +204,12 @@ object StreamRehearsal {
       assertParity(s"$what contracts", sC, bCDf)
     }
 
-    // ---- 1) transformWithState sessionizer (RocksDB)
-    if (only(1)) locally {
-      val (wall, bs) = drive(
-        graft.streaming.TwsSessionizer.sessionCommit(traceStream, gapSeconds = 1L),
-        s"$work/tws_out", s"$work/tws_ck")
-      report("TwsSessionizer (transformWithState, RocksDB)", wall, bs)
-      sessionParity(s"$work/tws_out", "tws")
-    }
-
-    // ---- 2) classic flatMapGroupsWithState sessionizer
-    if (only(2)) locally {
-      val (wall, bs) = drive(
-        graft.streaming.StreamingEtl.sessionCommit(traceStream, gapSeconds = 1L),
-        s"$work/fmgws_out", s"$work/fmgws_ck")
-      report("StreamingEtl.sessionCommit (flatMapGroupsWithState)", wall, bs)
-      sessionParity(s"$work/fmgws_out", "fmgws")
-    }
-
+    // ---- 2) flatMapGroupsWithState sessionizer
+    val (wall, bs) = drive(
+      graft.streaming.StreamingEtl.sessionCommit(traceStream, gapSeconds = 1L),
+      s"$work/fmgws_out", s"$work/fmgws_ck")
+    report("StreamingEtl.sessionCommit (flatMapGroupsWithState)", wall, bs)
+    sessionParity(s"$work/fmgws_out", "fmgws")
     }
 
     // ---- shared (key, tag, id, ts, event_time) sliced replay input:

@@ -92,12 +92,14 @@ case class TraceRow(
 )
 
 /** Slim row fed to the fused aggregation after relational
-  * pre-computation of the per-trace scalars: the selector, pairing
-  * byte length, and recovered address are codegen'd column
-  * expressions, and the heavy payload strings (input/output/value/
-  * hashes) survive only inside the `root` struct of root rows —
+  * pre-computation of the per-trace scalars (`TraceEtl.prepare`): the
+  * selector, pairing byte length, and recovered address are codegen'd
+  * column expressions, and the heavy payload strings (input/output/
+  * value/hashes) survive only inside the `root` struct of root rows —
   * non-root rows shrink ~4x, which is what the typed path
-  * deserializes and the partial aggregation iterates.
+  * deserializes and the partial aggregation iterates. It is the input
+  * of both folds: the batch commit's aggregation and the
+  * sessionizer's state operator (`StreamingEtl.sessionCommit`).
   */
 case class AggRow(
     chain_id: Long,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Batch/micro-batch trace pipeline: normalized traces in, committed
@@ -77,15 +77,22 @@ object TraceEtl {
     * recovered address) become codegen'd column expressions, and the
     * heavy payload strings survive only inside root rows' `root`
     * struct — so the typed path deserializes ~4x-slimmer rows and the
-    * shuffle carries no dead payload. Shares its scalar expressions
-    * with [[TraceEtlRelational]], which the differential specs pin to
-    * the JVM-side [[TraceOps]] semantics.
+    * shuffle carries no dead payload. The scalar expressions are the
+    * ones [[TraceEtlRelational]] uses, so the differential specs pin
+    * the fused and relational commits to one definition of each.
+    * `StreamingEtl.sessionCommit` projects the same [[prepareColumns]]
+    * into its state operator's input.
     */
   def prepare(traces: Dataset[TraceRow]): Dataset[AggRow] = {
     val spark = traces.sparkSession
     import spark.implicits._
+    traces.select(prepareColumns: _*).as[AggRow]
+  }
+
+  /** The [[AggRow]] columns [[prepare]] selects, over a [[TraceRow]] frame. */
+  def prepareColumns: Seq[Column] = {
     import TraceEtlRelational.{byteLen, recovered, selectorWithTo}
-    traces.select(
+    Seq(
       col("chain_id"),
       col("transaction_hash"),
       col("from_address"),
@@ -101,7 +108,7 @@ object TraceEtl {
         col("transaction_index"), col("from_address"), col("to_address"),
         col("value"), col("input"), col("gas_used"), col("block_number"),
         col("block_timestamp"), col("block_hash"), col("error"))).as("root"),
-    ).as[AggRow]
+    )
   }
 
   /** The fused per-tx commit: one shuffle on (chain_id, tx_hash),
@@ -113,21 +120,6 @@ object TraceEtl {
     val in = traces.filter(col("transaction_hash").isNotNull).as[TraceRow]
     val pruned = if (prefilter) pruneNonZk(in) else in
     prepare(pruned)
-      .groupByKey(t => (t.chain_id, t.transaction_hash))
-      .agg(new SlimTraceTreeAggregator().toColumn.name("commit"))
-      .map(_._2)
-  }
-
-  /** The pre-`prepare` formulation (full TraceRow into the typed
-    * aggregator) — kept as the differential reference for the slim
-    * path.
-    */
-  def commitTracesClassic(traces: Dataset[TraceRow], prefilter: Boolean = true): Dataset[TxCommit] = {
-    val spark = traces.sparkSession
-    import spark.implicits._
-    val in = traces.filter(col("transaction_hash").isNotNull).as[TraceRow]
-    val pruned = if (prefilter) pruneNonZk(in) else in
-    pruned
       .groupByKey(t => (t.chain_id, t.transaction_hash))
       .agg(new TraceTreeAggregator().toColumn.name("commit"))
       .map(_._2)

@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
   * ops (G1 groupBy + A1-A9 aggregates + J1-J6 joins), exactly as laid
   * out in SURVEY §2.5/§2.6. Used for differential testing of the fused
   * aggregator and as the Catalyst-optimizable reference formulation.
+  * Its per-trace scalar expressions (`selectorWithTo`, `byteLen`,
+  * `recovered`) are the only definitions of P6-P8: [[TraceEtl.prepare]]
+  * feeds the fused aggregator with the same ones.
   *
   * All joins after the J1 prune are per-transaction equi-joins on
   * (chain_id, transaction_hash[, address]) over heavily-reduced
@@ -24,7 +27,7 @@ object TraceEtlRelational {
     when(c.isNull, 0).otherwise(((length(c) - 2) / 2).cast("int"))
 
   /** P6/P7 as built-in expressions (strict `> 4` quirk preserved). */
-  private[operators] def selectorWithTo(input: Column, to: Column): Column =
+  private[graft] def selectorWithTo(input: Column, to: Column): Column =
     when(to.isin(FirstDegreeFilter: _*), ZeroSelector)
       .when(input.isNull || byteLen(input) <= 4, ZeroSelector)
       .otherwise(concat(lit("0x"), substring(input, 3, 8)))
@@ -34,7 +37,7 @@ object TraceEtlRelational {
       .otherwise(concat(lit("0x"), substring(input, 3, 8)))
 
   /** P8 as built-ins: short output → zero address, else bytes [12,32). */
-  private[operators] def recovered(output: Column): Column =
+  private[graft] def recovered(output: Column): Column =
     when(byteLen(output) < 32, Zero)
       .otherwise(concat(lit("0x"), substring(output, 27, 40)))
 

@@ -24,21 +24,6 @@ object TraceOps {
     if (input == null || hexByteLen(input) <= 4) Addresses.ZeroSelector
     else "0x" + input.substring(2, 10)
 
-  /** Selector masked to zero when the callee is a first-degree filter
-    * precompile (reference: trace_tree.rs:55-65).
-    */
-  def selectorWithTo(input: String, to: String): String =
-    if (to != null && Addresses.FirstDegreeFilter.contains(to)) Addresses.ZeroSelector
-    else selector(input)
-
-  /** ecRecover output → recovered address: outputs shorter than 32
-    * bytes are invalid → zero address; else bytes [12, 32) of the
-    * output (reference: trace_tree.rs:287-301).
-    */
-  def recoveredAddress(output: String): String =
-    if (hexByteLen(output) < 32) Addresses.Zero
-    else "0x" + output.substring(2 + 24, 2 + 64)
-
   /** Deterministic pick among multiple root candidates of one tx
     * (malformed input can carry several `trace_address=[]` rows; a
     * partition-order-dependent "first wins" would make results
@@ -100,7 +85,15 @@ object TreeBuf {
 /** Fused per-transaction commit: one pass over a transaction's traces
   * maintains all five aggregates (reference: trace_tree.rs:247-303
   * `add_trace`), and `finish` derives the transaction + contract rows
-  * (reference: trace_tree.rs:72-245 `commit`).
+  * (reference: trace_tree.rs:72-245 `commit`). The one fold every
+  * commit runs: the batch and micro-batch commit through
+  * [[TraceEtl.commitTraces]], the sessionizer through
+  * `StreamingEtl.sessionCommit`.
+  *
+  * Input is the [[AggRow]] of [[TraceEtl.prepare]]: the per-trace
+  * scalars (masked selector, pairing byte length, recovered address)
+  * are already codegen'd column values, so `reduce` does no string
+  * work and non-root rows carry no payload strings.
   *
   * Spark shape: ONE shuffle on (chain_id, transaction_hash) with
   * map-side partial aggregation — the degree-graph traversal (J2/J3),
@@ -115,92 +108,7 @@ object TreeBuf {
   * cannot be mis-attributed to a neighboring transaction; array
   * outputs are sorted for deterministic comparison.
   */
-class TraceTreeAggregator extends Aggregator[TraceRow, TreeBuf, TxCommit] {
-  import TraceOps._
-
-  override def zero: TreeBuf = TreeBuf.empty
-
-  override def reduce(buf0: TreeBuf, t: TraceRow): TreeBuf = {
-    val buf = if (buf0.chainId.isEmpty)
-      buf0.copy(chainId = Some(t.chain_id), txHash = Option(t.transaction_hash))
-    else buf0
-    val withRoot = if (t.is_root) {
-      val cand = RootInfo(
-        t.transaction_index, t.from_address, t.to_address, t.value,
-        t.input, t.gas_used, t.block_number, t.block_timestamp,
-        t.block_hash, t.error)
-      buf.copy(root = Some(buf.root.fold(cand)(TraceOps.betterRoot(_, cand))))
-    } else buf
-    (t.from_address, t.to_address) match {
-      case (Some(from), Some(to)) =>
-        // reference: trace_tree.rs:249-257 — input=None still records
-        // the zero selector via unwrap_or_default
-        val sig = t.input.map(selectorWithTo(_, to))
-          .getOrElse(Addresses.ZeroSelector)
-        val sigs = withRoot.sigTree.getOrElse(to, Seq.empty)
-        val sigTree =
-          if (sigs.contains(sig)) withRoot.sigTree
-          else withRoot.sigTree.updated(to, sigs :+ sig)
-        val callTree = withRoot.callTree.updatedWith(to) { m =>
-          val inner = m.getOrElse(Map.empty)
-          Some(inner.updated(from, inner.getOrElse(from, 0L) + 1L))
-        }
-        val gas = t.gas_used.getOrElse(0L)
-        val gasTree = withRoot.gasTree.updatedWith(from) { m =>
-          val inner = m.getOrElse(Map.empty)
-          Some(inner.updated(to, inner.getOrElse(to, 0L) + gas))
-        }
-        val pairSizes =
-          if (to == Addresses.EcPairing)
-            withRoot.pairSizes.updatedWith(from) { s =>
-              Some(s.getOrElse(Seq.empty) :+ t.input.map(hexByteLen).getOrElse(0))
-            }
-          else withRoot.pairSizes
-        val recoverAddrs =
-          if (to == Addresses.EcRecover && t.output.nonEmpty) {
-            val a = recoveredAddress(t.output.get)
-            if (withRoot.recoverAddrs.contains(a)) withRoot.recoverAddrs
-            else withRoot.recoverAddrs :+ a
-          } else withRoot.recoverAddrs
-        withRoot.copy(callTree = callTree, gasTree = gasTree,
-          sigTree = sigTree, pairSizes = pairSizes, recoverAddrs = recoverAddrs)
-      case _ => withRoot
-    }
-  }
-
-  override def merge(a: TreeBuf, b: TreeBuf): TreeBuf = TreeBuf(
-    chainId = a.chainId.orElse(b.chainId),
-    txHash = a.txHash.orElse(b.txHash),
-    callTree = TreeBuf.mergeCounts(a.callTree, b.callTree),
-    gasTree = TreeBuf.mergeCounts(a.gasTree, b.gasTree),
-    sigTree = b.sigTree.foldLeft(a.sigTree) { case (acc, (k, v)) =>
-      acc.updated(k, (acc.getOrElse(k, Seq.empty) ++ v).distinct)
-    },
-    pairSizes = b.pairSizes.foldLeft(a.pairSizes) { case (acc, (k, v)) =>
-      acc.updated(k, acc.getOrElse(k, Seq.empty) ++ v)
-    },
-    recoverAddrs = (a.recoverAddrs ++ b.recoverAddrs).distinct,
-    root = (a.root, b.root) match {
-      case (Some(x), Some(y)) => Some(TraceOps.betterRoot(x, y))
-      case (x, y) => x.orElse(y)
-    },
-  )
-
-  override def finish(buf: TreeBuf): TxCommit =
-    TraceTreeAggregator.commit(buf, buf.chainId.getOrElse(-1L), buf.txHash.orNull)
-
-  override def bufferEncoder: Encoder[TreeBuf] = Encoders.product[TreeBuf]
-  override def outputEncoder: Encoder[TxCommit] = Encoders.product[TxCommit]
-}
-
-/** The fused commit over [[AggRow]] (relationally pre-computed
-  * scalars — see [[TraceEtl.prepare]]): same TreeBuf, same `finish`,
-  * but `reduce` consumes the slim row, so no selector/recover string
-  * work happens per row inside the typed path and non-root rows carry
-  * no payload strings. Differential-pinned to [[TraceTreeAggregator]]
-  * (TraceEtlSpec) and to the relational twin (RandomDiffSpec).
-  */
-class SlimTraceTreeAggregator extends Aggregator[AggRow, TreeBuf, TxCommit] {
+class TraceTreeAggregator extends Aggregator[AggRow, TreeBuf, TxCommit] {
 
   override def zero: TreeBuf = TreeBuf.empty
 
@@ -214,6 +122,8 @@ class SlimTraceTreeAggregator extends Aggregator[AggRow, TreeBuf, TxCommit] {
     } else buf
     (t.from_address, t.to_address) match {
       case (Some(from), Some(to)) =>
+        // reference: trace_tree.rs:249-257 — input=None still records
+        // the zero selector via unwrap_or_default
         val sig = t.sig.getOrElse(Addresses.ZeroSelector)
         val sigs = withRoot.sigTree.getOrElse(to, Seq.empty)
         val sigTree =
@@ -244,8 +154,23 @@ class SlimTraceTreeAggregator extends Aggregator[AggRow, TreeBuf, TxCommit] {
     }
   }
 
-  override def merge(a: TreeBuf, b: TreeBuf): TreeBuf =
-    new TraceTreeAggregator().merge(a, b)
+  override def merge(a: TreeBuf, b: TreeBuf): TreeBuf = TreeBuf(
+    chainId = a.chainId.orElse(b.chainId),
+    txHash = a.txHash.orElse(b.txHash),
+    callTree = TreeBuf.mergeCounts(a.callTree, b.callTree),
+    gasTree = TreeBuf.mergeCounts(a.gasTree, b.gasTree),
+    sigTree = b.sigTree.foldLeft(a.sigTree) { case (acc, (k, v)) =>
+      acc.updated(k, (acc.getOrElse(k, Seq.empty) ++ v).distinct)
+    },
+    pairSizes = b.pairSizes.foldLeft(a.pairSizes) { case (acc, (k, v)) =>
+      acc.updated(k, acc.getOrElse(k, Seq.empty) ++ v)
+    },
+    recoverAddrs = (a.recoverAddrs ++ b.recoverAddrs).distinct,
+    root = (a.root, b.root) match {
+      case (Some(x), Some(y)) => Some(TraceOps.betterRoot(x, y))
+      case (x, y) => x.orElse(y)
+    },
+  )
 
   override def finish(buf: TreeBuf): TxCommit =
     TraceTreeAggregator.commit(buf, buf.chainId.getOrElse(-1L), buf.txHash.orNull)

@@ -6,11 +6,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** One streamed trace with its event-time column (block_timestamp as
+/** One streamed trace, prepared for the fold ([[TraceEtl.prepare]]'s
+  * columns), with its event-time column (block_timestamp as
   * timestamp) — the watermark column must live in the Dataset that
   * feeds the stateful operator.
   */
-case class TimedTrace(trace: TraceRow, event_time: java.sql.Timestamp)
+case class TimedRow(row: AggRow, event_time: java.sql.Timestamp)
 
 /** Session state: the aggregation buffer plus the RUNNING max event
   * time across micro-batches. The max must be persisted — a later
@@ -22,7 +23,8 @@ case class SessionBuf(buf: TreeBuf, maxEventMs: Long)
 
 /** Structured-Streaming variants of the per-transaction commit.
   *
-  * Two shapes, per SURVEY §2.9:
+  * Two shapes, per SURVEY §2.9, both folding through the one
+  * [[TraceTreeAggregator]] the batch commit uses:
   *  - [[microBatchCommit]]: reuse the batch core inside foreachBatch —
   *    correct whenever a tx's traces land in one micro-batch (the
   *    reference's own assumption: a tx is contiguous in the stream).
@@ -54,7 +56,7 @@ object StreamingEtl {
     val spark = traces.sparkSession
     import spark.implicits._
 
-    def update(key: (Long, String), rows: Iterator[TimedTrace],
+    def update(key: (Long, String), rows: Iterator[TimedRow],
         state: GroupState[SessionBuf]): Iterator[TxCommit] = {
       if (state.hasTimedOut) {
         val out = state.getOption
@@ -67,7 +69,7 @@ object StreamingEtl {
         var maxEventMs = prior.map(_.maxEventMs).getOrElse(Long.MinValue)
         val buf = rows.foldLeft(prior.map(_.buf).getOrElse(agg.zero)) { (b, tt) =>
           if (tt.event_time != null) maxEventMs = math.max(maxEventMs, tt.event_time.getTime)
-          agg.reduce(b, tt.trace)
+          agg.reduce(b, tt.row)
         }
         state.update(SessionBuf(buf, maxEventMs))
         val base = if (maxEventMs == Long.MinValue) state.getCurrentWatermarkMs() else maxEventMs
@@ -79,12 +81,11 @@ object StreamingEtl {
 
     traces
       .filter(col("transaction_hash").isNotNull)
-      .withColumn("event_time",
-        coalesce(col("block_timestamp"), lit(0L)).cast("timestamp"))
-      .select(struct(traces.columns.toIndexedSeq.map(col): _*).as("trace"), col("event_time"))
+      .select(struct(TraceEtl.prepareColumns: _*).as("row"),
+        coalesce(col("block_timestamp"), lit(0L)).cast("timestamp").as("event_time"))
       .withWatermark("event_time", watermarkDelay)
-      .as[TimedTrace]
-      .groupByKey(tt => (tt.trace.chain_id, tt.trace.transaction_hash))
+      .as[TimedRow]
+      .groupByKey(tt => (tt.row.chain_id, tt.row.transaction_hash))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming._
   * the stream runs; scenario 12 measures it at sf1). A session closes
   * either INLINE (a later event of the same fold exceeds the gap) or
   * by per-key event-time TIMER once the watermark passes
-  * lastSec + gap — the [[TraceSessionProcessor]] close design with a
+  * lastSec + gap — `StreamingEtl.sessionCommit`'s close design with a
   * sketch instead of a tree buffer. Each closed session emits exactly
   * one sketch row; the estimate finalizes outside the stream with the
   * shared KMV integer formula.
@@ -102,9 +102,8 @@ class KmvSessionProcessor(gapSeconds: Long, k: Int)
         lastSec = math.max(cur.lastSec, e.ts), hs = hs)
     }
     // one live timer per open session, re-armed so it fires
-    // gapSeconds after the LATEST event (the TraceSessionProcessor
-    // pattern — maxEventMs persisted so a later low-ts batch can't
-    // regress it)
+    // gapSeconds after the LATEST event (the sessionCommit pattern —
+    // maxEventMs persisted so a later low-ts batch can't regress it)
     val base = if (maxEventMs == Long.MinValue)
       tv.getCurrentWatermarkInMs() else maxEventMs
     val at = math.max(base + gapSeconds * 1000L,

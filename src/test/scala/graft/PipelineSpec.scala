@@ -163,6 +163,103 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  /** RocksDB state with changelog checkpointing, as the catalog's
+    * streaming entries and perfbench's session path run `sessionCommit`. */
+  private def onRocksDb(body: => Unit): Unit = {
+    val confs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  private def tr(hash: String, from: String, to: String, root: Boolean, ts: Long) =
+    TraceRow(1L, hash, Some(0), Some(from), Some(to), None, Some("0x1234567890"),
+      None, Some(10L), root, Some(1L), Some(ts), Some("0xb"), None)
+
+  test("sessionCommit: state and timers survive a checkpoint restart") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    onRocksDb {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_session_ckpt").toString
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[TxCommit]()
+      val mem = MemoryStream[TraceRow]
+      def startQuery() =
+        StreamingEtl.sessionCommit(mem.toDS(), gapSeconds = 1L, watermarkDelay = "0 seconds")
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode("append")
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[TxCommit], _: Long) =>
+            batch.collect().foreach(got.add)
+          }.start()
+
+      // run 1: open a tx (root + recover call), stop BEFORE its timeout fires
+      val q1 = startQuery()
+      mem.addData(
+        tr("0xr1", "0xa", "0xb", root = true, 1000L),
+        tr("0xr1", "0xa", Addresses.EcRecover, root = false, 1000L))
+      q1.processAllAvailable()
+      q1.stop()
+      assert(got.isEmpty, "tx committed before its gap elapsed")
+
+      // run 2: restart on the same checkpoint; the RocksDB state and
+      // the group's timeout must be restored, so a watermark-advancing
+      // event commits the pre-restart transaction with its full tree
+      val q2 = startQuery()
+      mem.addData(tr("0xtick", "0xa", "0xb", root = true, 50000L))
+      q2.processAllAvailable()
+      mem.addData() // timeout delivery batch
+      q2.processAllAvailable()
+      q2.stop()
+      val committed = got.toArray(Array.empty[TxCommit])
+        .flatMap(_.transaction).filter(_.transaction_hash == "0xr1")
+      assert(committed.length == 1, s"expected 1 commit of 0xr1, got ${committed.length}")
+      assert(committed.head.ec_recover_count == 1L,
+        "pre-restart traces missing from restored state")
+    }
+  }
+
+  test("sessionCommit: out-of-order assembly, timer re-arm, late traces dropped") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    onRocksDb {
+      val mem = MemoryStream[TraceRow]
+      val q = StreamingEtl.sessionCommit(mem.toDS(), gapSeconds = 5L, watermarkDelay = "0 seconds")
+        .writeStream.format("memory")
+        .queryName("session_ooo").outputMode("append").start()
+      try {
+        val rec = Addresses.EcRecover
+        // child before root, across micro-batches; each arrival re-arms
+        // the tx's timeout to last-event + gap
+        mem.addData(tr("0xs1", "0xb", rec, root = false, ts = 1000L))
+        q.processAllAvailable()
+        mem.addData(tr("0xs1", "0xa", "0xb", root = true, ts = 1001L))
+        q.processAllAvailable()
+        assert(spark.table("session_ooo").count() == 0) // timeout not expired yet
+        // advance the watermark past 1001 + 5 s: the timeout fires
+        mem.addData(tr("0xtick1", "0xa", "0xb", root = true, ts = 2000L))
+        q.processAllAvailable()
+        mem.addData(tr("0xtick2", "0xa", "0xb", root = true, ts = 2001L))
+        q.processAllAvailable()
+        val out = spark.sql(
+          "SELECT transaction.* FROM session_ooo WHERE transaction IS NOT NULL").collect()
+        assert(out.length == 1 && out.head.getAs[String]("transaction_hash") == "0xs1")
+        assert(out.head.getAs[Long]("ec_recover_count") == 1L)
+        // a late trace for the committed tx (event time far behind the
+        // watermark) must NOT resurrect it or corrupt a neighbor
+        mem.addData(tr("0xs1", "0xz", rec, root = false, ts = 1002L))
+        q.processAllAvailable()
+        mem.addData(tr("0xtick3", "0xa", "0xb", root = true, ts = 3000L))
+        q.processAllAvailable()
+        val again = spark.sql(
+          "SELECT transaction.* FROM session_ooo WHERE transaction IS NOT NULL " +
+            "AND transaction.transaction_hash = '0xs1'").count()
+        assert(again == 1, s"late trace resurrected the committed tx ($again rows)")
+      } finally q.stop()
+    }
+  }
+
   test("D3 with TTL: watermark-bounded streaming dedup state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -27,15 +27,35 @@ class RobustnessSpec extends SparkSpec {
   } yield TraceRow(1L, hash, idx, Option(from), Option(to), Some("1"),
     input, output, gas, isRoot, Some(1L), Some(100L), Some("0xb"), None)
 
+  private def genTraces(seed: Int, n: Int): Seq[TraceRow] =
+    Gen.listOfN(n, genTrace)(Gen.Parameters.default, Seed(seed.toLong))
+      .getOrElse(fail(s"gen failed at $seed"))
+
+  /** The [[AggRow]]s `TraceEtl.prepare` makes of each seed's traces, in
+    * one collect, paired with the traces they came from (a projection
+    * over a local relation keeps row order).
+    */
+  private def prepared(bySeed: Seq[Seq[TraceRow]]): Seq[Seq[(TraceRow, AggRow)]] = {
+    import spark.implicits._
+    val rows = TraceEtl.prepare(bySeed.flatten.toDS()).collect().iterator
+    val paired = bySeed.map(_.map(t => t -> rows.next()))
+    assert(!rows.hasNext)
+    paired.flatten.foreach { case (t, r) =>
+      assert((r.transaction_hash, r.from_address, r.to_address) ==
+        ((t.transaction_hash, t.from_address, t.to_address)), "prepare reordered rows")
+    }
+    paired
+  }
+
   test("property: merge is split-invariant (partial aggregation exactness)") {
     val agg = new TraceTreeAggregator
-    for (seed <- 0 until 40) {
-      val traces = Gen.listOfN(20, genTrace)(Gen.Parameters.default, Seed(seed.toLong))
-        .getOrElse(fail(s"gen failed at $seed"))
-        .filter(_.transaction_hash == "0xh1")
-      val whole = traces.foldLeft(agg.zero)(agg.reduce)
-      for (splitAt <- Seq(1, traces.length / 2, math.max(traces.length - 1, 1))) {
-        val (a, b) = traces.splitAt(splitAt)
+    val seeds = 0 until 40
+    val bySeed = prepared(seeds.map(genTraces(_, 20).filter(_.transaction_hash == "0xh1")))
+    for ((seed, pairs) <- seeds.zip(bySeed)) {
+      val rows = pairs.map(_._2)
+      val whole = rows.foldLeft(agg.zero)(agg.reduce)
+      for (splitAt <- Seq(1, rows.length / 2, math.max(rows.length - 1, 1))) {
+        val (a, b) = rows.splitAt(splitAt)
         val merged = agg.merge(
           a.foldLeft(agg.zero)(agg.reduce), b.foldLeft(agg.zero)(agg.reduce))
         val (cw, cm) = (agg.finish(whole), agg.finish(merged))
@@ -48,12 +68,12 @@ class RobustnessSpec extends SparkSpec {
 
   test("property: commit invariants on random trees") {
     val agg = new TraceTreeAggregator
-    for (seed <- 100 until 140) {
-      val traces = Gen.listOfN(25, genTrace)(Gen.Parameters.default, Seed(seed.toLong))
-        .getOrElse(fail(s"gen failed at $seed"))
-      val byTx = traces.groupBy(_.transaction_hash)
-      for ((hash, txTraces) <- byTx) {
-        val buf = txTraces.foldLeft(agg.zero)(agg.reduce)
+    val seeds = 100 until 140
+    val bySeed = prepared(seeds.map(genTraces(_, 25)))
+    for ((seed, pairs) <- seeds.zip(bySeed)) {
+      for ((hash, txPairs) <- pairs.groupBy(_._1.transaction_hash)) {
+        val txTraces = txPairs.map(_._1)
+        val buf = txPairs.map(_._2).foldLeft(agg.zero)(agg.reduce)
         val c = TraceTreeAggregator.commit(buf, 1L, hash)
         val touchesFilter = txTraces.exists(t =>
           t.from_address.isDefined && t.to_address.exists(Addresses.FirstDegreeFilter.contains))

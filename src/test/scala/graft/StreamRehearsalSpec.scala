@@ -1,8 +1,8 @@
 package graft
 
 /** Keeps the streaming load-rehearsal harness green at spec scale: a
-  * 4-slice file-stream run over sf0.001 through all three scenarios
-  * (tws sessionizer, classic sessionizer, streaming as-of), each with
+  * 4-slice file-stream run over sf0.001 through every scenario
+  * (sessionizer, streaming as-of, ...), each with
   * its built-in stream-vs-batch checksum parity gate — `run` throws
   * on any mismatch. The sf1 numbers live in SCALE_STREAM_r07.md; this
   * pins the harness (slice staging, sentinel flush, parity checksums)

@@ -97,23 +97,22 @@ class TraceEtlSpec extends SparkSpec {
     assert(TraceOps.selector("0x61626364") == "0x00000000") // 4-byte exact
     assert(TraceOps.selector("0x6162636465") == "0x61626364")
     assert(TraceOps.selector(null) == "0x00000000")
-    assert(TraceOps.selectorWithTo("0x6162636465", Rec) == "0x00000000")
-    assert(TraceOps.recoveredAddress("0xab") == Addresses.Zero)
-    assert(TraceOps.recoveredAddress(recOut) == recAddr)
-  }
-
-  test("differential: slim prepared aggregator == classic full-row aggregator") {
-    val traces = SyntheticTraces.fromTpch(spark, "/root/testdata/sf0.001")
-    val norm = TraceEtl.normalize(traces)
-    def canon(df: DataFrame): Seq[String] = {
-      val cols = df.columns.sorted
-      df.selectExpr(cols: _*).collect().map(_.toString).toSeq.sorted
-    }
-    val (sTx, sC) = TraceEtl.split(TraceEtl.commitTraces(norm))
-    val (cTx, cC) = TraceEtl.split(TraceEtl.commitTracesClassic(norm))
-    assert(canon(sTx.toDF).nonEmpty)
-    assert(canon(sTx.toDF) == canon(cTx.toDF), "transactions differ")
-    assert(canon(sC.toDF) == canon(cC.toDF), "contracts differ")
+    // the masked selector and recovered address exist only as the
+    // column expressions the commit prepares its rows with
+    import TraceEtlRelational.{recovered, selectorWithTo}
+    import org.apache.spark.sql.functions.lit
+    val r = spark.range(1).select(
+      selectorWithTo(lit("0x6162636465"), lit(Rec)), // precompile callee: masked
+      selectorWithTo(lit("0x61626364"), lit(cA)), //    4-byte exact
+      selectorWithTo(lit("0x6162636465"), lit(cA)),
+      recovered(lit("0xab")), //                        short output
+      recovered(lit(recOut)),
+    ).head()
+    assert(r.getString(0) == "0x00000000")
+    assert(r.getString(1) == "0x00000000")
+    assert(r.getString(2) == "0x61626364")
+    assert(r.getString(3) == Addresses.Zero)
+    assert(r.getString(4) == recAddr)
   }
 
   test("differential: relational plan == fused aggregator on synthetic sf0.001") {
