@@ -36,8 +36,9 @@ object PlanDump {
         // checkpoint collapses it to Scan ExistingRDD
         sys.props.put("graft.plandump.pre", s"$outDir/${name}_$suffix")
         Queries.resetPreDumpSeq()
-        val df = SparkEntry.queries(name)(spark, dir)
-        sys.props.remove("graft.plandump.pre")
+        val df =
+          try SparkEntry.queries(name)(spark, dir)
+          finally sys.props.remove("graft.plandump.pre")
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         java.nio.file.Files.writeString(

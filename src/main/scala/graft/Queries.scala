@@ -41,49 +41,79 @@ object Queries {
     }
   }
 
-  /** Execute `mk` under a temporarily-pinned SMALL shuffle DOP and
-    * return the materialized result — the counter-sized-frame device
-    * the streaming entries use, here for the small BATCH frontier
-    * entries whose every shuffled frame is candidate- or
-    * vocabulary-sized (|queries|·rerank candidate rows, the
-    * vocabulary-bounded LM counts): hash-partitioning a few hundred
-    * rows across the session's 32 reducers is pure task-dispatch
-    * overhead — measured 2× of these entries' wall (ScratchMain r17:
-    * rerank 1.1-1.5 s at DOP 32 vs 0.70-0.74 s at 8; perplexity
-    * 0.72 → 0.55 s). The conf must be live at EXECUTION time, so the
-    * frame is materialized (localCheckpoint) inside the pinned scope
-    * and the session default is restored before returning — later
-    * entries in the same session are untouched. At production scale
-    * the DOP lever is sized from the candidate-frame bound (the
-    * statsJoinDecision pattern), not a constant; 8 is this demo
-    * batch's counter-sized choice.
-    */
-  /** Total staged bytes of `dir`-resident parquet tables — the
-    * size-gate input for [[withSmallShuffle]]. A table is either a
-    * single file or a directory of part files. */
-  private[graft] def tableBytes(dir: String, tables: Seq[String]): Long =
-    tables.map { n =>
-      val f = new java.io.File(s"$dir/$n.parquet")
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
-        .getOrElse(0L)
-    }.sum
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  /** The [[withSmallShuffle]] pin threshold, exposed for the gate
-    * probe (GateProbe) and the scale rehearsal. */
+  /** Run `body` with the session confs `kvs` set, then restore each
+    * key — to its previous value, or unset if it had none — on return
+    * and on throw. The catalog's one conf scope: every override an
+    * entry makes goes through here, so later entries in the session
+    * are untouched. The conf is live while `body` runs; a frame
+    * `body` returns unexecuted plans and runs under the restored
+    * session conf.
+    */
+  private[graft] def withConf[T](s: SparkSession, kvs: (String, String)*)(
+      body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** The small-shuffle pin: DOP 8 and AQE off, for entries whose every
+    * shuffled frame is counter-, candidate- or cardinality-sized
+    * (|queries|·rerank candidates, vocabulary-bounded LM counts,
+    * sketch/histogram state, per-trigger fold frames). Hash-partitioning
+    * a few hundred rows across the session's 32 reducers is pure
+    * task-dispatch overhead — measured 2× of these entries' wall (r17,
+    * COVERAGE.md Round-17: rerank 1.1-1.5 s at DOP 32 vs
+    * 0.70-0.74 s at 8; perplexity 0.72 → 0.55 s) — and AQE's
+    * per-exchange job re-planning is fixed cost with nothing to
+    * re-plan: coalescing 8 tiny partitions or re-deciding a broadcast
+    * static planning already sees buys nothing at this size class
+    * (r19; the q_profile_table precedent). At production scale the
+    * DOP lever is sized from the candidate-frame bound (the
+    * statsJoinDecision pattern), not a constant.
+    */
+  private val SmallPin =
+    Seq(ShufflePartitions -> "8", "spark.sql.adaptive.enabled" -> "false")
+
+  /** Bytes under `path` — a file or a whole directory tree, on any
+    * Hadoop filesystem — or None when the path is missing or cannot be
+    * listed. The size gates' one measure. */
+  private def pathBytes(s: SparkSession, path: String): Option[Long] =
+    scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+    }.toOption
+
+  /** Total staged bytes of `dir`-resident parquet tables (a single file
+    * or a part-file tree each) — the size-gate input for
+    * [[withSmallShuffle]]; None if any table cannot be measured. */
+  private[graft] def tableBytes(s: SparkSession, dir: String,
+      tables: Seq[String]): Option[Long] = {
+    val bytes = tables.map(n => pathBytes(s, s"$dir/$n.parquet"))
+    if (bytes.forall(_.isDefined)) Some(bytes.flatten.sum) else None
+  }
+
+  /** The [[withSmallShuffle]] pin threshold. */
   private[graft] val SmallShuffleMaxBytes: Long = 32L << 20
 
-  /** SIZE-GATED (r19 VERDICT #3) small-shuffle scope: the pin only
-    * engages while the entry's driving input is genuinely small —
-    * above the crossover the scope is a no-op and the session's DOP +
-    * AQE (the adaptive mechanisms a data-sized frame needs) stay in
-    * charge. `tables` names the scope's driving inputs under `dir`
-    * (events for the session sketches, documents for the doc kernels,
-    * embeddings for the ANN family). The 32 MiB threshold brackets
-    * the measured regime: every pinned win was measured at ≤ 11 MiB
-    * of input (ScratchMain r17: rerank 1.1-1.5 → 0.70-0.74 s,
-    * perplexity 0.72 → 0.55 s), and a ScaleRehearsal corpus a decade
-    * up releases the pin (events at 30× ≈ 60 MiB). */
+  /** SIZE-GATED (r19 VERDICT #3) small-shuffle decision: the pin only
+    * engages while the entry's driving input is measured and genuinely
+    * small — above the crossover, or when the input cannot be measured,
+    * the session's DOP + AQE (the adaptive mechanisms a data-sized
+    * frame needs) stay in charge. The 32 MiB threshold brackets the
+    * measured regime: every pinned win was measured at ≤ 11 MiB of
+    * input, and a ScaleRehearsal corpus a decade up releases the pin
+    * (events at 30× ≈ 60 MiB). */
+  private[graft] def smallShufflePinned(s: SparkSession, dir: String,
+      tables: Seq[String]): Boolean =
+    tableBytes(s, dir, tables).exists(_ < SmallShuffleMaxBytes)
+
   /** Plan-evidence hook (r19 VERDICT #5/#9): a localCheckpoint hides
     * the pipeline behind `Scan ExistingRDD` in any later explain, so
     * PlanDump sets `graft.plandump.pre` to a path base and every
@@ -101,95 +131,72 @@ object Queries {
     df.localCheckpoint()
   }
 
+  /** Execute `mk` under [[SmallPin]] when [[smallShufflePinned]] says
+    * its driving inputs are small, and return the materialized result.
+    * `tables` names those inputs under `dir` (events for the session
+    * sketches, documents for the doc kernels, embeddings for the ANN
+    * family). The conf must be live at EXECUTION time, so the frame is
+    * materialized (localCheckpoint) inside the scope. */
   private def withSmallShuffle(s: SparkSession, dir: String,
-      tables: Seq[String], n: Int = 8)(mk: => DataFrame): DataFrame = {
-    if (tableBytes(dir, tables) >= SmallShuffleMaxBytes) {
+      tables: Seq[String])(mk: => DataFrame): DataFrame =
+    if (smallShufflePinned(s, dir, tables))
+      withConf(s, SmallPin: _*)(checkpointWithDump(mk))
+    else {
       System.err.println(s"[small-shuffle] ${tables.mkString(",")} @ $dir " +
-        "above the pin threshold -> session DOP + AQE")
-      return checkpointWithDump(mk)
+        "above the pin threshold or unmeasured -> session DOP + AQE")
+      checkpointWithDump(mk)
     }
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    // AQE off inside the pinned scope (r19; the q_profile_table
-    // precedent): these entries were CHOSEN for counter-/candidate-
-    // sized shuffles, where AQE's per-exchange job re-planning is
-    // fixed cost with nothing to re-plan — coalescing 8 tiny
-    // partitions or re-deciding a broadcast that static planning
-    // already sees buys nothing at this size class
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try checkpointWithDump(mk)
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
 
-  /** Shared conf scope for the RocksDB-state streaming entries:
-    * provider, trackTotalNumberOfRows (the measured write-heavy knob,
-    * SCALE_STREAM_r09.md), state partition count, changelog
-    * checkpointing, and — for the native stream-stream join — the
-    * join state format version. Everything is set BEFORE the stream
-    * starts (partitions pin the store layout at first checkpoint) and
-    * restored after, so later entries in the session are untouched.
-    * Knobs are exposed so a sweep main can drive the EXACT catalog
-    * bodies (the etlStreamTransactionsWith pattern). */
-  /** Size-gated state partition count for the replay streams, from
-    * the staged watch dir's bytes (the flagship's measure-then-pick
-    * gate, SCALE_STREAM_r10.md, extended one rung DOWN by the r20
-    * sweep): every store instance is a RocksDB open + commit PER
-    * MICRO-BATCH, so at sketch-/session-sized inputs 4 stores beat 8
-    * (StreamKnobSweep: asof 4.3→3.6 s, cms session 4.9→4.0 s, the
-    * interval joins 3.7 vs 4.7 s at v2) while the flagship's staged
-    * volume (and anything a decade up) keeps the measured 8/16/32
-    * rungs. Production sizes this to the cluster; the gate encodes
-    * this box's sweep table. */
-  private[graft] def streamPartitionsFor(watch: String): Int = {
-    val bytes = Option(new java.io.File(watch).listFiles())
-      .map(_.filter(_.isFile).map(_.length()).sum).getOrElse(0L)
-    val p = if (bytes < (24L << 20)) 4
-    else if (bytes < (96L << 20)) 8
-    else if (bytes < (480L << 20)) 16
-    else 32
-    System.err.println(
-      s"[stream-gate] $watch: ${bytes >> 20} MiB -> $p state partitions")
+  /** State-partition rungs of the replay streams: (staged bytes below,
+    * partitions); anything larger, or unmeasured, takes [[TopStateRung]].
+    * Every state store is a RocksDB open + commit PER MICRO-BATCH, so
+    * the count tracks the staged volume: 4 stores beat 8 at sketch-/
+    * session-sized inputs (r20: asof 4.3→3.6 s, cms session 4.9→4.0 s,
+    * the interval joins 3.7 vs 4.7 s at v2; SCALE_STREAM_r20.md), 8
+    * beats 16 at sf0.1 flagship volume, 16 wins one decade up and 32
+    * ties/beats 16 at ≥ ~3× that (SCALE_STREAM_r10.md). Production
+    * sizes this to the cluster; the table encodes this box's sweeps. */
+  private val StateRungs = Seq((24L << 20) -> 4, (96L << 20) -> 8,
+    (480L << 20) -> 16)
+  private val TopStateRung = 32
+
+  /** Size-gated state partition count for a replay stream over the
+    * staged `watch` dir, never below `floor`: 4 for the operator
+    * streams, 8 for the flagship (8 wins every provider at sf0.1,
+    * SCALE_STREAM_r10.md). Must be fixed BEFORE the stream starts:
+    * shuffle partitions pin the state-store layout at first
+    * checkpoint. */
+  private[graft] def streamPartitionsFor(s: SparkSession, watch: String,
+      floor: Int = 4): Int = {
+    val bytes = pathBytes(s, watch)
+    val rung = bytes.flatMap(b => StateRungs.collectFirst {
+      case (below, p) if b < below => p
+    }).getOrElse(TopStateRung)
+    val p = math.max(floor, rung)
+    System.err.println(s"[stream-gate] $watch: " +
+      bytes.fold("unmeasured")(b => s"${b >> 20} MiB") + s" -> $p state partitions")
     p
   }
 
+  /** Conf scope of the RocksDB-state streaming entries: provider,
+    * trackTotalNumberOfRows off (it costs a get-before-put per state
+    * write solely for the numRowsTotal metric — measured −2 s of
+    * 15-16 s on the flagship, SCALE_STREAM_r09.md), `partitions` state
+    * partitions, changelog checkpointing, and — for the native
+    * stream-stream join — the join state format version. Set BEFORE
+    * the stream starts and restored after. */
   private[graft] def withStreamStore[T](s: SparkSession, partitions: Int,
-      trackRows: Boolean = false, changelog: Boolean = false,
-      joinFormatVersion: Int = 0)(body: => T): T = {
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val TrackKey =
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val ChangelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val JoinVerKey = "spark.sql.streaming.join.stateFormatVersion"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = s.conf.getOption(ProviderKey)
-    val prevTrack = s.conf.getOption(TrackKey)
-    val prevChangelog = s.conf.getOption(ChangelogKey)
-    val prevJoinVer = s.conf.getOption(JoinVerKey)
-    s.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(TrackKey, trackRows.toString)
-    s.conf.set(ChangelogKey, changelog.toString)
-    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    if (joinFormatVersion > 0)
-      s.conf.set(JoinVerKey, joinFormatVersion.toString)
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      restore(ProviderKey, prevProvider)
-      restore(TrackKey, prevTrack)
-      restore(ChangelogKey, prevChangelog)
-      restore(JoinVerKey, prevJoinVer)
-    }
-  }
+      changelog: Boolean = false, joinFormatVersion: Int = 0)(body: => T): T =
+    withConf(s, Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        changelog.toString,
+      ShufflePartitions -> partitions.toString) ++
+      (if (joinFormatVersion > 0)
+        Seq("spark.sql.streaming.join.stateFormatVersion" -> joinFormatVersion.toString)
+      else Nil): _*)(body)
 
   /** events.parquet has shipped with two physical `ts` encodings across
     * testdata generations: TIMESTAMP(NANOS) (which Spark 4 only reads
@@ -805,19 +812,14 @@ object Queries {
   // second gives the timers a batch to fire in). The flushed output is
   // exactly the batch as-of — hash-compared against DuckDB's native
   // ASOF LEFT JOIN, the same oracle family as q_asof_keyed.
-  private val asofStream: Q = (s, dir) => asofStreamWith(s, dir)
-  // partitions = 0 → size-gated off the staged slices (4 at sf0.1 —
-  // StreamKnobSweep r20: 4.3-5.6 → 3.4-3.7 s). Changelog
+  // State partitions size-gated off the staged slices (4 at sf0.1 —
+  // r20 sweep, SCALE_STREAM_r20.md: 4.3-5.6 → 3.4-3.7 s). Changelog
   // checkpointing measured neutral at this state size (its win is
-  // large-state maintenance) — left at the session default
-  private[graft] def asofStreamWith(s: SparkSession, dir: String,
-      partitions: Int = 0, changelog: Boolean = false,
-      filesPerTrigger: Int = 2): DataFrame = {
+  // large-state maintenance) — off.
+  private val asofStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
     val watch = asofSlicesDir(s, dir)
-    withStreamStore(s,
-        if (partitions > 0) partitions else streamPartitionsFor(watch),
-        changelog = changelog) {
+    withStreamStore(s, streamPartitionsFor(s, watch)) {
       val spark2 = s
       import spark2.implicits._
       val work = graft.sources.Staging.sessionTempDir("graft_stream_asof")
@@ -830,7 +832,7 @@ object Queries {
       // floors instead of 5. Paired sweep at sf0.1: 8.0-10.5 →
       // 5.0-5.9 s (same session; rows/hashes identical).
       val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(watch)
+        .option("maxFilesPerTrigger", 2).parquet(watch)
         .as[graft.streaming.AsofInput]
       val q = graft.streaming.TwsAsof.asofKeyed(stream).toDF()
         .writeStream.format("parquet")
@@ -898,24 +900,21 @@ object Queries {
   // joins) replaces the v2 layout's FOUR store instances per
   // partition (left/right x keyToNumValues/keyWithIndexToValue): one
   // open + commit per partition per micro-batch instead of four.
-  // Measured (StreamKnobSweep r20): inner 4.7→3.3 s at 8 partitions,
-  // 2.5 s with the size gate's 4; outer 5.1→3.0 s. The checkpoint is
-  // fresh per run, so no cross-version state compat applies.
-  // partitions = 0 → size-gated off the staged slices; the entry
+  // Measured (r20 sweep, SCALE_STREAM_r20.md): inner 4.7→3.3 s at 8
+  // partitions, 2.5 s with the size gate's 4; outer 5.1→3.0 s. The
+  // checkpoint is fresh per run, so no cross-version state compat
+  // applies. State partitions are size-gated off the staged slices,
+  // changelog off (neutral at this state size); the entry
   // streams a DETERMINISTIC key subset (key % 8 = 0): this is an
   // operator-coverage entry (native join == exact batch oracle), not
   // a flagship-throughput one, and the subset preserves every
   // semantic the oracle checks — cross-batch matching included
   // (probes in batch 2+ hit states stored in batch 1)
-  private[graft] def streamIntervalJoinImpl(s: SparkSession, dir: String,
-      outer: Boolean, partitions: Int = 0, changelog: Boolean = false,
-      joinFormatVersion: Int = 3): DataFrame = {
+  private def streamIntervalJoinImpl(s: SparkSession, dir: String,
+      outer: Boolean): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val watch = asofSlicesDir(s, dir)
-    withStreamStore(s,
-        if (partitions > 0) partitions else streamPartitionsFor(watch),
-        changelog = changelog,
-        joinFormatVersion = joinFormatVersion) {
+    withStreamStore(s, streamPartitionsFor(s, watch), joinFormatVersion = 3) {
       val work = graft.sources.Staging.sessionTempDir(
         if (outer) "graft_stream_ssj_outer" else "graft_stream_ssj")
       val stream = s.readStream.schema(s.read.parquet(watch).schema)
@@ -1320,7 +1319,8 @@ object Queries {
   // at plan time — a catalog lookup — instead of live-scanning its
   // inputs the way skewGatedJoin's hotKeyShare probe must (the "one
   // remaining 100 TB honesty gap": correct, but a full key-column
-  // scan per gate decision; StatsGateLab measures the drop). Staged
+  // scan per gate decision; COVERAGE.md's r16 probe-cost row records
+  // the drop). Staged
   // through the shared seam contract (tableKey fingerprint +
   // stageOnce: atomic publish, _SUCCESS, never rebuilt). The planted
   // 90%-hot demo tables get their OWN artifacts — a planner profiles
@@ -1853,87 +1853,80 @@ object Queries {
       ("orders", Seq("o_orderkey", "o_custkey")),
       ("customer", Seq("c_custkey")),
       ("orders2", Seq("o2_custkey", "o2_orderkey"))))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     // DOP 8 + AQE off for the in-entry derivation collects (the
     // q_profile_table precedent): the parent histogram and both
     // derived finalize chains are cardinality-sized, so wide
     // exchanges and AQE's per-stage jobs are fixed cost only; the
-    // returned star join plans lazily and executes after the finally
+    // returned star join plans lazily and executes after the scope
     // restores the session conf
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-    // the parent histogram: cardinality-sized, read once; BOTH dims
-    // derive from it in ONE finalize pass — the two filtered+renamed
-    // sub-histograms have disjoint colnames, so their union feeds a
-    // single tableStatsFromHist whose per-colname aggregates are the
-    // two independent derivations, and planTablesFromStats slices the
-    // result in one collect (the per-dim planTable form paid four
-    // collects, each re-running the whole finalize chain)
-    val hist = s.read.parquet(s"${ordersHistStaged(s, dir)}/hist")
-    def filteredRenamed(colKey: String, m: Int) =
-      hist.filter(col("colname") === "o_orderkey" &&
-        col("term").cast("long") % m === 0)
-        .withColumn("colname", lit(colKey))
-    def staged(name: String, keys: String*) =
-      planTableCached(s, root, name, keys.toSeq)
-    val Seq(d1, d2) = Sc.planTablesFromStats(
-      S.tableStatsFromHist(
-        filteredRenamed("d1_key", 100)
-          .unionByName(filteredRenamed("d2_key", 50))),
-      Seq(("dsel1", Seq("d1_key")), ("dsel2", Seq("d2_key"))))
-    val d1S = staged("dsel1", "d1_key")
-    val d2S = staged("dsel2", "d2_key")
-    // the derivation is EXACT, not approximately compatible
-    require(d1 == d1S, s"derived dsel1 stats $d1 != staged $d1S")
-    require(d2 == d2S, s"derived dsel2 stats $d2 != staged $d2S")
-    val shared = Map(
-      "orders" -> staged("orders", "o_orderkey", "o_custkey"),
-      "customer" -> staged("customer", "c_custkey"),
-      "orders2" -> staged("orders2", "o2_custkey", "o2_orderkey"))
-    val edges = Seq(
-      Sc.JoinEdge("orders", "o_orderkey", "dsel1", "d1_key"),
-      Sc.JoinEdge("orders", "o_custkey", "customer", "c_custkey"),
-      Sc.JoinEdge("orders2", "o2_custkey", "customer", "c_custkey"),
-      Sc.JoinEdge("orders2", "o2_orderkey", "dsel2", "d2_key"))
-    def dp(dd1: Sc.PlanTable, dd2: Sc.PlanTable) =
-      Sc.statsJoinOrderDp(
-        Seq(shared("orders"), dd1, shared("customer"),
-          shared("orders2"), dd2), edges, broadcastRows = 100)
-    val d = dp(d1, d2)
-    val dStaged = dp(d1S, d2S)
-    require(d == dStaged,
-      s"derived-stats plan $d != staged-artifact plan $dStaged")
-    // ONE orders scan feeds all four orders-derived join inputs (r19
-    // VERDICT #4: the executed star joined orders, orders2, dsel1 and
-    // dsel2 as four separate parquet scans of the same table): the
-    // 2-column projection is materialized once (localCheckpoint, a
-    // scan+project job — no shuffle) and the three projections +two
-    // filters re-read blocks. Values are scan-vs-rescan identical.
-    val ord = checkpointWithDump(
-      t(s, dir, "orders").select("o_orderkey", "o_custkey"))
-    val dfs = Map(
-      "orders" -> ord,
-      "dsel1" -> ord.filter(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey").as("d1_key")),
-      "customer" -> t(s, dir, "customer").select("c_custkey"),
-      "orders2" -> ord.select(col("o_custkey").as("o2_custkey"),
-        col("o_orderkey").as("o2_orderkey")),
-      "dsel2" -> ord.filter(col("o_orderkey") % 50 === 0)
-        .select(col("o_orderkey").as("d2_key")))
-    Sc.executeJoinTree(dfs, d.plan)
-      .agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("sum_a"),
-        sum("o2_orderkey").as("sum_b"))
-      .select(lit("derived_dims").as("regime"),
-        lit(d.shapeString).as("shape"),
-        lit(if (d.bushyWin) 1 else 0).as("bushy_win"),
-        lit(d1.stats("d1_key").nRows).as("d1_rows"),
-        lit(d2.stats("d2_key").nRows).as("d2_rows"),
-        col("n_rows"), col("sum_a"), col("sum_b"))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    withConf(s, SmallPin: _*) {
+      // the parent histogram: cardinality-sized, read once; BOTH dims
+      // derive from it in ONE finalize pass — the two filtered+renamed
+      // sub-histograms have disjoint colnames, so their union feeds a
+      // single tableStatsFromHist whose per-colname aggregates are the
+      // two independent derivations, and planTablesFromStats slices the
+      // result in one collect (the per-dim planTable form paid four
+      // collects, each re-running the whole finalize chain)
+      val hist = s.read.parquet(s"${ordersHistStaged(s, dir)}/hist")
+      def filteredRenamed(colKey: String, m: Int) =
+        hist.filter(col("colname") === "o_orderkey" &&
+          col("term").cast("long") % m === 0)
+          .withColumn("colname", lit(colKey))
+      def staged(name: String, keys: String*) =
+        planTableCached(s, root, name, keys.toSeq)
+      val Seq(d1, d2) = Sc.planTablesFromStats(
+        S.tableStatsFromHist(
+          filteredRenamed("d1_key", 100)
+            .unionByName(filteredRenamed("d2_key", 50))),
+        Seq(("dsel1", Seq("d1_key")), ("dsel2", Seq("d2_key"))))
+      val d1S = staged("dsel1", "d1_key")
+      val d2S = staged("dsel2", "d2_key")
+      // the derivation is EXACT, not approximately compatible
+      require(d1 == d1S, s"derived dsel1 stats $d1 != staged $d1S")
+      require(d2 == d2S, s"derived dsel2 stats $d2 != staged $d2S")
+      val shared = Map(
+        "orders" -> staged("orders", "o_orderkey", "o_custkey"),
+        "customer" -> staged("customer", "c_custkey"),
+        "orders2" -> staged("orders2", "o2_custkey", "o2_orderkey"))
+      val edges = Seq(
+        Sc.JoinEdge("orders", "o_orderkey", "dsel1", "d1_key"),
+        Sc.JoinEdge("orders", "o_custkey", "customer", "c_custkey"),
+        Sc.JoinEdge("orders2", "o2_custkey", "customer", "c_custkey"),
+        Sc.JoinEdge("orders2", "o2_orderkey", "dsel2", "d2_key"))
+      def dp(dd1: Sc.PlanTable, dd2: Sc.PlanTable) =
+        Sc.statsJoinOrderDp(
+          Seq(shared("orders"), dd1, shared("customer"),
+            shared("orders2"), dd2), edges, broadcastRows = 100)
+      val d = dp(d1, d2)
+      val dStaged = dp(d1S, d2S)
+      require(d == dStaged,
+        s"derived-stats plan $d != staged-artifact plan $dStaged")
+      // ONE orders scan feeds all four orders-derived join inputs (r19
+      // VERDICT #4: the executed star joined orders, orders2, dsel1 and
+      // dsel2 as four separate parquet scans of the same table): the
+      // 2-column projection is materialized once (localCheckpoint, a
+      // scan+project job — no shuffle) and the three projections +two
+      // filters re-read blocks. Values are scan-vs-rescan identical.
+      val ord = checkpointWithDump(
+        t(s, dir, "orders").select("o_orderkey", "o_custkey"))
+      val dfs = Map(
+        "orders" -> ord,
+        "dsel1" -> ord.filter(col("o_orderkey") % 100 === 0)
+          .select(col("o_orderkey").as("d1_key")),
+        "customer" -> t(s, dir, "customer").select("c_custkey"),
+        "orders2" -> ord.select(col("o_custkey").as("o2_custkey"),
+          col("o_orderkey").as("o2_orderkey")),
+        "dsel2" -> ord.filter(col("o_orderkey") % 50 === 0)
+          .select(col("o_orderkey").as("d2_key")))
+      Sc.executeJoinTree(dfs, d.plan)
+        .agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("sum_a"),
+          sum("o2_orderkey").as("sum_b"))
+        .select(lit("derived_dims").as("regime"),
+          lit(d.shapeString).as("shape"),
+          lit(if (d.bushyWin) 1 else 0).as("bushy_win"),
+          lit(d1.stats("d1_key").nRows).as("d1_rows"),
+          lit(d2.stats("d2_key").nRows).as("d2_rows"),
+          col("n_rows"), col("sum_a"), col("sum_b"))
     }
   }
   private val scaleStatsDerivedDpOracle =
@@ -1993,16 +1986,12 @@ object Queries {
     import org.apache.spark.sql.streaming.Trigger
     val S = graft.llm.SketchOps
     val Sc = graft.operators.Scale
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // hist-sized state
-    // AQE off in entry scope (the q_profile_table precedent): every
+    // SmallPin (the q_profile_table precedent): every
     // in-entry action — fold writes, finalize collects — runs over
     // cardinality-sized frames, where AQE's job-per-stage re-planning
     // is pure fixed cost; the returned join executes after the scope
     // restores the session conf, so it keeps AQE
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(s, SmallPin: _*) {
       val watch = lineitemSlicesStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_sgate_stream")
       // carried state is the cardinality-sized histogram, held as an
@@ -2069,9 +2058,6 @@ object Queries {
         .select(lit("stream_folded").as("regime"),
           lit(d.branch).as("branch"), col("n_rows"), col("sum_qty"),
           col("sum_cust"))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   private val scaleStatsStreamGateOracle =
@@ -2125,16 +2111,12 @@ object Queries {
     import org.apache.spark.sql.streaming.Trigger
     val S = graft.llm.SketchOps
     val Sc = graft.operators.Scale
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // hist-sized state
-    // AQE off in entry scope — same rationale as the stream gate:
+    // SmallPin — same rationale as the stream gate:
     // every per-batch fold/re-plan action is over cardinality-sized
     // state, and AQE split each into a cascade of per-stage jobs
     // (measured: 156 jobs per run before, dominated by fixed job
-    // floors); the returned 3-table join executes after the finally
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // floors); the returned 3-table join executes after the scope
+    withConf(s, SmallPin: _*) {
       val watch = liOrdSlicesStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_sorder_stream")
       val root = statsArtifactStaged(s, dir)
@@ -2232,9 +2214,6 @@ object Queries {
           lit(d.shapeString).as("join_order"),
           lit(replans).as("n_replans"), col("n_rows"), col("sum_qty"),
           col("sum_nat"))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   private val scaleStatsStreamOrderOracle =
@@ -2860,15 +2839,8 @@ object Queries {
 
   private val scd2StreamMerge: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // changeset-sized batches
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over changeset-sized frames
+    withConf(s, SmallPin: _*) {
       val (basePath0, watch) = scd2StreamStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_scd2_stream")
       val schema = s.read.parquet(watch).schema
@@ -2902,9 +2874,6 @@ object Queries {
         .withColumn("batch", lit(idx)).withColumn("action", lit("final"))
       s.read.parquet(s"$work/log").select(outCols.map(col): _*)
         .unionByName(fin.select(outCols.map(col): _*))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   /** The oracle unrolls the 4 sequential merges as CTE generations:
@@ -3248,18 +3217,15 @@ object Queries {
   // set is batching-order-independent and equals the batch banding
   // operator's, so the oracle is the SAME DuckDB SQL as
   // q_llm_minhash_lsh_pairs.
-  private val streamNearDup: Q = (s, dir) => streamNearDupWith(s, dir)
-  // partitions = 0 → size-gated (4 at sf0.1, StreamKnobSweep r20:
-  // 3.2-3.5 → 2.7-2.8 s); changelog measured neutral at this state
-  // size — left at the session default. 2 files/trigger pairs the 4
+  // State partitions size-gated (4 at sf0.1, r20 sweep,
+  // SCALE_STREAM_r20.md: 3.2-3.5 → 2.7-2.8 s); changelog measured
+  // neutral at this state size — off. 2 files/trigger pairs the 4
   // hash slices into 2 micro-batches: pairs are STILL caught against
   // prior-batch state (batch 2 probes batch 1's stored bands — the
   // property the slicing proves), at 2 trigger floors instead of 4
   // (paired sweep: 5.1-11.2 → 2.8-6.5 s across two sessions, rows
   // identical).
-  private[graft] def streamNearDupWith(s: SparkSession, dir: String,
-      partitions: Int = 0, changelog: Boolean = false,
-      filesPerTrigger: Int = 2): DataFrame = {
+  private val streamNearDup: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
     // 4 hash slices → 4 micro-batches: pairs must be caught against
     // PRIOR-batch state, not just within a batch. Staged ONCE per
@@ -3277,12 +3243,10 @@ object Queries {
     // commit PER MICRO-BATCH — at test scale that machinery dominates,
     // so run the stream narrow (production sizes this to the cluster;
     // the partition count is pinned into the checkpoint either way)
-    withStreamStore(s,
-        if (partitions > 0) partitions else streamPartitionsFor(in),
-        changelog = changelog) {
+    withStreamStore(s, streamPartitionsFor(s, in)) {
       val work = graft.sources.Staging.sessionTempDir("graft_stream_nd")
       val stream = s.readStream.schema(s.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(in)
+        .option("maxFilesPerTrigger", 2).parquet(in)
       val q = graft.streaming.TwsNearDup
         .nearDupPairsStream(stream, "doc_id", "text", capPerBucket = Int.MaxValue)
         .toDF()
@@ -3659,15 +3623,8 @@ object Queries {
   }
   private val sketchKmvStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // sketch-sized state
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over sketch-sized frames
+    withConf(s, SmallPin: _*) {
       val k = 128
       val watch = kmvSlicesStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_kmv_stream")
@@ -3694,9 +3651,6 @@ object Queries {
       graft.llm.SketchOps.kmvEstimate(
         state.getOrElse(
           sys.error("kmv stream produced no batches")), k)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   private val sketchKmvStreamOracle = {
@@ -3882,15 +3836,8 @@ object Queries {
   // losing nothing is the hash-compared surface.
   private val sketchCmsWindowStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // counter-sized state
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over counter-sized frames
+    withConf(s, SmallPin: _*) {
       val (depth, width, win) = (4, 1024, 604800L)
       val S = graft.llm.SketchOps
       val watch = kmvSlicesStaged(s, dir)
@@ -3935,9 +3882,6 @@ object Queries {
       S.cmsProbeWindowed(counters,
         S.cmsTopCandidatesWindowed(ev, "term", "sec", win, 3), depth,
         width)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
@@ -3955,15 +3899,8 @@ object Queries {
   // twin (the stream never held the full distinct set).
   private val sketchKmvWindowStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // sketch-sized state
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over sketch-sized frames
+    withConf(s, SmallPin: _*) {
       val (k, win) = (32, 604800L)
       val S = graft.llm.SketchOps
       val watch = kmvSlicesStaged(s, dir)
@@ -4013,9 +3950,6 @@ object Queries {
       S.splitWindowedKey(S.kmvEstimate(all, k))
         .select("window_start", "source", "kth_min_hash", "k_used",
           "kmv_est")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   private val sketchKmvWindowStreamOracle = kmvWindowedOracle(withExact = false)
@@ -4060,15 +3994,8 @@ object Queries {
   // cross-batch sample mergeability is the hash-compared surface.
   private val sketchQuantileWindowStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // sketch-sized state
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over sketch-sized frames
+    withConf(s, SmallPin: _*) {
       val (k, win) = (64, 604800L)
       val S = graft.llm.SketchOps
       val watch = quantileSlicesStaged(s, dir)
@@ -4112,9 +4039,6 @@ object Queries {
       S.splitWindowedKey(S.quantileEstimate(all, Seq(50, 90)))
         .select("window_start", "source", "sample_n", "q50_est",
           "q90_est")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
   private val sketchQuantileWindowStreamOracle = {
@@ -4304,27 +4228,22 @@ object Queries {
   // (the stream never held the distinct sets and emits per-session
   // rows only): gap-close parity between the TWS machinery and the
   // batch window sessionizer is the hash-compared surface.
-  private val sketchKmvSessionStream: Q = (s, dir) =>
-    sketchKmvSessionStreamWith(s, dir)
-  // partitions = 0 → size-gated (4 at sf0.1, StreamKnobSweep r20:
-  // 3.7-4.3 → 3.2 s); changelog measured neutral at this state size
-  private[graft] def sketchKmvSessionStreamWith(s: SparkSession,
-      dir: String, partitions: Int = 0,
-      changelog: Boolean = false, filesPerTrigger: Int = 2): DataFrame = {
+  // State partitions size-gated (4 at sf0.1, r20 sweep,
+  // SCALE_STREAM_r20.md: 3.7-4.3 → 3.2 s); changelog measured neutral
+  // at this state size — off.
+  private val sketchKmvSessionStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
     val watch = sessionSlicesStaged(s, dir)
-    withStreamStore(s,
-        if (partitions > 0) partitions else streamPartitionsFor(watch),
-        changelog = changelog) {
+    withStreamStore(s, streamPartitionsFor(s, watch)) {
       val spark2 = s
       import spark2.implicits._
       val work = graft.sources.Staging.sessionTempDir("graft_kmv_sess")
       // 2 files/trigger: [s0,s1][s2,sent1][sent2] — sessions spanning
       // batch boundaries, inline closes, the watermark advance and
       // the timer-fire batch all survive at 3 trigger floors instead
-      // of 5 (see asofStreamWith)
+      // of 5 (see asofStream)
       val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(watch)
+        .option("maxFilesPerTrigger", 2).parquet(watch)
         .as[graft.streaming.KmvSessEvent]
       val q = graft.streaming.TwsKmvSession
         .sessionSketch(stream, 259200L, 32).toDF()
@@ -4505,27 +4424,21 @@ object Queries {
   // therefore the oracle — is IDENTICAL to q_sketch_cms_session:
   // stream cells == batch cells cell-for-cell is the hash-compared
   // surface.
-  private val sketchCmsSessionStream: Q = (s, dir) =>
-    sketchCmsSessionStreamWith(s, dir)
-  // partitions = 0 → size-gated (4 at sf0.1, StreamKnobSweep r20:
-  // 4.9-5.8 → 4.0-4.8 s); changelog measured neutral at this state
-  // size
-  private[graft] def sketchCmsSessionStreamWith(s: SparkSession,
-      dir: String, partitions: Int = 0,
-      changelog: Boolean = false, filesPerTrigger: Int = 2): DataFrame = {
+  // State partitions size-gated (4 at sf0.1, r20 sweep,
+  // SCALE_STREAM_r20.md: 4.9-5.8 → 4.0-4.8 s); changelog measured
+  // neutral at this state size — off.
+  private val sketchCmsSessionStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
     val watch = sessionSlicesStaged(s, dir)
-    withStreamStore(s,
-        if (partitions > 0) partitions else streamPartitionsFor(watch),
-        changelog = changelog) {
+    withStreamStore(s, streamPartitionsFor(s, watch)) {
       val spark2 = s
       import spark2.implicits._
       val S = graft.llm.SketchOps
       val (depth, width) = (4, 1024)
       val work = graft.sources.Staging.sessionTempDir("graft_cms_sess")
-      // 2 files/trigger — see sketchKmvSessionStreamWith
+      // 2 files/trigger — see sketchKmvSessionStream
       val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(watch)
+        .option("maxFilesPerTrigger", 2).parquet(watch)
         .as[graft.streaming.KmvSessEvent]
       val q = graft.streaming.TwsCmsSession
         .sessionCounters(stream, 259200L, depth, width).toDF()
@@ -4563,15 +4476,8 @@ object Queries {
   // micro-batches is the hash-compared surface.
   private val sketchCmsStream: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8") // counter-sized state
-    // AQE off for the in-entry fold jobs (the stats-entry
-    // precedent): every per-trigger action is over sketch-/
-    // changeset-sized frames, where AQE job-per-stage
-    // re-planning is pure fixed cost per micro-batch
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // SmallPin: every per-trigger fold action is over counter-sized frames
+    withConf(s, SmallPin: _*) {
       val (depth, width, topK) = (4, 1024, 20)
       val watch = kmvSlicesStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_cms_stream")
@@ -4602,9 +4508,6 @@ object Queries {
         state.getOrElse(
           sys.error("cms stream produced no batches")),
         candidates, depth, width)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
@@ -4911,32 +4814,25 @@ object Queries {
   // input row, before the stack) and the exact histogram order
   // statistic. Every estimate integer, mirrored in the oracle,
   // hash-compared.
-  // withSmallShuffle: everything past the checkpointed one-pass stack
+  // SmallPin: everything past the checkpointed one-pass stack
   // is cardinality-sized (the sf0.1 histogram is 19k rows) — 32-way
   // exchanges through the ~12 assembly stages were pure task-dispatch
-  // overhead (r17 VERDICT #1; the FrontierLab profile rows decompose
-  // the wall: one data pass + salted sample + a fixed assembly floor)
+  // overhead (r17 VERDICT #1; COVERAGE.md's round-16 floor attribution
+  // decomposes the wall: one data pass + salted sample + a fixed
+  // assembly floor)
   private val profileTableQ: Q = (s, dir) => {
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     // DOP 8: every post-scan reduction here is cardinality-sized, so
     // extra shuffle partitions are pure task dispatch (a 16-way
     // probe at sf1 read 40% SLOWER than 8 — r19); the data pass's
     // map width is scan-split-bound, not shuffle-bound, so this does
     // not throttle the hashing pass.
-    s.conf.set("spark.sql.shuffle.partitions", "8")
     // AQE off for the assembly: every post-hist frame is
     // cardinality-sized and already partition-pinned, so AQE's
     // per-stage job re-planning is pure fixed cost here
-    s.conf.set("spark.sql.adaptive.enabled", "false")
     // profileTable materializes internally (assembly localCheckpoint
     // + post-hoc sample guard), so the whole run sits inside the
     // pinned scope — no second checkpoint needed
-    try profileTableInner(s, dir)
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    withConf(s, SmallPin: _*)(profileTableInner(s, dir))
   }
   private def profileTableInner(s: SparkSession, dir: String) = {
     val qv = floor(col("value") * 1000).cast("long")
@@ -6859,7 +6755,7 @@ object Queries {
   // subset but assigns the WHOLE corpus — i.e. it IS the
   // rebuilt-with-same-centroids index — so "serve-after-append ==
   // serve-over-rebuilt" is the hash-compared surface. Recall drift vs
-  // fresh centroids is measured separately (AnnUpdateLab, COVERAGE).
+  // fresh centroids is measured separately (r16 drift curve, COVERAGE).
   private def ivfUpdatedIndexStaged(s: SparkSession, dir: String): String = {
     val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
     val path =
@@ -6915,7 +6811,7 @@ object Queries {
       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score_x1e6 DESC, neighbor_id) <= 5""".stripMargin
 
   // DRIFT-GATED IVF REBUILD (VERDICT r16 #3 — make something CONSUME
-  // AnnUpdateLab's drift finding): q_ann_index_update appends forever
+  // the r16 drift finding, COVERAGE): q_ann_index_update appends forever
   // against immutable centroids; here every incoming batch is
   // measured first (SimilarityOps.ivfUpdateDecision — the batch's max
   // single-cell share under the EXISTING centroids, a counter-sized
@@ -7317,7 +7213,7 @@ object Queries {
   // coalesce(4): the PQ passes (quantize, encode, probe) are map
   // stages over the 2000-row demo corpus — 32 cached partitions cost
   // 32 task dispatches per pass for microseconds of work each
-  // (ScratchMain r17: 0.84-0.93 s -> 0.63-0.70 s). At scale the map
+  // (r17, COVERAGE.md Round-17: 0.84-0.93 s -> 0.63-0.70 s). At scale the map
   // DOP tracks bytes (maxPartitionBytes); the constant is this demo
   // corpus's counter-sized choice, same rationale as withSmallShuffle.
   private val annIvfPqTopk: Q = (s, dir) =>
@@ -7784,8 +7680,8 @@ object Queries {
   // vectors. SELECTIVITY-GATED since r19 (r18 VERDICT #5): one
   // map-combined count over the predicate-pushed assignment scan
   // decides exact-refine-store-brute vs ADC (the q_ann_filtered_topk
-  // gate on the compressed family — AnnFilterLab had honestly
-  // recorded recall@10 = 0.149 at ~0.5% selectivity for the ungated
+  // gate on the compressed family — the r18 sweep (COVERAGE) had
+  // honestly recorded recall@10 = 0.149 at ~0.5% selectivity for the ungated
   // path). Two regimes, the BRANCH and qualifying count in the
   // hash-compared output, the oracle replicating the gate decision
   // with a count-guarded union:
@@ -8064,26 +7960,20 @@ object Queries {
     * stream (watermark advance + a batch for the timers); sentinel
     * keys never commit and are filtered defensively.
     */
-  // Config chosen by measurement (StreamStoreSweep, SCALE_STREAM_r09.md):
-  // RocksDB + changelog checkpointing is the measured default — the
-  // production config (changelog uploads per-batch deltas instead of
-  // full snapshots, so per-batch state maintenance stays flat as state
-  // grows; a 1000-executor deployment runs exactly this provider).
-  // Partition count is SIZE-GATED off the staged input volume
-  // (partitions = 0 → pick inside the body once the staged bytes are
-  // known): the r9/r10 sweeps measured the 8→16 crossover moving with
-  // volume — 8 beats 16 at sf0.1 (every provider), 16/32 beat 8
-  // decisively at sf1 AND sf3 (SCALE_STREAM_r10.md:55-71) — because
-  // per-store fixed cost amortizes once each store holds enough
-  // sessions. Same measure-then-pick shape as pageRank/as-of/commit.
-  // Production still sizes partitions to the cluster; the gate's
-  // thresholds encode this box's sweep table.
-  // trackTotalNumberOfRows=false skips the get-before-put RocksDB does
-  // per state write solely to maintain the numRowsTotal metric — the
-  // documented knob for write-heavy state (measured −2 s of 15-16 s in
-  // both sweep orders; SCALE_STREAM_r09.md). Rehearsals that assert
-  // state-row bounds run their own sessions with tracking left on.
-  // nSlices = 3 by floor decomposition (StreamFloor, SCALE_STREAM_r12.md):
+  // Config chosen by measurement (SCALE_STREAM_r09.md): RocksDB +
+  // changelog checkpointing is the measured default — the production
+  // config (changelog uploads per-batch deltas instead of full
+  // snapshots, so per-batch state maintenance stays flat as state
+  // grows; a 1000-executor deployment runs exactly this provider),
+  // with trackTotalNumberOfRows off (see withStreamStore; rehearsals
+  // that assert state-row bounds run their own sessions with tracking
+  // left on). State partitions are SIZE-GATED off the staged input
+  // volume with a floor of 8: the r9/r10 sweeps measured the 8→16
+  // crossover moving with volume — 8 beats 16 at sf0.1 (every
+  // provider), 16/32 beat 8 decisively at sf1 AND sf3
+  // (SCALE_STREAM_r10.md:55-71) — because per-store fixed cost
+  // amortizes once each store holds enough sessions.
+  // 3 replay slices by floor decomposition (SCALE_STREAM_r12.md):
   // the empty-batch machinery floor is ~0.45-0.5 s per micro-batch
   // (trigger plan + flatMapGroupsWithState pass + 8x RocksDB commit +
   // changelog upload + sink commit), so each extra replay slice buys
@@ -8093,7 +7983,7 @@ object Queries {
   // spanning batch boundaries, mid-stream watermark advance, sentinel
   // close-out: 5 micro-batches total) at 5 floor units instead of 10;
   // StreamRehearsal still drives 20-slice replays for load rehearsal.
-  // filesPerTrigger = 2 (r20, VERDICT r19 #5): groups the 5 replay
+  // 2 files per trigger (r20, VERDICT r19 #5): groups the 5 replay
   // files [s0,s1][s2,sent1][sent2] — everything the stream proves
   // survives (sessions span the s1|s2 batch boundary, the watermark
   // advances mid-stream between batches, sent1's advance is visible
@@ -8101,107 +7991,59 @@ object Queries {
   // 3 trigger floors instead of 5. Paired sweep: 18.4-22.5 →
   // 16.3-17.5 s under contention, ~1 s on the idle box; rows/hashes
   // identical at every SF gate.
-  private val etlStreamTransactions: Q = (s, dir) =>
-    etlStreamTransactionsWith(s, dir, partitions = 0, nSlices = 3,
-      rocksdb = true, changelog = true, trackRows = false,
-      filesPerTrigger = 2)
-
-  /** The streaming flagship body with the state-store knobs exposed so
-    * StreamStoreSweep can measure provider/partition combinations
-    * through the exact code path the catalog entry runs.
-    */
-  private[graft] def etlStreamTransactionsWith(s: SparkSession, dir: String,
-      partitions: Int, nSlices: Int, rocksdb: Boolean,
-      changelog: Boolean, trackRows: Boolean = true,
-      filesPerTrigger: Int = 1,
-      onQuery: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame = {
+  private val etlStreamTransactions: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val ChangelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val TrackKey =
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = s.conf.getOption(ProviderKey)
-    val prevChangelog = s.conf.getOption(ChangelogKey)
-    val prevTrack = s.conf.getOption(TrackKey)
-    if (rocksdb) {
-      s.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(ChangelogKey, changelog.toString)
-      s.conf.set(TrackKey, trackRows.toString)
-    } else s.conf.unset(ProviderKey)
-    try {
-      val spark2 = s
-      import spark2.implicits._
-      val work = graft.sources.Staging.sessionTempDir("graft_stream_etl")
-      // One-time sliced-replay staging per (corpus fingerprint,
-      // nSlices): the slice files and their far-future sentinels are a
-      // deterministic function of the bronze corpus, so they stage
-      // once under tmpdir exactly like bronze itself — in production
-      // the stream arrives from Kafka and no slice-writing step
-      // exists; re-paying the slice write inside every measured run
-      // charged the entry ~3 s of harness cost (floor table,
-      // SCALE_STREAM_r12.md). Only the per-run output/checkpoint dirs
-      // stay under the session temp dir.
-      val watch = s"${System.getProperty("java.io.tmpdir")}/graft_stream_slices_v1_" +
-        graft.sources.SyntheticTraces.corpusKey(dir) + s"_n$nSlices"
-      if (!graft.sources.Staging.hasMarker(s"$watch")) {
-        graft.sources.Staging.stageOnce(watch) { tmp =>
-          // null event-time flows through as 0, exactly sessionCommit's
-          // coalesce — keeps this entry byte-equal to the batch path and
-          // its oracle on corpora that do emit null timestamps (nulls land
-          // in slice 0, first micro-batch, so the watermark never drops them)
-          val norm = graft.operators.TraceEtl
-            .normalize(graft.sources.SyntheticTraces.bronze(s, dir))
-            .filter(col("transaction_hash").isNotNull)
-            .withColumn("block_timestamp", coalesce(col("block_timestamp"), lit(0L)))
-          StreamRehearsal.stageSlices(norm.toDF(), "block_timestamp", nSlices,
-            s"$tmp/stage", tmp)
-          org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
-          val mx = s.read.parquet(tmp).agg(max("block_timestamp")).head().getLong(0)
-          Seq(
-            (nSlices, graft.model.TraceRow(1L, "0xsentinel1", Some(0), Some("0xa"),
-              Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
-              Some(1L), Some(mx + 1000000L), Some("0xb"), None)),
-            (nSlices + 1, graft.model.TraceRow(1L, "0xsentinel2", Some(0), Some("0xa"),
-              Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
-              Some(1L), Some(mx + 2000000L), Some("0xb"), None)),
-          ).foreach { case (i, row) =>
-            Seq(row).toDS().withColumn("_slice", lit(i))
-              .write.partitionBy("_slice").mode("overwrite").parquet(s"$tmp/sent_$i")
-            StreamRehearsal.moveSlices(s"$tmp/sent_$i", tmp, 0)
-            org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/sent_$i"))
-          }
-          // stageOnce's completeness marker (Spark wrote its _SUCCESS
-          // into the since-deleted stage/sent dirs, not here)
-          graft.sources.Staging.touchMarker(tmp)
+    val spark2 = s
+    import spark2.implicits._
+    val nSlices = 3
+    // One-time sliced-replay staging per (corpus fingerprint,
+    // nSlices): the slice files and their far-future sentinels are a
+    // deterministic function of the bronze corpus, so they stage
+    // once under tmpdir exactly like bronze itself — in production
+    // the stream arrives from Kafka and no slice-writing step
+    // exists; re-paying the slice write inside every measured run
+    // charged the entry ~3 s of harness cost (floor table,
+    // SCALE_STREAM_r12.md). Only the per-run output/checkpoint dirs
+    // stay under the session temp dir.
+    val watch = s"${System.getProperty("java.io.tmpdir")}/graft_stream_slices_v1_" +
+      graft.sources.SyntheticTraces.corpusKey(dir) + s"_n$nSlices"
+    if (!graft.sources.Staging.hasMarker(s"$watch")) {
+      graft.sources.Staging.stageOnce(watch) { tmp =>
+        // null event-time flows through as 0, exactly sessionCommit's
+        // coalesce — keeps this entry byte-equal to the batch path and
+        // its oracle on corpora that do emit null timestamps (nulls land
+        // in slice 0, first micro-batch, so the watermark never drops them)
+        val norm = graft.operators.TraceEtl
+          .normalize(graft.sources.SyntheticTraces.bronze(s, dir))
+          .filter(col("transaction_hash").isNotNull)
+          .withColumn("block_timestamp", coalesce(col("block_timestamp"), lit(0L)))
+        StreamRehearsal.stageSlices(norm.toDF(), "block_timestamp", nSlices,
+          s"$tmp/stage", tmp)
+        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
+        val mx = s.read.parquet(tmp).agg(max("block_timestamp")).head().getLong(0)
+        Seq(
+          (nSlices, graft.model.TraceRow(1L, "0xsentinel1", Some(0), Some("0xa"),
+            Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
+            Some(1L), Some(mx + 1000000L), Some("0xb"), None)),
+          (nSlices + 1, graft.model.TraceRow(1L, "0xsentinel2", Some(0), Some("0xa"),
+            Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
+            Some(1L), Some(mx + 2000000L), Some("0xb"), None)),
+        ).foreach { case (i, row) =>
+          Seq(row).toDS().withColumn("_slice", lit(i))
+            .write.partitionBy("_slice").mode("overwrite").parquet(s"$tmp/sent_$i")
+          StreamRehearsal.moveSlices(s"$tmp/sent_$i", tmp, 0)
+          org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/sent_$i"))
         }
+        // stageOnce's completeness marker (Spark wrote its _SUCCESS
+        // into the since-deleted stage/sent dirs, not here)
+        graft.sources.Staging.touchMarker(tmp)
       }
-      // Size gate (partitions = 0): pick the state-store partition
-      // count from the staged bytes the stream will actually replay.
-      // Thresholds bracket the measured sweep cells: sf0.1 staged
-      // input (≈ tens of MB) keeps 8 stores (8 wins every provider
-      // there), one decade up (sf1) 16 wins both orders, and ≥ ~3×
-      // that 32 ties/beats 16 (SCALE_STREAM_r10.md) — so 8 below
-      // 96 MiB, 16 below 480 MiB, 32 above. Must be set BEFORE the
-      // stream starts: shuffle partitions pin the state-store layout
-      // at first checkpoint.
-      val chosenParts =
-        if (partitions > 0) partitions
-        else {
-          val bytes = Option(new java.io.File(watch).listFiles())
-            .map(_.filter(_.isFile).map(_.length()).sum).getOrElse(0L)
-          val p = if (bytes < (96L << 20)) 8
-            else if (bytes < (480L << 20)) 16
-            else 32
-          System.err.println(
-            s"[stream-etl] staged ${bytes >> 20} MiB -> $p state partitions")
-          p
-        }
-      s.conf.set("spark.sql.shuffle.partitions", chosenParts.toString)
+    }
+    withStreamStore(s, streamPartitionsFor(s, watch, floor = 8),
+        changelog = true) {
+      val work = graft.sources.Staging.sessionTempDir("graft_stream_etl")
       val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(watch)
+        .option("maxFilesPerTrigger", 2).parquet(watch)
         .as[graft.model.TraceRow]
       val q = graft.streaming.StreamingEtl.sessionCommit(stream, gapSeconds = 1L)
         .toDF()
@@ -8209,7 +8051,6 @@ object Queries {
         .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      onQuery(q)
       s.read.parquet(s"$work/out")
         .filter(col("transaction").isNotNull &&
           !col("transaction.transaction_hash").startsWith("0xsentinel"))
@@ -8217,20 +8058,6 @@ object Queries {
         .withColumn("closest_address", csv(col("closest_address")))
         .withColumn("ec_pairing_input_sizes", csv(col("ec_pairing_input_sizes")))
         .withColumn("ec_recover_addresses", csv(col("ec_recover_addresses")))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevProvider match {
-        case Some(p) => s.conf.set(ProviderKey, p)
-        case None => s.conf.unset(ProviderKey)
-      }
-      prevChangelog match {
-        case Some(c) => s.conf.set(ChangelogKey, c)
-        case None => s.conf.unset(ChangelogKey)
-      }
-      prevTrack match {
-        case Some(tr) => s.conf.set(TrackKey, tr)
-        case None => s.conf.unset(TrackKey)
-      }
     }
   }
 

@@ -210,7 +210,7 @@ object SimilarityOps {
     * corpus — size it so expected occupancy n/2^planes stays at a few
     * hundred (planes ≈ log2(n/256)). The 30× rehearsal measures the
     * saturation cost of leaving it at the default: see
-    * [[graft.LshPlanesProbe]] and SCALE_r06 round-7 addendum.
+    * the SCALE_r06 round-7 addendum.
     */
   def cosineNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
       tNum: Long = 3, tDen: Long = 10,
@@ -236,7 +236,7 @@ object SimilarityOps {
     // re-join vectors to score once per distinct pair — ships q
     // through a shuffle join over the pair set, which is quadratic in
     // bucket occupancy: 5.9× slower with 2.3× the spill at the 30×
-    // rehearsal. See LshPlanesProbe: occupancy is sized by `planes`,
+    // rehearsal. See SCALE_r06: occupancy is sized by `planes`,
     // the knob that must grow with the corpus.)
     val pairs = banded.as("a").join(banded.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
@@ -425,7 +425,7 @@ object SimilarityOps {
     * What degrades is RECALL, not correctness: the centroids were
     * laid out for the pre-append distribution, so as the appended
     * fraction grows the cells partition the new mass less well —
-    * AnnUpdateLab measures the drift curve (COVERAGE); rebuild when
+    * the r16 drift curve is recorded in COVERAGE; rebuild when
     * it crosses budget.
     *
     * PRECONDITION: the batch's ids must be DISJOINT from the ids
@@ -522,7 +522,7 @@ object SimilarityOps {
       batchRows: Long)
 
   /** Measure an incoming batch's DRIFT against an index and gate
-    * append vs rebuild — the consumer of AnnUpdateLab's finding
+    * append vs rebuild — the consumer of the r16 drift finding
     * (append stays recall-flat on i.i.d. arrivals but the centroids
     * were laid out for the pre-append distribution, so concentrated
     * new mass degrades cell balance). The drift stat is the batch's
@@ -1279,7 +1279,7 @@ object SimilarityOps {
     * QUALIFYING coded rows are ADC-scored (then exact-refined when
     * `rerank` is set).
     *
-    * SELECTIVITY-GATED (r18 VERDICT #5 — AnnFilterLab measured
+    * SELECTIVITY-GATED (r18 VERDICT #5 — the r18 sweep measured
     * recall@10 = 0.149 at ~0.5% selectivity for the ungated form):
     * cells were laid out for the unfiltered distribution, so a
     * selective predicate leaves so few qualifying rows per probed
@@ -1306,7 +1306,7 @@ object SimilarityOps {
   /** [[ivfPqServeFilteredTopK]] also returning the gate branch
     * (`"brute"` | `"adc"`) and the qualifying-row count, for callers
     * that put the decision in an oracled output (the catalog entry)
-    * or a measurement table (AnnFilterLab). */
+    * or a measurement table. */
   def ivfPqServeFilteredGated(index: PqIndex, queries: DataFrame,
       idCol: String, embCol: String, k: Int, predicate: Column,
       nprobe: Int = 8, rerank: Option[Int] = None,
@@ -1423,8 +1423,8 @@ object SimilarityOps {
   /** The exact-rescore refinement tier by itself: score the
     * (query_id, neighbor_id) candidate pairs against the full-width
     * vectors with the engine-exact quantized cosine and keep each
-    * query's top-`k` on the exact score. Package-private so
-    * FrontierLab times EXACTLY this kernel (not a re-implementation
+    * query's top-`k` on the exact score. Package-private so a
+    * profiler times EXACTLY this kernel (not a re-implementation
     * that could silently drift — r16 ADVICE); the candidate id-list
     * broadcasts INTO both vector scans. */
   private[graft] def rescoreCandidates(cands: DataFrame, corpus: DataFrame,

@@ -522,7 +522,7 @@ object SketchOps {
     // window on colname(-prefixed) keys, and a partitioning-carrying
     // relation lets every one of them skip its exchange — the r17
     // q_profile_table wall was almost entirely these catalog-sized
-    // exchanges' fixed stage cost, not data (FrontierLab rows).
+    // exchanges' fixed stage cost, not data (COVERAGE.md round-16 rows).
     val hist = tall.groupBy("colname", "term", "h", "v", "is_num")
       .agg(count(lit(1)).as("cnt"))
       .repartition(col("colname"))

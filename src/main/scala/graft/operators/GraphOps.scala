@@ -608,7 +608,7 @@ object GraphOps {
   }
 
   /** The degree-ordered orientation shared by [[triangleCounts]] and
-    * the skew-measurement lab ([[graft.TriSkew]]): returns the
+    * the r12 planted-hub measurement (COVERAGE.md): returns the
     * undirected-simple degree frame `(id, d)` and the oriented edge
     * frame `(s, t)` with every edge pointing from its lower
     * (degree, id) endpoint to the higher, hash-partitioned on the

@@ -144,12 +144,12 @@ object Scale {
 
   /** Skew-GATED join — [[saltedJoin]] made self-gating, so callers
     * don't pay the salted plan's deliberate premium (small side
-    * ×salts, wider shuffle key; SaltLab measured 2-5× on unskewed
+    * ×salts, wider shuffle key; measured 2-5× on unskewed
     * corpora) blind: one measured [[hotKeyShare]] probe over the big
     * side decides. If the hottest key owns ≥ hotNum/hotDen of the
-    * rows (default 1/5), the salted plan's skew immunity wins (SaltLab:
-    * 2.7-3× at a planted 90%-hot key with AQE skew handling and
-    * broadcast off); below it the plain equi-join is strictly better.
+    * rows (default 1/5), the salted plan's skew immunity wins
+    * (2.7-3× at a planted 90%-hot key with AQE skew handling and
+    * broadcast off; COVERAGE.md round-14 salted-join attribution); below it the plain equi-join is strictly better.
     * A measured count, not a stats gate — the same reasoning as the
     * filtered-ANN gate: CBO-less Catalyst has no per-key frequency
     * statistics to consult, and AQE's skew split only helps AFTER a
@@ -174,7 +174,7 @@ object Scale {
     * a catalog lookup, NOT a data scan: this is what replaces
     * [[hotKeyShare]]'s full key-column probe at plan time (the r15
     * verdict's last asserted-not-measured cost — at 100 TB a planner
-    * reads persisted stats; StatsGateLab measures the drop).
+    * reads persisted stats; COVERAGE.md's r16 row records the drop).
     */
   case class KeyStats(nRows: Long, nullCnt: Long, nDistinct: Long,
       hotCnt: Long, hotBound: Long, kmvEst: Long) {
@@ -236,7 +236,7 @@ object Scale {
     * equal). The counter frames are ≤ depth·width rows by
     * construction, so a planner collects them once and answers in
     * microseconds; the frame form's three tiny Spark jobs cost ~1 s
-    * of fixed scheduling per decision (StatsGateLab measured it) —
+    * of fixed scheduling per decision (measured r16, COVERAGE.md) —
     * fine for a catalog entry, wrong for a planner making a decision
     * per join. Same semantics: min over hash rows of the bucketwise
     * inner product; a row with no shared cells pins the bound to 0.
@@ -473,7 +473,7 @@ object Scale {
     * step's bound, hot count scaled by the same multiplier, carrier's
     * NDV/KMV carried through (a join can only drop key values).
     * Decision cost is independent of table sizes by construction —
-    * StatsGateLab measures it flat at 10×.
+    * Measured flat at 10× (r17, COVERAGE.md).
     */
   def statsJoinOrder(tables: Seq[PlanTable], edges: Seq[JoinEdge],
       depth: Int = 4, broadcastRows: Long = 10000, hotNum: Long = 1,
