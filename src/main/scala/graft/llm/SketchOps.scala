@@ -86,14 +86,15 @@ object SketchOps {
   /** Per-group k smallest hashes. `salted = true` runs the
     * [[profileSample]]-style TWO-PHASE rank (r20): phase 1 ranks
     * within (source, h mod 64) — 64 parallel partial sorts — and
-    * phase 2 ranks the ≤ 64·k survivors; every input is distinct
-    * (source, h) by construction (hashFrame/kmvMerge/
-    * tableStatsFromHist all dedup), and a row in the global bottom-k
-    * is in its salt group's bottom-k a fortiori, so the selected row
-    * set is IDENTICAL to the one-window form. The salted form wins
-    * where the per-group input is cardinality-sized and the rank
-    * would otherwise serialize one n-row sort per column — the stats
-    * finalize, which a streaming re-planner pays per micro-batch.
+    * phase 2 ranks the ≤ 64·k survivors. The salted branch takes the
+    * distinct (source, h) rows itself, so a row in the global bottom-k
+    * is in its salt group's bottom-k a fortiori and the selected row
+    * set is IDENTICAL to the one-window form over distinct input
+    * (hashFrame and kmvMerge dedup before the unsalted form). The
+    * salted form wins where the per-group input is cardinality-sized
+    * and the rank would otherwise serialize one n-row sort per column
+    * — the stats finalize, which a streaming re-planner pays per
+    * micro-batch.
     * The sketch kernels (k-min folds over ≤ k·batches rows) keep the
     * single window: their inputs are sketch-sized and the extra
     * phase is a pure stage floor (measured +0.2-0.3 s on the batch
@@ -101,7 +102,7 @@ object SketchOps {
   private def kminOfHashed(hashed: DataFrame, k: Int,
       salted: Boolean = false): DataFrame = {
     val pre = if (!salted) hashed else
-      hashed.withColumn("_salt", pmod(col("h"), lit(64L)))
+      hashed.distinct().withColumn("_salt", pmod(col("h"), lit(64L)))
         .withColumn("rn", row_number().over(
           Window.partitionBy("source", "_salt").orderBy("h")))
         .filter(col("rn") <= k).drop("rn", "_salt")
@@ -995,7 +996,7 @@ object SketchOps {
       .select(col("colname"), col("term").as("hot_term"),
         col("cnt").as("hot_cnt"))
     val kmv = kmvEstimate(kminOfHashed(
-        nn.select(col("colname").as("source"), col("h")).distinct(), k,
+        nn.select(col("colname").as("source"), col("h")), k,
         salted = true), k)
       .filter(col("source") =!= "__merged__")
       .select(col("source").as("colname"), col("kth_min_hash"),

@@ -23,4 +23,17 @@ class ContractSpec extends SparkSpec {
       s"oracled set shrank to ${SparkEntry.oracleSql.size}")
     assert(SparkEntry.queries.keySet.forall(_.startsWith("q_")))
   }
+
+  test("one Entry per name: the driver maps and the stream list derive from it") {
+    val names = Queries.entries.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate entry names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    assert(Queries.streamingEntries.toSet ==
+      Queries.entries.filter(_.stream).map(_.name).toSet)
+    assert(Queries.streamingEntries.size == 15)
+    val noOracle = Queries.entries.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(noOracle.isEmpty, s"entries with an empty oracle: $noOracle")
+  }
 }
