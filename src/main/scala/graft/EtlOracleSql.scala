@@ -11,7 +11,6 @@ object EtlOracleSql {
     """-- DuckDB replica of the full trace-ETL pipeline over the synthetic
       |-- corpus: SyntheticTraces.fromTpch + TraceEtl commit semantics
       |-- (developed/verified against the Spark output by tools/check.py).
-      |-- Placeholder __OUTPUT__ selects 'transactions' or 'contracts'.
       |WITH roots AS (
       |  SELECT
       |    1 + o_orderkey % 3 AS chain_id,

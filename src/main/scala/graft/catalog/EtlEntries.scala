@@ -646,7 +646,7 @@ private[graft] object EtlEntries {
   // config (changelog uploads per-batch deltas instead of full
   // snapshots, so per-batch state maintenance stays flat as state
   // grows; a 1000-executor deployment runs exactly this provider),
-  // with trackTotalNumberOfRows off (see withStreamStore; rehearsals
+  // with trackTotalNumberOfRows off (see withStreamStore; the specs
   // that assert state-row bounds run their own sessions with tracking
   // left on). State partitions are SIZE-GATED off the staged input
   // volume with a floor of 8: the r9/r10 sweeps measured the 8→16
@@ -663,7 +663,7 @@ private[graft] object EtlEntries {
   // 3 data slices keep the semantics the stream must prove (sessions
   // spanning batch boundaries, mid-stream watermark advance, sentinel
   // close-out: 5 micro-batches total) at 5 floor units instead of 10;
-  // StreamRehearsal still drives 20-slice replays for load rehearsal.
+  // more slices would add floor cost and prove nothing new.
   // 2 files per trigger (r20, VERDICT r19 #5): groups the 5 replay
   // files [s0,s1][s2,sent1][sent2] — everything the stream proves
   // survives (sessions span the s1|s2 batch boundary, the watermark
@@ -698,9 +698,8 @@ private[graft] object EtlEntries {
           .normalize(graft.sources.SyntheticTraces.bronze(s, dir))
           .filter(col("transaction_hash").isNotNull)
           .withColumn("block_timestamp", coalesce(col("block_timestamp"), lit(0L)))
-        StreamRehearsal.stageSlices(norm.toDF(), "block_timestamp", nSlices,
-          s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(norm.toDF(), "block_timestamp",
+          nSlices, tmp)
         val mx = s.read.parquet(tmp).agg(max("block_timestamp")).head().getLong(0)
         Seq(
           (nSlices, graft.model.TraceRow(1L, "0xsentinel1", Some(0), Some("0xa"),
@@ -710,10 +709,7 @@ private[graft] object EtlEntries {
             Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
             Some(1L), Some(mx + 2000000L), Some("0xb"), None)),
         ).foreach { case (i, row) =>
-          Seq(row).toDS().withColumn("_slice", lit(i))
-            .write.partitionBy("_slice").mode("overwrite").parquet(s"$tmp/sent_$i")
-          StreamRehearsal.moveSlices(s"$tmp/sent_$i", tmp, 0)
-          org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/sent_$i"))
+          graft.sources.Staging.appendSlice(Seq(row).toDS(), i, tmp)
         }
         // stageOnce's completeness marker (Spark wrote its _SUCCESS
         // into the since-deleted stage/sent dirs, not here)

@@ -85,18 +85,15 @@ private[graft] object JoinEntries {
           .groupBy("key", "tag", "ts").agg(max("id").as("id"))
           .select(col("key"), col("tag"), col("id"), col("ts"),
             col("ts").cast("timestamp").as("event_time"))
-        StreamRehearsal.stageSlices(ev, "ts", nSlices, s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(ev, "ts", nSlices, tmp)
         val mx = s.read.parquet(tmp).agg(max("ts")).head().getLong(0)
         Seq((nSlices, -1L, mx + 1000000L), (nSlices + 1, -2L, mx + 2000000L))
           .foreach { case (i, id, ts) =>
-            Seq((-1L, 0, id, ts)).toDF("key", "tag", "id", "ts")
-              .select(col("key"), col("tag"), col("id"), col("ts"),
-                col("ts").cast("timestamp").as("event_time"))
-              .withColumn("_slice", lit(i))
-              .write.partitionBy("_slice").mode("overwrite").parquet(s"$tmp/sent_$i")
-            StreamRehearsal.moveSlices(s"$tmp/sent_$i", tmp, 0)
-            org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/sent_$i"))
+            graft.sources.Staging.appendSlice(
+              Seq((-1L, 0, id, ts)).toDF("key", "tag", "id", "ts")
+                .select(col("key"), col("tag"), col("id"), col("ts"),
+                  col("ts").cast("timestamp").as("event_time")),
+              i, tmp)
           }
         graft.sources.Staging.touchMarker(tmp)
       }

@@ -612,8 +612,7 @@ private[graft] object RelationalEntries {
             s"numbering would drift from the oracle's); got $counts")
         all.repartition(4, col("_slice"))
           .write.partitionBy("_slice").parquet(s"$tmp/stage")
-        StreamRehearsal.moveSlices(s"$tmp/stage", s"$tmp/slices", 0)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.moveSlices(s"$tmp/stage", s"$tmp/slices")
         graft.sources.Staging.touchMarker(tmp)
       }
     }

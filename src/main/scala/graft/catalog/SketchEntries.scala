@@ -130,8 +130,7 @@ private[graft] object SketchEntries {
       graft.sources.Staging.stageOnce(path) { tmp =>
         val ev = events(s, dir).select(col("event_type"),
           col("user_id").cast("string").as("term"), col("sec").as("ts"))
-        StreamRehearsal.stageSlices(ev, "ts", 3, s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
         graft.sources.Staging.touchMarker(tmp)
       }
     }
@@ -484,9 +483,7 @@ private[graft] object SketchEntries {
           .select(col("event_type"), col("event_id"),
             floor(col("value") * 1000).cast("long").as("v"),
             col("sec").as("ts"))
-        StreamRehearsal.stageSlices(ev, "ts", 3, s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(
-          new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
         graft.sources.Staging.touchMarker(tmp)
       }
     }
@@ -626,7 +623,7 @@ private[graft] object SketchEntries {
   // withSmallShuffle: the sessionize windows + sketch tiers exchange
   // ~100k narrow rows (a few MB) — 32-way partitioning is dispatch
   // overhead at this volume, the withSmallShuffle story at the
-  // events-corpus scale (the sf1 rehearsal drives the same kernels at
+  // events-corpus scale (the sf1 rehearsal drove the same kernels at
   // 1M rows through the stream twin's own DOP)
   private val sketchKmvSession: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("events")) {
@@ -723,20 +720,14 @@ private[graft] object SketchEntries {
             (col("event_id") % 50).cast("string").as("item"),
             col("sec").as("ts"))
           .withColumn("event_time", col("ts").cast("timestamp"))
-        StreamRehearsal.stageSlices(ev, "ts", 3, s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(
-          new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
         val mx = s.read.parquet(tmp).agg(max("ts")).head().getLong(0)
         Seq((3, -1L, mx + 1000000L), (4, -2L, mx + 2000000L))
           .foreach { case (i, id, ts) =>
-            Seq((-1L, id, "s", ts)).toDF("user_id", "event_id", "item", "ts")
-              .withColumn("event_time", col("ts").cast("timestamp"))
-              .withColumn("_slice", lit(i))
-              .write.partitionBy("_slice").mode("overwrite")
-              .parquet(s"$tmp/sent_$i")
-            StreamRehearsal.moveSlices(s"$tmp/sent_$i", tmp, 0)
-            org.apache.hadoop.fs.FileUtil.fullyDelete(
-              new java.io.File(s"$tmp/sent_$i"))
+            graft.sources.Staging.appendSlice(
+              Seq((-1L, id, "s", ts)).toDF("user_id", "event_id", "item", "ts")
+                .withColumn("event_time", col("ts").cast("timestamp")),
+              i, tmp)
           }
         graft.sources.Staging.touchMarker(tmp)
       }

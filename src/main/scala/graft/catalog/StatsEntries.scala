@@ -651,9 +651,10 @@ private[graft] object StatsEntries {
       |JOIN d2 ON o2_orderkey = d2_key""".stripMargin
 
   // STREAM-FOLDED STATS → JOIN DECISION, end-to-end (VERDICT r16 #6):
-  // rehearsal scenario 10 proved the profiler's histogram folds
-  // across micro-batches (histMerge, cardinality-sized state) into
-  // the SAME table-stats artifact the batch build produces; this
+  // the profiler's histogram folds across micro-batches (histMerge,
+  // cardinality-sized state) into the SAME table-stats artifact the
+  // batch build produces (MergeableSketchSpec "streaming profiler"
+  // pins it); this
   // entry closes the loop inside ONE catalog entry — the always-on
   // stats service making a real plan decision. lineitem replays as 3
   // micro-batches, each batch's histogram frame merges into the
@@ -663,7 +664,7 @@ private[graft] object StatsEntries {
   // persisted v2 artifact). The entry REQUIREs the folded decision
   // equal the decision from the persisted batch-built lineitem
   // artifact — stream-folded == batch-built is enforced at every run,
-  // not just in the rehearsal — then executes the join through
+  // not just in the spec — then executes the join through
   // statsGatedJoin with the branch string in the hash-compared
   // output (shuffle at every SF: lineitem's hottest key ≪ 20%).
   private def lineitemSlicesStaged(s: SparkSession, dir: String): String = {
@@ -674,9 +675,7 @@ private[graft] object StatsEntries {
       graft.sources.Staging.stageOnce(path) { tmp =>
         val li = t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"))
-        StreamRehearsal.stageSlices(li, "l_orderkey", 3, s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(
-          new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(li, "l_orderkey", 3, tmp)
         graft.sources.Staging.touchMarker(tmp)
       }
     }
@@ -779,9 +778,10 @@ private[graft] object StatsEntries {
   // folded decision (order string + every per-step strategy) equal
   // the decision from the persisted batch-built artifacts, counts
   // the re-plans (one per slice), and executes the final plan with
-  // the order string in the hash-compared output. Rehearsal
-  // scenario 13 drives the same fold at sf1 and pins decision parity
-  // at EVERY batch.
+  // the order string in the hash-compared output. Mid-stream plans
+  // come from prefix-exact stats: MergeableSketchSpec "streaming
+  // profiler" pins the folded histogram equal to the whole prefix's
+  // at every batch.
   private def liOrdSlicesStaged(s: SparkSession, dir: String): String = {
     val key = graft.sources.SyntheticTraces.tableKey(dir,
       Seq("lineitem", "orders"))
@@ -798,10 +798,7 @@ private[graft] object StatsEntries {
         val ord = t(s, dir, "orders")
           .select(lit("orders").as("tbl"), col("o_orderkey").as("a"),
             col("o_custkey").cast("long").as("b"))
-        StreamRehearsal.stageSlices(li.unionByName(ord), "a", 3,
-          s"$tmp/stage", tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(
-          new java.io.File(s"$tmp/stage"))
+        graft.sources.Staging.stageSlices(li.unionByName(ord), "a", 3, tmp)
         graft.sources.Staging.touchMarker(tmp)
       }
     }

@@ -559,8 +559,8 @@ object SketchOps {
     * rows per column, and it merges with [[quantileMerge]] (bottom-k
     * of a union of bottom-ks), so a STREAMING profiler carries
     * (histogram, sample) between micro-batches and folds each with
-    * its own merge (StreamRehearsal scenario 10 measures the fold at
-    * sf1).
+    * its own merge (MergeableSketchSpec "streaming profiler" pins the
+    * per-batch fold against the whole prefix).
     *
     * Extraction is a SALTED TWO-PHASE rank (r17 VERDICT #1 — the
     * old distinct-then-global-window shape shuffled the column twice
@@ -977,7 +977,8 @@ object SketchOps {
     * always-on form: a STREAMING profiler folds its histogram state
     * per micro-batch ([[histMerge]]) and finalizes the stats artifact
     * from the carried state whenever a planner wants fresh stats
-    * (StreamRehearsal scenario 10 pins stream-folded == batch-built). */
+    * (MergeableSketchSpec "streaming profiler" pins stream-folded ==
+    * batch-built). */
   def tableStatsFromHist(hist: DataFrame, k: Int = 128,
       depth: Int = 4, width: Int = 1024): TableStats = {
     val nn = hist.filter(col("term").isNotNull)

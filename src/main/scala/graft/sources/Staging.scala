@@ -1,5 +1,8 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
+
 /** Cross-process-safe one-time staging for the fingerprint-keyed
   * corpus dirs under java.io.tmpdir. The old pattern (`synchronized` +
   * `_SUCCESS` re-check, then write directly into the final path) is
@@ -71,6 +74,53 @@ object Staging {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       org.apache.hadoop.fs.FileUtil.fullyDelete(dir)))
     dir.toString
+  }
+
+  /** Write `df` as `nSlices` single-file time-range slices under
+    * `watchDir`, modification times strictly increasing with the time
+    * range, so FileStreamSource replays them in event-time order.
+    */
+  def stageSlices(df: DataFrame, tsCol: String, nSlices: Int,
+      watchDir: String): Unit = {
+    val r = df.agg(min(col(tsCol)), max(col(tsCol))).head()
+    val (mn, mx) = (r.getLong(0), r.getLong(1))
+    val width = math.max((mx - mn) / nSlices + 1, 1L)
+    writeSlices(df.withColumn("_slice",
+        least(floor((col(tsCol) - mn) / width), lit(nSlices - 1)).cast("int"))
+      .repartition(col("_slice")), watchDir)
+  }
+
+  /** Append `df` to `watchDir` as slice `i` (one file per write
+    * partition) — the far-future sentinel slices that close a replay. */
+  def appendSlice(df: Dataset[_], i: Int, watchDir: String): Unit =
+    writeSlices(df.withColumn("_slice", lit(i)), watchDir)
+
+  /** Partitioned write of a `_slice`-tagged frame into a scratch dir
+    * under `watchDir`, then [[moveSlices]] into place. */
+  private def writeSlices(sliced: DataFrame, watchDir: String): Unit = {
+    val stageDir = s"$watchDir/_stage"
+    sliced.write.partitionBy("_slice").mode("overwrite").parquet(stageDir)
+    moveSlices(stageDir, watchDir)
+  }
+
+  /** Move the `_slice=i` part files of `stageDir` into `watchDir` as
+    * `slice_<i>_<j>.parquet` with mtime base + i minutes — the file
+    * source orders on (mtime, path) — then delete `stageDir`.
+    */
+  def moveSlices(stageDir: String, watchDir: String): Unit = {
+    val base = 1700000000000L
+    new java.io.File(watchDir).mkdirs()
+    val stage = new java.io.File(stageDir)
+    stage.listFiles().filter(_.getName.startsWith("_slice=")).sortBy(_.getName).foreach { d =>
+      val i = d.getName.stripPrefix("_slice=").toInt
+      d.listFiles().filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
+        case (f, j) =>
+          val dst = new java.io.File(watchDir, f"slice_$i%04d_$j.parquet")
+          java.nio.file.Files.move(f.toPath, dst.toPath)
+          dst.setLastModified(base + i * 60000L)
+      }
+    }
+    org.apache.hadoop.fs.FileUtil.fullyDelete(stage)
   }
 
   /** Run `write(tmpDir)` and atomically publish the result as `path`,

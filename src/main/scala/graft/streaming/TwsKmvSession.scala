@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming._
   * state, so a closed session's state can be dropped outright), the
   * latest event second, and the session's k-min hash set (≤ k longs —
   * the KMV bound, so state is open_sessions × k no matter how long
-  * the stream runs; scenario 12 measures it at sf1). A session closes
-  * either INLINE (a later event of the same fold exceeds the gap) or
+  * the stream runs; TwsKmvSessionSpec pins the state-row bound). A
+  * session closes either INLINE (a later event of the same fold
+  * exceeds the gap) or
   * by per-key event-time TIMER once the watermark passes
   * lastSec + gap — `StreamingEtl.sessionCommit`'s close design with a
   * sketch instead of a tree buffer. Each closed session emits exactly
@@ -44,7 +45,7 @@ import org.apache.spark.sql.streaming._
   * extending it backwards — sketch contents stay a superset-merge,
   * session boundaries stay watermark-consistent, but start seconds
   * can diverge from the batch twin under out-of-order input. The
-  * shipped entries and rehearsal scenario 12 stage per-key
+  * shipped entries stage per-key
   * time-ordered slices, where parity is exact.
   */
 case class KmvSessEvent(user_id: Long, event_id: Long, item: String,

@@ -112,12 +112,4 @@ class DocCountSpec extends AnyFunSuite {
     assert(failures.isEmpty,
       s"\n${failures.size} doc-count failures:\n" + failures.mkString("\n"))
   }
-
-  test("streamingEntries is consistent with the catalog") {
-    val missing = Queries.streamingEntries.filterNot(
-      SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"streamingEntries not in catalog: $missing")
-    assert(Queries.streamingEntries.distinct.size ==
-      Queries.streamingEntries.size)
-  }
 }

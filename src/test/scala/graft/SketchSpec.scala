@@ -415,6 +415,65 @@ class MergeableSketchSpec extends SparkSpec {
       (-1L, "__merged__")))
   }
 
+  test("streaming profiler: per-batch hist and sample folds track the " +
+      "whole prefix; the folded state finalizes to the batch-built " +
+      "profile and stats artifact") {
+    val k = 128
+    val evRaw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val qv = floor(col("value") * 1000).cast("long")
+    val cols = Seq(
+      ("user_id", col("user_id"), Some(col("user_id"))),
+      ("event_type", col("event_type"), None),
+      ("value", qv, Some(qv)))
+    val ev = evRaw.select(col("event_id"), col("user_id"),
+      col("event_type"), col("value"),
+      Queries.eventSeconds(evRaw.schema("ts").dataType).as("ts"))
+    def frames(df: org.apache.spark.sql.DataFrame) =
+      SketchOps.profileFrames(df, col("event_id"), cols)
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col): _*)
+        .collect().map(_.toString).toSeq.sorted
+    val watch = java.nio.file.Files.createTempDirectory("profile_stream")
+      .toString
+    try {
+      graft.sources.Staging.stageSlices(ev, "ts", 3, watch)
+      val slices = new java.io.File(watch).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .map(f => spark.read.parquet(f.toString))
+      assert(slices.length == 3)
+      var hist: Option[org.apache.spark.sql.DataFrame] = None
+      var samp: Option[org.apache.spark.sql.DataFrame] = None
+      for (i <- 1 to slices.length) {
+        val (tall, h) = frames(slices(i - 1))
+        val s = SketchOps.profileSample(tall, k)
+        hist = Some(hist.map(SketchOps.histMerge(_, h)).getOrElse(h)
+          .localCheckpoint())
+        samp = Some(samp.map(SketchOps.quantileMerge(_, s, k)).getOrElse(s)
+          .localCheckpoint())
+        // the hist state is cardinality-sized: one row per distinct
+        // (column, value) of the whole prefix, never stream-sized
+        val state = canon(hist.get)
+        val prefix = canon(frames(slices.take(i).reduce(_ unionByName _))._2)
+        assert(state.size == prefix.size,
+          s"batch ${i - 1}: hist state ${state.size} rows != prefix " +
+            s"cardinality ${prefix.size}")
+        assert(state == prefix, s"batch ${i - 1}: hist state != whole-prefix hist")
+        // bottom-k per numeric column (user_id, value)
+        assert(samp.get.count() <= 2L * k,
+          s"batch ${i - 1}: sample state exceeds 2k rows")
+      }
+      assert(canon(SketchOps.profileFromState(hist.get, samp.get, k, 4, 1024, 3)) ==
+        canon(SketchOps.profileTable(ev, col("event_id"), cols, k)),
+        "stream-folded profile != batch-built profile")
+      val streamStats = SketchOps.tableStatsFromHist(hist.get)
+      val batchStats = SketchOps.tableStats(ev, col("event_id"), cols)
+      assert(canon(streamStats.cols) == canon(batchStats.cols),
+        "stream-folded stats artifact (cols) != batch-built")
+      assert(canon(streamStats.counters) == canon(batchStats.counters),
+        "stream-folded stats artifact (counters) != batch-built")
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(watch))
+  }
+
   test("null keys are dropped by both sketches (a null hash would sort " +
       "first in Spark's window but last in DuckDB's)") {
     val df = Seq(Some("a"), Some("b"), None, Some("a"), None)

@@ -128,4 +128,101 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("native stream-stream interval join over a sliced file replay: " +
+      "state stays within the eviction horizon, inner and left outer") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.sources.Staging
+    import spark.implicits._
+    val nSlices = 8
+    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    def withTime(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("key"), col("tag"), col("id"), col("ts"),
+        col("ts").cast("timestamp").as("event_time"))
+    val in = withTime(ev.select(col("user_id").as("key"),
+        when(col("event_type") === "signup", 0).otherwise(1).as("tag"),
+        col("event_id").as("id"),
+        Queries.eventSeconds(ev.schema("ts").dataType).as("ts"))
+      .groupBy("key", "tag", "ts").agg(max("id").as("id")))
+    val work = java.nio.file.Files.createTempDirectory("ssj_horizon").toString
+    val watch = s"$work/in"
+    try {
+      Staging.stageSlices(in, "ts", nSlices, watch)
+      val mx = spark.read.parquet(watch).agg(max("ts")).head().getLong(0)
+      // far-future sentinels: the first advances the watermark past
+      // every real row, the second gives eviction a batch to run in
+      Seq((nSlices, -1L, mx + 1000000L), (nSlices + 1, -2L, mx + 2000000L))
+        .foreach { case (i, id, ts) =>
+          Staging.appendSlice(withTime(
+            Seq((-1L, 0, id, ts)).toDF("key", "tag", "id", "ts")), i, watch)
+        }
+      // the replay contract: one file per slice, named and timed in
+      // slice order, and no staging dir left behind
+      val files = new java.io.File(watch).listFiles().sortBy(_.getName)
+      assert(files.map(_.getName).toSeq ==
+        (0 until nSlices + 2).map(i => f"slice_$i%04d_0.parquet"))
+      assert(files.map(_.lastModified).toSeq ==
+        (0 until nSlices + 2).map(i => 1700000000000L + i * 60000L))
+
+      val staged = files.zipWithIndex.flatMap { case (f, i) =>
+        spark.read.parquet(f.toString).select("tag", "ts").collect()
+          .map(r => (i, r.getInt(0), r.getLong(1)))
+      }
+      val total = staged.length
+      for (outer <- Seq(false, true)) {
+        val stream = spark.readStream.schema(spark.read.parquet(watch).schema)
+          .option("maxFilesPerTrigger", 1).parquet(watch)
+        // outer: the sentinels must reach the probe watermark too
+        val sentinel = if (outer) col("key") < 0 else lit(false)
+        val probes = stream.filter(col("tag") === 1 || sentinel)
+          .select(col("key"), col("id").as("probe_id"),
+            col("ts").as("probe_ts"), col("event_time").as("p_time"))
+          .withWatermark("p_time", "3600 seconds")
+        val states = stream.filter(col("tag") === 0)
+          .select(col("key").as("s_key"), col("id").as("state_id"),
+            col("ts").as("state_ts"), col("event_time").as("s_time"))
+          .withWatermark("s_time", "3600 seconds")
+        val q = probes.join(states,
+            col("key") === col("s_key") &&
+              col("s_time") >= col("p_time") - expr("INTERVAL 3600 SECONDS") &&
+              col("s_time") <= col("p_time"),
+            if (outer) "leftOuter" else "inner")
+          .select(col("key"), col("probe_id"), col("probe_ts"),
+            col("state_id"), col("state_ts"))
+          .writeStream.format("parquet")
+          .option("path", s"$work/out_$outer")
+          .option("checkpointLocation", s"$work/ck_$outer")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        val progress = q.recentProgress.toSeq
+        val stateRows = progress.map(
+          _.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L))
+        // without eviction state would accumulate toward the whole
+        // stream; the horizon is ~one slice per side (+ the 3600 s
+        // reach-back)
+        assert(stateRows.max > 0L && stateRows.max <= total * 4L / nSlices,
+          s"outer=$outer: state not bounded by the eviction horizon: " +
+            s"peak ${stateRows.max} of $total rows")
+        if (!outer) {
+          // per batch, measured state == the per-side model: rows
+          // arrived so far still above the batch's active watermark W
+          // (probes with ts >= W, states with ts >= W - 3600)
+          val ratios = progress.zip(stateRows)
+            .filter(_._1.batchId < nSlices).flatMap { case (p, measured) =>
+              val w = Option(p.eventTime.get("watermark"))
+                .map(java.time.Instant.parse(_).getEpochSecond).getOrElse(0L)
+              val modeled = staged.count { case (slice, tag, ts) =>
+                slice <= p.batchId &&
+                  (if (tag == 1) ts >= w else ts >= w - 3600L)
+              }
+              if (modeled > 0) Some(measured.toDouble / modeled) else None
+            }
+          assert(ratios.size >= nSlices / 2 &&
+            ratios.max <= 1.1 && ratios.min >= 0.5,
+            s"measured state diverges from the per-side model: $ratios")
+        }
+      }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(work))
+  }
+
 }

@@ -70,6 +70,12 @@ class TwsKmvSessionSpec extends SparkSpec {
         assert(out == expected, s"got $out\nwant $expected")
         // truncation really happened for user 2 (8 distinct > k)
         assert(out.exists(r => r._1 == 2L && r._4 == k.toLong))
+        // state holds OPEN sessions only: bounded by the user count
+        // (users 1, 2 and the sentinel), never by closed sessions
+        val stateRows = q.recentProgress
+          .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+        assert(stateRows.max > 0L && stateRows.max <= 3L,
+          s"state exceeds the open-session bound: ${stateRows.toSeq}")
       } finally q.stop()
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -53,6 +53,12 @@ class TwsNearDupSpec extends SparkSpec {
           .where("id1 = 1 AND id2 = 3").select("sig_agree", "n_perms")
           .collect().head
         assert(agree13.getInt(0) == agree13.getInt(1))
+        // state is one entry per occupied (band, key) bucket: at most
+        // bands x documents rows, however many batches stream
+        val peak = q.recentProgress
+          .flatMap(_.stateOperators.headOption).map(_.numRowsTotal).max
+        assert(peak > 0L && peak <= TwsNearDup.bandCount().toLong * 4,
+          s"near-dup state exceeded the bucket bound: $peak")
       } finally q.stop()
     }
   }

@@ -10,6 +10,8 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 
+REPO = Path(__file__).resolve().parent.parent  # the checkout this script sits in
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
 
@@ -41,7 +43,7 @@ def main():
     if "--no-verify" not in sys.argv:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=REPO)
         if r.returncode != 0:
             print(r.stdout[-3000:])
             print(r.stderr[-3000:])

@@ -13,15 +13,18 @@ Usage: python3 tools/check_pg_dialect.py [dump.json]
        (runs `sbt runMain graft.PgDialectDump` first if no dump given)
 """
 import json, subprocess, sys
+from pathlib import Path
 
 import duckdb
+
+REPO = Path(__file__).resolve().parent.parent  # the checkout this script sits in
 
 dump = sys.argv[1] if len(sys.argv) > 1 else None
 if dump is None:
     dump = "/tmp/pg_dialect.json"
     subprocess.run(
         ["sbt", "-batch", f"runMain graft.PgDialectDump {dump}"],
-        check=True, cwd="/root/repo", stdout=subprocess.DEVNULL)
+        check=True, cwd=REPO, stdout=subprocess.DEVNULL)
 
 specs = [json.loads(l) for l in open(dump) if l.strip()]
 assert {s["table"] for s in specs} == {"transactions", "contracts", "blocks"}
