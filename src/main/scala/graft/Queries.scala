@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.catalog._
 
 /** Operator catalog: every SURVEY §2 operator expressed as a
@@ -181,15 +182,21 @@ object Queries {
     p
   }
 
-  /** Conf scope of the RocksDB-state streaming entries: provider,
+  /** Replay the staged slices under `watch` through the state
+    * operator `op` as one AvailableNow stream, 2 files per trigger,
+    * into a parquet sink under a session temp dir; wait for it, then
+    * return the sink's output read back. The store conf is set before
+    * the stream starts and restored after: RocksDB state,
     * trackTotalNumberOfRows off (it costs a get-before-put per state
     * write solely for the numRowsTotal metric — measured −2 s of
-    * 15-16 s on the flagship, SCALE_STREAM_r09.md), `partitions` state
-    * partitions, changelog checkpointing, and — for the native
-    * stream-stream join — the join state format version. Set BEFORE
-    * the stream starts and restored after. */
-  private[graft] def withStreamStore[T](s: SparkSession, partitions: Int,
-      changelog: Boolean = false, joinFormatVersion: Int = 0)(body: => T): T =
+    * 15-16 s on the flagship, SCALE_STREAM_r09.md), the
+    * [[streamPartitionsFor]] state partitions, changelog
+    * checkpointing, and — for the native stream-stream join — the
+    * join state format version. */
+  private[graft] def replay(s: SparkSession, watch: String, floor: Int = 4,
+      changelog: Boolean = false, joinFormatVersion: Int = 0)(
+      op: DataFrame => DataFrame): DataFrame = {
+    val partitions = streamPartitionsFor(s, watch, floor)
     withConf(s, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -199,7 +206,34 @@ object Queries {
       ShufflePartitions -> partitions.toString) ++
       (if (joinFormatVersion > 0)
         Seq("spark.sql.streaming.join.stateFormatVersion" -> joinFormatVersion.toString)
-      else Nil): _*)(body)
+      else Nil): _*) {
+      val work = graft.sources.Staging.sessionTempDir("graft_replay")
+      op(s.readStream.schema(s.read.parquet(watch).schema)
+          .option("maxFilesPerTrigger", 2).parquet(watch))
+        .writeStream.format("parquet")
+        .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      s.read.parquet(s"$work/out")
+    }
+  }
+
+  /** Replay the staged slices under `watch` one file per trigger as an
+    * AvailableNow stream, calling `f` on each non-empty micro-batch in
+    * slice order — the fold shape, whose carried state lives in `f`'s
+    * closure. Returns once the stream has drained. */
+  private[graft] def replayBatches(s: SparkSession, watch: String)(
+      f: DataFrame => Unit): Unit = {
+    val work = graft.sources.Staging.sessionTempDir("graft_replay")
+    s.readStream.schema(s.read.parquet(watch).schema)
+      .option("maxFilesPerTrigger", 1).parquet(watch)
+      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+        if (!b.isEmpty) f(b)
+      }
+      .option("checkpointLocation", s"$work/ck")
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+  }
 
   /** events.parquet has shipped with two physical `ts` encodings across
     * testdata generations: TIMESTAMP(NANOS) (which Spark 4 only reads

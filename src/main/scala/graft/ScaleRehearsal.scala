@@ -38,7 +38,7 @@ object ScaleRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "/root/repo/tmp/sf1"
+    val dir = if (args.length > 0) args(0) else ScaleUp.defaultDir
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q_etl_transactions", "q_etl_contracts", "q_etl_blocks",

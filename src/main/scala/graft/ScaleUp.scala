@@ -14,9 +14,15 @@ import org.apache.spark.sql.functions._
   *   runMain graft.ScaleUp [srcDir] [outDir] [factor]
   */
 object ScaleUp {
+  /** The default scaled corpus: `tmp/sf1` under the launch directory
+    * (sbt runs in the project root). */
+  def defaultDir: String =
+    java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."))
+      .resolve("tmp/sf1").toAbsolutePath.toString
+
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "/root/repo/tmp/sf1"
+    val out = if (args.length > 1) args(1) else defaultDir
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = SparkSession.builder()
       .master("local[32]")

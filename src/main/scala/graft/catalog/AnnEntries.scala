@@ -231,21 +231,16 @@ private[graft] object AnnEntries {
   // assignment pass never re-runs at query time. Oracle is identical
   // to q_ann_ivf_topk's: "the persisted index serves bit-identically
   // to the in-session build+serve" is the hash-compared surface.
-  private[graft] def ivfIndexStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
+  private[graft] def ivfIndexStaged(s: SparkSession, dir: String): String =
     // _v2: assignment lists carry the label attribute so filtered
     // serves can push predicates into the persisted scan (the seam
     // contract's layout-change rule: bump the version literal)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_v2_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.SimilarityOps.saveIvfIndex(
-          graft.llm.SimilarityOps.buildIvfIndexWithAttrs(
-            embT(s, dir), "vec_id", "embedding", Seq("label")), tmp)
-      }
+    graft.sources.Staging.staged("graft_ivf_index_v2", dir,
+        Seq("embeddings")) { tmp =>
+      graft.llm.SimilarityOps.saveIvfIndex(
+        graft.llm.SimilarityOps.buildIvfIndexWithAttrs(
+          embT(s, dir), "vec_id", "embedding", Seq("label")), tmp)
     }
-    path
-  }
   private val annIndexServe: Q = (s, dir) => {
     val ix = graft.llm.SimilarityOps.loadIvfIndex(s, ivfIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfServeTopK(ix,
@@ -321,23 +316,17 @@ private[graft] object AnnEntries {
   // rebuilt-with-same-centroids index — so "serve-after-append ==
   // serve-over-rebuilt" is the hash-compared surface. Recall drift vs
   // fresh centroids is measured separately (r16 drift curve, COVERAGE).
-  private def ivfUpdatedIndexStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_upd_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val So = graft.llm.SimilarityOps
-        So.saveIvfIndex(So.buildIvfIndex(
-          embT(s, dir).filter(col("vec_id") % 4 =!= 0),
-          "vec_id", "embedding"), tmp)
-        So.appendToIvfIndex(s, tmp,
-          embT(s, dir).filter(col("vec_id") % 4 === 0),
-          "vec_id", "embedding")
-      }
+  private def ivfUpdatedIndexStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_ivf_index_upd_v1", dir,
+        Seq("embeddings")) { tmp =>
+      val So = graft.llm.SimilarityOps
+      So.saveIvfIndex(So.buildIvfIndex(
+        embT(s, dir).filter(col("vec_id") % 4 =!= 0),
+        "vec_id", "embedding"), tmp)
+      So.appendToIvfIndex(s, tmp,
+        embT(s, dir).filter(col("vec_id") % 4 === 0),
+        "vec_id", "embedding")
     }
-    path
-  }
   private val annIndexUpdate: Q = (s, dir) => {
     val ix = graft.llm.SimilarityOps.loadIvfIndex(s,
       ivfUpdatedIndexStaged(s, dir))
@@ -401,32 +390,26 @@ private[graft] object AnnEntries {
   // A wrong gate call fails the hash on branch, stat, AND the served
   // neighbors (append vs rebuild serve differently by construction).
   private def ivfGatedIndexStaged(s: SparkSession, dir: String,
-      regime: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_ivf_gated_${regime}_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val So = graft.llm.SimilarityOps
-        val emb = embT(s, dir)
-        So.saveIvfIndex(So.buildIvfIndex(
-          emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
-        val batch =
-          if (regime == "drift") {
-            // planted drift: the whole batch carries one donor vector
-            // (1-row broadcast scalar — the slice-count-guard shape)
-            val donor = emb.filter(col("vec_id") === 1)
-              .select(col("embedding").as("demb"))
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
-              .crossJoin(broadcast(donor))
-              .select(col("vec_id"), col("demb").as("embedding"))
-          } else emb.filter(col("vec_id") % 4 === 0)
-            .select("vec_id", "embedding")
-        So.ivfGatedUpdate(s, tmp, batch, "vec_id", "embedding")
-      }
+      regime: String): String =
+    graft.sources.Staging.staged(s"graft_ivf_gated_${regime}_v1", dir,
+        Seq("embeddings")) { tmp =>
+      val So = graft.llm.SimilarityOps
+      val emb = embT(s, dir)
+      So.saveIvfIndex(So.buildIvfIndex(
+        emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
+      val batch =
+        if (regime == "drift") {
+          // planted drift: the whole batch carries one donor vector
+          // (1-row broadcast scalar — the slice-count-guard shape)
+          val donor = emb.filter(col("vec_id") === 1)
+            .select(col("embedding").as("demb"))
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
+            .crossJoin(broadcast(donor))
+            .select(col("vec_id"), col("demb").as("embedding"))
+        } else emb.filter(col("vec_id") % 4 === 0)
+          .select("vec_id", "embedding")
+      So.ivfGatedUpdate(s, tmp, batch, "vec_id", "embedding")
     }
-    path
-  }
   private val annIndexRebuild: Q = (s, dir) => {
     val So = graft.llm.SimilarityOps
     def one(regime: String) = {
@@ -781,24 +764,18 @@ private[graft] object AnnEntries {
   // runs at query time. Oracle is IDENTICAL to q_ann_ivfpq_rerank's:
   // "the persisted coded index serves bit-identically to the
   // in-session build+refine" is the hash-compared surface.
-  private def pqIndexStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
+  private def pqIndexStaged(s: SparkSession, dir: String): String =
     // _v2: coded rows carry the label attribute (filtered serves push
     // predicates into the persisted scan) and the per-row encoding
     // error + meta baseline (the drift gate's stats) — the seam
     // contract's layout-change rule: bump the version literal
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_pq_index_v2_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.SimilarityOps.savePqIndex(
-          graft.llm.SimilarityOps.buildPqIndex(
-            embT(s, dir), "vec_id", "embedding",
-            attrCols = Seq("label")), tmp)
-      }
+    graft.sources.Staging.staged("graft_pq_index_v2", dir,
+        Seq("embeddings")) { tmp =>
+      graft.llm.SimilarityOps.savePqIndex(
+        graft.llm.SimilarityOps.buildPqIndex(
+          embT(s, dir), "vec_id", "embedding",
+          attrCols = Seq("label")), tmp)
     }
-    path
-  }
   private val annIvfPqServe: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
     val ix = graft.llm.SimilarityOps.loadPqIndex(s, pqIndexStaged(s, dir))
@@ -948,23 +925,17 @@ private[graft] object AnnEntries {
   // so "serve-after-append == serve-over-rebuilt" is the
   // hash-compared surface (the q_ann_index_update story on the
   // compressed family).
-  private def pqUpdatedIndexStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_pq_upd_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val So = graft.llm.SimilarityOps
-        So.savePqIndex(So.buildPqIndex(
-          embT(s, dir).filter(col("vec_id") % 4 =!= 0),
-          "vec_id", "embedding"), tmp)
-        So.appendToPqIndex(s, tmp,
-          embT(s, dir).filter(col("vec_id") % 4 === 0),
-          "vec_id", "embedding")
-      }
+  private def pqUpdatedIndexStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_pq_upd_v1", dir,
+        Seq("embeddings")) { tmp =>
+      val So = graft.llm.SimilarityOps
+      So.savePqIndex(So.buildPqIndex(
+        embT(s, dir).filter(col("vec_id") % 4 =!= 0),
+        "vec_id", "embedding"), tmp)
+      So.appendToPqIndex(s, tmp,
+        embT(s, dir).filter(col("vec_id") % 4 === 0),
+        "vec_id", "embedding")
     }
-    path
-  }
   private val annPqIndexUpdate: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
     val ix = graft.llm.SimilarityOps.loadPqIndex(s,
@@ -1002,28 +973,22 @@ private[graft] object AnnEntries {
   //          grows ~9x >= the 2x bar -> rebuild; serve == fresh
   //          hash-order model over the grown (scaled) corpus.
   private def pqGatedIndexStaged(s: SparkSession, dir: String,
-      regime: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("embeddings"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_pq_gated_${regime}_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val So = graft.llm.SimilarityOps
-        val emb = embT(s, dir)
-        So.savePqIndex(So.buildPqIndex(
-          emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
-        val batch =
-          if (regime == "drift")
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"),
-              transform(col("embedding"), x => x.cast("double") * 3)
-                .as("embedding"))
-          else emb.filter(col("vec_id") % 4 === 0)
-            .select("vec_id", "embedding")
-        So.pqGatedUpdate(s, tmp, batch, "vec_id", "embedding")
-      }
+      regime: String): String =
+    graft.sources.Staging.staged(s"graft_pq_gated_${regime}_v1", dir,
+        Seq("embeddings")) { tmp =>
+      val So = graft.llm.SimilarityOps
+      val emb = embT(s, dir)
+      So.savePqIndex(So.buildPqIndex(
+        emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
+      val batch =
+        if (regime == "drift")
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"),
+            transform(col("embedding"), x => x.cast("double") * 3)
+              .as("embedding"))
+        else emb.filter(col("vec_id") % 4 === 0)
+          .select("vec_id", "embedding")
+      So.pqGatedUpdate(s, tmp, batch, "vec_id", "embedding")
     }
-    path
-  }
   private val annPqIndexRebuild: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
     val So = graft.llm.SimilarityOps

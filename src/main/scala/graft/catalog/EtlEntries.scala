@@ -455,36 +455,25 @@ private[graft] object EtlEntries {
   // trees (one callTracer payload per order — staged once per JVM like
   // the trace bronze: real payloads land once, every consumer reads
   // the staged table), flatten it, verify node counts/depths
-  private[graft] def frameTrees(s: SparkSession, dir: String): DataFrame = {
-    // cache key carries a fingerprint of the source file (length +
-    // mtime) so a regenerated dataset at the same path invalidates the
-    // staging dir; publication is atomic-rename (Staging.stageOnce) so
-    // concurrent first callers — even across JVMs — can't interleave
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val fp = java.lang.Long.toHexString(src.length() * 31L + src.lastModified())
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_") + "_" + fp
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_trees_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val li = t(s, dir, "lineitem")
-        val child = struct(
-          concat(lit("0x"), lpad(lower(hex(col("l_suppkey"))), 40, "0")).as("from"),
-          concat(lit("0x"), lpad(lower(hex(col("l_partkey"))), 40, "0")).as("to"),
-          concat(lit("0x"), lower(hex(qty(col("l_quantity"))))).as("gasUsed"),
-          lit("CALL").as("type"))
-        li.groupBy("l_orderkey")
-          .agg(collect_list(child).as("kids"))
-          .select(col("l_orderkey"),
-            to_json(struct(
-              lit("0x" + "00" * 20).as("from"),
-              lit("0x" + "11" * 20).as("to"),
-              lit("CALL").as("type"),
-              col("kids").as("calls"))).as("tree_json"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    s.read.parquet(path)
-  }
+  private[graft] def frameTrees(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.sources.Staging.staged("graft_trees", dir,
+        Seq("lineitem")) { tmp =>
+      val li = t(s, dir, "lineitem")
+      val child = struct(
+        concat(lit("0x"), lpad(lower(hex(col("l_suppkey"))), 40, "0")).as("from"),
+        concat(lit("0x"), lpad(lower(hex(col("l_partkey"))), 40, "0")).as("to"),
+        concat(lit("0x"), lower(hex(qty(col("l_quantity"))))).as("gasUsed"),
+        lit("CALL").as("type"))
+      li.groupBy("l_orderkey")
+        .agg(collect_list(child).as("kids"))
+        .select(col("l_orderkey"),
+          to_json(struct(
+            lit("0x" + "00" * 20).as("from"),
+            lit("0x" + "11" * 20).as("to"),
+            lit("CALL").as("type"),
+            col("kids").as("calls"))).as("tree_json"))
+        .write.mode("overwrite").parquet(tmp)
+    })
   private val f1Flatten: Q = (s, dir) => {
     val spark2 = s
     import spark2.implicits._
@@ -646,7 +635,7 @@ private[graft] object EtlEntries {
   // config (changelog uploads per-batch deltas instead of full
   // snapshots, so per-batch state maintenance stays flat as state
   // grows; a 1000-executor deployment runs exactly this provider),
-  // with trackTotalNumberOfRows off (see withStreamStore; the specs
+  // with trackTotalNumberOfRows off (see replay; the specs
   // that assert state-row bounds run their own sessions with tracking
   // left on). State partitions are SIZE-GATED off the staged input
   // volume with a floor of 8: the r9/r10 sweeps measured the 8→16
@@ -673,69 +662,46 @@ private[graft] object EtlEntries {
   // 16.3-17.5 s under contention, ~1 s on the idle box; rows/hashes
   // identical at every SF gate.
   private val etlStreamTransactions: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     val spark2 = s
     import spark2.implicits._
     val nSlices = 3
-    // One-time sliced-replay staging per (corpus fingerprint,
-    // nSlices): the slice files and their far-future sentinels are a
-    // deterministic function of the bronze corpus, so they stage
-    // once under tmpdir exactly like bronze itself — in production
-    // the stream arrives from Kafka and no slice-writing step
-    // exists; re-paying the slice write inside every measured run
-    // charged the entry ~3 s of harness cost (floor table,
-    // SCALE_STREAM_r12.md). Only the per-run output/checkpoint dirs
-    // stay under the session temp dir.
-    val watch = s"${System.getProperty("java.io.tmpdir")}/graft_stream_slices_v1_" +
-      graft.sources.SyntheticTraces.corpusKey(dir) + s"_n$nSlices"
-    if (!graft.sources.Staging.hasMarker(s"$watch")) {
-      graft.sources.Staging.stageOnce(watch) { tmp =>
-        // null event-time flows through as 0, exactly sessionCommit's
-        // coalesce — keeps this entry byte-equal to the batch path and
-        // its oracle on corpora that do emit null timestamps (nulls land
-        // in slice 0, first micro-batch, so the watermark never drops them)
-        val norm = graft.operators.TraceEtl
-          .normalize(graft.sources.SyntheticTraces.bronze(s, dir))
-          .filter(col("transaction_hash").isNotNull)
-          .withColumn("block_timestamp", coalesce(col("block_timestamp"), lit(0L)))
-        graft.sources.Staging.stageSlices(norm.toDF(), "block_timestamp",
-          nSlices, tmp)
-        val mx = s.read.parquet(tmp).agg(max("block_timestamp")).head().getLong(0)
-        Seq(
-          (nSlices, graft.model.TraceRow(1L, "0xsentinel1", Some(0), Some("0xa"),
+    // One-time sliced-replay staging per corpus fingerprint: the slice
+    // files and their far-future sentinels are a deterministic
+    // function of the bronze corpus, so they stage once under tmpdir
+    // exactly like bronze itself — in production the stream arrives
+    // from Kafka and no slice-writing step exists; re-paying the slice
+    // write inside every measured run charged the entry ~3 s of
+    // harness cost (floor table, SCALE_STREAM_r12.md). Only the
+    // per-run output/checkpoint dirs stay under the session temp dir.
+    // A different nSlices is a layout change: bump the _v literal.
+    val watch = graft.sources.Staging.staged("graft_stream_slices_v1", dir,
+        Seq("orders", "lineitem")) { tmp =>
+      // null event-time flows through as 0, exactly sessionCommit's
+      // coalesce — keeps this entry byte-equal to the batch path and
+      // its oracle on corpora that do emit null timestamps (nulls land
+      // in slice 0, first micro-batch, so the watermark never drops them)
+      val norm = graft.operators.TraceEtl
+        .normalize(graft.sources.SyntheticTraces.bronze(s, dir))
+        .filter(col("transaction_hash").isNotNull)
+        .withColumn("block_timestamp", coalesce(col("block_timestamp"), lit(0L)))
+      graft.sources.Staging.stageSlices(norm.toDF(), "block_timestamp",
+        nSlices, tmp)
+      graft.sources.Staging.appendSentinels(tmp, "block_timestamp", nSlices) {
+        (k, ts) =>
+          Seq(graft.model.TraceRow(1L, s"0xsentinel$k", Some(0), Some("0xa"),
             Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
-            Some(1L), Some(mx + 1000000L), Some("0xb"), None)),
-          (nSlices + 1, graft.model.TraceRow(1L, "0xsentinel2", Some(0), Some("0xa"),
-            Some("0xb"), None, Some("0x00"), None, Some(1L), is_root = true,
-            Some(1L), Some(mx + 2000000L), Some("0xb"), None)),
-        ).foreach { case (i, row) =>
-          graft.sources.Staging.appendSlice(Seq(row).toDS(), i, tmp)
-        }
-        // stageOnce's completeness marker (Spark wrote its _SUCCESS
-        // into the since-deleted stage/sent dirs, not here)
-        graft.sources.Staging.touchMarker(tmp)
+            Some(1L), Some(ts), Some("0xb"), None)).toDS()
       }
     }
-    withStreamStore(s, streamPartitionsFor(s, watch, floor = 8),
-        changelog = true) {
-      val work = graft.sources.Staging.sessionTempDir("graft_stream_etl")
-      val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", 2).parquet(watch)
-        .as[graft.model.TraceRow]
-      val q = graft.streaming.StreamingEtl.sessionCommit(stream, gapSeconds = 1L)
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$work/out")
-        .filter(col("transaction").isNotNull &&
-          !col("transaction.transaction_hash").startsWith("0xsentinel"))
-        .select("transaction.*")
-        .withColumn("closest_address", csv(col("closest_address")))
-        .withColumn("ec_pairing_input_sizes", csv(col("ec_pairing_input_sizes")))
-        .withColumn("ec_recover_addresses", csv(col("ec_recover_addresses")))
-    }
+    replay(s, watch, floor = 8, changelog = true) { in =>
+      graft.streaming.StreamingEtl.sessionCommit(
+        in.as[graft.model.TraceRow], gapSeconds = 1L).toDF()
+    }.filter(col("transaction").isNotNull &&
+        !col("transaction.transaction_hash").startsWith("0xsentinel"))
+      .select("transaction.*")
+      .withColumn("closest_address", csv(col("closest_address")))
+      .withColumn("ec_pairing_input_sizes", csv(col("ec_pairing_input_sizes")))
+      .withColumn("ec_recover_addresses", csv(col("ec_recover_addresses")))
   }
 
   private val etlTransactions: Q = (s, dir) => {

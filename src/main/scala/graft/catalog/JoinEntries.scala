@@ -62,44 +62,32 @@ private[graft] object JoinEntries {
 
   /** Time-sliced (key, tag, id, ts, event_time) replay dir for the
     * streaming event entries — 3 data slices + 2 far-future state
-    * sentinels, staged ONCE per (corpus fingerprint, nSlices): the
+    * sentinels, staged ONCE per corpus fingerprint: the
     * slices are a deterministic function of the corpus (floor
     * decomposition in SCALE_STREAM_r12.md — each micro-batch costs
     * ~0.5 s of store/commit machinery at the bench config, and in
     * production the stream arrives from a topic with no slice-writing
     * step to charge per run). Shared by q_asof_stream and the native
-    * stream-stream interval join entry.
+    * stream-stream interval join entry. A different slice count is a
+    * layout change: bump the _v literal.
     */
-  private def asofSlicesDir(s: SparkSession, dir: String): String = {
-    val spark2 = s
-    import spark2.implicits._
-    val nSlices = 3
-    val watch = s"${System.getProperty("java.io.tmpdir")}/graft_asof_slices_v1_" +
-      graft.sources.SyntheticTraces.tableKey(dir, Seq("events")) + s"_n$nSlices"
-    if (!graft.sources.Staging.hasMarker(s"$watch")) {
-      graft.sources.Staging.stageOnce(watch) { tmp =>
-        val ev = events(s, dir).select(
-            col("user_id").as("key"),
-            when(col("event_type") === "signup", 0).otherwise(1).as("tag"),
-            col("event_id").as("id"), col("sec").as("ts"))
-          .groupBy("key", "tag", "ts").agg(max("id").as("id"))
-          .select(col("key"), col("tag"), col("id"), col("ts"),
-            col("ts").cast("timestamp").as("event_time"))
-        graft.sources.Staging.stageSlices(ev, "ts", nSlices, tmp)
-        val mx = s.read.parquet(tmp).agg(max("ts")).head().getLong(0)
-        Seq((nSlices, -1L, mx + 1000000L), (nSlices + 1, -2L, mx + 2000000L))
-          .foreach { case (i, id, ts) =>
-            graft.sources.Staging.appendSlice(
-              Seq((-1L, 0, id, ts)).toDF("key", "tag", "id", "ts")
-                .select(col("key"), col("tag"), col("id"), col("ts"),
-                  col("ts").cast("timestamp").as("event_time")),
-              i, tmp)
-          }
-        graft.sources.Staging.touchMarker(tmp)
+  private def asofSlicesDir(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_asof_slices_v1", dir,
+        Seq("events")) { tmp =>
+      val spark2 = s
+      import spark2.implicits._
+      def withTime(df: DataFrame) = df.select(col("key"), col("tag"),
+        col("id"), col("ts"), col("ts").cast("timestamp").as("event_time"))
+      val ev = withTime(events(s, dir).select(
+          col("user_id").as("key"),
+          when(col("event_type") === "signup", 0).otherwise(1).as("tag"),
+          col("event_id").as("id"), col("sec").as("ts"))
+        .groupBy("key", "tag", "ts").agg(max("id").as("id")))
+      graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
+      graft.sources.Staging.appendSentinels(tmp, "ts", 3) { (k, ts) =>
+        withTime(Seq((-1L, 0, -k.toLong, ts)).toDF("key", "tag", "id", "ts"))
       }
     }
-    watch
-  }
 
   // As-of join, STREAMING form: TwsAsof driven as a real time-sliced
   // file stream (RocksDB state, per-key timers, watermark-gated probe
@@ -115,31 +103,20 @@ private[graft] object JoinEntries {
   // checkpointing measured neutral at this state size (its win is
   // large-state maintenance) — off.
   private val asofStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
-    val watch = asofSlicesDir(s, dir)
-    withStreamStore(s, streamPartitionsFor(s, watch)) {
-      val spark2 = s
-      import spark2.implicits._
-      val work = graft.sources.Staging.sessionTempDir("graft_stream_asof")
-      // 2 files/trigger groups the 5 replay files [s0,s1][s2,sent1]
-      // [sent2] (r20, the interval joins' precedent): every semantic
-      // the stream proves survives — cross-batch matching (batch-2
-      // probes hit batch-1 states), a mid-stream watermark advance,
-      // and a batch after the advance for the timers to fire in
-      // (sent1's advance is visible in sent2's batch) — at 3 trigger
-      // floors instead of 5. Paired sweep at sf0.1: 8.0-10.5 →
-      // 5.0-5.9 s (same session; rows/hashes identical).
-      val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", 2).parquet(watch)
-        .as[graft.streaming.AsofInput]
-      val q = graft.streaming.TwsAsof.asofKeyed(stream).toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$work/out").filter(col("key") >= 0)
-        .select("key", "probe_id", "probe_ts", "state_id", "state_ts")
-    }
+    val spark2 = s
+    import spark2.implicits._
+    // 2 files/trigger groups the 5 replay files [s0,s1][s2,sent1]
+    // [sent2] (r20, the interval joins' precedent): every semantic
+    // the stream proves survives — cross-batch matching (batch-2
+    // probes hit batch-1 states), a mid-stream watermark advance,
+    // and a batch after the advance for the timers to fire in
+    // (sent1's advance is visible in sent2's batch) — at 3 trigger
+    // floors instead of 5. Paired sweep at sf0.1: 8.0-10.5 →
+    // 5.0-5.9 s (same session; rows/hashes identical).
+    replay(s, asofSlicesDir(s, dir)) { in =>
+      graft.streaming.TwsAsof.asofKeyed(in.as[graft.streaming.AsofInput]).toDF()
+    }.filter(col("key") >= 0)
+      .select("key", "probe_id", "probe_ts", "state_id", "state_ts")
   }
   private val asofStreamOracle =
     """WITH ev AS (
@@ -209,14 +186,8 @@ private[graft] object JoinEntries {
   // semantic the oracle checks — cross-batch matching included
   // (probes in batch 2+ hit states stored in batch 1)
   private def streamIntervalJoinImpl(s: SparkSession, dir: String,
-      outer: Boolean): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val watch = asofSlicesDir(s, dir)
-    withStreamStore(s, streamPartitionsFor(s, watch), joinFormatVersion = 3) {
-      val work = graft.sources.Staging.sessionTempDir(
-        if (outer) "graft_stream_ssj_outer" else "graft_stream_ssj")
-      val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", 2).parquet(watch)
+      outer: Boolean): DataFrame =
+    replay(s, asofSlicesDir(s, dir), joinFormatVersion = 3) { stream =>
       // outer: the sentinels (key < 0) must reach BOTH watermark nodes
       // (see streamIntervalJoinOuter) — they carry tag 0, so they are
       // injected into the probe filter too and dropped from the output
@@ -230,21 +201,14 @@ private[graft] object JoinEntries {
         .select(col("key").as("s_key"), col("id").as("state_id"),
           col("ts").as("state_ts"), col("event_time").as("s_time"))
         .withWatermark("s_time", "3600 seconds")
-      val joined = probes.join(states,
-        col("key") === col("s_key") &&
-          col("s_time") >= col("p_time") - expr("INTERVAL 3600 SECONDS") &&
-          col("s_time") <= col("p_time"),
-        if (outer) "leftOuter" else "inner")
-      val q = joined
+      probes.join(states,
+          col("key") === col("s_key") &&
+            col("s_time") >= col("p_time") - expr("INTERVAL 3600 SECONDS") &&
+            col("s_time") <= col("p_time"),
+          if (outer) "leftOuter" else "inner")
         .select(col("key"), col("probe_id"), col("probe_ts"),
           col("state_id"), col("state_ts"))
-        .writeStream.format("parquet")
-        .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$work/out").filter(col("key") >= 0)
-    }
-  }
+    }.filter(col("key") >= 0)
   private val streamIntervalJoinOracle =
     """WITH ev AS (
       |  SELECT event_id, user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS sec

@@ -184,19 +184,15 @@ private[graft] object LayoutEntries {
   // file order (the padded bucket is the path's deciding segment),
   // and the same greedy binning.
   private def compactExecRoot(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val fp = java.lang.Long.toHexString(src.length() * 31L + src.lastModified())
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_") + "_" + fp
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_compact_$key"
-    if (!graft.sources.Staging.hasMarker(s"$root/src")) {
-      graft.sources.Staging.stageOnce(s"$root/src") { tmp =>
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderstatus").as("grp"),
-            lpad((col("o_orderkey") % 8).cast("string"), 2, "0").as("b"))
-          .repartition(col("grp"), col("b"))
-          .write.partitionBy("grp", "b").parquet(tmp)
-      }
+    val root = graft.sources.Staging.stagedPath("graft_compact", dir,
+      Seq("orders"))
+    graft.sources.Staging.stageOnce(s"$root/src") { tmp =>
+      t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderstatus").as("grp"),
+          lpad((col("o_orderkey") % 8).cast("string"), 2, "0").as("b"))
+        .repartition(col("grp"), col("b"))
+        .write.partitionBy("grp", "b").parquet(tmp)
     }
     root
   }

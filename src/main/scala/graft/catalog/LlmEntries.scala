@@ -27,37 +27,26 @@ private[graft] object LlmEntries {
   // (paired sweep: 5.1-11.2 → 2.8-6.5 s across two sessions, rows
   // identical).
   private val streamNearDup: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // 4 hash slices → 4 micro-batches: pairs must be caught against
     // PRIOR-batch state, not just within a batch. Staged ONCE per
     // corpus fingerprint (deterministic function of the corpus —
     // same rationale as the flagship's sliced watch dir).
-    val in = s"${System.getProperty("java.io.tmpdir")}/graft_nd_slices_v1_" +
-      graft.sources.SyntheticTraces.tableKey(dir, Seq("documents"))
-    if (!graft.sources.Staging.hasMarker(s"$in"))
-      graft.sources.Staging.stageOnce(in) { tmp =>
-        docsT(s, dir).select(col("doc_id"), col("text"))
-          .repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val in = graft.sources.Staging.staged("graft_nd_slices_v1", dir,
+        Seq("documents")) { tmp =>
+      docsT(s, dir).select(col("doc_id"), col("text"))
+        .repartition(4, col("doc_id"))
+        .write.mode("overwrite").parquet(tmp)
+    }
     // state-store instances = shuffle partitions, each a RocksDB open +
     // commit PER MICRO-BATCH — at test scale that machinery dominates,
     // so run the stream narrow (production sizes this to the cluster;
     // the partition count is pinned into the checkpoint either way)
-    withStreamStore(s, streamPartitionsFor(s, in)) {
-      val work = graft.sources.Staging.sessionTempDir("graft_stream_nd")
-      val stream = s.readStream.schema(s.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 2).parquet(in)
-      val q = graft.streaming.TwsNearDup
+    // a pair can surface from several bands — the contract is the set
+    replay(s, in) { stream =>
+      graft.streaming.TwsNearDup
         .nearDupPairsStream(stream, "doc_id", "text", capPerBucket = Int.MaxValue)
         .toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$work/out").option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // a pair can surface from several bands — the contract is the set
-      s.read.parquet(s"$work/out").select("id1", "id2").distinct()
-    }
+    }.select("id1", "id2").distinct()
   }
 
   // ---------------------------------------------------------------
@@ -207,14 +196,11 @@ private[graft] object LlmEntries {
   // and_match=1 rows, OR answers the full set; ordering is df-based
   // (rare terms dominate), exact integers.
   private val llmIndexServe: Q = (s, dir) => {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("documents"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_invidx_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.TextOps.saveIndex(
-          graft.llm.TextOps.invertedIndex(
-            docsT(s, dir), "doc_id", "text", postingsCap = 64), tmp)
-      }
+    val path = graft.sources.Staging.staged("graft_invidx_v1", dir,
+        Seq("documents")) { tmp =>
+      graft.llm.TextOps.saveIndex(
+        graft.llm.TextOps.invertedIndex(
+          docsT(s, dir), "doc_id", "text", postingsCap = 64), tmp)
     }
     graft.llm.TextOps.indexServe(
       graft.llm.TextOps.loadIndex(s, path), Seq("scan", "sort", "join"))
@@ -368,20 +354,14 @@ private[graft] object LlmEntries {
   // oracle retrains its own merge table from the shared CTE prefix,
   // so persisted-model serving == fresh training is the
   // hash-compared surface (the q_ann_index_serve pattern).
-  private def bpeModelStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("documents"))
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bpe_model_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.Quantizers.saveModel(
-          graft.llm.TextOps.bpeMergeModel(
-            graft.llm.TextOps.bpeTrain(docsT(s, dir), "text",
-              gens = bpeGens, topWords = 10)), tmp)
-      }
+  private def bpeModelStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_bpe_model_v1", dir,
+        Seq("documents")) { tmp =>
+      graft.llm.Quantizers.saveModel(
+        graft.llm.TextOps.bpeMergeModel(
+          graft.llm.TextOps.bpeTrain(docsT(s, dir), "text",
+            gens = bpeGens, topWords = 10)), tmp)
     }
-    path
-  }
   private def bpeMergesLoaded(s: SparkSession,
       dir: String): Seq[(String, String)] =
     graft.llm.TextOps.collectMerges(
@@ -728,16 +708,11 @@ private[graft] object LlmEntries {
   // in-memory one (parity between the two is pinned in ModelSeamSpec).
   private val llmIncrementalDedup: Q = (s, dir) => {
     val d = docsT(s, dir)
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val fp = java.lang.Long.toHexString(src.length() * 31L + src.lastModified())
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_") + "_" + fp
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_neardup_bands_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.DedupOps.bandedProjection(
-            d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = graft.sources.Staging.staged("graft_neardup_bands", dir,
+        Seq("documents")) { tmp =>
+      graft.llm.DedupOps.bandedProjection(
+          d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+        .write.mode("overwrite").parquet(tmp)
     }
     graft.llm.DedupOps.incrementalNearDupPairsPrebanded(
       s.read.parquet(path), d.filter(col("doc_id") % 2 === 1),
@@ -1620,14 +1595,11 @@ private[graft] object LlmEntries {
   // gate verifies here is the persisted path (ModelSeamSpec pins
   // persisted == in-memory).
   private val llmPerplexityServed: Q = (s, dir) => {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("documents"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_bigramlm_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        graft.llm.Quantizers.saveModel(
-          graft.llm.PipelineOps.trainBigramLm(
-            docsT(s, dir), "doc_id", "text", col("doc_id") % 50 === 0), tmp)
-      }
+    val path = graft.sources.Staging.staged("graft_bigramlm_v1", dir,
+        Seq("documents")) { tmp =>
+      graft.llm.Quantizers.saveModel(
+        graft.llm.PipelineOps.trainBigramLm(
+          docsT(s, dir), "doc_id", "text", col("doc_id") % 50 === 0), tmp)
     }
     graft.llm.PipelineOps.lmPerplexityServe(
       docsT(s, dir).filter(col("doc_id") % 50 =!= 0), "doc_id", "text",

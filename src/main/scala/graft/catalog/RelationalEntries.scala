@@ -425,27 +425,23 @@ private[graft] object RelationalEntries {
     * of the entries' ~1.1-1.3 s at sf0.1).
     */
   private[graft] def scd2Staged(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("events"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_scd2_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val ev = events(s, dir)
-          .select(col("user_id"), col("sec"), col("event_type"), col("event_id"))
-        val mid = ev.agg(expr("(min(sec) + max(sec)) DIV 2").as("mid"))
-        val evM = ev.crossJoin(broadcast(mid))
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("valid_from"), col("event_id"))
-        evM.filter(col("sec") <= col("mid"))
-          .select(col("user_id"), col("sec").as("valid_from"),
-            col("event_type"), col("event_id"))
-          .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-          .write.parquet(s"$tmp/base")
-        evM.filter(col("sec") > col("mid"))
-          .select(col("user_id"), col("sec").as("ts"),
-            col("event_type"), col("event_id"))
-          .write.parquet(s"$tmp/delta")
-        graft.sources.Staging.touchMarker(tmp)
-      }
+    val path = graft.sources.Staging.staged("graft_scd2_v1", dir,
+        Seq("events")) { tmp =>
+      val ev = events(s, dir)
+        .select(col("user_id"), col("sec"), col("event_type"), col("event_id"))
+      val mid = ev.agg(expr("(min(sec) + max(sec)) DIV 2").as("mid"))
+      val evM = ev.crossJoin(broadcast(mid))
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("valid_from"), col("event_id"))
+      evM.filter(col("sec") <= col("mid"))
+        .select(col("user_id"), col("sec").as("valid_from"),
+          col("event_type"), col("event_id"))
+        .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+        .write.parquet(s"$tmp/base")
+      evM.filter(col("sec") > col("mid"))
+        .select(col("user_id"), col("sec").as("ts"),
+          col("event_type"), col("event_id"))
+        .write.parquet(s"$tmp/delta")
     }
     (s.read.parquet(s"$path/base"), s.read.parquet(s"$path/delta"))
   }
@@ -587,71 +583,58 @@ private[graft] object RelationalEntries {
     * step to charge per run).
     */
   private[graft] def scd2StreamStaged(s: SparkSession, dir: String): (String, String) = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("events"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_scd2_stream_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val (base, delta) = scd2Staged(s, dir)
-        base.write.parquet(s"$tmp/base0")
-        val bb = delta.agg(min("ts").as("dmin"),
-          expr("(max(ts) - min(ts)) DIV 3").as("w"))
-        val sliced = delta.crossJoin(broadcast(bb))
-          .withColumn("_slice",
-            when(col("ts") <= col("dmin") + col("w"), 0)
-              .when(col("ts") <= col("dmin") + col("w") * 2, 1)
-              .otherwise(2).cast("int"))
-          .select(col("user_id"), col("ts"), col("event_type"),
-            col("event_id"), col("_slice"))
-        val redelivered = sliced.filter(col("_slice") === 1)
-          .withColumn("_slice", lit(3))
-        val all = sliced.unionByName(redelivered)
-        val counts = all.groupBy("_slice").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        require((0 to 3).forall(counts.getOrElse(_, 0L) > 0L),
-          s"scd2StreamStaged: every slice must be non-empty (batch " +
-            s"numbering would drift from the oracle's); got $counts")
-        all.repartition(4, col("_slice"))
-          .write.partitionBy("_slice").parquet(s"$tmp/stage")
-        graft.sources.Staging.moveSlices(s"$tmp/stage", s"$tmp/slices")
-        graft.sources.Staging.touchMarker(tmp)
-      }
+    val path = graft.sources.Staging.staged("graft_scd2_stream_v1", dir,
+        Seq("events")) { tmp =>
+      val (base, delta) = scd2Staged(s, dir)
+      base.write.parquet(s"$tmp/base0")
+      val bb = delta.agg(min("ts").as("dmin"),
+        expr("(max(ts) - min(ts)) DIV 3").as("w"))
+      val sliced = delta.crossJoin(broadcast(bb))
+        .withColumn("_slice",
+          when(col("ts") <= col("dmin") + col("w"), 0)
+            .when(col("ts") <= col("dmin") + col("w") * 2, 1)
+            .otherwise(2).cast("int"))
+        .select(col("user_id"), col("ts"), col("event_type"),
+          col("event_id"), col("_slice"))
+      val redelivered = sliced.filter(col("_slice") === 1)
+        .withColumn("_slice", lit(3))
+      val all = sliced.unionByName(redelivered)
+      val counts = all.groupBy("_slice").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      require((0 to 3).forall(counts.getOrElse(_, 0L) > 0L),
+        s"scd2StreamStaged: every slice must be non-empty (batch " +
+          s"numbering would drift from the oracle's); got $counts")
+      all.repartition(4, col("_slice"))
+        .write.partitionBy("_slice").parquet(s"$tmp/stage")
+      graft.sources.Staging.moveSlices(s"$tmp/stage", s"$tmp/slices")
     }
     (s"$path/base0", s"$path/slices")
   }
 
   private val scd2StreamMerge: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over changeset-sized frames
     withConf(s, SmallPin: _*) {
       val (basePath0, watch) = scd2StreamStaged(s, dir)
       val work = graft.sources.Staging.sessionTempDir("graft_scd2_stream")
-      val schema = s.read.parquet(watch).schema
       var basePath = basePath0
       var idx = 0
       val outCols = Seq("batch", "action", "user_id", "valid_from",
         "event_type", "event_id", "valid_to")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val base = s.read.parquet(basePath)
-            val delta = b.select("user_id", "ts", "event_type", "event_id")
-            graft.operators.Scd2.changelog(base, delta, Seq("user_id"),
-                Seq("event_type", "event_id"), tieCols = Seq("event_id"))
-              .withColumn("batch", lit(idx))
-              .select(outCols.map(col): _*)
-              .write.mode("append").parquet(s"$work/log")
-            val next = s"$work/base_${idx + 1}"
-            graft.operators.Scd2.mergeApply(base, delta, Seq("user_id"),
-                Seq("event_type", "event_id"), tieCols = Seq("event_id"))
-              .write.parquet(next)
-            basePath = next
-            idx += 1
-          }
-        }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      replayBatches(s, watch) { b =>
+        val base = s.read.parquet(basePath)
+        val delta = b.select("user_id", "ts", "event_type", "event_id")
+        graft.operators.Scd2.changelog(base, delta, Seq("user_id"),
+            Seq("event_type", "event_id"), tieCols = Seq("event_id"))
+          .withColumn("batch", lit(idx))
+          .select(outCols.map(col): _*)
+          .write.mode("append").parquet(s"$work/log")
+        val next = s"$work/base_${idx + 1}"
+        graft.operators.Scd2.mergeApply(base, delta, Seq("user_id"),
+            Seq("event_type", "event_id"), tieCols = Seq("event_id"))
+          .write.parquet(next)
+        basePath = next
+        idx += 1
+      }
       val fin = s.read.parquet(basePath)
         .withColumn("batch", lit(idx)).withColumn("action", lit("final"))
       s.read.parquet(s"$work/log").select(outCols.map(col): _*)

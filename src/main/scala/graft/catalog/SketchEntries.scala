@@ -123,46 +123,30 @@ private[graft] object SketchEntries {
   // so sketch mergeability across micro-batches — merge(sketch(A),
   // sketch(B)) == sketch(A ∪ B) — is itself the hash-compared
   // surface.
-  private def kmvSlicesStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("events"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_kmv_slices_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val ev = events(s, dir).select(col("event_type"),
-          col("user_id").cast("string").as("term"), col("sec").as("ts"))
-        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
-        graft.sources.Staging.touchMarker(tmp)
-      }
+  private def kmvSlicesStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_kmv_slices_v1", dir,
+        Seq("events")) { tmp =>
+      val ev = events(s, dir).select(col("event_type"),
+        col("user_id").cast("string").as("term"), col("sec").as("ts"))
+      graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
     }
-    path
-  }
   private val sketchKmvStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over sketch-sized frames
     withConf(s, SmallPin: _*) {
       val k = 128
       val watch = kmvSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_kmv_stream")
       // sketch-sized carried state held in memory between triggers
       // (localCheckpoint) instead of a parquet write+re-read per batch
       var state: Option[DataFrame] = None
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val bk = graft.llm.SketchOps.kmvKmin(b, "event_type", "term", k)
-            val merged = state match {
-              case None => bk
-              case Some(p) =>
-                graft.llm.SketchOps.kmvMerge(p, bk, k)
-            }
-            state = Some(merged.localCheckpoint())
-          }
+      replayBatches(s, watch) { b =>
+        val bk = graft.llm.SketchOps.kmvKmin(b, "event_type", "term", k)
+        val merged = state match {
+          case None => bk
+          case Some(p) =>
+            graft.llm.SketchOps.kmvMerge(p, bk, k)
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        state = Some(merged.localCheckpoint())
+      }
       graft.llm.SketchOps.kmvEstimate(
         state.getOrElse(
           sys.error("kmv stream produced no batches")), k)
@@ -350,41 +334,30 @@ private[graft] object SketchEntries {
   // q_sketch_cms_windowed: windowed counter mergeability + eviction
   // losing nothing is the hash-compared surface.
   private val sketchCmsWindowStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over counter-sized frames
     withConf(s, SmallPin: _*) {
       val (depth, width, win) = (4, 1024, 604800L)
       val S = graft.llm.SketchOps
       val watch = kmvSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_cms_wstream")
       // in-memory carried state between triggers (localCheckpoint) —
       // see the kmv window stream
       val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var wm = Long.MinValue
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val bc = S.cmsCountersWindowed(b, "term", "ts", win, depth,
-              width)
-            val merged = states.lastOption match {
-              case None => bc
-              case Some(p) => p.filter(!col("closed"))
-                .drop("closed").unionByName(bc)
-                .groupBy("window_start", "i", "bucket")
-                .agg(sum("cnt").as("cnt"))
-            }
-            wm = math.max(wm,
-              b.agg(max(col("ts").cast("long"))).head().getLong(0))
-            states += merged.withColumn("closed",
-              col("window_start") + lit(win) <= lit(wm)).localCheckpoint()
-            ()
-          }
+      replayBatches(s, watch) { b =>
+        val bc = S.cmsCountersWindowed(b, "term", "ts", win, depth,
+          width)
+        val merged = states.lastOption match {
+          case None => bc
+          case Some(p) => p.filter(!col("closed"))
+            .drop("closed").unionByName(bc)
+            .groupBy("window_start", "i", "bucket")
+            .agg(sum("cnt").as("cnt"))
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        wm = math.max(wm,
+          b.agg(max(col("ts").cast("long"))).head().getLong(0))
+        states += merged.withColumn("closed",
+          col("window_start") + lit(win) <= lit(wm)).localCheckpoint()
+      }
       require(states.nonEmpty, "cms window stream produced no batches")
       val counters = states.init
         .map(_.filter(col("closed")))
@@ -413,13 +386,11 @@ private[graft] object SketchEntries {
   // windowed form — the oracle is the batch oracle minus the exact
   // twin (the stream never held the full distinct set).
   private val sketchKmvWindowStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over sketch-sized frames
     withConf(s, SmallPin: _*) {
       val (k, win) = (32, 604800L)
       val S = graft.llm.SketchOps
       val watch = kmvSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_kmv_wstream")
       // per batch, ONE state materialize carrying a `closed` flag: a
       // window that closed THIS batch lands here once and is filtered
       // out of the next batch's carried state (its key never
@@ -432,29 +403,20 @@ private[graft] object SketchEntries {
       val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var wm = Long.MinValue
       val wsOf = substring_index(col("source"), "|", 1).cast("long")
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val bk = S.kmvKmin(b.withColumn("wsrc",
-                S.windowedKey(col("ts"), win, col("event_type"))),
-              "wsrc", "term", k)
-            val merged = states.lastOption match {
-              case None => bk
-              case Some(p) => S.kmvMerge(
-                p.filter(!col("closed")).drop("closed"), bk, k)
-            }
-            wm = math.max(wm,
-              b.agg(max(col("ts").cast("long"))).head().getLong(0))
-            states += merged.withColumn("closed",
-              wsOf + lit(win) <= lit(wm)).localCheckpoint()
-            ()
-          }
+      replayBatches(s, watch) { b =>
+        val bk = S.kmvKmin(b.withColumn("wsrc",
+            S.windowedKey(col("ts"), win, col("event_type"))),
+          "wsrc", "term", k)
+        val merged = states.lastOption match {
+          case None => bk
+          case Some(p) => S.kmvMerge(
+            p.filter(!col("closed")).drop("closed"), bk, k)
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        wm = math.max(wm,
+          b.agg(max(col("ts").cast("long"))).head().getLong(0))
+        states += merged.withColumn("closed",
+          wsOf + lit(win) <= lit(wm)).localCheckpoint()
+      }
       require(states.nonEmpty, "kmv window stream produced no batches")
       // every closed window lives in exactly the batch state where it
       // closed; the final state additionally holds the still-open tail
@@ -473,22 +435,15 @@ private[graft] object SketchEntries {
   // stream: (event_type, event_id, quantized value, ts) — the
   // kmvSlicesStaged shape with the value column the quantile sample
   // ranks (that dir carries only the distinct-count projection).
-  private def quantileSlicesStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("events"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_quantile_slices_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val ev = events(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"), col("event_id"),
-            floor(col("value") * 1000).cast("long").as("v"),
-            col("sec").as("ts"))
-        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
-        graft.sources.Staging.touchMarker(tmp)
-      }
+  private def quantileSlicesStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_quantile_slices_v1", dir,
+        Seq("events")) { tmp =>
+      val ev = events(s, dir).filter(col("value").isNotNull)
+        .select(col("event_type"), col("event_id"),
+          floor(col("value") * 1000).cast("long").as("v"),
+          col("sec").as("ts"))
+      graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
     }
-    path
-  }
 
   // WINDOWED QUANTILES AS A STREAM — the third stream twin completing
   // the windowed family (KMV/CMS landed r16; VERDICT r16 #2): the
@@ -506,41 +461,30 @@ private[graft] object SketchEntries {
   // oracle is the batch windowed oracle minus its exact columns, and
   // cross-batch sample mergeability is the hash-compared surface.
   private val sketchQuantileWindowStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over sketch-sized frames
     withConf(s, SmallPin: _*) {
       val (k, win) = (64, 604800L)
       val S = graft.llm.SketchOps
       val watch = quantileSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_q_wstream")
       // in-memory carried state between triggers (localCheckpoint) —
       // see the kmv window stream
       val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var wm = Long.MinValue
       val wsOf = substring_index(col("source"), "|", 1).cast("long")
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val bs = S.quantileSample(b.withColumn("wsrc",
-                S.windowedKey(col("ts"), win, col("event_type"))),
-              "wsrc", "event_id", col("v"), k)
-            val merged = states.lastOption match {
-              case None => bs
-              case Some(p) => S.quantileMerge(
-                p.filter(!col("closed")).drop("closed"), bs, k)
-            }
-            wm = math.max(wm,
-              b.agg(max(col("ts").cast("long"))).head().getLong(0))
-            states += merged.withColumn("closed",
-              wsOf + lit(win) <= lit(wm)).localCheckpoint()
-            ()
-          }
+      replayBatches(s, watch) { b =>
+        val bs = S.quantileSample(b.withColumn("wsrc",
+            S.windowedKey(col("ts"), win, col("event_type"))),
+          "wsrc", "event_id", col("v"), k)
+        val merged = states.lastOption match {
+          case None => bs
+          case Some(p) => S.quantileMerge(
+            p.filter(!col("closed")).drop("closed"), bs, k)
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        wm = math.max(wm,
+          b.agg(max(col("ts").cast("long"))).head().getLong(0))
+        states += merged.withColumn("closed",
+          wsOf + lit(win) <= lit(wm)).localCheckpoint()
+      }
       require(states.nonEmpty,
         "quantile window stream produced no batches")
       // every closed window lives in exactly the batch state where it
@@ -711,28 +655,18 @@ private[graft] object SketchEntries {
   private def sessionSlicesStaged(s: SparkSession, dir: String): String = {
     val spark2 = s
     import spark2.implicits._
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("events"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_session_slices_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val ev = events(s, dir).select(col("user_id"), col("event_id"),
-            (col("event_id") % 50).cast("string").as("item"),
-            col("sec").as("ts"))
+    graft.sources.Staging.staged("graft_session_slices_v1", dir,
+        Seq("events")) { tmp =>
+      val ev = events(s, dir).select(col("user_id"), col("event_id"),
+          (col("event_id") % 50).cast("string").as("item"),
+          col("sec").as("ts"))
+        .withColumn("event_time", col("ts").cast("timestamp"))
+      graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
+      graft.sources.Staging.appendSentinels(tmp, "ts", 3) { (k, ts) =>
+        Seq((-1L, -k.toLong, "s", ts)).toDF("user_id", "event_id", "item", "ts")
           .withColumn("event_time", col("ts").cast("timestamp"))
-        graft.sources.Staging.stageSlices(ev, "ts", 3, tmp)
-        val mx = s.read.parquet(tmp).agg(max("ts")).head().getLong(0)
-        Seq((3, -1L, mx + 1000000L), (4, -2L, mx + 2000000L))
-          .foreach { case (i, id, ts) =>
-            graft.sources.Staging.appendSlice(
-              Seq((-1L, id, "s", ts)).toDF("user_id", "event_id", "item", "ts")
-                .withColumn("event_time", col("ts").cast("timestamp")),
-              i, tmp)
-          }
-        graft.sources.Staging.touchMarker(tmp)
       }
     }
-    path
   }
 
   // SESSIONIZED KMV AS A REAL STREAM — TwsKmvSession: one RocksDB
@@ -750,36 +684,24 @@ private[graft] object SketchEntries {
   // SCALE_STREAM_r20.md: 3.7-4.3 → 3.2 s); changelog measured neutral
   // at this state size — off.
   private val sketchKmvSessionStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
-    val watch = sessionSlicesStaged(s, dir)
-    withStreamStore(s, streamPartitionsFor(s, watch)) {
-      val spark2 = s
-      import spark2.implicits._
-      val work = graft.sources.Staging.sessionTempDir("graft_kmv_sess")
-      // 2 files/trigger: [s0,s1][s2,sent1][sent2] — sessions spanning
-      // batch boundaries, inline closes, the watermark advance and
-      // the timer-fire batch all survive at 3 trigger floors instead
-      // of 5 (see asofStream)
-      val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", 2).parquet(watch)
-        .as[graft.streaming.KmvSessEvent]
-      val q = graft.streaming.TwsKmvSession
-        .sessionSketch(stream, 259200L, 32).toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$work/out").filter(col("user_id") >= 0)
-        .select(
-          concat(col("user_id").cast("string"), lit("|"),
-            col("session_start").cast("string")).as("source"),
-          col("kth_min_hash"), col("k_used"),
-          when(col("k_used") < 32, col("k_used"))
-            .otherwise(expr(
-              "(9223372036854775807 DIV greatest(kth_min_hash, 1)) * 31"))
-            .as("kmv_est"))
-    }
+    val spark2 = s
+    import spark2.implicits._
+    // 2 files/trigger: [s0,s1][s2,sent1][sent2] — sessions spanning
+    // batch boundaries, inline closes, the watermark advance and
+    // the timer-fire batch all survive at 3 trigger floors instead
+    // of 5 (see asofStream)
+    replay(s, sessionSlicesStaged(s, dir)) { in =>
+      graft.streaming.TwsKmvSession.sessionSketch(
+        in.as[graft.streaming.KmvSessEvent], 259200L, 32).toDF()
+    }.filter(col("user_id") >= 0)
+      .select(
+        concat(col("user_id").cast("string"), lit("|"),
+          col("session_start").cast("string")).as("source"),
+        col("kth_min_hash"), col("k_used"),
+        when(col("k_used") < 32, col("k_used"))
+          .otherwise(expr(
+            "(9223372036854775807 DIV greatest(kth_min_hash, 1)) * 31"))
+          .as("kmv_est"))
   }
   private val sketchKmvSessionStreamOracle =
     kmvSessionOracle(withExact = false)
@@ -922,40 +844,27 @@ private[graft] object SketchEntries {
   // SCALE_STREAM_r20.md: 4.9-5.8 → 4.0-4.8 s); changelog measured
   // neutral at this state size — off.
   private val sketchCmsSessionStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
-    val watch = sessionSlicesStaged(s, dir)
-    withStreamStore(s, streamPartitionsFor(s, watch)) {
-      val spark2 = s
-      import spark2.implicits._
-      val S = graft.llm.SketchOps
-      val (depth, width) = (4, 1024)
-      val work = graft.sources.Staging.sessionTempDir("graft_cms_sess")
-      // 2 files/trigger — see sketchKmvSessionStream
-      val stream = s.readStream.schema(s.read.parquet(watch).schema)
-        .option("maxFilesPerTrigger", 2).parquet(watch)
-        .as[graft.streaming.KmvSessEvent]
-      val q = graft.streaming.TwsCmsSession
-        .sessionCounters(stream, 259200L, depth, width).toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val counters = s.read.parquet(s"$work/out")
-        .filter(col("user_id") >= 0)
-        .select(
-          concat(col("user_id").cast("string"), lit("|"),
-            col("session_start").cast("string")).as("source"),
-          expr(s"CAST(cell DIV $width AS INT)").as("i"),
-          (col("cell") % width).as("bucket"), col("cnt"))
-      val sessBatch = withSessionKey(events(s, dir)
-        .select(col("event_id"), col("user_id"), col("sec"))
-        .withColumn("item", (col("event_id") % 50).cast("string")),
-        259200L).select(col("src"), col("item"))
-      S.cmsProbeKeyed(counters,
-        S.cmsTopCandidatesKeyed(sessBatch, "src", "item", 3),
-        depth, width)
-    }
+    val spark2 = s
+    import spark2.implicits._
+    val S = graft.llm.SketchOps
+    val (depth, width) = (4, 1024)
+    // 2 files/trigger — see sketchKmvSessionStream
+    val counters = replay(s, sessionSlicesStaged(s, dir)) { in =>
+      graft.streaming.TwsCmsSession.sessionCounters(
+        in.as[graft.streaming.KmvSessEvent], 259200L, depth, width).toDF()
+    }.filter(col("user_id") >= 0)
+      .select(
+        concat(col("user_id").cast("string"), lit("|"),
+          col("session_start").cast("string")).as("source"),
+        expr(s"CAST(cell DIV $width AS INT)").as("i"),
+        (col("cell") % width).as("bucket"), col("cnt"))
+    val sessBatch = withSessionKey(events(s, dir)
+      .select(col("event_id"), col("user_id"), col("sec"))
+      .withColumn("item", (col("event_id") % 50).cast("string")),
+      259200L).select(col("src"), col("item"))
+    S.cmsProbeKeyed(counters,
+      S.cmsTopCandidatesKeyed(sessBatch, "src", "item", 3),
+      depth, width)
   }
 
   // CMS AS A STREAM (the frequency twin of q_sketch_kmv_stream, same
@@ -969,32 +878,22 @@ private[graft] object SketchEntries {
   // IDENTICAL to q_sketch_cms_heavy: counter mergeability across
   // micro-batches is the hash-compared surface.
   private val sketchCmsStream: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     // SmallPin: every per-trigger fold action is over counter-sized frames
     withConf(s, SmallPin: _*) {
       val (depth, width, topK) = (4, 1024, 20)
       val watch = kmvSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_cms_stream")
       // counter-sized carried state held in memory between triggers
       // (localCheckpoint) instead of a parquet write+re-read per batch
       var state: Option[DataFrame] = None
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val bc = graft.llm.SketchOps.cmsCounters(b, "term", depth, width)
-            val merged = state match {
-              case None => bc
-              case Some(p) =>
-                graft.llm.SketchOps.cmsMerge(p, bc)
-            }
-            state = Some(merged.localCheckpoint())
-          }
+      replayBatches(s, watch) { b =>
+        val bc = graft.llm.SketchOps.cmsCounters(b, "term", depth, width)
+        val merged = state match {
+          case None => bc
+          case Some(p) =>
+            graft.llm.SketchOps.cmsMerge(p, bc)
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        state = Some(merged.localCheckpoint())
+      }
       val candidates = graft.llm.SketchOps.cmsTopCandidates(
         events(s, dir).select(col("user_id").cast("string").as("term")),
         "term", topK)

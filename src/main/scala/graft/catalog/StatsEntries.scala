@@ -26,9 +26,7 @@ private[graft] object StatsEntries {
   // 90%-hot demo tables get their OWN artifacts — a planner profiles
   // the table it will actually join.
   private def statsHot(c: Column) = when(c % 10 =!= 0, lit(1L)).otherwise(c)
-  private def statsArtifactStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir,
-      Seq("lineitem", "orders", "customer", "supplier", "nation", "region"))
+  private def statsArtifactStaged(s: SparkSession, dir: String): String =
     // _v4: the DP regime's star corpus (orders2 re-keyed on custkey,
     // the two selective order dims); _v3: customer carries BOTH join
     // columns (c_custkey, c_nationkey) for the 4-table chain; _v2
@@ -36,63 +34,55 @@ private[graft] object StatsEntries {
     // nation(n_regionkey) artifacts — the join-ORDER planner needs
     // every column a chain joins on (the seam contract's
     // layout-change rule: bump the version literal)
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_table_stats_v4_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val S = graft.llm.SketchOps
-        def one(name: String, df: DataFrame, rowKey: Column,
-            keyCols: String*): Unit =
-          S.saveTableStats(
-            S.tableStats(df, rowKey,
-              keyCols.map(k => (k, col(k), Option.empty[Column])).toSeq),
-            s"$tmp/$name")
-        one("lineitem", t(s, dir, "lineitem"),
-          concat_ws("|", col("l_orderkey"), col("l_linenumber")),
-          "l_orderkey")
-        one("orders", t(s, dir, "orders"), col("o_orderkey"),
-          "o_orderkey", "o_custkey")
-        one("customer", t(s, dir, "customer"), col("c_custkey"),
-          "c_custkey", "c_nationkey")
-        one("supplier", t(s, dir, "supplier"), col("s_suppkey"),
-          "s_nationkey")
-        one("nation", t(s, dir, "nation"), col("n_nationkey"),
-          "n_nationkey", "n_regionkey")
-        one("region", t(s, dir, "region"), col("r_regionkey"),
-          "r_regionkey")
-        one("hot_lineitem",
-          t(s, dir, "lineitem")
-            .withColumn("l_orderkey", statsHot(col("l_orderkey"))),
-          concat_ws("|", col("l_orderkey"), col("l_linenumber")),
-          "l_orderkey")
-        one("hot_orders",
-          t(s, dir, "orders")
-            .withColumn("o_orderkey", statsHot(col("o_orderkey")))
-            .groupBy("o_orderkey").agg(min("o_custkey").as("o_custkey")),
-          col("o_orderkey"), "o_orderkey")
-        // the DP star regime's derived tables (q_scale_stats_join
-        // _order_dp): a second custkey-keyed fact and two selective
-        // order dims — the shape where a bushy plan prices below
-        // every left-deep order
-        one("orders2", t(s, dir, "orders")
-            .select(col("o_custkey").as("o2_custkey"),
-              col("o_orderkey").as("o2_orderkey")),
-          col("o2_orderkey"), "o2_custkey", "o2_orderkey")
-        one("dsel1", t(s, dir, "orders")
-            .filter(col("o_orderkey") % 100 === 0)
-            .select(col("o_orderkey").as("d1_key")),
-          col("d1_key"), "d1_key")
-        one("dsel2", t(s, dir, "orders")
-            .filter(col("o_orderkey") % 50 === 0)
-            .select(col("o_orderkey").as("d2_key")),
-          col("d2_key"), "d2_key")
-        // top-level completeness marker once all eleven artifacts
-        // landed (stageOnce's publication test keys on it)
-        graft.sources.Staging.touchMarker(tmp)
-      }
+    graft.sources.Staging.staged("graft_table_stats_v4", dir, Seq("lineitem",
+        "orders", "customer", "supplier", "nation", "region")) { tmp =>
+      val S = graft.llm.SketchOps
+      def one(name: String, df: DataFrame, rowKey: Column,
+          keyCols: String*): Unit =
+        S.saveTableStats(
+          S.tableStats(df, rowKey,
+            keyCols.map(k => (k, col(k), Option.empty[Column])).toSeq),
+          s"$tmp/$name")
+      one("lineitem", t(s, dir, "lineitem"),
+        concat_ws("|", col("l_orderkey"), col("l_linenumber")),
+        "l_orderkey")
+      one("orders", t(s, dir, "orders"), col("o_orderkey"),
+        "o_orderkey", "o_custkey")
+      one("customer", t(s, dir, "customer"), col("c_custkey"),
+        "c_custkey", "c_nationkey")
+      one("supplier", t(s, dir, "supplier"), col("s_suppkey"),
+        "s_nationkey")
+      one("nation", t(s, dir, "nation"), col("n_nationkey"),
+        "n_nationkey", "n_regionkey")
+      one("region", t(s, dir, "region"), col("r_regionkey"),
+        "r_regionkey")
+      one("hot_lineitem",
+        t(s, dir, "lineitem")
+          .withColumn("l_orderkey", statsHot(col("l_orderkey"))),
+        concat_ws("|", col("l_orderkey"), col("l_linenumber")),
+        "l_orderkey")
+      one("hot_orders",
+        t(s, dir, "orders")
+          .withColumn("o_orderkey", statsHot(col("o_orderkey")))
+          .groupBy("o_orderkey").agg(min("o_custkey").as("o_custkey")),
+        col("o_orderkey"), "o_orderkey")
+      // the DP star regime's derived tables (q_scale_stats_join
+      // _order_dp): a second custkey-keyed fact and two selective
+      // order dims — the shape where a bushy plan prices below
+      // every left-deep order
+      one("orders2", t(s, dir, "orders")
+          .select(col("o_custkey").as("o2_custkey"),
+            col("o_orderkey").as("o2_orderkey")),
+        col("o2_orderkey"), "o2_custkey", "o2_orderkey")
+      one("dsel1", t(s, dir, "orders")
+          .filter(col("o_orderkey") % 100 === 0)
+          .select(col("o_orderkey").as("d1_key")),
+        col("d1_key"), "d1_key")
+      one("dsel2", t(s, dir, "orders")
+          .filter(col("o_orderkey") % 50 === 0)
+          .select(col("o_orderkey").as("d2_key")),
+        col("d2_key"), "d2_key")
     }
-    path
-  }
 
   // THE ARTIFACT CONTENT, oracled through the seam: the entry loads
   // the PERSISTED lineitem stats (never rebuilds — stageOnce) and the
@@ -163,25 +153,19 @@ private[graft] object StatsEntries {
   // "update-in-place == rebuild" is the hash-compared surface; update
   // cost is histogram-sized, never a table rescan.
   private def statsUpdatedArtifactStaged(s: SparkSession,
-      dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("lineitem"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_stats_upd_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val S = graft.llm.SketchOps
-        val li = t(s, dir, "lineitem")
-        val rowKey = concat_ws("|", col("l_orderkey"), col("l_linenumber"))
-        val cols = Seq(("l_orderkey", col("l_orderkey"),
-          Option.empty[Column]))
-        S.saveTableStatsWithHist(S.histFrame(
-          li.filter(col("l_linenumber") % 4 =!= 0), rowKey, cols), tmp)
-        S.updateTableStats(s, tmp, S.histFrame(
-          li.filter(col("l_linenumber") % 4 === 0), rowKey, cols))
-      }
+      dir: String): String =
+    graft.sources.Staging.staged("graft_stats_upd_v1", dir,
+        Seq("lineitem")) { tmp =>
+      val S = graft.llm.SketchOps
+      val li = t(s, dir, "lineitem")
+      val rowKey = concat_ws("|", col("l_orderkey"), col("l_linenumber"))
+      val cols = Seq(("l_orderkey", col("l_orderkey"),
+        Option.empty[Column]))
+      S.saveTableStatsWithHist(S.histFrame(
+        li.filter(col("l_linenumber") % 4 =!= 0), rowKey, cols), tmp)
+      S.updateTableStats(s, tmp, S.histFrame(
+        li.filter(col("l_linenumber") % 4 === 0), rowKey, cols))
     }
-    path
-  }
   private val scaleStatsUpdate: Q = (s, dir) =>
     graft.llm.SketchOps.loadTableStats(s,
       statsUpdatedArtifactStaged(s, dir)).cols
@@ -296,17 +280,8 @@ private[graft] object StatsEntries {
       ("nation", Seq("n_nationkey")),
       ("region", Seq("r_regionkey")),
       ("supplier", Seq("s_nationkey"))))
-    // each (table, key-set) PlanTable loads once and is shared across
-    // the regimes (the counter collects are catalog-sized, but every
-    // load is still a driver job — a planner caches its catalog too).
-    // Keyed by the key SET, not the name: the profiled columns feed
-    // maxMult, so "nation on n_nationkey" and "nation on both keys"
-    // are different planner inputs.
-    val ptCache =
-      scala.collection.mutable.Map.empty[(String, Seq[String]), Sc.PlanTable]
     def pt(name: String, keys: String*) =
-      ptCache.getOrElseUpdate((name, keys.toSeq),
-        planTableCached(s, root, name, keys.toSeq))
+      planTableCached(s, root, name, keys.toSeq)
     def run(regime: String, tables: Seq[Sc.PlanTable],
         edges: Seq[Sc.JoinEdge], dfs: Map[String, DataFrame],
         sumA: Column, sumB: Column) = {
@@ -433,11 +408,8 @@ private[graft] object StatsEntries {
       ("orders2", Seq("o2_custkey", "o2_orderkey")),
       ("dsel2", Seq("d2_key")),
       ("lineitem", Seq("l_orderkey"))))
-    val ptCache =
-      scala.collection.mutable.Map.empty[(String, Seq[String]), Sc.PlanTable]
     def pt(name: String, keys: String*) =
-      ptCache.getOrElseUpdate((name, keys.toSeq),
-        planTableCached(s, root, name, keys.toSeq))
+      planTableCached(s, root, name, keys.toSeq)
     def run(regime: String, tables: Seq[Sc.PlanTable],
         edges: Seq[Sc.JoinEdge], dfs: Map[String, DataFrame],
         sumA: Column, sumB: Column) = {
@@ -527,21 +499,15 @@ private[graft] object StatsEntries {
   // staged-artifact plan, executes the derived plan, and puts the
   // derived dims' row counts in the hash-compared output next to the
   // oracle's own filtered counts.
-  private def ordersHistStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("orders"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_stats_ordhist_v1_$key"
-    if (!graft.sources.Staging.hasMarker(path)) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val S = graft.llm.SketchOps
-        S.saveTableStatsWithHist(S.histFrame(t(s, dir, "orders"),
-          col("o_orderkey"),
-          Seq(("o_orderkey", col("o_orderkey"), Option.empty[Column]))),
-          tmp)
-      }
+  private def ordersHistStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_stats_ordhist_v1", dir,
+        Seq("orders")) { tmp =>
+      val S = graft.llm.SketchOps
+      S.saveTableStatsWithHist(S.histFrame(t(s, dir, "orders"),
+        col("o_orderkey"),
+        Seq(("o_orderkey", col("o_orderkey"), Option.empty[Column]))),
+        tmp)
     }
-    path
-  }
   private val scaleStatsDerivedDp: Q = (s, dir) => {
     val root = statsArtifactStaged(s, dir)
     val S = graft.llm.SketchOps
@@ -667,22 +633,14 @@ private[graft] object StatsEntries {
   // not just in the spec — then executes the join through
   // statsGatedJoin with the branch string in the hash-compared
   // output (shuffle at every SF: lineitem's hottest key ≪ 20%).
-  private def lineitemSlicesStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir, Seq("lineitem"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_li_slices_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        val li = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"))
-        graft.sources.Staging.stageSlices(li, "l_orderkey", 3, tmp)
-        graft.sources.Staging.touchMarker(tmp)
-      }
+  private def lineitemSlicesStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_li_slices_v1", dir,
+        Seq("lineitem")) { tmp =>
+      val li = t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"))
+      graft.sources.Staging.stageSlices(li, "l_orderkey", 3, tmp)
     }
-    path
-  }
   private val scaleStatsStreamGate: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     val S = graft.llm.SketchOps
     val Sc = graft.operators.Scale
     // SmallPin (the q_profile_table precedent): every
@@ -692,7 +650,6 @@ private[graft] object StatsEntries {
     // restores the session conf, so it keeps AQE
     withConf(s, SmallPin: _*) {
       val watch = lineitemSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_sgate_stream")
       // carried state is the cardinality-sized histogram, held as an
       // in-memory frame (localCheckpoint) between triggers instead of
       // a parquet write-then-re-read per batch (r19 VERDICT #7): one
@@ -704,25 +661,17 @@ private[graft] object StatsEntries {
       val cols = Seq(("l_orderkey", col("l_orderkey"),
         Option.empty[Column]))
       val rowKey = concat_ws("|", col("l_orderkey"), col("l_linenumber"))
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            // per-batch fold unit — one job per trigger when the
-            // merged state checkpoints (profileFrames' materialization
-            // is for the multi-consumer profile assembly, not a fold)
-            val hist = S.histFrame(b, rowKey, cols)
-            val merged = state match {
-              case None => hist
-              case Some(p) => S.histMerge(p, hist)
-            }
-            state = Some(merged.localCheckpoint())
-          }
+      replayBatches(s, watch) { b =>
+        // per-batch fold unit — one job per trigger when the
+        // merged state checkpoints (profileFrames' materialization
+        // is for the multi-consumer profile assembly, not a fold)
+        val hist = S.histFrame(b, rowKey, cols)
+        val merged = state match {
+          case None => hist
+          case Some(p) => S.histMerge(p, hist)
         }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        state = Some(merged.localCheckpoint())
+      }
       val root = statsArtifactStaged(s, dir)
       warmPlanTables(s, root, Seq(
         ("orders", Seq("o_orderkey", "o_custkey")),
@@ -782,30 +731,21 @@ private[graft] object StatsEntries {
   // come from prefix-exact stats: MergeableSketchSpec "streaming
   // profiler" pins the folded histogram equal to the whole prefix's
   // at every batch.
-  private def liOrdSlicesStaged(s: SparkSession, dir: String): String = {
-    val key = graft.sources.SyntheticTraces.tableKey(dir,
-      Seq("lineitem", "orders"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_liord_slices_v1_$key"
-    if (!graft.sources.Staging.hasMarker(s"$path")) {
-      graft.sources.Staging.stageOnce(path) { tmp =>
-        // one tagged frame sliced on the shared orderkey range, so
-        // every slice carries BOTH tables' rows (the always-on
-        // profiler sees both sides grow together)
-        val li = t(s, dir, "lineitem")
-          .select(lit("lineitem").as("tbl"), col("l_orderkey").as("a"),
-            col("l_linenumber").cast("long").as("b"))
-        val ord = t(s, dir, "orders")
-          .select(lit("orders").as("tbl"), col("o_orderkey").as("a"),
-            col("o_custkey").cast("long").as("b"))
-        graft.sources.Staging.stageSlices(li.unionByName(ord), "a", 3, tmp)
-        graft.sources.Staging.touchMarker(tmp)
-      }
+  private def liOrdSlicesStaged(s: SparkSession, dir: String): String =
+    graft.sources.Staging.staged("graft_liord_slices_v1", dir,
+        Seq("lineitem", "orders")) { tmp =>
+      // one tagged frame sliced on the shared orderkey range, so
+      // every slice carries BOTH tables' rows (the always-on
+      // profiler sees both sides grow together)
+      val li = t(s, dir, "lineitem")
+        .select(lit("lineitem").as("tbl"), col("l_orderkey").as("a"),
+          col("l_linenumber").cast("long").as("b"))
+      val ord = t(s, dir, "orders")
+        .select(lit("orders").as("tbl"), col("o_orderkey").as("a"),
+          col("o_custkey").cast("long").as("b"))
+      graft.sources.Staging.stageSlices(li.unionByName(ord), "a", 3, tmp)
     }
-    path
-  }
   private val scaleStatsStreamOrder: Q = (s, dir) => {
-    import org.apache.spark.sql.streaming.Trigger
     val S = graft.llm.SketchOps
     val Sc = graft.operators.Scale
     // SmallPin — same rationale as the stream gate:
@@ -815,7 +755,6 @@ private[graft] object StatsEntries {
     // floors); the returned 3-table join executes after the scope
     withConf(s, SmallPin: _*) {
       val watch = liOrdSlicesStaged(s, dir)
-      val work = graft.sources.Staging.sessionTempDir("graft_sorder_stream")
       val root = statsArtifactStaged(s, dir)
       warmPlanTables(s, root, Seq(
         ("customer", Seq("c_custkey")),
@@ -845,48 +784,40 @@ private[graft] object StatsEntries {
       var state: Option[DataFrame] = None
       var lastPlan: Option[Sc.JoinOrderDpDecision] = None
       var replans = 0
-      val schema = s.read.parquet(watch).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watch)
-        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            // ONE unioned fold per batch: the two sides' histogram
-            // frames share a schema and DISJOINT colnames, so the
-            // cellwise merge keyed on (colname, term, …) folds each
-            // side independently inside a single state materialize —
-            // one job per trigger where the split-state form paid two
-            val hist = S.histFrame(
-              b.filter(col("tbl") === "lineitem")
-                .select(col("a").as("l_orderkey"), col("b").as("l_linenumber")),
-              concat_ws("|", col("l_orderkey"), col("l_linenumber")),
-              Seq(("l_orderkey", col("l_orderkey"), None)))
-              .unionByName(S.histFrame(
-                b.filter(col("tbl") === "orders")
-                  .select(col("a").as("o_orderkey"), col("b").as("o_custkey")),
-                col("o_orderkey"),
-                Seq(("o_orderkey", col("o_orderkey"), None),
-                  ("o_custkey", col("o_custkey"), None))))
-            val merged = (state match {
-              case None => hist
-              case Some(p) => S.histMerge(p, hist)
-            }).localCheckpoint()
-            state = Some(merged)
-            // the always-on planner RE-PLANS from the carried state
-            // after every fold — order AND per-step strategy; both
-            // sides' PlanTables slice out of ONE finalized artifact
-            // in one collect (planTablesFromStats), not one job per
-            // column per side
-            val pts = Sc.planTablesFromStats(
-              S.tableStatsFromHist(merged),
-              Seq(("lineitem", Seq("l_orderkey")),
-                ("orders", Seq("o_orderkey", "o_custkey"))))
-            lastPlan = Some(planPts(pts(0), pts(1)))
-            replans += 1
-          }
-        }
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      replayBatches(s, watch) { b =>
+        // ONE unioned fold per batch: the two sides' histogram
+        // frames share a schema and DISJOINT colnames, so the
+        // cellwise merge keyed on (colname, term, …) folds each
+        // side independently inside a single state materialize —
+        // one job per trigger where the split-state form paid two
+        val hist = S.histFrame(
+          b.filter(col("tbl") === "lineitem")
+            .select(col("a").as("l_orderkey"), col("b").as("l_linenumber")),
+          concat_ws("|", col("l_orderkey"), col("l_linenumber")),
+          Seq(("l_orderkey", col("l_orderkey"), None)))
+          .unionByName(S.histFrame(
+            b.filter(col("tbl") === "orders")
+              .select(col("a").as("o_orderkey"), col("b").as("o_custkey")),
+            col("o_orderkey"),
+            Seq(("o_orderkey", col("o_orderkey"), None),
+              ("o_custkey", col("o_custkey"), None))))
+        val merged = (state match {
+          case None => hist
+          case Some(p) => S.histMerge(p, hist)
+        }).localCheckpoint()
+        state = Some(merged)
+        // the always-on planner RE-PLANS from the carried state
+        // after every fold — order AND per-step strategy; both
+        // sides' PlanTables slice out of ONE finalized artifact
+        // in one collect (planTablesFromStats), not one job per
+        // column per side
+        val pts = Sc.planTablesFromStats(
+          S.tableStatsFromHist(merged),
+          Seq(("lineitem", Seq("l_orderkey")),
+            ("orders", Seq("o_orderkey", "o_custkey"))))
+        lastPlan = Some(planPts(pts(0), pts(1)))
+        replans += 1
+      }
       val d = lastPlan.getOrElse(
         sys.error("stats stream produced no batches"))
       // the always-on service must agree with the batch-built

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-process-safe one-time staging for the fingerprint-keyed
@@ -90,10 +90,20 @@ object Staging {
       .repartition(col("_slice")), watchDir)
   }
 
-  /** Append `df` to `watchDir` as slice `i` (one file per write
-    * partition) — the far-future sentinel slices that close a replay. */
-  def appendSlice(df: Dataset[_], i: Int, watchDir: String): Unit =
-    writeSlices(df.withColumn("_slice", lit(i)), watchDir)
+  /** Append the two far-future sentinel slices that close a replay of
+    * `watchDir`: slices `nSlices` and `nSlices + 1`, built by
+    * `mk(k, ts)` for sentinel k = 1, 2 at `tsCol` = the staged max
+    * + k * 10^6 s. The first advances the watermark past every real
+    * row, the second gives the timers a batch to fire in. */
+  def appendSentinels(watchDir: String, tsCol: String, nSlices: Int)(
+      mk: (Int, Long) => Dataset[_]): Unit = {
+    val mx = SparkSession.active.read.parquet(watchDir)
+      .agg(max(tsCol)).head().getLong(0)
+    Seq(1, 2).foreach { k =>
+      writeSlices(mk(k, mx + k * 1000000L)
+        .withColumn("_slice", lit(nSlices + k - 1)), watchDir)
+    }
+  }
 
   /** Partitioned write of a `_slice`-tagged frame into a scratch dir
     * under `watchDir`, then [[moveSlices]] into place. */
@@ -121,6 +131,27 @@ object Staging {
       }
     }
     org.apache.hadoop.fs.FileUtil.fullyDelete(stage)
+  }
+
+  /** The staging dir of the artifact `name` derived from `tables`
+    * under `dir`: `<java.io.tmpdir>/<name>_<tableKey>`, so a
+    * regenerated source table moves the key and re-stages. */
+  def stagedPath(name: String, dir: String, tables: Seq[String]): String =
+    s"${System.getProperty("java.io.tmpdir")}/${name}_" +
+      SyntheticTraces.tableKey(dir, tables)
+
+  /** Stage the artifact `name` once per fingerprint of its source
+    * `tables` ([[stagedPath]], [[stageOnce]]) and return its path. A
+    * writer whose last step is not a Spark committer gets its
+    * `_SUCCESS` marker touched here once `write` returns. */
+  def staged(name: String, dir: String, tables: Seq[String])(
+      write: String => Unit): String = {
+    val path = stagedPath(name, dir, tables)
+    stageOnce(path) { tmp =>
+      write(tmp)
+      if (!hasMarker(tmp)) touchMarker(tmp)
+    }
+    path
   }
 
   /** Run `write(tmpDir)` and atomically publish the result as `path`,

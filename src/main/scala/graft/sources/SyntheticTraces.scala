@@ -17,21 +17,10 @@ import org.apache.spark.sql.functions._
   */
 object SyntheticTraces {
 
-  /** Corpus staged as bronze parquet (generated once per JVM per SF,
-    * then read like any real trace table — the generation cost is
-    * paid once instead of inside every query that consumes traces).
-    */
-  /** Staging-cache key for a corpus dir: path + a fingerprint of the
-    * source tables (length + mtime), so a regenerated dataset at the
-    * same path invalidates every staged derivative (bronze, the
-    * flagship's sliced stream replay).
-    */
-  def corpusKey(sfDir: String): String = tableKey(sfDir, Seq("orders", "lineitem"))
-
   /** Staging-dir fingerprint over the NAMED source tables (length +
     * mtime). Every staged derivative must key on the tables it is
     * actually derived from — a dir derived from events.parquet but
-    * keyed on the orders/lineitem [[corpusKey]] would survive an
+    * keyed on orders/lineitem would survive an
     * events-only regeneration and silently serve stale replay input.
     */
   def tableKey(sfDir: String, tables: Seq[String]): String = {
@@ -43,22 +32,22 @@ object SyntheticTraces {
       "_" + java.lang.Long.toHexString(fp)
   }
 
+  /** Corpus staged as bronze parquet (generated once per corpus
+    * fingerprint, then read like any real trace table — the generation
+    * cost is paid once instead of inside every query that consumes
+    * traces). */
   def bronze(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = corpusKey(sfDir)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_bronze_v2_$key"
-    if (!Staging.hasMarker(s"$path")) {
-      // stage in one file per core ([[blocksBronze]] rationale): the
-      // consumer's map stage (interpreted from_json + partial tree
-      // aggregation) is the CPU-dominant stage of the flagship
-      // pipeline, and a 2-file staging caps it at 2 tasks — 1/16th
-      // of the machine. A Kafka source would arrive partitioned.
-      Staging.stageOnce(path) { tmp =>
-        fromTpch(spark, sfDir)
-          .repartition(math.max(16, spark.sparkContext.defaultParallelism))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    spark.read.parquet(path)
+    // stage in one file per core ([[blocksBronze]] rationale): the
+    // consumer's map stage (interpreted from_json + partial tree
+    // aggregation) is the CPU-dominant stage of the flagship
+    // pipeline, and a 2-file staging caps it at 2 tasks — 1/16th
+    // of the machine. A Kafka source would arrive partitioned.
+    spark.read.parquet(Staging.staged("graft_bronze_v2", sfDir,
+        Seq("orders", "lineitem")) { tmp =>
+      fromTpch(spark, sfDir)
+        .repartition(math.max(16, spark.sparkContext.defaultParallelism))
+        .write.mode("overwrite").parquet(tmp)
+    })
   }
 
   // lpad(hex(..)) instead of format_string: hex is a tight codegen'd
@@ -75,33 +64,26 @@ object SyntheticTraces {
     * `re_emit` (0 = first emission, 1 = reorg/update re-emission with
     * a newer timestamp; ~14% of blocks re-emit).
     */
-  def blocksBronze(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new java.io.File(s"$sfDir/orders.parquet")
-    val fp = java.lang.Long.toHexString(f.length() * 31L + f.lastModified())
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + "_" + fp
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_blocks_v2_$key"
-    if (!Staging.hasMarker(s"$path")) {
-      Staging.stageOnce(path) { tmp =>
-        val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-        def payload(tsBump: Int, gasBump: Int) = to_json(struct(
-          col("o_orderkey").as("number"),
-          (col("o_orderkey") + 1000 + tsBump).as("timestamp"),
-          when(col("o_orderkey") % 10 =!= 0,
-            hexPad(col("o_orderkey"), 64)).as("hash"),
-          lit("0xparent").as("parent_hash"),
-          ((col("o_totalprice").cast("long") + gasBump) % 1000).cast("int").as("gas_used")))
-        orders.select(payload(0, 0).as("value"), lit(0).as("re_emit"))
-          .unionByName(orders.filter(col("o_orderkey") % 7 === 0)
-            .select(payload(5, 1).as("value"), lit(1).as("re_emit")))
-          // stage in enough files that the downstream interpreted
-          // from_json (CodegenFallback, ~75µs/row) parses in parallel
-          // — a Kafka source would arrive partitioned the same way
-          .repartition(16)
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    spark.read.parquet(path)
-  }
+  def blocksBronze(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(Staging.staged("graft_blocks_v2", sfDir,
+        Seq("orders")) { tmp =>
+      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+      def payload(tsBump: Int, gasBump: Int) = to_json(struct(
+        col("o_orderkey").as("number"),
+        (col("o_orderkey") + 1000 + tsBump).as("timestamp"),
+        when(col("o_orderkey") % 10 =!= 0,
+          hexPad(col("o_orderkey"), 64)).as("hash"),
+        lit("0xparent").as("parent_hash"),
+        ((col("o_totalprice").cast("long") + gasBump) % 1000).cast("int").as("gas_used")))
+      orders.select(payload(0, 0).as("value"), lit(0).as("re_emit"))
+        .unionByName(orders.filter(col("o_orderkey") % 7 === 0)
+          .select(payload(5, 1).as("value"), lit(1).as("re_emit")))
+        // stage in enough files that the downstream interpreted
+        // from_json (CodegenFallback, ~75µs/row) parses in parallel
+        // — a Kafka source would arrive partitioned the same way
+        .repartition(16)
+        .write.mode("overwrite").parquet(tmp)
+    })
 
   def fromTpch(spark: SparkSession, sfDir: String): DataFrame = {
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")

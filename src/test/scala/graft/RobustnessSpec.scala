@@ -213,4 +213,25 @@ class RobustnessSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(path, "data")) == "v2")
   }
+
+  test("Staging.staged publishes <name>_<tableKey>, marks a writer that " +
+      "leaves no _SUCCESS, and never runs the writer again") {
+    val St = graft.sources.Staging
+    val sf = St.sessionTempDir("graft_staged_sf")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(sf, "t.parquet"), "x")
+    val expected = s"${System.getProperty("java.io.tmpdir")}/graft_staged_spec_" +
+      graft.sources.SyntheticTraces.tableKey(sf, Seq("t"))
+    try {
+      val path = St.staged("graft_staged_spec", sf, Seq("t")) { tmp =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "data"), "v1")
+      }
+      assert(path == expected)
+      assert(St.hasMarker(path), "staged must mark a marker-less writer's output")
+      assert(St.staged("graft_staged_spec", sf, Seq("t"))(
+        _ => fail("a published dir must never be rebuilt")) == expected)
+      assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(path, "data")) == "v1")
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(expected))
+  }
 }

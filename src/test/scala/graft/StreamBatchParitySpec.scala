@@ -148,14 +148,11 @@ class StreamBatchParitySpec extends SparkSpec {
     val watch = s"$work/in"
     try {
       Staging.stageSlices(in, "ts", nSlices, watch)
-      val mx = spark.read.parquet(watch).agg(max("ts")).head().getLong(0)
       // far-future sentinels: the first advances the watermark past
       // every real row, the second gives eviction a batch to run in
-      Seq((nSlices, -1L, mx + 1000000L), (nSlices + 1, -2L, mx + 2000000L))
-        .foreach { case (i, id, ts) =>
-          Staging.appendSlice(withTime(
-            Seq((-1L, 0, id, ts)).toDF("key", "tag", "id", "ts")), i, watch)
-        }
+      Staging.appendSentinels(watch, "ts", nSlices) { (k, ts) =>
+        withTime(Seq((-1L, 0, -k.toLong, ts)).toDF("key", "tag", "id", "ts"))
+      }
       // the replay contract: one file per slice, named and timed in
       // slice order, and no staging dir left behind
       val files = new java.io.File(watch).listFiles().sortBy(_.getName)
@@ -225,4 +222,28 @@ class StreamBatchParitySpec extends SparkSpec {
     } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(work))
   }
 
+  test("replayBatches delivers 3 staged slices and the 2 sentinel " +
+      "slices as 5 batches of one file each, in slice order") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Staging
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("replay_batches").toString
+    val watch = s"$work/in"
+    try {
+      Staging.stageSlices(spark.range(0, 300).select(col("id").as("ts")),
+        "ts", 3, watch)
+      Staging.appendSentinels(watch, "ts", 3)((_, ts) => Seq(ts).toDF("ts"))
+      val batches = scala.collection.mutable.ArrayBuffer.empty[(Seq[String], Long, Long)]
+      Queries.replayBatches(spark, watch) { b =>
+        val files = b.select(input_file_name()).distinct().as[String].collect()
+          .map(f => f.substring(f.lastIndexOf('/') + 1)).toSeq
+        val r = b.agg(min("ts"), max("ts")).head()
+        batches += ((files, r.getLong(0), r.getLong(1)))
+      }
+      assert(batches.map(_._1).toSeq ==
+        (0 until 5).map(i => Seq(f"slice_$i%04d_0.parquet")))
+      assert(batches.map(b => (b._2, b._3)).toSeq == Seq((0L, 99L),
+        (100L, 199L), (200L, 299L), (1000299L, 1000299L), (2000299L, 2000299L)))
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(work))
+  }
 }
