@@ -57,14 +57,34 @@ object Queries {
     */
   private[graft] def withConf[T](s: SparkSession, kvs: (String, String)*)(
       body: => T): T = {
+    val id = org.apache.spark.sql.GraftShim.sessionUUID(s)
+    val outermost =
+      unscopedConf.putIfAbsent(id, s.sessionState.conf.clone()) == null
     val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    finally {
+      prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+      if (outermost) unscopedConf.remove(id)
     }
   }
+
+  /** Per session (by UUID), a copy of its conf as it stands outside
+    * every [[withConf]] scope: taken by the outermost scope, dropped
+    * when that scope exits. */
+  private val unscopedConf = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.internal.SQLConf]()
+
+  /** The session's shuffle partition count outside any [[withConf]]
+    * scope. The shared per-corpus frames partition by it, so the scope
+    * of whichever entry builds one first does not fix its layout for
+    * the rest of the session. */
+  private def sessionPartitions(s: SparkSession): Int =
+    Option(unscopedConf.get(org.apache.spark.sql.GraftShim.sessionUUID(s)))
+      .getOrElse(s.sessionState.conf).numShufflePartitions
 
   /** The small-shuffle pin: DOP 8 and AQE off, for entries whose every
     * shuffled frame is counter-, candidate- or cardinality-sized
@@ -235,6 +255,52 @@ object Queries {
       .awaitTermination()
   }
 
+  /** The global carried-state fold over [[replayBatches]]: per batch,
+    * `sketch` it, `merge` the sketch into the carried state (the first
+    * batch's sketch starts it), hold the merged state in memory until
+    * the next trigger (one `localCheckpoint`) and hand it to `each`.
+    * Returns the final state; fails if no batch arrived. */
+  private[graft] def foldBatches(s: SparkSession, watch: String)(
+      sketch: DataFrame => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame,
+      each: DataFrame => Unit = _ => ()): DataFrame = {
+    var state = Option.empty[DataFrame]
+    replayBatches(s, watch) { b =>
+      val sk = sketch(b)
+      val merged = state.fold(sk)(merge(_, sk)).localCheckpoint()
+      state = Some(merged)
+      each(merged)
+    }
+    state.getOrElse(sys.error(s"fold stream over $watch produced no batches"))
+  }
+
+  /** The watermark-windowed fold: [[foldBatches]] over a state keyed by
+    * `win`-second windows starting at `windowStart`. Each batch advances
+    * the watermark to its max `ts` and flags the windows it closes
+    * (`closed`); a closed window is dropped from the state the next
+    * batch merges into (its key never reappears under time-ordered
+    * replay), so the state holds only open windows. Returns every
+    * state's closed windows unioned with the final state, each window
+    * once, without the flag. */
+  private[graft] def foldWindows(s: SparkSession, watch: String, win: Long,
+      windowStart: Column)(sketch: DataFrame => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    var wm = Long.MinValue
+    def flagged(df: DataFrame) =
+      df.withColumn("closed", windowStart + lit(win) <= lit(wm))
+    val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the flag rides the sketch so the first batch's state carries it;
+    // the merge drops it again and flags the merged state
+    val last = foldBatches(s, watch) { b =>
+      val sk = sketch(b)
+      wm = math.max(wm, b.agg(max(col("ts").cast("long"))).head().getLong(0))
+      flagged(sk)
+    }((p, sk) => flagged(merge(p.filter(!col("closed")).drop("closed"),
+      sk.drop("closed"))), states += _)
+    states.init.map(_.filter(col("closed"))).foldLeft(last)(_ unionByName _)
+      .drop("closed")
+  }
+
   /** events.parquet has shipped with two physical `ts` encodings across
     * testdata generations: TIMESTAMP(NANOS) (which Spark 4 only reads
     * via the nanos-as-long legacy conf) and plain timestamp[us] (read
@@ -253,7 +319,7 @@ object Queries {
     cachedFrame(s, dir, "events") {
       val raw = t(s, dir, "events")
       raw.withColumn("sec", eventSeconds(raw.schema("ts").dataType))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("user_id"))
+        .repartition(sessionPartitions(s), col("user_id"))
     }
   }
 
@@ -273,13 +339,13 @@ object Queries {
 
   private[graft] def qty(c: Column): Column = floor(c).cast("long")
 
-  /** Per-(session, corpus) persisted-frame cache — the commit-cache
-    * pattern generalized. The j/a-series diagnostic twins decompose
-    * the same commit cascade over the same lineitem edge projection;
-    * run as independent catalog jobs they would re-scan the table and
-    * re-shuffle the shared intermediates once EACH (the round-6 judge
-    * measured 1.3-1.9 s per entry at sf0.1, ~10× their DuckDB twins,
-    * all of it duplicated work). Whichever family member runs first
+  /** Per-(session, corpus) persisted-frame cache: the shared commit
+    * ([[commits]]) and the diagnostic frames. The j/a-series diagnostic
+    * twins decompose the same commit cascade over the same lineitem
+    * edge projection; run as independent catalog jobs they would
+    * re-scan the table and re-shuffle the shared intermediates once
+    * EACH (the round-6 judge measured 1.3-1.9 s per entry at sf0.1,
+    * ~10× their DuckDB twins, all of it duplicated work). Whichever family member runs first
     * pays the scan/shuffle and persists it; the rest split it — the
     * reference's one-pass commit() shape applied to the diagnostic
     * suite. Keyed by session UUID (stable, never reused); entries of
@@ -366,7 +432,7 @@ object Queries {
         col("l_orderkey"), col("l_suppkey"), col("l_partkey"),
         col("l_returnflag"), col("l_quantity"), col("l_linestatus"),
         col("l_linenumber"))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("l_orderkey"))
+        .repartition(sessionPartitions(s), col("l_orderkey"))
     }
 
   /** Pre-partitioned projections of the small single-file corpora —
@@ -378,13 +444,13 @@ object Queries {
   private[graft] def docsT(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "docs") {
       val d = t(s, dir, "documents")
-      d.repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
+      d.repartition(sessionPartitions(s), col("doc_id"))
     }
 
   private[graft] def embT(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "emb") {
       val e = t(s, dir, "embeddings")
-      e.repartition(s.sessionState.conf.numShufflePartitions, col("vec_id"))
+      e.repartition(sessionPartitions(s), col("vec_id"))
     }
 
   /** Join an array column to a CSV string — the external verifier
@@ -407,39 +473,18 @@ object Queries {
     * per-table catalog entries as independent jobs would re-run the
     * decode → normalize → prune → fused-aggregate pipeline once per
     * table. Mirror the single-pass design: the committed Dataset is
-    * computed once per (session, corpus) and persisted — whichever
+    * a [[cachedFrame]], computed once per (session, corpus) — whichever
     * table's query runs first pays the compute, the other splits the
     * persisted commit (the commit output is per-tx rows, ~1000× smaller
     * than the trace input, so the persist is executor-memory-trivial
     * at any SF).
     */
-  private val commitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, org.apache.spark.sql.Dataset[graft.model.TxCommit])]()
-  private[graft] def commits(s: SparkSession, dir: String) = {
-    // prune entries bound to stopped sessions (test-suite churn): their
-    // persisted Datasets are unusable and would pin executor memory
-    // metadata; keying on the session UUID (stable, never reused —
-    // unlike an identity hash after GC) makes aliasing impossible
-    commitCache.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
-    commitCache.computeIfAbsent(
-      s"${org.apache.spark.sql.GraftShim.sessionUUID(s)}|$dir", _ => (s, {
-        val traces = graft.sources.SyntheticTraces.bronze(s, dir)
-        graft.operators.TraceEtl.commitTraces(graft.operators.TraceEtl.normalize(traces))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }))._2
-  }
-
-  /** Drop the shared-commit cache. The bench calls this between
-    * measurement passes: without it, a best-of-N pass reads the
-    * previous pass's persisted commit and the full pipeline cost
-    * would appear in NO recorded number.
-    */
-  def clearCommitCache(): Unit = {
-    commitCache.values().forEach { case (s, ds) =>
-      if (!s.sparkContext.isStopped) ds.unpersist()
-    }
-    commitCache.clear()
-  }
+  private[graft] def commits(s: SparkSession, dir: String) =
+    cachedFrame(s, dir, "commits") {
+      val traces = graft.sources.SyntheticTraces.bronze(s, dir)
+      graft.operators.TraceEtl.commitTraces(
+        graft.operators.TraceEtl.normalize(traces)).toDF()
+    }.as(org.apache.spark.sql.Encoders.product[graft.model.TxCommit])
 
   /** Materialize every per-corpus staging artifact and shared
     * diagnostic persist BEFORE the timed / verified query runs, so
@@ -476,12 +521,13 @@ object Queries {
     AnnEntries.ivfIndexStaged(s, dir)
   }
 
-  /** Drop ALL shared per-corpus caches (commit + diagnostic frames).
-    * The bench calls this between measurement passes so every pass
-    * pays each shared computation exactly once.
+  /** Drop ALL shared per-corpus caches (the commit and the diagnostic
+    * frames, the PlanTables). The bench calls this between measurement
+    * passes: without it, a best-of-N pass reads the previous pass's
+    * persists, and each shared computation's cost would appear in NO
+    * recorded number.
     */
   def clearCaches(): Unit = {
-    clearCommitCache()
     frameCache.values().forEach { case (s, df) =>
       if (!s.sparkContext.isStopped) df.unpersist()
     }

@@ -134,22 +134,12 @@ private[graft] object SketchEntries {
     // SmallPin: every per-trigger fold action is over sketch-sized frames
     withConf(s, SmallPin: _*) {
       val k = 128
-      val watch = kmvSlicesStaged(s, dir)
       // sketch-sized carried state held in memory between triggers
-      // (localCheckpoint) instead of a parquet write+re-read per batch
-      var state: Option[DataFrame] = None
-      replayBatches(s, watch) { b =>
-        val bk = graft.llm.SketchOps.kmvKmin(b, "event_type", "term", k)
-        val merged = state match {
-          case None => bk
-          case Some(p) =>
-            graft.llm.SketchOps.kmvMerge(p, bk, k)
-        }
-        state = Some(merged.localCheckpoint())
-      }
-      graft.llm.SketchOps.kmvEstimate(
-        state.getOrElse(
-          sys.error("kmv stream produced no batches")), k)
+      // instead of a parquet write+re-read per batch
+      val state = foldBatches(s, kmvSlicesStaged(s, dir))(
+        graft.llm.SketchOps.kmvKmin(_, "event_type", "term", k))(
+        graft.llm.SketchOps.kmvMerge(_, _, k))
+      graft.llm.SketchOps.kmvEstimate(state, k)
     }
   }
   private val sketchKmvStreamOracle = {
@@ -338,31 +328,15 @@ private[graft] object SketchEntries {
     withConf(s, SmallPin: _*) {
       val (depth, width, win) = (4, 1024, 604800L)
       val S = graft.llm.SketchOps
-      val watch = kmvSlicesStaged(s, dir)
-      // in-memory carried state between triggers (localCheckpoint) —
-      // see the kmv window stream
-      val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var wm = Long.MinValue
-      replayBatches(s, watch) { b =>
-        val bc = S.cmsCountersWindowed(b, "term", "ts", win, depth,
-          width)
-        val merged = states.lastOption match {
-          case None => bc
-          case Some(p) => p.filter(!col("closed"))
-            .drop("closed").unionByName(bc)
-            .groupBy("window_start", "i", "bucket")
-            .agg(sum("cnt").as("cnt"))
-        }
-        wm = math.max(wm,
-          b.agg(max(col("ts").cast("long"))).head().getLong(0))
-        states += merged.withColumn("closed",
-          col("window_start") + lit(win) <= lit(wm)).localCheckpoint()
+      // in-memory carried state between triggers — see the kmv
+      // window stream
+      val counters = foldWindows(s, kmvSlicesStaged(s, dir), win,
+          col("window_start"))(
+        S.cmsCountersWindowed(_, "term", "ts", win, depth, width)) {
+        (p, bc) => p.unionByName(bc)
+          .groupBy("window_start", "i", "bucket")
+          .agg(sum("cnt").as("cnt"))
       }
-      require(states.nonEmpty, "cms window stream produced no batches")
-      val counters = states.init
-        .map(_.filter(col("closed")))
-        .foldLeft(states.last)(_ unionByName _)
-        .drop("closed")
       // candidates from the batch side — the verification twin, the
       // q_sketch_cms_stream precedent
       val ev = events(s, dir).select(
@@ -390,40 +364,18 @@ private[graft] object SketchEntries {
     withConf(s, SmallPin: _*) {
       val (k, win) = (32, 604800L)
       val S = graft.llm.SketchOps
-      val watch = kmvSlicesStaged(s, dir)
-      // per batch, ONE state materialize carrying a `closed` flag: a
-      // window that closed THIS batch lands here once and is filtered
-      // out of the next batch's carried state (its key never
-      // reappears — time-ordered replay), so the emit-once contract
-      // holds with exactly TWO jobs per batch (the watermark scalar +
-      // the state checkpoint) instead of the recompute-per-consumer
-      // shape (wm/isEmpty/emit-write/open-write each re-running the
-      // merge). State is held in memory between triggers
-      // (localCheckpoint), not round-tripped through parquet.
-      val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var wm = Long.MinValue
-      val wsOf = substring_index(col("source"), "|", 1).cast("long")
-      replayBatches(s, watch) { b =>
-        val bk = S.kmvKmin(b.withColumn("wsrc",
+      // per batch, ONE state materialize carrying the `closed` flag
+      // (foldWindows): the emit-once contract holds with exactly TWO
+      // jobs per batch (the watermark scalar + the state checkpoint)
+      // instead of the recompute-per-consumer shape (wm/isEmpty/
+      // emit-write/open-write each re-running the merge). State is
+      // held in memory between triggers, not round-tripped through
+      // parquet.
+      val all = foldWindows(s, kmvSlicesStaged(s, dir), win,
+          substring_index(col("source"), "|", 1).cast("long"))(b =>
+        S.kmvKmin(b.withColumn("wsrc",
             S.windowedKey(col("ts"), win, col("event_type"))),
-          "wsrc", "term", k)
-        val merged = states.lastOption match {
-          case None => bk
-          case Some(p) => S.kmvMerge(
-            p.filter(!col("closed")).drop("closed"), bk, k)
-        }
-        wm = math.max(wm,
-          b.agg(max(col("ts").cast("long"))).head().getLong(0))
-        states += merged.withColumn("closed",
-          wsOf + lit(win) <= lit(wm)).localCheckpoint()
-      }
-      require(states.nonEmpty, "kmv window stream produced no batches")
-      // every closed window lives in exactly the batch state where it
-      // closed; the final state additionally holds the still-open tail
-      val all = states.init
-        .map(_.filter(col("closed")))
-        .foldLeft(states.last)(_ unionByName _)
-        .drop("closed")
+          "wsrc", "term", k))(S.kmvMerge(_, _, k))
       S.splitWindowedKey(S.kmvEstimate(all, k))
         .select("window_start", "source", "kth_min_hash", "k_used",
           "kmv_est")
@@ -465,34 +417,13 @@ private[graft] object SketchEntries {
     withConf(s, SmallPin: _*) {
       val (k, win) = (64, 604800L)
       val S = graft.llm.SketchOps
-      val watch = quantileSlicesStaged(s, dir)
-      // in-memory carried state between triggers (localCheckpoint) —
-      // see the kmv window stream
-      val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var wm = Long.MinValue
-      val wsOf = substring_index(col("source"), "|", 1).cast("long")
-      replayBatches(s, watch) { b =>
-        val bs = S.quantileSample(b.withColumn("wsrc",
+      // in-memory carried state between triggers — see the kmv
+      // window stream
+      val all = foldWindows(s, quantileSlicesStaged(s, dir), win,
+          substring_index(col("source"), "|", 1).cast("long"))(b =>
+        S.quantileSample(b.withColumn("wsrc",
             S.windowedKey(col("ts"), win, col("event_type"))),
-          "wsrc", "event_id", col("v"), k)
-        val merged = states.lastOption match {
-          case None => bs
-          case Some(p) => S.quantileMerge(
-            p.filter(!col("closed")).drop("closed"), bs, k)
-        }
-        wm = math.max(wm,
-          b.agg(max(col("ts").cast("long"))).head().getLong(0))
-        states += merged.withColumn("closed",
-          wsOf + lit(win) <= lit(wm)).localCheckpoint()
-      }
-      require(states.nonEmpty,
-        "quantile window stream produced no batches")
-      // every closed window lives in exactly the batch state where it
-      // closed; the final state additionally holds the still-open tail
-      val all = states.init
-        .map(_.filter(col("closed")))
-        .foldLeft(states.last)(_ unionByName _)
-        .drop("closed")
+          "wsrc", "event_id", col("v"), k))(S.quantileMerge(_, _, k))
       S.splitWindowedKey(S.quantileEstimate(all, Seq(50, 90)))
         .select("window_start", "source", "sample_n", "q50_est",
           "q90_est")
@@ -881,26 +812,15 @@ private[graft] object SketchEntries {
     // SmallPin: every per-trigger fold action is over counter-sized frames
     withConf(s, SmallPin: _*) {
       val (depth, width, topK) = (4, 1024, 20)
-      val watch = kmvSlicesStaged(s, dir)
       // counter-sized carried state held in memory between triggers
-      // (localCheckpoint) instead of a parquet write+re-read per batch
-      var state: Option[DataFrame] = None
-      replayBatches(s, watch) { b =>
-        val bc = graft.llm.SketchOps.cmsCounters(b, "term", depth, width)
-        val merged = state match {
-          case None => bc
-          case Some(p) =>
-            graft.llm.SketchOps.cmsMerge(p, bc)
-        }
-        state = Some(merged.localCheckpoint())
-      }
+      // instead of a parquet write+re-read per batch
+      val state = foldBatches(s, kmvSlicesStaged(s, dir))(
+        graft.llm.SketchOps.cmsCounters(_, "term", depth, width))(
+        graft.llm.SketchOps.cmsMerge)
       val candidates = graft.llm.SketchOps.cmsTopCandidates(
         events(s, dir).select(col("user_id").cast("string").as("term")),
         "term", topK)
-      graft.llm.SketchOps.cmsProbe(
-        state.getOrElse(
-          sys.error("cms stream produced no batches")),
-        candidates, depth, width)
+      graft.llm.SketchOps.cmsProbe(state, candidates, depth, width)
     }
   }
 

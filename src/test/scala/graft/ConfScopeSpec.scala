@@ -42,4 +42,13 @@ class ConfScopeSpec extends SparkSpec {
       assert(snapshot == before, s"$q changed the session conf")
     }
   }
+
+  test("a shared frame first built inside a scope keeps the session's " +
+      "partition count") {
+    val dir = "/root/testdata/sf0.001"
+    assert(spark.sessionState.conf.numShufflePartitions == 4)
+    Queries.clearCaches()
+    Queries.withConf(spark, Queries.SmallPin: _*)(Queries.events(spark, dir))
+    assert(Queries.events(spark, dir).rdd.getNumPartitions == 4)
+  }
 }

@@ -246,4 +246,36 @@ class StreamBatchParitySpec extends SparkSpec {
         (100L, 199L), (200L, 299L), (1000299L, 1000299L), (2000299L, 2000299L)))
     } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(work))
   }
+
+  test("foldWindows over 3 staged slices and the 2 sentinel slices " +
+      "emits each window once, with the batch per-window count") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Staging
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("fold_windows").toString
+    val watch = s"$work/in"
+    try {
+      Staging.stageSlices(spark.range(0, 300).select(col("id").as("ts")),
+        "ts", 3, watch)
+      Staging.appendSentinels(watch, "ts", 3)((_, ts) => Seq(ts).toDF("ts"))
+      // 70 s windows: [70, 140) and [140, 210) span slice boundaries,
+      // so their counts are carried and merged before they close
+      val win = 70L
+      def perWindow(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy((col("ts") - col("ts") % win).as("window_start"))
+          .agg(count(lit(1)).as("n"))
+      val out = Queries.foldWindows(spark, watch, win, col("window_start"))(
+        perWindow) { (p, sk) =>
+        p.unionByName(sk).groupBy("window_start").agg(sum("n").as("n"))
+      }
+      assert(out.columns.toSeq == Seq("window_start", "n"))
+      val got = out.as[(Long, Long)].collect().toSeq.sorted
+      val want = perWindow(spark.read.parquet(watch)).as[(Long, Long)]
+        .collect().toSeq.sorted
+      assert(got.map(_._1).distinct.size == got.size,
+        s"a window was emitted more than once: $got")
+      assert(got == want)
+      assert(want.size == 7)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(work))
+  }
 }
