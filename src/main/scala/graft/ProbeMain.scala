@@ -4,6 +4,9 @@ package graft
   * — comma-separate names to amortize the JVM/session start across probes.
   */
 object ProbeMain {
+  /** The Spark local property naming the measured run a job belongs to. */
+  val RunProperty = "graft.probe.run"
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -16,8 +19,17 @@ object ProbeMain {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_PROBE_JOBS=1: per-job wall/task accounting — where a
-    // multi-action operator (pagerank, as-of partitioned) spends time
-    if (sys.env.contains("SPARK_GRAFT_PROBE_JOBS"))
+    // multi-action operator (pagerank, as-of partitioned) spends time.
+    // Each measured run tags its jobs with the RunProperty local
+    // property and the listener counts jobs per tag. (Not the job group:
+    // a streaming query runs its jobs under its own group, while its
+    // thread inherits local properties from the run that started it.)
+    // The listener bus is asynchronous, so a run's last job can reach
+    // the listener after the run's PROBE line; the JOBS lines are
+    // printed after spark.stop() has drained the bus.
+    val probeJobs = sys.env.contains("SPARK_GRAFT_PROBE_JOBS")
+    val jobsPerRun = scala.collection.concurrent.TrieMap.empty[String, Int]
+    if (probeJobs)
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
@@ -25,9 +37,11 @@ object ProbeMain {
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             t0.put(j.jobId, System.nanoTime())
+            val p = Option(j.properties).getOrElse(new java.util.Properties)
             desc.put(j.jobId, String.valueOf(
-              j.properties.getProperty("spark.job.description",
-                j.properties.getProperty("callSite.short", ""))))
+              p.getProperty("spark.job.description", p.getProperty("callSite.short", ""))))
+            Option(p.getProperty(RunProperty))
+              .foreach(jobsPerRun.updateWith(_)(c => Some(c.getOrElse(0) + 1)))
           }
           override def onJobEnd(
               j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -63,10 +77,12 @@ object ProbeMain {
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       for (i <- 1 to n) {
+        spark.sparkContext.setLocalProperty(RunProperty, s"$name run$i")
         val t0 = System.nanoTime()
         val df = fn(spark, dir)
         df.write.format("noop").mode("overwrite").save()
         println(f"PROBE $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        spark.sparkContext.setLocalProperty(RunProperty, null)
         // SPARK_GRAFT_PROBE_PLAN=1: executed (adaptive-final) plan after
         // run 1. The noop write above ran under its OWN QueryExecution,
         // so df's plan is still unexecuted (isFinalPlan=false) — execute
@@ -78,5 +94,8 @@ object ProbeMain {
       }
     }
     spark.stop()
+    if (probeJobs)
+      for (name <- names; i <- 1 to n)
+        println(s"JOBS $name run$i: ${jobsPerRun.getOrElse(s"$name run$i", 0)}")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 /** sf1 scale rehearsal: run the headline queries against a 10×-sf0.1
@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleRehearsal {
 
-  private class Acc extends SparkListener {
+  /** Stage sums of one measured query. */
+  private final class Sums {
     var shuffleWrite = 0L
     var shuffleRead = 0L
     var memSpill = 0L
@@ -20,20 +21,31 @@ object ScaleRehearsal {
     var peakMem = 0L
     var tasks = 0
     var stages = 0
-    def reset(): Unit = { shuffleWrite = 0; shuffleRead = 0; memSpill = 0
-      diskSpill = 0; peakMem = 0; tasks = 0; stages = 0 }
+  }
+
+  /** Sums stage metrics per measured query: each query tags its jobs
+    * with [[ProbeMain.RunProperty]], so a stage that completes after its
+    * query returned (the listener bus is asynchronous) still lands on
+    * that query. */
+  private class Acc extends SparkListener {
+    private val queryOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val sums = new java.util.concurrent.ConcurrentHashMap[String, Sums]()
+    override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+      Option(ss.properties).flatMap(p => Option(p.getProperty(ProbeMain.RunProperty)))
+        .foreach(queryOf.put(ss.stageInfo.stageId, _))
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      synchronized {
+      Option(queryOf.get(sc.stageInfo.stageId)).foreach { q =>
+        val s = sums.computeIfAbsent(q, _ => new Sums)
         val m = sc.stageInfo.taskMetrics
         if (m != null) {
-          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-          shuffleRead += m.shuffleReadMetrics.totalBytesRead
-          memSpill += m.memoryBytesSpilled
-          diskSpill += m.diskBytesSpilled
-          peakMem = math.max(peakMem, m.peakExecutionMemory)
+          s.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          s.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          s.memSpill += m.memoryBytesSpilled
+          s.diskSpill += m.diskBytesSpilled
+          s.peakMem = math.max(s.peakMem, m.peakExecutionMemory)
         }
-        tasks += sc.stageInfo.numTasks
-        stages += 1
+        s.tasks += sc.stageInfo.numTasks
+        s.stages += 1
       }
   }
 
@@ -83,17 +95,22 @@ object ScaleRehearsal {
     // decode→normalize→prune→aggregate pipeline and q_etl_contracts
     // measures the persisted-commit split (the designed production
     // shape: one pass, two tables).
-    for (name <- names) {
+    val secs = names.map { name =>
       val fn = SparkEntry.queries(name)
-      acc.reset()
+      spark.sparkContext.setLocalProperty(ProbeMain.RunProperty, name)
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""REHEARSE {"query":"$name","sec":$sec%.2f,""" +
-        s""""shuffle_write_gb":${gb(acc.shuffleWrite)},"shuffle_read_gb":${gb(acc.shuffleRead)},""" +
-        s""""mem_spill_gb":${gb(acc.memSpill)},"disk_spill_gb":${gb(acc.diskSpill)},""" +
-        s""""peak_task_mem_gb":${gb(acc.peakMem)},"stages":${acc.stages},"tasks":${acc.tasks}}""")
+      spark.sparkContext.setLocalProperty(ProbeMain.RunProperty, null)
+      (System.nanoTime() - t0) / 1e9
     }
+    // stop() drains the listener bus, so every stage is summed
     spark.stop()
+    for ((name, sec) <- names.zip(secs)) {
+      val s = acc.sums.getOrDefault(name, new Sums)
+      println(f"""REHEARSE {"query":"$name","sec":$sec%.2f,""" +
+        s""""shuffle_write_gb":${gb(s.shuffleWrite)},"shuffle_read_gb":${gb(s.shuffleRead)},""" +
+        s""""mem_spill_gb":${gb(s.memSpill)},"disk_spill_gb":${gb(s.diskSpill)},""" +
+        s""""peak_task_mem_gb":${gb(s.peakMem)},"stages":${s.stages},"tasks":${s.tasks}}""")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import graft.operators.Flatten
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -20,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * the surrounding stages still fuse.
   */
 case class FlattenCalls(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback
-    with org.apache.spark.sql.GraftStringUnaryInput {
+    extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
+  override def inputTypes: Seq[GraftShim.InputType] = Seq(StringType)
 
   override def elementSchema: StructType = FlattenCalls.schema
 

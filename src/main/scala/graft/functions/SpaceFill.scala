@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import graft.functions.Kernel.const
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Space-filling-curve kernels for [[graft.operators.Layout]]. Pure
-  * JVM (dependency-free) so the Catalyst expression can call straight
-  * into it from generated code.
+  * JVM (dependency-free) so the kernel call ([[Kernel]]) can call
+  * straight into it from generated code.
   */
 object SpaceFill {
 
@@ -103,65 +102,20 @@ object SpaceFill {
     hilbertD(Array(x, y, z), bits)
 }
 
-/** Codegen'd Hilbert index of two long columns (`bits` low bits each). */
-case class Hilbert2D(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-  require(bits > 0 && 2 * bits <= 62, s"bits=$bits out of range")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert2d"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (bigint, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    SpaceFill.hilbert2d(x.asInstanceOf[Long], y.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (x, y) => s"graft.functions.SpaceFill.hilbert2d($x, $y, $bits)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Hilbert2D =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd 3-D Skilling-Hilbert index of three long columns. */
-case class Hilbert3D(first: Expression, second: Expression,
-    third: Expression, bits: Int)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  require(bits > 0 && 3 * bits <= 62, s"bits=$bits out of range")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert3d"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (bigint, bigint, bigint), got " +
-        children.map(_.dataType.simpleString).mkString("(", ", ", ")"))
-
-  override def nullSafeEval(x: Any, y: Any, z: Any): Any =
-    SpaceFill.hilbert3d(x.asInstanceOf[Long], y.asInstanceOf[Long],
-      z.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (x, y, z) => s"graft.functions.SpaceFill.hilbert3d($x, $y, $z, $bits)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Hilbert3D =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object SpaceFillFunctions {
-  def hilbert2d(x: Column, y: Column, bits: Int = 16): Column =
-    GraftShim.column(Hilbert2D(
-      GraftShim.expression(x.cast("long")), GraftShim.expression(y.cast("long")), bits))
+  /** Hilbert index of two long columns (`bits` low bits each). */
+  def hilbert2d(x: Column, y: Column, bits: Int = 16): Column = {
+    require(bits > 0 && 2 * bits <= 62, s"bits=$bits out of range")
+    Kernel.call(SpaceFill, "hilbert2d", "hilbert2d", LongType,
+      Seq(LongType, LongType, IntegerType))(
+      x.cast("long"), y.cast("long"), const(bits))
+  }
 
-  def hilbert3d(x: Column, y: Column, z: Column, bits: Int = 16): Column =
-    GraftShim.column(Hilbert3D(
-      GraftShim.expression(x.cast("long")), GraftShim.expression(y.cast("long")),
-      GraftShim.expression(z.cast("long")), bits))
+  /** 3-D Skilling-Hilbert index of three long columns. */
+  def hilbert3d(x: Column, y: Column, z: Column, bits: Int = 16): Column = {
+    require(bits > 0 && 3 * bits <= 62, s"bits=$bits out of range")
+    Kernel.call(SpaceFill, "hilbert3d", "hilbert3d", LongType,
+      Seq(LongType, LongType, LongType, IntegerType))(
+      x.cast("long"), y.cast("long"), z.cast("long"), const(bits))
+  }
 }

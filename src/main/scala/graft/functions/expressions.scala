@@ -1,102 +1,90 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, TaggingExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
-/** Keccak-256 of the UTF-8 bytes of the input string, as lowercase hex.
-  * Native Catalyst expression (participates in whole-stage codegen via a
-  * static call — no UDF serialization overhead).
+/** How every graft scalar kernel is called from Catalyst: Spark's
+  * [[StaticInvoke]] of a static bridge method (its `child`), which
+  * carries null propagation, a codegen'd static call and, with codegen
+  * off, a reflective one. This wrapper evaluates and generates code
+  * through its child. It checks the call's arguments against
+  * `inputTypes` at analysis, exactly: the `StaticInvoke` gets no input
+  * types, because Spark would then cast implicitly (an int column to a
+  * string, a string to a bigint) where a kernel rejects another type.
+  * It also keeps the kernel's name: an unaliased call reads
+  * `name(args)`, and plans show `name(args)`, not `static_invoke(...)`.
   */
-case class Keccak256Hex(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "keccak256_hex"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      Keccak.hash256Hex(input.asInstanceOf[UTF8String].getBytes))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.Keccak.hash256Hex($c.getBytes()))")
-
-  override protected def withNewChildInternal(newChild: Expression): Keccak256Hex =
-    copy(child = newChild)
+case class Kernel(name: String, inputTypes: Seq[GraftShim.InputType], child: Expression)
+    extends TaggingExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(child.children, inputTypes)
+  override def prettyName: String = name
+  override def sql: String = child.children.map(_.sql).mkString(s"$name(", ", ", ")")
+  override def toString: String = child.children.mkString(s"$name(", ", ", ")")
+  override protected def withNewChildInternal(c: Expression): Kernel = copy(child = c)
 }
 
-/** EIP-55 mixed-case checksum rendering of a hex address
-  * (reference: ethers `to_checksum`, etl_result.rs:166-171).
-  * Malformed addresses (not 40 hex chars after stripping 0x) yield null.
-  */
-case class ChecksumAddress(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "checksum_address"
+object Kernel {
 
-  override def nullSafeEval(input: Any): Any = {
-    val out = Keccak.toChecksumAddress(input.asInstanceOf[UTF8String].toString)
-    if (out == null) null else UTF8String.fromString(out)
-  }
+  /** The column `name(args)` computing `obj.fn(args)`, where `obj` is
+    * the Scala object holding the static bridge. Constant parameters
+    * are passed as [[const]] columns. `nullable` marks a result that
+    * may be null on non-null inputs (a bridge returning a boxed value
+    * or `null`).
+    */
+  def call(obj: AnyRef, name: String, fn: String, dataType: DataType,
+      inputTypes: Seq[GraftShim.InputType], nullable: Boolean = false)(
+      args: Column*): Column =
+    GraftShim.column(Kernel(name, inputTypes, StaticInvoke(obj.getClass, dataType, fn,
+      args.map(GraftShim.expression), returnNullable = nullable)))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      String graftChecksum = graft.functions.Keccak.toChecksumAddress($c.toString());
-      if (graftChecksum == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(graftChecksum);
-      }""")
-
-  override protected def withNewChildInternal(newChild: Expression): ChecksumAddress =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash of whitespace-separated tokens of the input string.
-  * Each token is hashed (FNV-1a 64); bit-majority over token hashes
-  * forms the signature. Near-duplicate texts differ in few bits.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhash64(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash64($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
+  /** A constant parameter of [[call]], as a Catalyst `Literal`: a
+    * `functions.lit` column stays an unconverted column node when the
+    * call is built from SQL. */
+  def const(v: Any): Column = GraftShim.column(Literal(v))
 }
 
 /** Column-API entry points for graft's custom scalar functions. */
 object GraftFunctions {
+  private val Text = Seq(StringType)
+
+  /** Keccak-256 of the UTF-8 bytes of the input string, as lowercase hex. */
+  def keccak256_hex(c: Column): Column =
+    Kernel.call(ExprBridge, "keccak256_hex", "keccak256Hex", StringType, Text)(c)
+
+  /** EIP-55 mixed-case checksum rendering of a hex address
+    * (reference: ethers `to_checksum`, etl_result.rs:166-171).
+    * Malformed addresses (not 40 hex chars after stripping 0x) yield null.
+    */
+  def checksum_address(c: Column): Column = Kernel.call(ExprBridge,
+    "checksum_address", "checksumAddress", StringType, Text, nullable = true)(c)
+
+  /** 64-bit SimHash of whitespace-separated tokens of the input string.
+    * Each token is hashed (FNV-1a 64); bit-majority over token hashes
+    * forms the signature. Near-duplicate texts differ in few bits.
+    */
+  def simhash64(c: Column): Column =
+    Kernel.call(ExprBridge, "simhash64", "simhash64", LongType, Text)(c)
+
   private def col(e: Expression): Column = GraftShim.column(e)
   private def expr(c: Column): Expression = GraftShim.expression(c)
 
-  def keccak256_hex(c: Column): Column = col(Keccak256Hex(expr(c)))
-  def checksum_address(c: Column): Column = col(ChecksumAddress(expr(c)))
-  def simhash64(c: Column): Column = col(SimHash64(expr(c)))
-
-  private def unary(name: String, f: Expression => Expression)(es: Seq[Expression]): Expression = {
+  private def unary(name: String, f: Column => Column)(es: Seq[Expression]): Expression = {
     if (es.length != 1)
       throw new IllegalArgumentException(
         s"$name expects exactly 1 argument, got ${es.length}")
-    f(es.head)
+    expr(f(col(es.head)))
   }
 
-  private def binary(name: String, f: (Expression, Expression) => Expression)(
+  private def binary(name: String, f: (Column, Column) => Column)(
       es: Seq[Expression]): Expression = {
     if (es.length != 2)
       throw new IllegalArgumentException(
         s"$name expects exactly 2 arguments, got ${es.length}")
-    f(es.head, es(1))
+    expr(f(col(es.head), col(es(1))))
   }
 
   /** Every SQL-callable function as (name, builder) — the single list
@@ -105,15 +93,15 @@ object GraftFunctions {
     * injection via `spark.sql.extensions`, the deploy path).
     */
   def sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "keccak256_hex" -> unary("keccak256_hex", Keccak256Hex) _,
-    "checksum_address" -> unary("checksum_address", ChecksumAddress) _,
-    "simhash64" -> unary("simhash64", SimHash64) _,
-    "flatten_calls" -> unary("flatten_calls", FlattenCalls.apply) _,
-    "quantized_dot" -> binary("quantized_dot", QuantizedDot.apply) _,
-    "dot_long" -> binary("dot_long", DotLong.apply) _,
-    "cosine_sim" -> binary("cosine_sim", CosineSim.apply) _,
-    "arith_minhash_sig" -> unary("arith_minhash_sig", ArithMinhashSig(_, 8)) _,
-    "fnv64" -> unary("fnv64", Fnv64) _)
+    "keccak256_hex" -> unary("keccak256_hex", keccak256_hex) _,
+    "checksum_address" -> unary("checksum_address", checksum_address) _,
+    "simhash64" -> unary("simhash64", simhash64) _,
+    "flatten_calls" -> unary("flatten_calls", FlattenCalls.flatten_calls) _,
+    "quantized_dot" -> binary("quantized_dot", VecFunctions.quantized_dot) _,
+    "dot_long" -> binary("dot_long", VecFunctions.dot_long) _,
+    "cosine_sim" -> binary("cosine_sim", VecFunctions.cosine_sim) _,
+    "arith_minhash_sig" -> unary("arith_minhash_sig", VecFunctions.arith_minhash_sig(_)) _,
+    "fnv64" -> unary("fnv64", LlmFunctions.fnv64) _)
 
   /** Register SQL-callable names on a session (idempotent — names
     * already present are left alone, so repeated calls across a bench

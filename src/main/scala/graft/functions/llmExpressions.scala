@@ -1,17 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import graft.functions.Kernel.const
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor-side bridges between TextHash/VecHash and Catalyst's
-  * internal array representation (kept out of TextHash so that stays
-  * dependency-free).
+/** Executor-side bridges between TextHash/Keccak/VecHash and Catalyst's
+  * internal representation (kept out of TextHash and Keccak so those
+  * stay dependency-free).
   */
 object ExprBridge {
+  def keccak256Hex(s: UTF8String): UTF8String = UTF8String.fromString(Keccak.hash256Hex(s.getBytes))
+  def checksumAddress(s: UTF8String): UTF8String = UTF8String.fromString(Keccak.toChecksumAddress(s.toString))
+  def simhash64(s: UTF8String): Long = TextHash.simhash64(s.toString)
+  def fingerprint64(s: UTF8String): Long = TextHash.fingerprint(s.toString, 16)
+  def fnv64(s: UTF8String): Long = TextHash.fnv1a64(s.toString)
+
   def minhashBands(text: UTF8String, k: Int, shingle: Int, bands: Int): ArrayData =
     new GenericArrayData(
       TextHash.lshBands(TextHash.minhash(text.toString, k, shingle), bands))
@@ -37,137 +42,49 @@ object ExprBridge {
   }
 }
 
-/** MinHash-LSH band keys of a document: 64-slot MinHash signature over
-  * 3-token shingles, folded into 16 band keys. Two documents sharing
-  * any band key are near-duplicate candidates (Broder '97 / LSH
-  * banding as in Mining of Massive Datasets ch.3).
-  */
-case class MinHashBands(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_bands"
-
-  override def nullSafeEval(input: Any): Any =
-    ExprBridge.minhashBands(input.asInstanceOf[UTF8String],
-      MinHashBands.K, MinHashBands.Shingle, MinHashBands.Bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprBridge.minhashBands($c, ${MinHashBands.K}, " +
-        s"${MinHashBands.Shingle}, ${MinHashBands.Bands})")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
-}
-
-object MinHashBands {
-  val K = 64
-  val Shingle = 3
-  val Bands = 16 // rows per band = 4 -> P(candidate | s) = 1-(1-s^4)^16
-}
-
-/** Winnowing document fingerprint (min FNV hash over 16-char windows;
-  * Schleimer et al., SIGMOD'03).
-  */
-case class Fingerprint64(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fingerprint64"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.fingerprint(input.asInstanceOf[UTF8String].toString, 16)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.fingerprint($c.toString(), 16)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint64 =
-    copy(child = newChild)
-}
-
-/** FNV-1a64 of a string — the shared feature-hashing primitive
-  * (codegen'd; the same kernel MinHash/SimHash fold internally).
-  */
-case class Fnv64(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fnv64"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.fnv1a64(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.fnv1a64($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv64 =
-    copy(child = newChild)
-}
-
-/** splitmix64 finalizer over a LONG column ([[TextHash.mix64]]) —
-  * strengthens the high bits of a base hash before an ORDER-statistic
-  * use (KMV's kth-min): raw FNV-1a of short sequential keys is
-  * measurably non-uniform in its high bits (a u0..u799 key set read
-  * 378 estimated distinct of 800 true), while low-bit uses (CMS /
-  * classifier bucket masks) don't need it. Oracle mirror:
-  * FnvOracleSql.mix64Ctes.
-  */
-case class Mix64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mix64"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"mix64 expects bigint, got ${other.simpleString(10)}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.mix64(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.mix64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Mix64 =
-    copy(child = newChild)
-}
-
-/** Random-hyperplane LSH bucket of an embedding vector: sign bits of
-  * `planes` deterministic ±1 hyperplane projections (Charikar '02
-  * SimHash for cosine similarity). Vectors in the same bucket are
-  * likely cosine-similar.
-  */
-case class HyperplaneLsh(child: Expression, planes: Int, seed: Int = 0)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "hyperplane_lsh"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_lsh expects array<float>, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ExprBridge.hyperplaneBucket(input.asInstanceOf[ArrayData], planes, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprBridge.hyperplaneBucket($c, $planes, $seed)")
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneLsh =
-    copy(child = newChild)
-}
-
 object LlmFunctions {
-  def minhash_bands(c: Column): Column = GraftShim.column(MinHashBands(GraftShim.expression(c)))
-  def fingerprint64(c: Column): Column = GraftShim.column(Fingerprint64(GraftShim.expression(c)))
-  def fnv64(c: Column): Column = GraftShim.column(Fnv64(GraftShim.expression(c)))
-  def mix64(c: Column): Column = GraftShim.column(Mix64(GraftShim.expression(c)))
+  private val Text = Seq(StringType)
+
+  /** MinHash-LSH band keys of a document: 64-slot MinHash signature over
+    * 3-token shingles, folded into 16 band keys. Two documents sharing
+    * any band key are near-duplicate candidates (Broder '97 / LSH
+    * banding as in Mining of Massive Datasets ch.3). Rows per band = 4
+    * -> P(candidate | s) = 1-(1-s^4)^16.
+    */
+  def minhash_bands(c: Column): Column =
+    Kernel.call(ExprBridge, "minhash_bands", "minhashBands",
+      ArrayType(LongType, containsNull = false),
+      Seq(StringType, IntegerType, IntegerType, IntegerType))(c, const(64), const(3), const(16))
+
+  /** Winnowing document fingerprint (min FNV hash over 16-char windows;
+    * Schleimer et al., SIGMOD'03).
+    */
+  def fingerprint64(c: Column): Column =
+    Kernel.call(ExprBridge, "fingerprint64", "fingerprint64", LongType, Text)(c)
+
+  /** FNV-1a64 of a string — the shared feature-hashing primitive (the
+    * same kernel MinHash/SimHash fold internally).
+    */
+  def fnv64(c: Column): Column =
+    Kernel.call(ExprBridge, "fnv64", "fnv64", LongType, Text)(c)
+
+  /** splitmix64 finalizer over a LONG column ([[TextHash.mix64]]) —
+    * strengthens the high bits of a base hash before an ORDER-statistic
+    * use (KMV's kth-min): raw FNV-1a of short sequential keys is
+    * measurably non-uniform in its high bits (a u0..u799 key set read
+    * 378 estimated distinct of 800 true), while low-bit uses (CMS /
+    * classifier bucket masks) don't need it. Oracle mirror:
+    * FnvOracleSql.mix64Ctes.
+    */
+  def mix64(c: Column): Column =
+    Kernel.call(TextHash, "mix64", "mix64", LongType, Seq(LongType))(c)
+
+  /** Random-hyperplane LSH bucket of an embedding vector: sign bits of
+    * `planes` deterministic ±1 hyperplane projections (Charikar '02
+    * SimHash for cosine similarity). Vectors in the same bucket are
+    * likely cosine-similar.
+    */
   def hyperplane_lsh(c: Column, planes: Int, seed: Int = 0): Column =
-    GraftShim.column(HyperplaneLsh(GraftShim.expression(c), planes, seed))
+    Kernel.call(ExprBridge, "hyperplane_lsh", "hyperplaneBucket", IntegerType,
+      Seq(ArrayType(FloatType), IntegerType, IntegerType))(c, const(planes), const(seed))
 }

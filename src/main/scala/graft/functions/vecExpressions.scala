@@ -1,9 +1,7 @@
 package graft.functions
 
+import graft.functions.Kernel.const
 import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -19,7 +17,8 @@ object VecBridge {
   /** Null-element probe: the kernels mirror zip_with/aggregate HOF
     * semantics, where any null element nulls the whole result — without
     * this check a null would be read as 0.0/0 (or unspecified bytes
-    * from UnsafeArrayData) and silently diverge from the oracles.
+    * from UnsafeArrayData) and silently diverge from the oracles. The
+    * kernels that read vector elements return a boxed value or `null`.
     */
   def anyNull(a: ArrayData): Boolean = {
     val n = a.numElements()
@@ -34,7 +33,8 @@ object VecBridge {
   /** Σ floor(a_i·1000)·floor(b_i·1000) over float arrays (the
     * engine-portable quantized dot used for oracle-comparable ranking).
     */
-  def quantizedDot(a: ArrayData, b: ArrayData): Long = {
+  def quantizedDot(a: ArrayData, b: ArrayData): java.lang.Long = {
+    if (anyNull(a) || anyNull(b)) return null
     val n = math.min(a.numElements(), b.numElements())
     var s = 0L
     var i = 0
@@ -92,7 +92,8 @@ object VecBridge {
   }
 
   /** Integer dot product of two array<long> columns. */
-  def dotLong(a: ArrayData, b: ArrayData): Long = {
+  def dotLong(a: ArrayData, b: ArrayData): java.lang.Long = {
+    if (anyNull(a) || anyNull(b)) return null
     val n = math.min(a.numElements(), b.numElements())
     var s = 0L
     var i = 0
@@ -106,7 +107,8 @@ object VecBridge {
   /** Cosine similarity of two float vectors, accumulating in the same
     * left-to-right order as the aggregate() formulation.
     */
-  def cosineSim(a: ArrayData, b: ArrayData): Double = {
+  def cosineSim(a: ArrayData, b: ArrayData): java.lang.Double = {
+    if (anyNull(a) || anyNull(b)) return null
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0
     var na = 0.0
@@ -515,6 +517,7 @@ object VecBridge {
     */
   def nearestCellsQ(qv: ArrayData, cents: ArrayData, n: Int)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    if (anyNull(qv)) return null
     var nq = 0L
     var d = 0
     val dims = qv.numElements()
@@ -609,6 +612,7 @@ object VecBridge {
     */
   def pqEncode(qv: ArrayData, cb: ArrayData, m: Int)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    if (anyNull(qv)) return null
     val dims = qv.numElements()
     checkCodebookDims(cb, dims, m, "pq_encode")
     val sub = dims / m
@@ -637,6 +641,7 @@ object VecBridge {
     */
   def pqTable(qv: ArrayData, cb: ArrayData, m: Int)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    if (anyNull(qv)) return null
     val dims = qv.numElements()
     checkCodebookDims(cb, dims, m, "pq_table")
     val sub = dims / m
@@ -681,6 +686,7 @@ object VecBridge {
     */
   def residualQ(qv: ArrayData, cents: ArrayData, cell: Long)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    if (anyNull(qv)) return null
     val dims = qv.numElements()
     val m = cents.numElements()
     var i = 0
@@ -707,7 +713,8 @@ object VecBridge {
     * coef(g, d) = ((g·31 + d)·2654435761) mod 2^31 − 2^30 — exactly the
     * arithmetic mirrored by the q_emb_neardup SQL oracle.
     */
-  def portableSignBucket(q: ArrayData, planes: Int, tbl: Int): Long = {
+  def portableSignBucket(q: ArrayData, planes: Int, tbl: Int): java.lang.Long = {
+    if (anyNull(q)) return null
     val n = q.numElements()
     var bucket = 0L
     var p = 0
@@ -727,555 +734,73 @@ object VecBridge {
   }
 }
 
-private[functions] trait ArrayPairInput { self: BinaryExpression =>
-  def elemType: DataType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(l, _), ArrayType(r, _)) if l == elemType && r == elemType =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects two array<${elemType.simpleString}>, " +
-            s"got ${l.simpleString} and ${r.simpleString}")
-    }
-}
-
-/** floor(x*1000)-quantized integer dot product of two float vectors. */
-case class QuantizedDot(left: Expression, right: Expression)
-    extends BinaryExpression with ArrayPairInput {
-  override def elemType: DataType = FloatType
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot"
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]
-    val r = b.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(l) || VecBridge.anyNull(r)) null
-    else VecBridge.quantizedDot(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a) || graft.functions.VecBridge.anyNull($b)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.quantizedDot($a, $b);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizedDot =
-    copy(left = l, right = r)
-}
-
-/** Integer dot product of two array<long> vectors. */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression with ArrayPairInput {
-  override def elemType: DataType = LongType
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_long"
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]
-    val r = b.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(l) || VecBridge.anyNull(r)) null
-    else VecBridge.dotLong(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a) || graft.functions.VecBridge.anyNull($b)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.dotLong($a, $b);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotLong =
-    copy(left = l, right = r)
-}
-
-/** 1-based floor index of `right` (long key) in `left` (ascending
-  * array<long>); 0 = no element ≤ key. Codegen'd binary search — the
-  * probe-side kernel of the size-gated broadcast as-of join.
-  */
-/** Fixed-point integer log2 (see [[VecBridge.ilog2x16]]). */
-case class ILog2X16(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ilog2_x16"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects bigint, got ${t.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.ilog2x16(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.ilog2x16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ILog2X16 =
-    copy(child = newChild)
-}
-
-case class FloorIndexLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "floor_index_long"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, bigint), got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any, k: Any): Any =
-    VecBridge.floorIndexLong(a.asInstanceOf[ArrayData], k.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, k) =>
-      s"${ev.value} = graft.functions.VecBridge.floorIndexLong($a, $k);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FloorIndexLong =
-    copy(left = l, right = r)
-}
-
-/** Cosine similarity of two float vectors. */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with ArrayPairInput {
-  override def elemType: DataType = FloatType
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]
-    val r = b.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(l) || VecBridge.anyNull(r)) null
-    else VecBridge.cosineSim(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a) || graft.functions.VecBridge.anyNull($b)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.cosineSim($a, $b);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** Top-n IVF cells by quantized cosine (see [[VecBridge.nearestCellsQ]]). */
-case class NearestCellsQ(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "nearest_cells_q"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, array<struct<cell,cq,cnq>>), " +
-          s"got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val qv = a.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(qv)) null
-    else VecBridge.nearestCellsQ(qv, b.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.nearestCellsQ($a, $b, $n);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): NearestCellsQ =
-    copy(left = l, right = r)
-}
-
-/** IVF-cell residual of a quantized vector (see [[VecBridge.residualQ]]). */
-case class ResidualQ(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "residual_q"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(_: StructType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, array<struct<cell,cq,cnq>>, bigint), " +
-          s"got ${a.simpleString}, ${b.simpleString} and ${c.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val qv = a.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(qv)) null
-    else VecBridge.residualQ(qv, b.asInstanceOf[ArrayData], c.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => s"""
-      if (graft.functions.VecBridge.anyNull($a)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.residualQ($a, $b, $c);
-      }""")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): ResidualQ =
-    copy(first = f, second = s, third = t)
-}
-
-/** PQ codes (see [[VecBridge.pqEncode]]). */
-case class PqEncode(left: Expression, right: Expression, m: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, array<struct<cid,cq>>), " +
-          s"got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val qv = a.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(qv)) null
-    else VecBridge.pqEncode(qv, b.asInstanceOf[ArrayData], m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.pqEncode($a, $b, $m);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqEncode =
-    copy(left = l, right = r)
-}
-
-/** PQ ADC lookup table (see [[VecBridge.pqTable]]). */
-case class PqTable(left: Expression, right: Expression, m: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_table"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, array<struct<cid,cq>>), " +
-          s"got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val qv = a.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(qv)) null
-    else VecBridge.pqTable(qv, b.asInstanceOf[ArrayData], m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if (graft.functions.VecBridge.anyNull($a)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.pqTable($a, $b, $m);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqTable =
-    copy(left = l, right = r)
-}
-
-/** PQ asymmetric distance (see [[VecBridge.pqAdc]]). */
-case class PqAdc(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pq_adc"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, array<int>), " +
-          s"got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecBridge.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ksub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VecBridge.pqAdc($a, $b, $ksub)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdc =
-    copy(left = l, right = r)
-}
-
-/** Oracle-portable sign-LSH bucket of a quantized array<long> vector. */
-case class PortableSignBucket(child: Expression, planes: Int, tbl: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "portable_sign_bucket"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.simpleString}")
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val q = input.asInstanceOf[ArrayData]
-    if (VecBridge.anyNull(q)) null
-    else VecBridge.portableSignBucket(q, planes, tbl)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if (graft.functions.VecBridge.anyNull($c)) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VecBridge.portableSignBucket($c, $planes, $tbl);
-      }""")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableSignBucket =
-    copy(child = newChild)
-}
-
-/** One-pass arithmetic MinHash signature (array<long> of nPerms mins);
-  * math pinned to the built-ins formulation by ArithMinhashSpec and
-  * the q_llm_minhash_sig DuckDB oracle.
-  */
-case class ArithMinhashSig(child: Expression, nPerms: Int)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "arith_minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.arithMinhashSig(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], nPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecBridge.arithMinhashSig($c, $nPerms)")
-
-  override protected def withNewChildInternal(newChild: Expression): ArithMinhashSig =
-    copy(child = newChild)
-}
-
-/** Shingle-fp array (see [[VecBridge.arithShingleFps]]). */
-case class ArithShingleFps(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "arith_shingle_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.arithShingleFps(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.arithShingleFps($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ArithShingleFps =
-    copy(child = newChild)
-}
-
-/** Hashed unigram+bigram fps (see [[VecBridge.arithNgramFps]]). */
-case class ArithNgramFps(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "arith_ngram_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.arithNgramFps(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.arithNgramFps($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ArithNgramFps =
-    copy(child = newChild)
-}
-
-/** Rolling n-token shingle fps (see [[VecBridge.tokenNgramFps]]). */
-case class TokenNgramFps(child: Expression, n: Int)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  require(n >= 1, s"token_ngram_fps needs a shingle width >= 1, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "token_ngram_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.tokenNgramFps(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.tokenNgramFps($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenNgramFps =
-    copy(child = newChild)
-}
-
-/** Portable 60-bit simhash (see [[VecBridge.portableSimhash60]]). */
-case class PortableSimhash60(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "portable_simhash60"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.portableSimhash60(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.portableSimhash60($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableSimhash60 =
-    copy(child = newChild)
-}
-
-/** Repetition evidence (see [[VecBridge.repetitionStats]]). */
-case class RepetitionStats(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "repetition_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.repetitionStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.repetitionStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
-    copy(child = newChild)
-}
-
-/** Word-bigram array (see [[VecBridge.wordBigrams]]). */
-case class WordBigrams(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_bigrams"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.wordBigrams(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.wordBigrams($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordBigrams =
-    copy(child = newChild)
-}
-
-/** Per-document term-frequency pairs (see [[VecBridge.tokenTf]]). */
-case class TokenTfCounts(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "token_tf"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.tokenTf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecBridge.tokenTf($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenTfCounts =
-    copy(child = newChild)
-}
-
-/** Portable winnowing fingerprint (see [[VecBridge.portableFingerprint]]). */
-case class PortableFingerprintExpr(child: Expression, w: Int)
-    extends UnaryExpression with org.apache.spark.sql.GraftStringUnaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "portable_fingerprint"
-
-  override def nullSafeEval(input: Any): Any =
-    VecBridge.portableFingerprint(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecBridge.portableFingerprint($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableFingerprintExpr =
-    copy(child = newChild)
-}
-
 object VecFunctions {
+  private val Text = Seq(StringType)
+  private val TextN = Seq(StringType, IntegerType)
+  private val Longs = ArrayType(LongType)
+  private val Floats = ArrayType(FloatType)
+  private val LongsOut = ArrayType(LongType, containsNull = false)
+  private val Table = GraftShim.ArrayOfStructs
+
+  private def vec(name: String, fn: String, dataType: DataType,
+      inputTypes: Seq[GraftShim.InputType], nullable: Boolean = false)(args: Column*) =
+    Kernel.call(VecBridge, name, fn, dataType, inputTypes, nullable)(args: _*)
+
+  /** One-pass arithmetic MinHash signature (array<long> of nPerms mins);
+    * math pinned to the built-ins formulation by ArithMinhashSpec and
+    * the q_llm_minhash_sig DuckDB oracle.
+    */
   def arith_minhash_sig(c: Column, nPerms: Int = 8): Column =
-    GraftShim.column(ArithMinhashSig(GraftShim.expression(c), nPerms))
+    vec("arith_minhash_sig", "arithMinhashSig", LongsOut, TextN)(c, const(nPerms))
   def arith_shingle_fps(c: Column): Column =
-    GraftShim.column(ArithShingleFps(GraftShim.expression(c)))
+    vec("arith_shingle_fps", "arithShingleFps", LongsOut, Text)(c)
   def arith_ngram_fps(c: Column): Column =
-    GraftShim.column(ArithNgramFps(GraftShim.expression(c)))
-  def token_ngram_fps(c: Column, n: Int): Column =
-    GraftShim.column(TokenNgramFps(GraftShim.expression(c), n))
+    vec("arith_ngram_fps", "arithNgramFps", LongsOut, Text)(c)
+  def token_ngram_fps(c: Column, n: Int): Column = {
+    require(n >= 1, s"token_ngram_fps needs a shingle width >= 1, got $n")
+    vec("token_ngram_fps", "tokenNgramFps", LongsOut, TextN)(c, const(n))
+  }
   def token_tf(c: Column): Column =
-    GraftShim.column(TokenTfCounts(GraftShim.expression(c)))
+    vec("token_tf", "tokenTf", ArrayType(StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))), containsNull = false), Text)(c)
   def portable_simhash60(c: Column): Column =
-    GraftShim.column(PortableSimhash60(GraftShim.expression(c)))
+    vec("portable_simhash60", "portableSimhash60", LongType, Text)(c)
   def portable_fingerprint(c: Column, w: Int = 8): Column =
-    GraftShim.column(PortableFingerprintExpr(GraftShim.expression(c), w))
+    vec("portable_fingerprint", "portableFingerprint", LongType, TextN)(c, const(w))
   def word_bigrams(c: Column): Column =
-    GraftShim.column(WordBigrams(GraftShim.expression(c)))
+    vec("word_bigrams", "wordBigrams", ArrayType(StringType, containsNull = false), Text)(c)
   def repetition_stats(c: Column): Column =
-    GraftShim.column(RepetitionStats(GraftShim.expression(c)))
+    vec("repetition_stats", "repetitionStats", LongsOut, Text)(c)
+  /** floor(x*1000)-quantized integer dot product of two float vectors. */
   def quantized_dot(a: Column, b: Column): Column =
-    GraftShim.column(QuantizedDot(GraftShim.expression(a), GraftShim.expression(b)))
+    vec("quantized_dot", "quantizedDot", LongType, Seq(Floats, Floats), nullable = true)(a, b)
   def dot_long(a: Column, b: Column): Column =
-    GraftShim.column(DotLong(GraftShim.expression(a), GraftShim.expression(b)))
+    vec("dot_long", "dotLong", LongType, Seq(Longs, Longs), nullable = true)(a, b)
+  /** 1-based floor index of `key` in the ascending `arr`; 0 = no element ≤ key. */
   def floor_index_long(arr: Column, key: Column): Column =
-    GraftShim.column(FloorIndexLong(GraftShim.expression(arr), GraftShim.expression(key)))
+    vec("floor_index_long", "floorIndexLong", IntegerType, Seq(Longs, LongType),
+      nullable = true)(arr, key)
   def ilog2_x16(c: Column): Column =
-    GraftShim.column(ILog2X16(GraftShim.expression(c)))
+    vec("ilog2_x16", "ilog2x16", LongType, Seq(LongType))(c)
   def cosine_sim(a: Column, b: Column): Column =
-    GraftShim.column(CosineSim(GraftShim.expression(a), GraftShim.expression(b)))
+    vec("cosine_sim", "cosineSim", DoubleType, Seq(Floats, Floats), nullable = true)(a, b)
   def portable_sign_bucket(q: Column, planes: Int, tbl: Int): Column =
-    GraftShim.column(PortableSignBucket(GraftShim.expression(q), planes, tbl))
+    vec("portable_sign_bucket", "portableSignBucket", LongType,
+      Seq(Longs, IntegerType, IntegerType), nullable = true)(q, const(planes), const(tbl))
   def nearest_cells_q(qv: Column, cents: Column, n: Int): Column =
-    GraftShim.column(NearestCellsQ(GraftShim.expression(qv), GraftShim.expression(cents), n))
+    vec("nearest_cells_q", "nearestCellsQ", LongsOut, Seq(Longs, Table, IntegerType),
+      nullable = true)(qv, cents, const(n))
   def residual_q(qv: Column, cents: Column, cell: Column): Column =
-    GraftShim.column(ResidualQ(GraftShim.expression(qv), GraftShim.expression(cents),
-      GraftShim.expression(cell)))
+    vec("residual_q", "residualQ", LongsOut, Seq(Longs, Table, LongType),
+      nullable = true)(qv, cents, cell)
   def pq_encode(qv: Column, cb: Column, m: Int): Column =
-    GraftShim.column(PqEncode(GraftShim.expression(qv), GraftShim.expression(cb), m))
+    vec("pq_encode", "pqEncode", ArrayType(IntegerType, containsNull = false),
+      Seq(Longs, Table, IntegerType), nullable = true)(qv, cb, const(m))
   def pq_table(qv: Column, cb: Column, m: Int): Column =
-    GraftShim.column(PqTable(GraftShim.expression(qv), GraftShim.expression(cb), m))
+    vec("pq_table", "pqTable", LongsOut, Seq(Longs, Table, IntegerType),
+      nullable = true)(qv, cb, const(m))
   def pq_adc(table: Column, codes: Column, ksub: Int): Column =
-    GraftShim.column(PqAdc(GraftShim.expression(table), GraftShim.expression(codes), ksub))
+    vec("pq_adc", "pqAdc", LongType, Seq(Longs, ArrayType(IntegerType), IntegerType),
+      nullable = true)(table, codes, const(ksub))
 }

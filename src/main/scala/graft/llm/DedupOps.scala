@@ -297,7 +297,8 @@ object DedupOps {
 
   /** The pure-built-ins formulation of [[minhashSignature]] (higher-
     * order functions only, CodegenFallback). Kept as the differential
-    * reference pinning the codegen'd ArithMinhashSig expression.
+    * reference pinning the `arith_minhash_sig` kernel
+    * (`VecBridge.arithMinhashSig` through [[graft.functions.Kernel]]).
     */
   def minhashSignatureHof(df: DataFrame, idCol: String, textCol: String,
       nPerms: Int = 8): DataFrame = {
@@ -768,7 +769,8 @@ object DedupOps {
 
   /** The pure-built-ins formulation of [[portableSimhashSig]] (HOFs,
     * CodegenFallback, ~50x slower) — kept as the differential reference
-    * pinning the codegen'd PortableSimhash60 expression.
+    * pinning the `portable_simhash60` kernel
+    * (`VecBridge.portableSimhash60` through [[graft.functions.Kernel]]).
     */
   def portableSimhashSigHof(textCol: Column): Column = {
     val toks = filter(split(textCol, "\\s+"), t => length(t) > 0)

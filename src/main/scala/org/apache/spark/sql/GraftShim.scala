@@ -3,16 +3,32 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge between [[Column]] and Catalyst [[Expression]] for graft's
-  * custom expressions.
+  * kernel calls.
   *
   * Spark 4.x made `org.apache.spark.sql.classic.ExpressionUtils`
   * `private[sql]`; this file lives in the `org.apache.spark.sql`
-  * package purely to re-export the two conversions graft needs. No
-  * other Spark internals are touched.
+  * package purely to re-export the two conversions graft needs, and
+  * the `inputTypes` element type (`AbstractDataType`, also
+  * `private[sql]`). No other Spark internals are touched.
   */
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** An entry of an expression's `inputTypes`: a concrete `DataType`
+    * or a family such as [[ArrayOfStructs]]. */
+  type InputType = types.AbstractDataType
+
+  /** Accepts an array of any struct: the centroid and codebook tables
+    * the ANN kernels take, whose field names vary by caller. */
+  object ArrayOfStructs extends types.AbstractDataType with Serializable {
+    override def defaultConcreteType: types.DataType = types.ArrayType(new types.StructType())
+    override def acceptsType(other: types.DataType): Boolean = other match {
+      case types.ArrayType(_: types.StructType, _) => true
+      case _ => false
+    }
+    override def simpleString: String = "array<struct>"
+  }
 
   /** Stable per-session unique id (`classic.SparkSession.sessionUUID`,
     * not surfaced on the api-level class). Unlike
@@ -40,15 +56,4 @@ object GraftShim {
         l.rdd.unpersist(blocking = false); true
       case _ => false
     }
-}
-
-/** Mixin declaring "exactly one StringType input" for graft's unary
-  * string expressions. Lives here because `AbstractDataType` (the
-  * `inputTypes` element type) is `private[sql]` in Spark 4.x, so the
-  * override cannot be written outside this package.
-  */
-trait GraftStringUnaryInput
-    extends org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-  self: Expression =>
-  override def inputTypes: Seq[types.AbstractDataType] = Seq(types.StringType)
 }

@@ -364,4 +364,99 @@ class VecExprSpec extends SparkSpec {
     // the reference doc itself is not scored
     assert(!out.contains(0L))
   }
+
+  test("every kernel: codegen == interpreted (NO_CODEGEN), null row and null " +
+      "elements give null, unaliased calls are named <fn>(<args>)") {
+    import graft.functions.{GraftFunctions => G, LlmFunctions => L, SpaceFillFunctions => S}
+    import graft.functions.{VecFunctions => V}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val schema = StructType.fromDDL(
+      "id BIGINT, text STRING, addr STRING, f ARRAY<FLOAT>, g ARRAY<FLOAT>, " +
+        "q ARRAY<BIGINT>, sorted ARRAY<BIGINT>, key BIGINT, x BIGINT, y BIGINT, " +
+        "z BIGINT, cell BIGINT, " +
+        "cents ARRAY<STRUCT<cell: BIGINT, cq: ARRAY<BIGINT>, cnq: BIGINT>>, " +
+        "cb ARRAY<STRUCT<cid: BIGINT, cq: ARRAY<BIGINT>>>, tbl ARRAY<BIGINT>, codes ARRAY<INT>")
+    val cents = Seq(Row(1L, Seq(1L, 0L, 2L, 1L), 6L), Row(2L, Seq(0L, 3L, -1L, 2L), 14L))
+    val cb = Seq(Row(0L, Seq(1L, 1L, 1L, 1L)), Row(1L, Seq(-2L, 0L, 4L, 3L)),
+      Row(2L, Seq(0L, -1L, 2L, 5L)))
+    val g = Seq[Any](0.4f, -0.3f, 0.2f, 0.1f)
+    val tail = Seq(Seq(1L, 3L, 5L, 9L), 5L, 3L, 4L, 5L)
+    val rows = Seq(
+      // row 1: every input present
+      Row.fromSeq(Seq(1L, "the quick brown fox jumps over the lazy dog",
+        "0x5aaeb6053f3e94c9b9a09f33669435e7ef1beaed", Seq(0.1f, 0.2f, -0.3f, 0.4f), g,
+        Seq(1L, -2L, 3L, 4L)) ++ tail ++ Seq(1L, cents, cb, Seq(5L, 1L, 7L, 2L, 9L, 3L),
+        Seq(2, 0))),
+      // row 2: a null element in the float and long vectors
+      Row.fromSeq(Seq(2L, "a b a b  c", "0xfb6916095ca1df60bb79ce92ce3ea74c37c5d359",
+        Seq(0.5f, null, 0.1f, 0.2f), g, Seq(2L, null, 1L, 0L)) ++ tail ++
+        Seq(2L, cents, cb, Seq(5L, 1L, 7L, 2L, 9L, 3L), Seq(1, 2))),
+      // row 3: every input null
+      Row.fromSeq(3L +: Seq.fill(schema.length - 1)(null)))
+    val dir = java.nio.file.Files.createTempDirectory("kernel_modes").resolve("t").toString
+    // parquet-backed, so the projection is not folded into a local relation
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.parquet(dir)
+    val t = spark.read.parquet(dir)
+    val c = (n: String) => col(n)
+    val kernels: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "keccak256_hex(text)" -> G.keccak256_hex(c("text")),
+      "checksum_address(addr)" -> G.checksum_address(c("addr")),
+      "simhash64(text)" -> G.simhash64(c("text")),
+      "minhash_bands(text, 64, 3, 16)" -> L.minhash_bands(c("text")),
+      "fingerprint64(text)" -> L.fingerprint64(c("text")),
+      "fnv64(text)" -> L.fnv64(c("text")),
+      "mix64(key)" -> L.mix64(c("key")),
+      "hyperplane_lsh(g, 4, 1)" -> L.hyperplane_lsh(c("g"), 4, 1),
+      "arith_minhash_sig(text, 8)" -> V.arith_minhash_sig(c("text")),
+      "arith_shingle_fps(text)" -> V.arith_shingle_fps(c("text")),
+      "arith_ngram_fps(text)" -> V.arith_ngram_fps(c("text")),
+      "token_ngram_fps(text, 2)" -> V.token_ngram_fps(c("text"), 2),
+      "token_tf(text)" -> V.token_tf(c("text")),
+      "portable_simhash60(text)" -> V.portable_simhash60(c("text")),
+      "portable_fingerprint(text, 8)" -> V.portable_fingerprint(c("text")),
+      "word_bigrams(text)" -> V.word_bigrams(c("text")),
+      "repetition_stats(text)" -> V.repetition_stats(c("text")),
+      "quantized_dot(f, g)" -> V.quantized_dot(c("f"), c("g")),
+      "dot_long(q, q)" -> V.dot_long(c("q"), c("q")),
+      "floor_index_long(sorted, key)" -> V.floor_index_long(c("sorted"), c("key")),
+      "ilog2_x16(key)" -> V.ilog2_x16(c("key")),
+      "cosine_sim(f, g)" -> V.cosine_sim(c("f"), c("g")),
+      "portable_sign_bucket(q, 6, 2)" -> V.portable_sign_bucket(c("q"), 6, 2),
+      "nearest_cells_q(q, cents, 1)" -> V.nearest_cells_q(c("q"), c("cents"), 1),
+      "residual_q(q, cents, cell)" -> V.residual_q(c("q"), c("cents"), c("cell")),
+      "pq_encode(q, cb, 2)" -> V.pq_encode(c("q"), c("cb"), 2),
+      "pq_table(q, cb, 2)" -> V.pq_table(c("q"), c("cb"), 2),
+      "pq_adc(tbl, codes, 3)" -> V.pq_adc(c("tbl"), c("codes"), 3),
+      // the Column function casts its coordinates to bigint itself
+      "hilbert2d(CAST(x AS BIGINT), CAST(y AS BIGINT), 16)" -> S.hilbert2d(c("x"), c("y")),
+      "hilbert3d(CAST(x AS BIGINT), CAST(y AS BIGINT), CAST(z AS BIGINT), 4)" ->
+        S.hilbert3d(c("x"), c("y"), c("z"), 4))
+    assert(kernels.size == 30)
+    val q = t.select(c("id") +: kernels.map(_._2): _*)
+    assert(q.columns.toSeq.tail == kernels.map(_._1))
+    def run(): Seq[Row] = q.orderBy("id").collect().toSeq
+    val codegen = run()
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        run()
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    for (i <- kernels.indices) {
+      val name = kernels(i)._1
+      assert(codegen.map(_.get(i + 1)) == interpreted.map(_.get(i + 1)), name)
+      assert(!codegen(0).isNullAt(i + 1), s"$name on the full row")
+      assert(codegen(2).isNullAt(i + 1), s"$name on the null row")
+    }
+    // the null-element guard: any null vector element nulls the result
+    val guarded = Seq("quantized_dot", "dot_long", "cosine_sim", "portable_sign_bucket",
+      "nearest_cells_q", "residual_q", "pq_encode", "pq_table")
+    for ((name, i) <- kernels.map(_._1).zipWithIndex)
+      assert(codegen(1).isNullAt(i + 1) == guarded.exists(name.startsWith), name)
+  }
 }
