@@ -154,26 +154,49 @@ class GraphOpsSpec extends SparkSpec {
   test("pageRank: randomized differential — both paths vs an independent " +
       "in-memory reference") {
     // pure-Scala reference implementation: same integer fixed-point,
-    // written independently of the Spark plan shapes
-    def refRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    // written independently of the Spark plan shapes. None is the SQL
+    // null endpoint: a node of its own that has no out-edges (it is
+    // dangling) and receives no contributions.
+    def refRanks(edges: Seq[(Option[Long], Option[Long])], iters: Int,
+        dangling: Boolean = false,
+        eps: Option[Long] = None): (Map[Option[Long], Long], Int) = {
       val e = edges.distinct
       val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
-      val deg = e.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
+      val out = e.filter(_._1.isDefined)
+      val deg = out.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
       var r = nodes.map(_ -> 1000000L).toMap
-      for (_ <- 0 until iters) {
-        val contrib = scala.collection.mutable.Map[Long, Long]()
+      var t = 0
+      var done = false
+      while (t < iters && !done) {
+        val share =
+          if (dangling) (nodes.filterNot(deg.contains).map(r).sum * 850L) /
+            (1000L * nodes.size)
+          else 0L
+        val contrib = scala.collection.mutable.Map[Option[Long], Long]()
           .withDefaultValue(0L)
-        for ((s, d) <- e)
+        for ((s, d) <- out if d.isDefined)
           contrib(d) += (r(s) * 850L) / (1000L * deg(s))
-        r = nodes.map(n => n -> (150000L + contrib(n))).toMap
+        val next = nodes.map(n => n -> (150000L + contrib(n) + share)).toMap
+        val md = nodes.filter(_.isDefined)
+          .map(n => math.abs(next(n) - r(n))).foldLeft(0L)(math.max)
+        r = next
+        t += 1
+        done = eps.exists(md <= _)
       }
-      r
+      (r, t)
     }
+    def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Long] =
+      df.collect().map(x =>
+        Option(x.get(0)).map(_.asInstanceOf[Long]) -> x.getLong(1)).toMap
+    def stepsOf(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.collect().map(_.getLong(2)).toSet
     val rnd = new scala.util.Random(23)
+    val cap = 12
     for (trial <- 1 to 3) {
       val edges = Seq.fill(200 + trial * 100)(
         (rnd.nextInt(40).toLong, rnd.nextInt(60).toLong))
-      val expected = refRanks(edges, iters = 3)
+      val expected = refRanks(edges.map { case (s, d) => (Some(s), Some(d)) },
+        iters = 3)._1.map { case (k, v) => k.get -> v }
       val df = edges.toDF("src", "dst")
       val fused = GraphOps.pageRank(df, "src", "dst", iters = 3)
         .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
@@ -182,6 +205,45 @@ class GraphOpsSpec extends SparkSpec {
         .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       assert(fused == expected, s"fused path diverged on trial $trial")
       assert(mat == expected, s"materialized path diverged on trial $trial")
+
+      // every form again with planted null endpoints: a null src, a
+      // null dst, a null-null edge and duplicates of each
+      val planted: Seq[(Option[Long], Option[Long])] =
+        edges.map { case (s, d) => (Some(s), Some(d)) } ++
+          Seq((None, Some(3L)), (Some(5L), None), (None, None),
+            (None, Some(3L)), (Some(5L), None), (None, Some(1000L + trial)))
+      val pdf = planted.toDF("src", "dst")
+      def bothPaths(run: Long => org.apache.spark.sql.DataFrame) = {
+        val k = run(64L << 20)
+        assert(!GraphOps.lastMaterialized, s"trial $trial must take the kernel")
+        val d = run(0L)
+        assert(GraphOps.lastMaterialized, s"trial $trial must run distributed")
+        (k, d)
+      }
+      val (plainK, plainD) = bothPaths(b =>
+        GraphOps.pageRank(pdf, "src", "dst", iters = 3, materializeAboveBytes = b))
+      val plainRef = refRanks(planted, iters = 3)._1
+      assert(ranksOf(plainK) == plainRef, s"plain kernel diverged on trial $trial")
+      assert(ranksOf(plainD) == plainRef, s"plain distributed diverged on trial $trial")
+
+      val (dangK, dangD) = bothPaths(b =>
+        GraphOps.pageRankDangling(pdf, "src", "dst", iters = 3,
+          materializeAboveBytes = b))
+      val dangRef = refRanks(planted, iters = 3, dangling = true)._1
+      assert(ranksOf(dangK) == dangRef, s"dangling kernel diverged on trial $trial")
+      assert(ranksOf(dangD) == dangRef, s"dangling distributed diverged on trial $trial")
+
+      val eps = 5000L * trial
+      val (convK, convD) = bothPaths(b =>
+        GraphOps.pageRankConverge(pdf, "src", "dst", eps = eps, maxIters = cap,
+          materializeAboveBytes = b))
+      val (convRef, tRef) = refRanks(planted, iters = cap, eps = Some(eps))
+      assert(tRef > 1 && tRef < cap,
+        s"trial $trial must stop on eps before the cap (t=$tRef)")
+      assert(ranksOf(convK) == convRef, s"converge kernel diverged on trial $trial")
+      assert(ranksOf(convD) == convRef, s"converge distributed diverged on trial $trial")
+      assert(stepsOf(convK) == Set(tRef.toLong) && stepsOf(convD) == Set(tRef.toLong),
+        s"converge stopping step diverged on trial $trial")
     }
   }
 
