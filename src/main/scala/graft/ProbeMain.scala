@@ -38,15 +38,21 @@ object ProbeMain {
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             t0.put(j.jobId, System.nanoTime())
             val p = Option(j.properties).getOrElse(new java.util.Properties)
-            desc.put(j.jobId, String.valueOf(
-              p.getProperty("spark.job.description", p.getProperty("callSite.short", ""))))
+            // catalog jobs set neither property: fall back to the
+            // result stage's name, its call site (`collect at …`)
+            val named = Seq("spark.job.description", "callSite.short")
+              .flatMap(k => Option(p.getProperty(k))).find(_.trim.nonEmpty)
+            desc.put(j.jobId, named.getOrElse(
+              j.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")))
             Option(p.getProperty(RunProperty))
               .foreach(jobsPerRun.updateWith(_)(c => Some(c.getOrElse(0) + 1)))
           }
           override def onJobEnd(
               j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
             val dt = (System.nanoTime() - t0.getOrDefault(j.jobId, 0L)) / 1e9
-            val d = desc.getOrDefault(j.jobId, "").take(90)
+            // a streaming job's description spans lines ("\nid = …\nrunId
+            // = …\nbatch = …"): keep each job on its one line
+            val d = desc.getOrDefault(j.jobId, "").trim.replaceAll("\\s+", " ").take(120)
             println(f"  [job ${j.jobId}%3d] ${dt}%6.3f s  $d")
           }
         })

@@ -43,6 +43,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a failing entry must leave no output: an earlier run's parquet
+      // would otherwise pass the oracle compare in its place
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -97,7 +97,8 @@ private[graft] object RelationalEntries {
   private val graphPagerankDangling: Q = (s, dir) => {
     val edges = t(s, dir, "lineitem").select(
       col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-    graft.operators.GraphOps.pageRankDangling(edges, "src", "dst", iters = 3)
+    graft.operators.GraphOps.pageRank(edges, "src", "dst", iters = 3,
+        dangling = true)
       .withColumnRenamed("rank", "pr")
   }
   private val graphPagerankDanglingOracle: String = {
@@ -135,15 +136,15 @@ private[graft] object RelationalEntries {
 
   // Iterate-to-ε PageRank twin: supersteps run until the max rank
   // delta is ≤ eps (here 0 — the integer fixed-point reaches an
-  // exact fixpoint) or maxIters. The result carries the superstep
-  // count t, so the oracle must reproduce the STOPPING DECISION from
-  // the same unrolled iterates, not just the arithmetic.
+  // exact fixpoint) or the superstep cap. The result carries the
+  // superstep count t, so the oracle must reproduce the STOPPING
+  // DECISION from the same unrolled iterates, not just the arithmetic.
   private val GraphConvergeMaxIters = 5
   private val graphPagerankConverge: Q = (s, dir) => {
     val edges = t(s, dir, "lineitem").select(
       col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-    graft.operators.GraphOps.pageRankConverge(edges, "src", "dst",
-        eps = 0L, maxIters = GraphConvergeMaxIters)
+    graft.operators.GraphOps.pageRank(edges, "src", "dst",
+        iters = GraphConvergeMaxIters, eps = Some(0L))
       .withColumnRenamed("rank", "pr")
   }
   private val graphPagerankConvergeOracle: String = {

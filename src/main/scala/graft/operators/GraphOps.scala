@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over edge DataFrames — the Pregel-shaped
   * workloads (rank propagation) done Spark-first: each superstep is
@@ -13,213 +15,222 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Which path the most recent [[pageRank]] call took (true =
-    * per-superstep materialization). Observability for specs and the
+  /** Which path the most recent [[pageRank]] or [[triangleCounts]]
+    * call took (true = distributed). Observability for specs and the
     * scale rehearsal; not part of the API contract.
     */
   @volatile private[graft] var lastMaterialized: Boolean = false
 
-  /** Fixed-iteration PageRank in exact integer fixed-point: ranks are
-    * scaled longs (initial rank = `scale`, i.e. 1.0), damping 0.85 is
-    * the exact integer form `(r * 850) DIV (1000 * outdeg)` per edge,
-    * and each node's next rank is `0.15·scale + Σ contributions` —
-    * every operation is integral, so results are bit-identical across
-    * engines, partitionings, and run counts (a double-arithmetic
-    * PageRank can't be oracle-compared; this one can).
+  /** The size gate of every operator here, and the only writer of
+    * [[lastMaterialized]]: true (run distributed) when Catalyst's size
+    * estimate of the edge frame exceeds `materializeAboveBytes`.
     *
-    * Shuffle shape (distributed path): edges are shuffled ONCE total — hash-partitioned
-    * by src, then deduped and out-degree-counted (a COUNT window over
-    * the same partitioning) exchange-free. The iterated state is the CONTRIBUTION frame
-    * `c_t(id) = Σ incoming contributions`, not the rank frame: ranks
-    * are implicit (`r_t = 0.15·scale + c_t`, absent id ⇒ c = 0), the
-    * t=0 rank is the constant `scale` so the first superstep is a
-    * plain aggregate with NO join, and the full node set is joined
-    * exactly once at the very end to surface sink-only/isolated
-    * nodes. Each superstep therefore moves only one node-sized frame
-    * through one join (into the src-partitioned edge frame) + one
-    * partial-merge aggregate — at 100 TB the per-iteration cost is
-    * the same join-agg the session already pays for any grouped
-    * query, × a small fixed iteration count.
+    * Below it the operator runs as ONE single-task in-memory kernel:
+    * `coalesce(1)` (narrow, no exchange) feeds one `mapPartitions`
+    * task. Every distributed formulation pays per-execution fixed
+    * costs (stage scheduling, broadcast barriers, a shared-edge-frame
+    * cache build) that dominate on small graphs — the r10 fused
+    * PageRank plan measured ~1.1-2.3 s at sf0.1 for ~2M integer ops.
+    * Same collapse-when-tiny philosophy as the as-of join's
+    * broadcast+binary-search path and the dedup-cluster driver
+    * union-find. `coalesce(1)` over a multi-hundred-GB frame would be a
+    * scale-killer, which is what the gate prevents (sf10 engages the
+    * distributed path; SCALE_STREAM_r10.md).
     *
-    * Dangling nodes (no out-edges) contribute nothing — their mass
-    * leaks, matching the reference's fixed-iteration form. Sink-only
-    * nodes hold the base rank.
+    * The gate TRUSTS Catalyst's estimate: a selective filter under
+    * default column stats can underestimate badly, so callers feeding a
+    * filtered edge frame should pass an explicit `materializeAboveBytes`
+    * (0 forces the distributed path) — the as-of broadcast gate's
+    * contract, with [[Kernel.MaxKernelRows]] as the runtime backstop.
+    */
+  private def aboveGate(edges: DataFrame, materializeAboveBytes: Long): Boolean = {
+    lastMaterialized =
+      edges.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(materializeAboveBytes)
+    lastMaterialized
+  }
+
+  /** One damped share in exact integer fixed-point: `(r·0.85) / d`. */
+  private def damp(r: Long, d: Long): Long = (r * 850L) / (1000L * d)
+
+  /** PageRank in exact integer fixed-point: ranks are scaled longs
+    * (initial rank = `scale`, i.e. 1.0), each edge carries
+    * `damp(r(src), outdeg(src))` and a node's next rank is
+    * `0.15·scale + Σ incoming + share`. Every operation is integral, so
+    * results are bit-identical across engines, partitionings and run
+    * counts (a double-arithmetic PageRank can't be oracle-compared;
+    * this one can).
     *
-    * Size-gated execution: iterating frames must not re-derive their
-    * whole prefix DAG, but every distributed formulation of the
-    * supersteps pays per-execution fixed costs (stage scheduling,
-    * broadcast barriers, a shared-edge-frame cache build) that
-    * dominate on small graphs — the r10 fused composed plan measured
-    * ~1.1-2.3 s at sf0.1 where the whole computation is ~2M integer
-    * ops. So below the gate (Catalyst size estimate of the edge frame
-    * ≤ `materializeAboveBytes`) the operator runs as a SINGLE-TASK
-    * in-memory kernel: `coalesce(1)` (narrow — no exchange) feeds one
-    * `mapPartitions` task that dedups, degree-counts and runs all
-    * supersteps imperatively, in the exact same integer arithmetic —
-    * bit-identical to the distributed path (pinned by the gate-flip
-    * and randomized-differential specs), ~0.8 s flat at sf0.1 with no
-    * warm-up cliff. Same collapse-when-tiny philosophy as the as-of
-    * join's broadcast+binary-search path and the dedup-cluster
-    * driver union-find: below the gate single-node IS the optimal
-    * plan, and the distributed path stays the only path above it.
-    * `coalesce(1)` over a multi-hundred-GB frame would be a
-    * scale-killer — that is exactly what the size gate exists to
-    * prevent, and the materialized path is gate-rehearsed (sf10
-    * engages it; SCALE_STREAM_r10.md). Two caveats, shared by all
-    * three variants: (1) the gate TRUSTS Catalyst's size estimate —
-    * a selective filter over default column stats can underestimate
-    * badly; callers feeding a filtered edge frame should pass an
-    * explicit `materializeAboveBytes` (0 forces the distributed
-    * path), the same trust-the-estimate contract as the as-of
-    * broadcast gate — with [[Kernel.MaxKernelRows]] as the runtime
-    * backstop: a task fed vastly more rows than any in-gate estimate
-    * implies aborts with a clear message instead of grinding into a
-    * single-task OOM. (2) Both gate outcomes return the same eager
-    * contract: the kernel result is `localCheckpoint(eager = true)`d
-    * at call time (cheap by definition below the gate), so callers
-    * straddling the gate see one lifetime semantics — a
-    * self-contained frame, computed once.
+    * The three catalog forms are flags on one loop:
+    *  - default: `iters` supersteps; dangling nodes (no out-edges)
+    *    contribute nothing, so their mass leaks, matching the
+    *    reference's fixed-iteration form (`share` = 0);
+    *  - `dangling`: the rank mass of dangling nodes is redistributed
+    *    evenly, `share = damp(D_t, N)` with `D_t` the dangling ranks'
+    *    sum and `N` the node count;
+    *  - `eps`: stop once `max |r_t - r_{t-1}| ≤ eps` over DEFINED ids,
+    *    `iters` being the superstep cap; the result gains a constant
+    *    `t` column (supersteps run), so the oracle must reproduce the
+    *    STOPPING DECISION, not just the arithmetic.
     *
-    * Above the gate, each superstep is eagerly `localCheckpoint`ed
-    * (lineage truncated, plan stays one step deep) and the previous
-    * iterate's blocks are released deterministically via the
-    * checkpoint-aware shim (plain `unpersist()` is a no-op on
-    * checkpointed Datasets). Trade: checkpoint blocks are not
-    * recomputable — an executor loss restarts the rank job; a 100 TB
-    * deployment running many supersteps should reliable-checkpoint
-    * every N iterations instead. Same measure-then-pick shape as the
-    * commit filter's size-gated broadcast and the dedup-cluster gate.
+    * Nodes are every src and dst, the SQL null included: dedup on
+    * (src, dst) treats nulls as equal, the out-degree counts DISTINCT
+    * dst per defined src including a null dst, a null src contributes
+    * nothing, and the null node receives nothing (it holds the base
+    * rank plus the share).
+    *
+    * Below the size gate ([[aboveGate]]) the whole loop runs in the
+    * single-task kernel, bit-identical to the distributed path (long
+    * sums are order-independent; `DIV` on positive operands is Java
+    * `/`). Both paths return an eager `localCheckpoint`: callers
+    * straddling the gate see one lifetime contract, a self-contained
+    * frame computed once at call time.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, scale: Long = 1000000L,
-      materializeAboveBytes: Long = 64L << 20): DataFrame = {
+      materializeAboveBytes: Long = 64L << 20,
+      dangling: Boolean = false, eps: Option[Long] = None): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    import org.apache.spark.storage.StorageLevel
-    val edgeBytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val materialize = edgeBytes > BigInt(materializeAboveBytes)
-    lastMaterialized = materialize
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
-    val srcWin = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    def eCast = edges.select(col(srcCol).cast("long").as("src"),
+    eps.foreach { e =>
+      require(iters >= 1, s"iters (the superstep cap with eps) must be >= 1, got $iters")
+      require(e >= 0, s"eps must be >= 0, got $e")
+    }
+    val eCast = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    // big path: partition by SRC — dedup runs exchange-free on the
-    // key subset, the degree comes from a COUNT window over the same
-    // partitioning (a local sort, no self-join), and each superstep
-    // shuffles only the contribution rows into groupBy(dst).
-    // MEMORY_AND_DISK persist — recomputable on block loss, which
-    // matters once the edge frame is the 100 TB side. The
-    // inner-join-on-src shape the window replaces also dropped
-    // null-src edges from the contribution feed; the explicit filter
-    // keeps that contract.
-    lazy val eDeg = eCast
-      .repartition(shuffleParts, col("src"))
-      .dropDuplicates("src", "dst")
-      .filter(col("src").isNotNull)
-      .withColumn("d", count(lit(1)).over(srcWin))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // node set off the raw input: two branches + distinct (the edge
-    // frame excludes null-src rows, so it can't source the node set)
-    lazy val nodesRaw = edges.select(col(srcCol).cast("long").as("id"))
-      .union(edges.select(col(dstCol).cast("long").as("id"))).distinct()
-    def nodes = nodesRaw
     val base = (scale * 150L) / 1000L
-
-    // superstep on the implicit-rank form: rank(src) at step t is
-    // base + c_t(src) (c absent ⇒ 0), so the next contribution frame
-    // is one join + one aggregate over the prepped edge frame.
-    def nextContribs(c: DataFrame): DataFrame = {
-      val vExpr = expr(s"((${base}L + coalesce(s, 0L)) * 850) DIV (1000 * d)")
-      eDeg.join(c, eDeg("src") === c("id"), "left")
-        .select(col("dst"), vExpr.as("c"))
-        .groupBy(col("dst").as("id")).agg(sum("c").as("s"))
-    }
-
-    // step 1: every rank is the constant `scale` — no join at all
-    def firstContribs(): DataFrame = {
-      val vExpr = expr(s"(${scale}L * 850) DIV (1000 * d)")
-      eDeg.select(col("dst"), vExpr.as("c"))
-        .groupBy(col("dst").as("id")).agg(sum("c").as("s"))
-    }
-
-    def finish(cLast: Option[DataFrame]): DataFrame = cLast match {
-      case None => nodes.select(col("id"), lit(scale).as("rank"))
-      case Some(c) =>
-        nodes.join(c, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + coalesce(col("s"), lit(0L))).as("rank"))
-    }
-
-    if (iters == 0) finish(None)
-    else if (!materialize)
-      // eager checkpoint so BOTH gate outcomes return the same
-      // contract: a self-contained frame computed once at call time
-      // (the lazy kernel plan would re-run dedup + every superstep on
-      // each action) — cheap by definition below the gate
-      inMemoryKernel(eCast, iters, scale, base).localCheckpoint(eager = true)
-    else {
-      var c = firstContribs().localCheckpoint(eager = true)
-      var it = 1
-      while (it < iters) {
-        val next = nextContribs(c).localCheckpoint(eager = true)
-        // free the previous iterate's checkpoint blocks now, not at
-        // GC: Dataset.unpersist() can't see checkpoint storage
-        org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(c)
-        c = next
-        it += 1
-      }
-      // the eager checkpoint makes the result self-contained, so the
-      // prep persist and the last superstep's blocks drop here
-      val out = finish(Some(c)).localCheckpoint(eager = true)
-      org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(c)
-      eDeg.unpersist()
-      out
-    }
+    // (id, rank, t) → the caller's columns, computed once at call time
+    def result(ranked: DataFrame): DataFrame =
+      (if (eps.isDefined) ranked else ranked.drop("t")).localCheckpoint(eager = true)
+    if (aboveGate(edges, materializeAboveBytes))
+      distributedRanks(eCast, iters, scale, base, dangling, eps, result)
+    else result(kernelRanks(eCast, iters, scale, base, dangling, eps))
   }
 
-  /** The below-the-gate pageRank execution: ONE narrow single-task
-    * plan (`coalesce(1)` → `mapPartitions`) that dedups edges,
-    * degree-counts and runs every superstep imperatively in the same
-    * integer fixed-point as the distributed path — bit-identical by
-    * construction (long sums are order-independent; `DIV` on positive
-    * operands is Java `/`).
-    *
-    * Semantics mirrored exactly from the relational form:
-    *  - dedup on (src, dst) with SQL `dropDuplicates` null-equality
-    *    (`Option` keys in a HashSet compare nulls equal);
-    *  - degree d(src) counts DISTINCT dst per src INCLUDING null dst
-    *    (the struct-wrapped count_distinct contract);
-    *  - null-src edges contribute nothing but keep their dst visible
-    *    to the node set (the left-join-never-matches contract);
-    *  - contributions addressed to the null node are dropped at the
-    *    finish step — the final `join(nodes, "id")` never matches a
-    *    null key, so the null node holds the base rank (pinned by
-    *    GraphOpsSpec's null-endpoint test).
+  /** The below-the-gate loop over a ranks array (see [[Kernel.build]]
+    * for the graph contracts). Rows are `(id, rank, t)`.
     */
-  private def inMemoryKernel(eCast: DataFrame, iters: Int, scale: Long,
-      base: Long): DataFrame = {
+  private def kernelRanks(eCast: DataFrame, iters: Int, scale: Long,
+      base: Long, dangling: Boolean, eps: Option[Long]): DataFrame = {
     val spark = eCast.sparkSession
     import spark.implicits._
     eCast.as[(Option[Long], Option[Long])].coalesce(1).mapPartitions { it =>
       val g = Kernel.build(it)
-      var contrib = new Array[Long](g.nNodes)
+      val n = g.nNodes
+      val ranks = Array.fill(n)(scale)
       var t = 0
-      while (t < iters) {
-        val next = new Array[Long](g.nNodes)
+      var done = n == 0
+      while (t < iters && !done) {
+        var dMass = 0L
+        if (dangling) for (i <- 0 until n if g.deg(i) == 0L) dMass += ranks(i)
+        val share = damp(dMass, n)
+        val contrib = new Array[Long](n)
         var e = 0
         while (e < g.nEdges) {
           val s = g.adjSrc(e)
-          val r = if (t == 0) scale else base + contrib(s)
-          next(g.adjDst(e)) += (r * 850L) / (1000L * g.deg(s))
+          contrib(g.adjDst(e)) += damp(ranks(s), g.deg(s))
           e += 1
         }
-        contrib = next; t += 1
+        var md = 0L
+        var i = 0
+        while (i < n) {
+          val next = base + share + (if (i == g.nullIdx) 0L else contrib(i))
+          if (i != g.nullIdx) md = math.max(md, math.abs(next - ranks(i)))
+          ranks(i) = next
+          i += 1
+        }
+        t += 1
+        done = eps.exists(md <= _)
       }
-      (0 until g.nNodes).iterator.map { i =>
-        val c = if (i == g.nullIdx) 0L else contrib(i)
-        (g.idOf(i), base + c)
+      val tl = t.toLong
+      (0 until n).iterator.map(i => (g.idOf(i), ranks(i), tl))
+    }.toDF("id", "rank", "t")
+  }
+
+  /** The above-the-gate loop. Edges are shuffled ONCE: hash-partitioned
+    * by src, then deduped and out-degree-counted (a COUNT window over
+    * the same partitioning) exchange-free, and persisted
+    * MEMORY_AND_DISK — recomputable on block loss, which matters once
+    * the edge frame is the 100 TB side.
+    *
+    * The iterated state is the CONTRIBUTION frame `c_t(id) = Σ incoming`
+    * plus one driver scalar `b_t`: ranks are implicit,
+    * `r_t = b_t + c_t` (absent id ⇒ c = 0), with `b_0 = scale` and
+    * `b_t = 0.15·scale + share`. So the first superstep is a plain
+    * aggregate with NO join, each later one moves one node-sized frame
+    * through one join into the src-partitioned edge frame plus one
+    * partial-merge aggregate, and the full node set is joined once at
+    * the end to surface sink-only and isolated nodes. The dangling mass
+    * and the max delta are one bounded scalar aggregate each per
+    * superstep (node-sized; the node set is persisted for them).
+    *
+    * Each superstep is eagerly `localCheckpoint`ed (lineage truncated,
+    * plan one step deep) and the previous iterate's blocks released via
+    * the checkpoint-aware shim (`unpersist()` can't see checkpoint
+    * storage). Trade: checkpoint blocks are not recomputable, so an
+    * executor loss restarts the rank job; a 100 TB deployment running
+    * many supersteps should reliable-checkpoint every N iterations.
+    */
+  private def distributedRanks(eCast: DataFrame, iters: Int, scale: Long,
+      base: Long, dangling: Boolean, eps: Option[Long],
+      result: DataFrame => DataFrame): DataFrame = {
+    val stepsReadNodes = dangling || eps.isDefined
+    val eDeg = eCast
+      .repartition(eCast.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
+      .dropDuplicates("src", "dst")
+      .filter(col("src").isNotNull)
+      .withColumn("d", count(lit(1)).over(Window.partitionBy("src")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // off the raw input: the edge frame drops null-src rows
+    val allNodes = eCast.select(col("src").as("id"))
+      .union(eCast.select(col("dst").as("id"))).distinct()
+    val nodes =
+      if (stepsReadNodes) allNodes.persist(StorageLevel.MEMORY_AND_DISK) else allNodes
+    // dangling: no out-edge (a null id never matches, so it dangles)
+    lazy val danglingNodes = nodes.join(eDeg.select("src").distinct(),
+      col("id") === col("src"), "left_anti")
+    lazy val n = nodes.count()
+    def ranksOf(ids: DataFrame, c: Option[DataFrame], b: Long): DataFrame = c match {
+      case None => ids.select(col("id"), lit(b).as("r"))
+      case Some(cs) => ids.join(cs, Seq("id"), "left")
+        .select(col("id"), (lit(b) + coalesce(col("s"), lit(0L))).as("r"))
+    }
+    def contribs(c: Option[DataFrame], b: Long): DataFrame = {
+      val r = if (c.isEmpty) s"${b}L" else s"(${b}L + coalesce(s, 0L))"
+      c.fold(eDeg)(cs => eDeg.join(cs, eDeg("src") === cs("id"), "left"))
+        .select(col("dst"), expr(s"($r * 850) DIV (1000 * d)").as("c"))
+        .groupBy(col("dst").as("id")).agg(sum("c").as("s"))
+    }
+    var c, prev: Option[DataFrame] = None
+    var b = scale
+    var t = 0
+    var done = false
+    try {
+      while (t < iters && !done) {
+        val share = if (!dangling) 0L else damp(
+          ranksOf(danglingNodes, c, b).agg(coalesce(sum("r"), lit(0L))).head().getLong(0),
+          math.max(n, 1L))
+        val bPrev = b
+        prev = c
+        c = Some(contribs(prev, b).localCheckpoint(eager = true))
+        b = base + share
+        t += 1
+        done = eps.exists { e =>
+          // a null id never matches itself: the delta is over defined ids
+          val md = ranksOf(nodes, c, b).as("n")
+            .join(ranksOf(nodes, prev, bPrev).as("p"), col("n.id") === col("p.id"))
+            .agg(coalesce(max(abs(col("n.r") - col("p.r"))), lit(0L)))
+            .head().getLong(0)
+          md <= e
+        }
+        prev.foreach(GraftShim.releaseLocalCheckpoint)
+        prev = None
       }
-    }.toDF("id", "rank")
+      result(ranksOf(nodes, c, b)
+        .select(col("id"), col("r").as("rank"), lit(t.toLong).as("t")))
+    } finally {
+      (prev ++ c).foreach(GraftShim.releaseLocalCheckpoint)
+      eDeg.unpersist()
+      if (stepsReadNodes) nodes.unpersist()
+    }
   }
 
   /** Shared in-task graph build for the below-the-gate kernels: dedup
@@ -263,6 +274,32 @@ object GraphOps {
       */
     val MaxKernelRows: Long = 32L << 20
 
+    /** `it`, failing loudly when a row past `maxRows` is drawn. */
+    private def capped[T](it: Iterator[T], maxRows: Long): Iterator[T] =
+      new Iterator[T] {
+        private var n = 0L
+        def hasNext: Boolean = it.hasNext
+        def next(): T = {
+          n += 1
+          if (n > maxRows) throw new IllegalStateException(
+            s"in-memory graph kernel fed more than $maxRows edge rows — " +
+              "the plan-time size estimate that selected the single-task path " +
+              "was badly wrong (selective filter under default stats?); pass a " +
+              "lower materializeAboveBytes or materialize the input so Catalyst " +
+              "sees real statistics")
+          it.next()
+        }
+      }
+
+    /** Splitmix-style scramble into a power-of-two table of `c` slots,
+      * so sequential ids don't cluster.
+      */
+    private def slot(k: Long, c: Int): Int = {
+      var h = k * -7046029254386353131L
+      h ^= (h >>> 32)
+      (h & (c - 1)).toInt
+    }
+
     /** Open-addressing long -> dense-int index map (linear probing,
       * power-of-two capacity, `used` sideband so every long — 0 and
       * Long.MinValue included — is a valid key). No deletion needed.
@@ -273,12 +310,6 @@ object GraphOps {
       private var vals = new Array[Int](cap)
       private var used = new Array[Boolean](cap)
       private var n = 0
-      private def slot(k: Long, c: Int): Int = {
-        // splitmix-style scramble so sequential ids don't cluster
-        var h = k * -7046029254386353131L
-        h ^= (h >>> 32)
-        (h & (c - 1)).toInt
-      }
       /** Return the value stored for `k`, or insert `v` and return it. */
       def lookupOrInsert(k: Long, v: Int): Int = {
         var i = slot(k, cap)
@@ -308,6 +339,24 @@ object GraphOps {
       }
     }
 
+    /** Dense int indices for node ids, in first-seen order. */
+    private final class Interner {
+      private val index = new LongIndex(1 << 15)
+      var ids = new Array[Long](1 << 15)   // idx -> id
+      var size = 0
+      def apply(v: Long): Int = {
+        val i = index.lookupOrInsert(v, size)
+        if (i == size) {
+          if (i >= ids.length) ids = java.util.Arrays.copyOf(ids, ids.length << 1)
+          ids(i) = v
+          size += 1
+        }
+        i
+      }
+      /** A new index outside the key map, so no long id can alias it. */
+      def fresh(): Int = { size += 1; size - 1 }
+    }
+
     /** Open-addressing set of NON-NEGATIVE longs (EMPTY = -1) — holds
       * the packed (srcIdx << 32 | dstIdx) dedup keys, which are
       * non-negative by construction (dense indices < 2^31).
@@ -318,11 +367,6 @@ object GraphOps {
         val a = new Array[Long](cap); java.util.Arrays.fill(a, -1L); a
       }
       private var n = 0
-      private def slot(k: Long, c: Int): Int = {
-        var h = k * -7046029254386353131L
-        h ^= (h >>> 32)
-        (h & (c - 1)).toInt
-      }
       def add(k: Long): Boolean = {
         var i = slot(k, cap)
         while (keys(i) != -1L) {
@@ -352,23 +396,12 @@ object GraphOps {
 
     def build(it: Iterator[(Option[Long], Option[Long])],
         maxRows: Long = MaxKernelRows): G = {
-      val index = new LongIndex(1 << 15)
+      val nodes = new Interner
       var nullIdx = -1
-      var nextIdx = 0
-      var ids = new Array[Long](1 << 15)
       def idxOf(o: Option[Long]): Int = o match {
-        case Some(v) =>
-          val i = index.lookupOrInsert(v, nextIdx)
-          if (i == nextIdx) {
-            if (i >= ids.length) ids = java.util.Arrays.copyOf(ids, ids.length << 1)
-            ids(i) = v
-            nextIdx += 1
-          }
-          i
+        case Some(v) => nodes(v)
         case None =>
-          // the null node's dense slot lives outside the key map — no
-          // long key can ever alias it
-          if (nullIdx < 0) { nullIdx = nextIdx; nextIdx += 1 }
+          if (nullIdx < 0) nullIdx = nodes.fresh()
           nullIdx
       }
       val seen = new PackedSet(1 << 17)
@@ -376,35 +409,26 @@ object GraphOps {
       var adjDst = new Array[Int](1 << 17)
       var nEdges = 0
       var degA = new Array[Long](1 << 15)
-      var n = 0L
-      while (it.hasNext) {
-        n += 1
-        if (n > maxRows) throw new IllegalStateException(
-          s"in-memory graph kernel fed more than $maxRows edge rows — " +
-            "the plan-time size estimate that selected the single-task path " +
-            "was badly wrong (selective filter under default stats?); pass a " +
-            "lower materializeAboveBytes or materialize the input so Catalyst " +
-            "sees real statistics")
-        val e = it.next()
+      val rows = capped(it, maxRows)
+      while (rows.hasNext) {
+        val e = rows.next()
         val si = idxOf(e._1)
         val di = idxOf(e._2)
-        if (seen.add((si.toLong << 32) | (di.toLong & 0xffffffffL))) {
-          if (e._1.isDefined) {
-            if (si >= degA.length)
-              degA = java.util.Arrays.copyOf(degA, math.max(degA.length << 1, si + 1))
-            degA(si) += 1L
-            if (nEdges >= adjSrc.length) {
-              adjSrc = java.util.Arrays.copyOf(adjSrc, adjSrc.length << 1)
-              adjDst = java.util.Arrays.copyOf(adjDst, adjDst.length << 1)
-            }
-            adjSrc(nEdges) = si; adjDst(nEdges) = di; nEdges += 1
+        if (seen.add((si.toLong << 32) | (di.toLong & 0xffffffffL)) && e._1.isDefined) {
+          if (si >= degA.length)
+            degA = java.util.Arrays.copyOf(degA, math.max(degA.length << 1, si + 1))
+          degA(si) += 1L
+          if (nEdges >= adjSrc.length) {
+            adjSrc = java.util.Arrays.copyOf(adjSrc, adjSrc.length << 1)
+            adjDst = java.util.Arrays.copyOf(adjDst, adjDst.length << 1)
           }
+          adjSrc(nEdges) = si; adjDst(nEdges) = di; nEdges += 1
         }
       }
-      val nNodes = nextIdx
+      val nNodes = nodes.size
       val deg = if (degA.length >= nNodes) degA
         else java.util.Arrays.copyOf(degA, nNodes)
-      new G(nNodes, nullIdx, ids, deg, adjSrc, adjDst, nEdges)
+      new G(nNodes, nullIdx, nodes.ids, deg, adjSrc, adjDst, nEdges)
     }
 
     /** Id-compacted UNDIRECTED simple graph for the triangle kernel:
@@ -418,37 +442,18 @@ object GraphOps {
 
     def buildUndirected(it: Iterator[(Option[Long], Option[Long])],
         maxRows: Long = MaxKernelRows): U = {
-      val index = new LongIndex(1 << 15)
-      var nextIdx = 0
-      var ids = new Array[Long](1 << 15)
-      def idxOf(v: Long): Int = {
-        val i = index.lookupOrInsert(v, nextIdx)
-        if (i == nextIdx) {
-          if (i >= ids.length) ids = java.util.Arrays.copyOf(ids, ids.length << 1)
-          ids(i) = v
-          nextIdx += 1
-        }
-        i
-      }
+      val nodes = new Interner
       val seen = new PackedSet(1 << 17)
       var eu = new Array[Int](1 << 17)
       var ev = new Array[Int](1 << 17)
       var nEdges = 0
       var degA = new Array[Long](1 << 15)
-      var n = 0L
-      while (it.hasNext) {
-        n += 1
-        if (n > maxRows) throw new IllegalStateException(
-          s"in-memory graph kernel fed more than $maxRows edge rows — " +
-            "the plan-time size estimate that selected the single-task path " +
-            "was badly wrong; pass a lower materializeAboveBytes or " +
-            "materialize the input so Catalyst sees real statistics")
-        val e = it.next()
+      val rows = capped(it, maxRows)
+      while (rows.hasNext) {
+        val e = rows.next()
         if (e._1.isDefined && e._2.isDefined && e._1.get != e._2.get) {
-          val u = math.min(e._1.get, e._2.get)
-          val v = math.max(e._1.get, e._2.get)
-          val ui = idxOf(u)
-          val vi = idxOf(v)
+          val ui = nodes(math.min(e._1.get, e._2.get))
+          val vi = nodes(math.max(e._1.get, e._2.get))
           if (seen.add((ui.toLong << 32) | (vi.toLong & 0xffffffffL))) {
             if (nEdges >= eu.length) {
               eu = java.util.Arrays.copyOf(eu, eu.length << 1)
@@ -462,33 +467,11 @@ object GraphOps {
           }
         }
       }
-      val nNodes = nextIdx
+      val nNodes = nodes.size
       val deg = if (degA.length >= nNodes) degA
         else java.util.Arrays.copyOf(degA, nNodes)
-      new U(nNodes, ids, eu, ev, nEdges, deg)
+      new U(nNodes, nodes.ids, eu, ev, nEdges, deg)
     }
-  }
-
-  /** Shared prep for the explicit-rank variants: ONE edge shuffle
-    * (hash-partition by src → dedup exchange-free → null-src filter →
-    * COUNT window degree) checkpointed, plus the full node set off
-    * the raw input. Callers release the checkpoint via the shim.
-    */
-  private def edgePrep(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame) = {
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
-    val srcWin = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val eDeg = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .repartition(shuffleParts, col("src"))
-      .dropDuplicates("src", "dst")
-      .filter(col("src").isNotNull)
-      .withColumn("d", count(lit(1)).over(srcWin))
-      .localCheckpoint(eager = true)
-    val nodes = edges.select(col(srcCol).cast("long").as("id"))
-      .union(edges.select(col(dstCol).cast("long").as("id"))).distinct()
-    (eDeg, nodes)
   }
 
   /** Per-node triangle counts over the UNDIRECTED simple graph induced
@@ -510,9 +493,6 @@ object GraphOps {
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
       dstCol: String, materializeAboveBytes: Long = 64L << 20): DataFrame = {
-    val edgeBytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val materialize = edgeBytes > BigInt(materializeAboveBytes)
-    lastMaterialized = materialize
     // Below the gate: the whole operator is ONE single-task kernel
     // over the id-compacted undirected graph (same collapse-when-tiny
     // pattern as the PageRank kernel, same 32M-row runtime backstop):
@@ -523,7 +503,7 @@ object GraphOps {
     // Σ_(u,v) (d⁺(u)+d⁺(v)) — the arboricity-bounded cost the
     // distributed wedge join pays in shuffled form. Above the gate the
     // distributed orientation + wedge-join plan below is unchanged.
-    if (!materialize) {
+    if (!aboveGate(edges, materializeAboveBytes)) {
       val spark = edges.sparkSession
       import spark.implicits._
       return edges.select(col(srcCol).cast("long").as("ea"),
@@ -640,204 +620,5 @@ object GraphOps {
         when(uFirst, col("v")).otherwise(col("u")).as("t"))
       .repartition(col("s"))
     (deg, oriented)
-  }
-
-  /** Mass-conserving PageRank: like [[pageRank]] but the rank mass of
-    * DANGLING nodes (no out-edges) is redistributed evenly instead of
-    * leaking — each superstep every node additionally receives
-    * `(D_t * 850) DIV (1000 * N)` where `D_t = Σ ranks of dangling
-    * nodes` and `N` = node count, all in the same integer fixed-point
-    * (bit-identical to the unrolled-CTE oracle). `D_t` and `N` are
-    * BOUNDED driver scalars (one aggregate each — the same "scalar
-    * gauge" class as the observability counters), never row data; the
-    * edge frame is prepped once and each superstep is the same
-    * join-agg as the base form plus one tiny anti-join aggregate.
-    * Supersteps are eagerly checkpointed with the previous iterate's
-    * blocks released via the shim.
-    *
-    * Size-gated like [[pageRank]]: below the gate the whole loop runs
-    * in the single-task kernel (dangling mass and share are two locals
-    * there, not even driver scalars), bit-identical by the same
-    * argument; the distributed loop is the only path above it.
-    */
-  def pageRankDangling(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3, scale: Long = 1000000L,
-      materializeAboveBytes: Long = 64L << 20): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val edgeBytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val materialize = edgeBytes > BigInt(materializeAboveBytes)
-    lastMaterialized = materialize
-    val base0 = (scale * 150L) / 1000L
-    if (!materialize) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .as[(Option[Long], Option[Long])].coalesce(1).mapPartitions { it =>
-          val g = Kernel.build(it)
-          val n = g.nNodes.toLong
-          val ranks = new Array[Long](g.nNodes)
-          java.util.Arrays.fill(ranks, scale)
-          var t = 0
-          while (t < iters && n > 0) {
-            // dangling mass: nodes with no out-edge (the null node is
-            // always dangling — it never holds a degree)
-            var dMass = 0L
-            var i = 0
-            while (i < g.nNodes) {
-              if (g.deg(i) == 0L) dMass += ranks(i)
-              i += 1
-            }
-            val share = (dMass * 850L) / (1000L * n)
-            val contrib = new Array[Long](g.nNodes)
-            var e = 0
-            while (e < g.nEdges) {
-              val s = g.adjSrc(e)
-              contrib(g.adjDst(e)) += (ranks(s) * 850L) / (1000L * g.deg(s))
-              e += 1
-            }
-            i = 0
-            while (i < g.nNodes) {
-              val c = if (i == g.nullIdx) 0L else contrib(i)
-              ranks(i) = base0 + c + share
-              i += 1
-            }
-            t += 1
-          }
-          (0 until g.nNodes).iterator.map(i => (g.idOf(i), ranks(i)))
-        }.toDF("id", "rank")
-        // eager checkpoint: same self-contained contract as the
-        // materialized path's output (see pageRank's kernel arm)
-        .localCheckpoint(eager = true)
-    }
-    val (eDeg, nodes0) = edgePrep(edges, srcCol, dstCol)
-    val nodes = nodes0.localCheckpoint(eager = true)
-    val base = (scale * 150L) / 1000L
-    val n = nodes.count()
-    val srcs = eDeg.select(col("src")).distinct()
-    var ranks = nodes.withColumn("r", lit(scale))
-    var it = 0
-    while (it < iters && n > 0) {
-      // D_t: one bounded scalar off the current iterate
-      val dMass = ranks.join(srcs, ranks("id") === srcs("src"), "left_anti")
-        .agg(coalesce(sum("r"), lit(0L))).collect()(0).getLong(0)
-      val share = (dMass * 850L) / (1000L * n)
-      val contribs = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst").as("cid"),
-          expr("(r * 850) DIV (1000 * d)").as("c"))
-        .groupBy("cid").agg(sum("c").as("s"))
-      val next = nodes.join(contribs, nodes("id") === contribs("cid"), "left")
-        .select(col("id"),
-          (lit(base) + coalesce(col("s"), lit(0L)) + lit(share)).as("r"))
-        .localCheckpoint(eager = true)
-      org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(ranks)
-      ranks = next
-      it += 1
-    }
-    val out = ranks.select(col("id"), col("r").as("rank"))
-      .localCheckpoint(eager = true)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(ranks)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(nodes)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(eDeg)
-    out
-  }
-
-  /** Iterate-to-ε PageRank (dangling mass leaking, as [[pageRank]]):
-    * supersteps run until `max |r_t - r_{t-1}| ≤ eps` or `maxIters`,
-    * whichever first, in the same integer fixed-point. Returns the
-    * converged ranks plus a constant `t` column — the superstep count
-    * actually run — so the oracle must reproduce the STOPPING
-    * DECISION, not just the arithmetic (both engines compute the same
-    * iterates, hence the same t). The convergence check is one
-    * bounded scalar aggregate per superstep — inherent to any
-    * iterate-to-fixpoint loop, and the reason this variant has no
-    * single-plan form: control flow depends on data.
-    *
-    * Size-gated like [[pageRank]]: below the gate the fixpoint loop —
-    * including the stopping decision — runs in the single-task kernel
-    * (the max-delta is a local, not a per-superstep scalar job),
-    * producing the same iterates and hence the same `t`; the
-    * distributed loop is the only path above the gate. The delta is
-    * measured over DEFINED node ids only, mirroring the distributed
-    * path's inner self-join (a null id never matches itself).
-    */
-  def pageRankConverge(edges: DataFrame, srcCol: String, dstCol: String,
-      eps: Long, maxIters: Int = 10,
-      scale: Long = 1000000L,
-      materializeAboveBytes: Long = 64L << 20): DataFrame = {
-    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    require(eps >= 0, s"eps must be >= 0, got $eps")
-    val edgeBytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val materialize = edgeBytes > BigInt(materializeAboveBytes)
-    lastMaterialized = materialize
-    val base0 = (scale * 150L) / 1000L
-    if (!materialize) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .as[(Option[Long], Option[Long])].coalesce(1).mapPartitions { it =>
-          val g = Kernel.build(it)
-          val ranks = new Array[Long](g.nNodes)
-          java.util.Arrays.fill(ranks, scale)
-          var t = 0
-          var done = g.nNodes == 0
-          while (!done && t < maxIters) {
-            val contrib = new Array[Long](g.nNodes)
-            var e = 0
-            while (e < g.nEdges) {
-              val s = g.adjSrc(e)
-              contrib(g.adjDst(e)) += (ranks(s) * 850L) / (1000L * g.deg(s))
-              e += 1
-            }
-            t += 1
-            var md = 0L
-            var i = 0
-            while (i < g.nNodes) {
-              val c = if (i == g.nullIdx) 0L else contrib(i)
-              val next = base0 + c
-              if (i != g.nullIdx) md = math.max(md, math.abs(next - ranks(i)))
-              ranks(i) = next
-              i += 1
-            }
-            done = md <= eps
-          }
-          val tl = t.toLong
-          (0 until g.nNodes).iterator.map(i => (g.idOf(i), ranks(i), tl))
-        }.toDF("id", "rank", "t")
-        // eager checkpoint: same self-contained contract as the
-        // materialized path's output (see pageRank's kernel arm)
-        .localCheckpoint(eager = true)
-    }
-    val (eDeg, nodes0) = edgePrep(edges, srcCol, dstCol)
-    val nodes = nodes0.localCheckpoint(eager = true)
-    val base = (scale * 150L) / 1000L
-    var ranks = nodes.withColumn("r", lit(scale))
-    var it = 0
-    var done = nodes.isEmpty
-    while (!done && it < maxIters) {
-      val contribs = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst").as("cid"),
-          expr("(r * 850) DIV (1000 * d)").as("c"))
-        .groupBy("cid").agg(sum("c").as("s"))
-      val next = nodes.join(contribs, nodes("id") === contribs("cid"), "left")
-        .select(col("id"), (lit(base) + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint(eager = true)
-      it += 1
-      // bounded scalar: the max rank delta this superstep
-      val md = next.as("n").join(ranks.as("p"), col("n.id") === col("p.id"))
-        .agg(coalesce(max(abs(col("n.r") - col("p.r"))), lit(0L)))
-        .collect()(0).getLong(0)
-      org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(ranks)
-      ranks = next
-      done = md <= eps
-    }
-    val out = ranks.select(col("id"), col("r").as("rank"),
-        lit(it.toLong).as("t"))
-      .localCheckpoint(eager = true)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(ranks)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(nodes)
-    org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(eDeg)
-    out
   }
 }

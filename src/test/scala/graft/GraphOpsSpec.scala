@@ -78,7 +78,7 @@ class GraphOpsSpec extends SparkSpec {
     //   r1(1) = 150000 + 566666 = 716666
     //   r1(2) = r1(3) = 150000 + 425000 + 566666 = 1141666
     val g = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
-    val r = GraphOps.pageRankDangling(g, "src", "dst", iters = 1)
+    val r = GraphOps.pageRank(g, "src", "dst", iters = 1, dangling = true)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r(1L) == 716666L)
     assert(r(2L) == 1141666L && r(3L) == 1141666L)
@@ -89,7 +89,7 @@ class GraphOpsSpec extends SparkSpec {
     val g = Seq((Option.empty[Long], Some(5L))).toDF("src", "dst")
     // N=2, D0 = 2e6, share = (2e6*850)/(1000*2) = 850000
     // no contributions: r1 = 150000 + 850000 = 1000000 for both
-    val r = GraphOps.pageRankDangling(g, "src", "dst", iters = 1)
+    val r = GraphOps.pageRank(g, "src", "dst", iters = 1, dangling = true)
       .collect().map(x => Option(x.get(0)) -> x.getLong(1)).toMap
     assert(r.values.toSet == Set(1000000L))
     assert(r.size == 2)
@@ -99,7 +99,7 @@ class GraphOpsSpec extends SparkSpec {
     // 1 -> 1, 2 -> 2: every node feeds itself; D = 0 every step
     val g = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
     // r1 = 150000 + (1e6*850)/1000 = 1000000 (exact fixpoint at once)
-    val r = GraphOps.pageRankDangling(g, "src", "dst", iters = 2)
+    val r = GraphOps.pageRank(g, "src", "dst", iters = 2, dangling = true)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(1L -> 1000000L, 2L -> 1000000L))
   }
@@ -108,8 +108,8 @@ class GraphOpsSpec extends SparkSpec {
     // self-loop graph: r1 = base + (scale*850)/1000 = scale = r0, so
     // the very first superstep observes md == 0 -> t = 1
     val g = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
-    val rows = GraphOps.pageRankConverge(g, "src", "dst", eps = 0L,
-      maxIters = 8).collect()
+    val rows = GraphOps.pageRank(g, "src", "dst", eps = Some(0L),
+      iters = 8).collect()
     assert(rows.map(_.getLong(2)).toSet == Set(1L))
     assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1000000L, 2L -> 1000000L))
@@ -117,15 +117,15 @@ class GraphOpsSpec extends SparkSpec {
 
   test("pageRankConverge: maxIters bound binds; empty graph degrades") {
     val g = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val t = GraphOps.pageRankConverge(g, "src", "dst", eps = 0L,
-      maxIters = 1).collect().map(_.getLong(2)).head
+    val t = GraphOps.pageRank(g, "src", "dst", eps = Some(0L),
+      iters = 1).collect().map(_.getLong(2)).head
     assert(t == 1L)
     import org.apache.spark.sql.types._
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
-    assert(GraphOps.pageRankConverge(empty, "src", "dst", eps = 0L).count() == 0)
-    assert(GraphOps.pageRankDangling(empty, "src", "dst").count() == 0)
+    assert(GraphOps.pageRank(empty, "src", "dst", eps = Some(0L)).count() == 0)
+    assert(GraphOps.pageRank(empty, "src", "dst", dangling = true).count() == 0)
   }
 
   test("pageRankDangling/Converge: size gate — kernel below, distributed " +
@@ -134,19 +134,19 @@ class GraphOpsSpec extends SparkSpec {
       Seq((None: Option[Long], Some(7L): Option[Long]),
         (Some(7L): Option[Long], None: Option[Long]))
     val edges = rows.toDF("src", "dst")
-    val dk = GraphOps.pageRankDangling(edges, "src", "dst", iters = 3)
+    val dk = GraphOps.pageRank(edges, "src", "dst", iters = 3, dangling = true)
       .orderBy("id").collect().toSeq
     assert(!GraphOps.lastMaterialized,
       "a local edge frame must take the kernel path")
-    val dm = GraphOps.pageRankDangling(edges, "src", "dst", iters = 3,
+    val dm = GraphOps.pageRank(edges, "src", "dst", iters = 3, dangling = true,
       materializeAboveBytes = 0L).orderBy("id").collect().toSeq
     assert(GraphOps.lastMaterialized)
     assert(dk == dm)
-    val ck = GraphOps.pageRankConverge(edges, "src", "dst", eps = 1000L,
-      maxIters = 6).orderBy("id").collect().toSeq
+    val ck = GraphOps.pageRank(edges, "src", "dst", eps = Some(1000L),
+      iters = 6).orderBy("id").collect().toSeq
     assert(!GraphOps.lastMaterialized)
-    val cm = GraphOps.pageRankConverge(edges, "src", "dst", eps = 1000L,
-      maxIters = 6, materializeAboveBytes = 0L).orderBy("id").collect().toSeq
+    val cm = GraphOps.pageRank(edges, "src", "dst", eps = Some(1000L),
+      iters = 6, materializeAboveBytes = 0L).orderBy("id").collect().toSeq
     assert(GraphOps.lastMaterialized)
     assert(ck == cm, "converge iterates AND stopping decision must match")
   }
@@ -227,7 +227,7 @@ class GraphOpsSpec extends SparkSpec {
       assert(ranksOf(plainD) == plainRef, s"plain distributed diverged on trial $trial")
 
       val (dangK, dangD) = bothPaths(b =>
-        GraphOps.pageRankDangling(pdf, "src", "dst", iters = 3,
+        GraphOps.pageRank(pdf, "src", "dst", iters = 3, dangling = true,
           materializeAboveBytes = b))
       val dangRef = refRanks(planted, iters = 3, dangling = true)._1
       assert(ranksOf(dangK) == dangRef, s"dangling kernel diverged on trial $trial")
@@ -235,7 +235,7 @@ class GraphOpsSpec extends SparkSpec {
 
       val eps = 5000L * trial
       val (convK, convD) = bothPaths(b =>
-        GraphOps.pageRankConverge(pdf, "src", "dst", eps = eps, maxIters = cap,
+        GraphOps.pageRank(pdf, "src", "dst", eps = Some(eps), iters = cap,
           materializeAboveBytes = b))
       val (convRef, tRef) = refRanks(planted, iters = cap, eps = Some(eps))
       assert(tRef > 1 && tRef < cap,
@@ -336,9 +336,10 @@ class GraphOpsSpec extends SparkSpec {
     assert(!GraphOps.lastMaterialized, "tiny frame must take the kernel path")
     assert(selfContained(pr),
       "kernel pageRank must return an eager localCheckpoint, not a lazy plan")
-    assert(selfContained(GraphOps.pageRankDangling(edges, "src", "dst", iters = 2)))
-    assert(selfContained(GraphOps.pageRankConverge(edges, "src", "dst",
-      eps = 1L, maxIters = 3)))
+    assert(selfContained(GraphOps.pageRank(edges, "src", "dst", iters = 2,
+      dangling = true)))
+    assert(selfContained(GraphOps.pageRank(edges, "src", "dst",
+      eps = Some(1L), iters = 3)))
   }
 
   test("kernel row-ceiling backstop: a task fed past maxRows aborts " +

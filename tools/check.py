@@ -2,9 +2,11 @@
 """Local replica of the driver's correctness gate: run graft.Verify,
 then execute each oracle SQL in DuckDB over the same parquet tables
 and hash-compare (columns sorted by name, rows sorted, values
-stringified). Usage: python3 tools/check.py [sfDir] [outDir]
+stringified). An oracled entry with no output reads NO_OUTPUT; the
+exit status is 1 unless every entry is OK or ROWS_ONLY.
+Usage: python3 tools/check.py [sfDir] [outDir] [--no-verify]
 """
-import json, subprocess, sys, hashlib
+import json, os, subprocess, sys, hashlib
 from pathlib import Path
 
 import duckdb
@@ -58,8 +60,13 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
     oracle = json.loads((OUT / "oracle_sql.json").read_text())
+    # every oracled entry must have written output (Verify deletes an
+    # entry's directory before running it), unless SPARK_GRAFT_ONLY
+    # narrowed the Verify run to named entries
+    only = {n.strip() for n in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if n.strip()}
+    expected = only or set(oracle) | {d.name for d in OUT.iterdir() if d.is_dir()}
     results = {}
-    for name in sorted(d.name for d in OUT.iterdir() if d.is_dir()):
+    for name in sorted(expected):
         files = list((OUT / name).glob("*.parquet"))
         if not files:
             results[name] = "NO_OUTPUT"
@@ -97,8 +104,10 @@ def main():
     for k, v in results.items():
         mark = "✓" if v.startswith(("OK", "ROWS_ONLY")) else "✗"
         print(f"{mark} {k}: {v}")
+    n_failing = len(results) - n_ok - n_rows_only
     print(f"\n{n_ok} OK, {n_rows_only} rows-only, "
-          f"{len(results) - n_ok - n_rows_only} failing, {len(results)} total")
+          f"{n_failing} failing, {len(results)} total")
+    sys.exit(1 if n_failing else 0)
 
 
 if __name__ == "__main__":
