@@ -5,7 +5,7 @@ import graft.operators.TraceEtl
 import graft.sinks.{JdbcUpsert, Tables}
 import graft.sources._
 import graft.streaming.StreamingEtl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The assembled always-on service — the analogue of the reference's
@@ -32,15 +32,21 @@ object App {
   private def serializeArrays(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) => d.withColumn(c, concat_ws(",", col(c))))
 
-  /** Sink one committed micro-batch: dedup, render checksummed
-    * addresses, upsert transactions + contracts (reference: dump task
-    * main.rs:88-141).
+  /** Sink one committed micro-batch in one Spark action (reference:
+    * dump task main.rs:88-141): render checksummed addresses and
+    * comma-joined arrays, tag both tables' rows into one frame, pass it
+    * through one exchange keyed on each table's conflict key (which is
+    * also [[StreamingEtl.dedupContracts]]' dedup; transactions are
+    * already unique per batch), and upsert it with
+    * [[JdbcUpsert.upsertTagged]]: one transaction per partition holds
+    * that partition's transactions and contracts together.
     *
-    * `txs` and `contracts` must already be materialized (for instance
-    * by [[TraceEtl.withCommits]]): this takes three actions on them,
-    * the two upserts and the `max(block_number)` of the stats. The
-    * upserts' bound rows are the `results_<chain>` counter; without a
-    * JDBC URL the rendered rows are counted instead.
+    * The stats come from the same action: the bound rows are the
+    * `results_<chain>` counter (without a JDBC URL, the rendered rows
+    * counted), and an observation of the batch's max `block_number`
+    * is the `latest_transaction_block_<chain>` gauge. `txs` and
+    * `contracts` may share an unmaterialized commit: exchange reuse
+    * scans it once for both tables.
     */
   def sinkCommits(txs: DataFrame, contracts: DataFrame, sinks: Sinks, chainId: Long): Unit = {
     val txOut = serializeArrays(
@@ -48,23 +54,35 @@ object App {
         Seq("from_address", "to_address"),
         Seq("closest_address", "ec_recover_addresses")),
       Seq("closest_address", "ec_recover_addresses", "ec_pairing_input_sizes"))
-      .selectExpr(Tables.transactionColumns: _*)
+      .select(lit(0).as("table"), col("chain_id"), col("transaction_hash").as("_key"),
+        struct(Tables.transactionColumns.map(col): _*).as(Tables.transactions.table))
+    // the dedup key is taken before the address is checksummed
     val contractsOut = serializeArrays(
       Tables.renderChecksummed(
-        StreamingEtl.dedupContracts(contracts), Seq("address"), Seq.empty),
+        contracts.withColumn("_key", col("address"))
+          .withColumn("_sig_key", StreamingEtl.sigKey), Seq("address"), Seq.empty),
       Seq("function_signatures", "ec_pairing_input_sizes", "call"))
-      .selectExpr(Tables.contractColumns: _*)
+      .select(lit(1).as("table"), col("chain_id"), col("_key"), col("_sig_key"),
+        struct(Tables.contractColumns.map(col): _*).as(Tables.contracts.table))
+    val key = Seq("table", "chain_id", "_key", "_sig_key")
+    val latest = Observation()
+    // partitioned by the key first, the dedup needs no exchange of its
+    // own and sorts only after the shuffle (its map side would sort
+    // both tables' branches, one Tungsten page per task)
+    val tagged = txOut.unionByName(contractsOut, allowMissingColumns = true)
+      .repartition(key.map(col): _*)
+      .dropDuplicates(key)
+      .observe(latest, max(col(s"${Tables.transactions.table}.block_number")).as("block"))
     val results = sinks.jdbcUrl match {
       case Some(url) =>
-        JdbcUpsert.upsert(txOut, url, Tables.transactions, sinks.dialect) +
-          JdbcUpsert.upsert(contractsOut, url, Tables.contracts, sinks.dialect)
-      case None => txOut.count() + contractsOut.count()
+        JdbcUpsert.upsertTagged(
+          tagged.select("table", Tables.transactions.table, Tables.contracts.table),
+          url, Seq(Tables.transactions, Tables.contracts), sinks.dialect)
+      case None => tagged.count()
     }
     // O2/O6: stats maintained like the reference's stats task
-    txs.agg(max("block_number")).collect().headOption
-      .flatMap(r => Option(r.get(0)))
-      .foreach(m => sinks.stats.setGauge(s"latest_transaction_block_$chainId",
-        m.asInstanceOf[Long]))
+    latest.get.get("block").flatMap(Option(_)).foreach(m =>
+      sinks.stats.setGauge(s"latest_transaction_block_$chainId", m.asInstanceOf[Long]))
     sinks.stats.add(s"results_$chainId", results)
   }
 
@@ -77,9 +95,9 @@ object App {
     val fetches = blocks.map(n =>
       RpcPoller.fetchBlock(client, n.toLong, chain.indexTx, preTraceSleep))
     if (chain.indexTx) {
-      val traces = RpcPoller.tracesFrom(spark, chain.chainId, fetches)
-      TraceEtl.withCommits(traces)((txs, contracts) =>
-        sinkCommits(txs.toDF(), contracts.toDF(), sinks, chain.chainId))
+      val (txs, contracts) = TraceEtl.transform(
+        RpcPoller.tracesFrom(spark, chain.chainId, fetches))
+      sinkCommits(txs.toDF(), contracts.toDF(), sinks, chain.chainId)
     }
     if (chain.indexBlock) {
       fetches.lastOption.foreach(f =>

@@ -7,6 +7,14 @@ object ProbeMain {
   /** The Spark local property naming the measured run a job belongs to. */
   val RunProperty = "graft.probe.run"
 
+  /** "File.scala:line" of the first frame outside Spark, Scala and the
+    * JDK in a long-form call site (one stack frame per line).
+    */
+  private def userFrame(longForm: String): Option[String] =
+    longForm.linesIterator.map(_.trim)
+      .find(l => l.nonEmpty && !Seq("org.apache.spark.", "scala.", "java.", "jdk.").exists(l.startsWith))
+      .map(l => l.substring(l.lastIndexOf('(') + 1).stripSuffix(")"))
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -34,15 +42,26 @@ object ProbeMain {
         new org.apache.spark.scheduler.SparkListener {
           private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
           private val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+          private val executionSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+          override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+            case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+              userFrame(s.details).foreach(executionSites.put(s.executionId, _))
+            case _ => ()
+          }
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             t0.put(j.jobId, System.nanoTime())
             val p = Option(j.properties).getOrElse(new java.util.Properties)
-            // catalog jobs set neither property: fall back to the
-            // result stage's name, its call site (`collect at …`)
+            // a job's site is the call site of the SQL execution it runs
+            // under: broadcast and adaptive-stage jobs start on Spark's
+            // pool threads, whose own call site names no graft code.
+            // Else the job's description or call site, else the result
+            // stage's name.
+            val site = Option(p.getProperty("spark.sql.execution.id"))
+              .flatMap(id => Option(executionSites.get(id.toLong)))
             val named = Seq("spark.job.description", "callSite.short")
               .flatMap(k => Option(p.getProperty(k))).find(_.trim.nonEmpty)
-            desc.put(j.jobId, named.getOrElse(
+            desc.put(j.jobId, site.orElse(named).getOrElse(
               j.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")))
             Option(p.getProperty(RunProperty))
               .foreach(jobsPerRun.updateWith(_)(c => Some(c.getOrElse(0) + 1)))

@@ -126,28 +126,14 @@ object TraceEtl {
   }
 
   /** Split a committed stream into the (transactions, contracts)
-    * output tables. Both sides re-run the whole commit unless
-    * `commits` is persisted first: [[withCommits]] does that for a
-    * batch whose sides are consumed by more than one action.
+    * output tables. Each action on a side re-runs the whole commit; one
+    * action over both sides (`App.sinkCommits` unions them) runs it
+    * once, the two branches sharing its exchanges by reuse.
     */
   def split(commits: Dataset[TxCommit]): (Dataset[TransactionOut], Dataset[ContractOut]) = {
     val spark = commits.sparkSession
     import spark.implicits._
     (commits.flatMap(_.transaction), commits.flatMap(_.contracts))
-  }
-
-  /** Commit one batch (or micro-batch) once and hand its
-    * (transactions, contracts) to `use`: the commits are persisted, so
-    * every action `use` takes reads them instead of re-running decode,
-    * normalize, prune and aggregate. Released when `use` returns.
-    */
-  def withCommits[A](raw: DataFrame)(
-      use: (Dataset[TransactionOut], Dataset[ContractOut]) => A): A = {
-    val commits = commitTraces(normalize(raw)).persist()
-    try {
-      val (txs, contracts) = split(commits)
-      use(txs, contracts)
-    } finally commits.unpersist()
   }
 
   /** End-to-end batch transform used by entry/bench. */

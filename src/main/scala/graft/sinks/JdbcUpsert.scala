@@ -1,7 +1,8 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, struct}
 
 /** Conflict policy per output table (reference: etl_result.rs —
   * transactions ON CONFLICT DO NOTHING :153-159, contracts DO NOTHING
@@ -18,13 +19,20 @@ case class UpsertSpec(
     policy: ConflictPolicy,
 )
 
+/** A prepared upsert statement plus the column order its `?`
+  * placeholders bind in (dialects differ).
+  */
+case class UpsertStatement(sql: String, paramCols: Seq[String])
+
 /** SNK1/SNK2: batched idempotent JDBC upsert for `foreachBatch`.
   *
-  * Shape mirrors the reference's dump loop (main.rs:88-141): rows are
-  * written in per-partition PreparedStatement batches inside one
-  * transaction per partition, with ON CONFLICT making redelivery
-  * idempotent (at-least-once + idempotent sink = the reference's
-  * delivery contract; SURVEY §2.9).
+  * Shape mirrors the reference's dump loop (main.rs:88-141): one flush
+  * of mixed results lands in one transaction. Each Spark partition is
+  * written over one connection, with one PreparedStatement per table
+  * it holds, in addBatch/executeBatch chunks, and one commit, so a
+  * partition's rows of every table commit together or not at all.
+  * ON CONFLICT makes redelivery idempotent (at-least-once +
+  * idempotent sink = the reference's delivery contract; SURVEY §2.9).
   *
   * Dialects: `postgres` emits INSERT .. ON CONFLICT; `derby` emits an
   * equivalent MERGE (used by the in-process integration test, since
@@ -34,11 +42,6 @@ case class UpsertSpec(
   * connection runs one shared compiled plan, and concurrent MERGEs on
   * distinct keys then fail, lose committed rows or deadlock.
   */
-/** A prepared upsert statement plus the column order its `?`
-  * placeholders bind in (dialects differ).
-  */
-case class UpsertStatement(sql: String, paramCols: Seq[String])
-
 object JdbcUpsert {
 
   /** Identifiers are emitted double-quoted so reserved words
@@ -86,40 +89,65 @@ object JdbcUpsert {
     }
   }
 
-  /** Upsert a DataFrame. Executor-side: one connection + prepared
-    * statement per partition, addBatch/executeBatch in `batchSize`
-    * chunks, commit per partition. Returns the rows bound, counted by
-    * the partitions that committed (rows offered, not rows inserted:
-    * a conflict still counts).
+  /** Upsert one table's rows: `df` holds (at least) `spec.columns`.
+    * The one-table case of [[upsertTagged]]. Returns the rows bound.
     */
   def upsert(df: DataFrame, url: String, spec: UpsertSpec,
+      dialect: String, batchSize: Int = 1000): Long =
+    upsertTagged(df.select(lit(0).as("table"), struct(spec.columns.map(col): _*).as(spec.table)),
+      url, Seq(spec), dialect, batchSize)
+
+  /** Upsert the rows of several tables in one Spark action. `tagged`'s
+    * first column is an int tag: the index in `specs` of the table a
+    * row belongs to. Its column `1 + i` is a struct of
+    * `specs(i).columns`, in that order, set on table `i`'s rows (the
+    * other tables' structs are ignored there).
+    *
+    * Executor-side, each partition is one transaction: one
+    * connection, one prepared statement per table present, `batchSize`
+    * chunks per statement, one commit. A failed partition rolls back
+    * every table's rows. Returns the rows bound, counted by the
+    * partitions that committed (rows offered, not rows inserted: a
+    * conflict still counts).
+    */
+  def upsertTagged(tagged: DataFrame, url: String, specs: Seq[UpsertSpec],
       dialect: String, batchSize: Int = 1000): Long = {
-    val bound = df.sparkSession.sparkContext.longAccumulator
-    val stmt = upsertStatement(spec, dialect)
-    val cols = spec.columns
-    // bind positions: index of each param column in the selected row
-    val paramIdx = stmt.paramCols.map(cols.indexOf).toArray
-    df.select(cols.head, cols.tail: _*).foreachPartition { (rows: Iterator[Row]) =>
+    val bound = tagged.sparkSession.sparkContext.longAccumulator
+    val stmts = specs.map(upsertStatement(_, dialect))
+    val sqls = stmts.map(_.sql).toArray
+    // bind positions: index of each param column in the table's struct
+    val paramIdx = specs.zip(stmts).map { case (spec, st) =>
+      st.paramCols.map(spec.columns.indexOf).toArray }.toArray
+    tagged.foreachPartition { (rows: Iterator[Row]) =>
       val conn: Connection = DriverManager.getConnection(url)
+      val st = new Array[PreparedStatement](sqls.length)
+      val pending = new Array[Int](sqls.length)
       var ok = false
       try {
         conn.setAutoCommit(false)
-        val st = conn.prepareStatement(stmt.sql)
-        var n = 0
+        var n = 0L
         rows.foreach { r =>
+          val t = r.getInt(0)
+          if (st(t) == null) st(t) = conn.prepareStatement(sqls(t))
+          val v = r.getStruct(1 + t)
+          val idx = paramIdx(t)
           var i = 0
-          while (i < paramIdx.length) {
-            st.setObject(i + 1, r.get(paramIdx(i)))
+          while (i < idx.length) {
+            st(t).setObject(i + 1, v.get(idx(i)))
             i += 1
           }
-          st.addBatch()
+          st(t).addBatch()
+          pending(t) += 1
+          if (pending(t) == batchSize) {
+            st(t).executeBatch()
+            pending(t) = 0
+          }
           n += 1
-          if (n % batchSize == 0) st.executeBatch()
         }
-        st.executeBatch()
+        st.foreach(s => if (s != null) s.executeBatch())
         conn.commit()
         bound.add(n)
-        st.close()
+        st.foreach(s => if (s != null) s.close())
         ok = true
       } finally {
         // roll back first so close() can't mask the original failure

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model._
 import graft.operators.{TraceEtl, TraceTreeAggregator, TreeBuf}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -46,9 +46,10 @@ object StreamingEtl {
     * plus `gapSeconds`. State per open tx is one TreeBuf.
     *
     * Every action a `foreachBatch` callback takes on the emitted batch
-    * re-runs the stateful operator. Persist the batch before handing
-    * its [[TraceEtl.split]] to `App.sinkCommits`, which takes three
-    * actions, and unpersist it after.
+    * re-runs the stateful operator. `App.sinkCommits` takes one action
+    * on the batch's [[TraceEtl.split]], but each of its two tables'
+    * branches reads the operator's output: persist the batch before
+    * handing it over, and unpersist it after.
     */
   def sessionCommit(traces: Dataset[TraceRow],
       gapSeconds: Long = 30L,
@@ -90,17 +91,19 @@ object StreamingEtl {
         GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Micro-batch path: run the batch core once per micro-batch and
-    * hand the (transactions, contracts) pair to the sink callback. The
-    * pair reads persisted commits ([[TraceEtl.withCommits]]), so each
-    * action the callback takes costs no re-scan of the batch.
+  /** Micro-batch path: hand each micro-batch's committed
+    * (transactions, contracts) pair ([[TraceEtl.transform]]) to the
+    * sink callback. Nothing is persisted: each action the callback
+    * takes re-runs the commit over the batch, so a sink should take
+    * one (`App.sinkCommits` does).
     */
   def microBatchCommit(rawTraces: DataFrame,
       sink: (Dataset[TransactionOut], Dataset[ContractOut], Long) => Unit) = {
     rawTraces.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        TraceEtl.withCommits(batch)((txs, contracts) => sink(txs, contracts, id))
+        val (txs, contracts) = TraceEtl.transform(batch)
+        sink(txs, contracts, id)
       }
   }
 
@@ -113,9 +116,14 @@ object StreamingEtl {
     */
   def dedupContracts(contracts: DataFrame): DataFrame =
     contracts
-      .withColumn("_sig_key", concat_ws(",", col("function_signatures")))
+      .withColumn("_sig_key", sigKey)
       .dropDuplicates("chain_id", "address", "_sig_key")
       .drop("_sig_key")
+
+  /** The function-signature part of a contract's dedup key: the
+    * signatures comma-joined, as the sink renders them.
+    */
+  def sigKey: Column = concat_ws(",", col("function_signatures"))
 
   /** D3 with bounded state: streaming dedup whose seen-set expires
     * with the watermark — the answer to the reference's
@@ -127,7 +135,7 @@ object StreamingEtl {
   def dedupContractsWithinWatermark(contracts: DataFrame,
       eventTimeCol: String, delay: String): DataFrame =
     contracts
-      .withColumn("_sig_key", concat_ws(",", col("function_signatures")))
+      .withColumn("_sig_key", sigKey)
       .withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark("chain_id", "address", "_sig_key")
       .drop("_sig_key")

@@ -80,7 +80,12 @@ class AppSpec extends SparkSpec {
     } finally node.stop(0)
   }
 
-  test("sinkCommits stats: results are the upserted rows, latest block the batch max") {
+  /** One batch for the sink tests: three ZK transactions (two in block
+    * 9) and one plain one, which the prune drops. Returns the raw rows
+    * and the rows the sink takes: the transactions plus the deduped
+    * contracts.
+    */
+  private def statsBatch(): (org.apache.spark.sql.DataFrame, Long) = {
     import spark.implicits._
     import SinkFixtures.{tx, zkCallee, plainCallee}
     val raw = SinkFixtures.decoded((
@@ -89,15 +94,51 @@ class AppSpec extends SparkSpec {
     val (txs, contracts) = graft.operators.TraceEtl.transform(raw)
     val deduped = graft.streaming.StreamingEtl.dedupContracts(contracts.toDF()).count()
     assert(txs.count() == 3 && contracts.count() > deduped) // the dedup has work to do
-    val expected = txs.count() + deduped
+    (raw, txs.count() + deduped)
+  }
+
+  test("sinkCommits stats: results are the upserted rows, latest block the batch max") {
+    val (raw, expected) = statsBatch()
     val url = SinkFixtures.derbySink("statsdb")
     for (sinks <- Seq(App.Sinks(Some(url), dialect = "derby"), App.Sinks(None))) {
-      graft.operators.TraceEtl.withCommits(raw)((t, c) =>
-        App.sinkCommits(t.toDF(), c.toDF(), sinks, 5L))
+      val (t, c) = graft.operators.TraceEtl.transform(raw)
+      App.sinkCommits(t.toDF(), c.toDF(), sinks, 5L)
       assert(sinks.stats.snapshot("results_5") == expected, sinks.jdbcUrl)
       // non-ZK transactions are pruned: block 30 never reaches the sink
       assert(sinks.stats.snapshot("latest_transaction_block_5") == 9L, sinks.jdbcUrl)
     }
+    assert(SinkFixtures.sunkRows(url) == expected)
+  }
+
+  test("sinkCommits is one Spark action: both tables and the stats in one SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (raw, expected) = statsBatch()
+    val url = SinkFixtures.derbySink("oneactiondb")
+    val group = "sinkCommits-one-action"
+    // an action is one SQL execution; every job it runs (broadcasts and
+    // adaptive query stages included) carries that execution's id
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(executions.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (sinks <- Seq(App.Sinks(Some(url), dialect = "derby"), App.Sinks(None))) {
+        // the commits are not persisted: the one action runs them
+        val (t, c) = graft.operators.TraceEtl.transform(raw)
+        executions.clear()
+        spark.sparkContext.setJobGroup(group, "one sinkCommits call")
+        try App.sinkCommits(t.toDF(), c.toDF(), sinks, 5L)
+        finally spark.sparkContext.clearJobGroup()
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+        assert(executions.size == 1, s"${sinks.jdbcUrl}: SQL executions $executions")
+        assert(sinks.stats.snapshot("results_5") == expected, sinks.jdbcUrl)
+        assert(sinks.stats.snapshot("latest_transaction_block_5") == 9L, sinks.jdbcUrl)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(SinkFixtures.sunkRows(url) == expected)
   }
 }

@@ -332,6 +332,50 @@ class SinkSpec extends SparkSpec {
     c1.close()
   }
 
+  test("upsertTagged: one transaction per partition across tables; a failed " +
+      "partition leaves none of its rows, re-delivery lands each row once") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val url = "jdbc:derby:memory:atomicdb;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    conn.createStatement().execute(
+      """CREATE TABLE atx ("chain_id" BIGINT, "hash" VARCHAR(100), PRIMARY KEY ("chain_id", "hash"))""")
+    conn.createStatement().execute(
+      """CREATE TABLE aco ("chain_id" BIGINT, "address" VARCHAR(100), "degree" BIGINT, """ +
+        """PRIMARY KEY ("chain_id", "address"), CONSTRAINT degree_ok CHECK ("degree" < 99))""")
+    conn.close()
+    val specs = Seq(
+      UpsertSpec("atx", Seq("chain_id", "hash"), Seq("chain_id", "hash"), DoNothing),
+      UpsertSpec("aco", Seq("chain_id", "address", "degree"), Seq("chain_id", "address"), DoNothing))
+    val schema = new StructType().add("table", IntegerType)
+      .add("atx", new StructType().add("chain_id", LongType).add("hash", StringType))
+      .add("aco", new StructType().add("chain_id", LongType).add("address", StringType)
+        .add("degree", LongType))
+    def txRow(h: String) = Row(0, Row(1L, h), null)
+    def coRow(a: String, degree: Long) = Row(1, null, Row(1L, a, degree))
+    // one partition each; the second's last contract breaks the CHECK
+    // after its transactions and first contract were executed
+    val parts = Seq(
+      Seq(txRow("0xa"), coRow("0xca", 1L)),
+      Seq(txRow("0xb"), txRow("0xc"), coRow("0xcb", 1L), coRow("0xcc", 99L)))
+    val tagged = spark.createDataFrame(
+      spark.sparkContext.parallelize(parts, parts.size).flatMap(identity), schema)
+    assert(tagged.rdd.getNumPartitions == 2)
+    val failed = intercept[Exception](JdbcUpsert.upsertTagged(tagged, url, specs, "derby", batchSize = 1))
+    assert(failed.getMessage.contains("DEGREE_OK"), failed.getMessage)
+    def rows(table: String, column: String) = SinkFixtures.column(url, table, column).sorted
+    // the failed partition rolled back its transactions with its contracts
+    assert(rows("atx", "hash").intersect(Seq("0xb", "0xc")).isEmpty)
+    assert(!rows("aco", "address").contains("0xcb"))
+
+    // re-deliver into a table that accepts the row
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().execute("ALTER TABLE aco DROP CONSTRAINT degree_ok") finally c.close()
+    assert(JdbcUpsert.upsertTagged(tagged, url, specs, "derby") == 6L)
+    assert(rows("atx", "hash") == Seq("0xa", "0xb", "0xc"))
+    assert(rows("aco", "address") == Seq("0xca", "0xcb", "0xcc"))
+  }
+
   test("postgres dialect SQL shape") {
     val spec = UpsertSpec("contracts", Seq("chain_id", "address", "sigs"),
       Seq("chain_id", "address"), DoNothing)

@@ -153,8 +153,10 @@ class RobustnessSpec extends SparkSpec {
     try {
       mem.addData(staged)
       q.processAllAvailable()
-      // the prune's semi-join reads the batch twice; every further read
-      // is the commit re-running for one more sink action
+      // the prune's semi-join reads the batch twice. Nothing is
+      // persisted, so any further read is the one sink action failing
+      // to share the commit's exchanges between its two tables' branches
+      // (or a second action re-running the commit)
       val scanned = q.recentProgress.map(_.numInputRows).sum
       assert(scanned > 0 && scanned <= 2 * staged.size,
         s"scanned $scanned rows for ${staged.size} staged")
