@@ -42,6 +42,7 @@ object ProbeMain {
         new org.apache.spark.scheduler.SparkListener {
           private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
           private val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+          private val runOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
           private val executionSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
           override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
             case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
@@ -63,8 +64,10 @@ object ProbeMain {
               .flatMap(k => Option(p.getProperty(k))).find(_.trim.nonEmpty)
             desc.put(j.jobId, site.orElse(named).getOrElse(
               j.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")))
-            Option(p.getProperty(RunProperty))
-              .foreach(jobsPerRun.updateWith(_)(c => Some(c.getOrElse(0) + 1)))
+            Option(p.getProperty(RunProperty)).foreach { run =>
+              runOf.put(j.jobId, run)
+              jobsPerRun.updateWith(run)(c => Some(c.getOrElse(0) + 1))
+            }
           }
           override def onJobEnd(
               j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -72,7 +75,8 @@ object ProbeMain {
             // a streaming job's description spans lines ("\nid = …\nrunId
             // = …\nbatch = …"): keep each job on its one line
             val d = desc.getOrDefault(j.jobId, "").trim.replaceAll("\\s+", " ").take(120)
-            println(f"  [job ${j.jobId}%3d] ${dt}%6.3f s  $d")
+            val run = Option(runOf.remove(j.jobId)).fold("")(r => s"[$r]  ")
+            println(f"  [job ${j.jobId}%3d] ${dt}%6.3f s  $run$d")
           }
         })
     graft.functions.GraftFunctions.register(spark)
@@ -89,10 +93,14 @@ object ProbeMain {
     if (!sys.env.contains("SPARK_GRAFT_PROBE_NOWARM") &&
         new java.io.File(warmDir).isDirectory && warmDir != dir) {
       val t0w = System.nanoTime()
-      SparkEntry.queries.values.foreach { fn =>
+      // each warm-up entry tags its jobs as `warmup <entry>`: a warm-up
+      // job's call site is this loop's save(), which names no entry
+      SparkEntry.queries.foreach { case (name, fn) =>
+        spark.sparkContext.setLocalProperty(RunProperty, s"warmup $name")
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
+      spark.sparkContext.setLocalProperty(RunProperty, null)
       Queries.clearCaches()
       println(f"[probe] sf0.001 catalog warmup: ${(System.nanoTime() - t0w) / 1e9}%.1f s (unmeasured)")
     }

@@ -222,8 +222,9 @@ private[graft] object AnnEntries {
       .select(col("query_id"), col("neighbor_id"),
         col("score").as("score_x1e6"), col("rank"))
   }
-  // PERSISTED IVF INDEX SERVE — the FIFTH persistence seam: the IVF
-  // index (centroids + per-cell assignment lists, the artifact every
+  // PERSISTED IVF INDEX SERVE — the fifth persistence seam: the plain
+  // form of the one persisted ANN index (SimilarityOps.AnnIndex:
+  // centroids + per-cell assignment lists, the artifact every
   // production vector store builds once and probes many times) is
   // staged per embeddings fingerprint through the shared seam
   // contract (tableKey + stageOnce: atomic publish, _SUCCESS, never
@@ -232,17 +233,17 @@ private[graft] object AnnEntries {
   // to q_ann_ivf_topk's: "the persisted index serves bit-identically
   // to the in-session build+serve" is the hash-compared surface.
   private[graft] def ivfIndexStaged(s: SparkSession, dir: String): String =
-    // _v2: assignment lists carry the label attribute so filtered
-    // serves can push predicates into the persisted scan (the seam
-    // contract's layout-change rule: bump the version literal)
-    graft.sources.Staging.staged("graft_ivf_index_v2", dir,
+    // assignment lists carry the label attribute so filtered serves
+    // can push predicates into the persisted scan (the seam contract's
+    // layout-change rule: bump the version literal)
+    graft.sources.Staging.staged("graft_ivf_index_v3", dir,
         Seq("embeddings")) { tmp =>
-      graft.llm.SimilarityOps.saveIvfIndex(
-        graft.llm.SimilarityOps.buildIvfIndexWithAttrs(
-          embT(s, dir), "vec_id", "embedding", Seq("label")), tmp)
+      graft.llm.SimilarityOps.saveAnnIndex(
+        graft.llm.SimilarityOps.buildIvfIndex(
+          embT(s, dir), "vec_id", "embedding", attrCols = Seq("label")), tmp)
     }
   private val annIndexServe: Q = (s, dir) => {
-    val ix = graft.llm.SimilarityOps.loadIvfIndex(s, ivfIndexStaged(s, dir))
+    val ix = graft.llm.SimilarityOps.loadAnnIndex(s, ivfIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfServeTopK(ix,
         embT(s, dir).filter(col("vec_id") < 20), "vec_id", "embedding", 5,
         score = graft.llm.SimilarityOps.quantizedCosineX1e6)
@@ -262,7 +263,7 @@ private[graft] object AnnEntries {
   // inherent cells-laid-out-unfiltered recall tradeoff, which the
   // scaladoc and spec document rather than hide.
   private val annFilteredServe: Q = (s, dir) => {
-    val ix = graft.llm.SimilarityOps.loadIvfIndex(s, ivfIndexStaged(s, dir))
+    val ix = graft.llm.SimilarityOps.loadAnnIndex(s, ivfIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfServeFilteredTopK(ix,
         embT(s, dir).filter(col("vec_id") < 20), "vec_id", "embedding", 5,
         predicate = col("label") % 4 =!= 0, nprobe = 8,
@@ -307,7 +308,7 @@ private[graft] object AnnEntries {
   // INCREMENTAL IVF INDEX UPDATE — the corpus APPENDS between
   // rebuilds (VERDICT r15 #5): the staged artifact is built over 75%
   // of the corpus (vec_id % 4 != 0), then the remaining 25% is
-  // APPENDED through SimilarityOps.appendToIvfIndex — assigned to the
+  // APPENDED through SimilarityOps.appendToAnnIndex — assigned to the
   // EXISTING centroids, assignment rows appended to assign/ in place
   // (the banded-projection append-only contract applied to ANN;
   // centroids/ immutable between rebuilds). The entry serves from the
@@ -317,18 +318,18 @@ private[graft] object AnnEntries {
   // serve-over-rebuilt" is the hash-compared surface. Recall drift vs
   // fresh centroids is measured separately (r16 drift curve, COVERAGE).
   private def ivfUpdatedIndexStaged(s: SparkSession, dir: String): String =
-    graft.sources.Staging.staged("graft_ivf_index_upd_v1", dir,
+    graft.sources.Staging.staged("graft_ivf_index_upd_v2", dir,
         Seq("embeddings")) { tmp =>
       val So = graft.llm.SimilarityOps
-      So.saveIvfIndex(So.buildIvfIndex(
+      So.saveAnnIndex(So.buildIvfIndex(
         embT(s, dir).filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding"), tmp)
-      So.appendToIvfIndex(s, tmp,
+      So.appendToAnnIndex(s, tmp,
         embT(s, dir).filter(col("vec_id") % 4 === 0),
         "vec_id", "embedding")
     }
   private val annIndexUpdate: Q = (s, dir) => {
-    val ix = graft.llm.SimilarityOps.loadIvfIndex(s,
+    val ix = graft.llm.SimilarityOps.loadAnnIndex(s,
       ivfUpdatedIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfServeTopK(ix,
         embT(s, dir).filter(col("vec_id") < 20), "vec_id", "embedding", 5,
@@ -373,7 +374,7 @@ private[graft] object AnnEntries {
   // DRIFT-GATED IVF REBUILD (VERDICT r16 #3 — make something CONSUME
   // the r16 drift finding, COVERAGE): q_ann_index_update appends forever
   // against immutable centroids; here every incoming batch is
-  // measured first (SimilarityOps.ivfUpdateDecision — the batch's max
+  // measured first (SimilarityOps.annGatedUpdate — the batch's max
   // single-cell share under the EXISTING centroids, a counter-sized
   // stat the append's own assignment pass computes for free) and the
   // gate picks append vs REBUILD-with-fresh-centroids; the decision
@@ -391,11 +392,11 @@ private[graft] object AnnEntries {
   // neighbors (append vs rebuild serve differently by construction).
   private def ivfGatedIndexStaged(s: SparkSession, dir: String,
       regime: String): String =
-    graft.sources.Staging.staged(s"graft_ivf_gated_${regime}_v1", dir,
+    graft.sources.Staging.staged(s"graft_ivf_gated_${regime}_v2", dir,
         Seq("embeddings")) { tmp =>
       val So = graft.llm.SimilarityOps
       val emb = embT(s, dir)
-      So.saveIvfIndex(So.buildIvfIndex(
+      So.saveAnnIndex(So.buildIvfIndex(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
       val batch =
         if (regime == "drift") {
@@ -408,14 +409,14 @@ private[graft] object AnnEntries {
             .select(col("vec_id"), col("demb").as("embedding"))
         } else emb.filter(col("vec_id") % 4 === 0)
           .select("vec_id", "embedding")
-      So.ivfGatedUpdate(s, tmp, batch, "vec_id", "embedding")
+      So.annGatedUpdate(s, tmp, batch, "vec_id", "embedding")
     }
   private val annIndexRebuild: Q = (s, dir) => {
     val So = graft.llm.SimilarityOps
     def one(regime: String) = {
       val root = ivfGatedIndexStaged(s, dir, regime)
-      val ix = So.loadIvfIndex(s, root)
-      val drift = So.loadIvfDrift(s, root).head() // exactly one update
+      val ix = So.loadAnnIndex(s, root)
+      val drift = So.loadAnnDrift(s, root).head() // exactly one update
       // queries = the regime corpus's own rows (the drifted batch
       // queries with its drifted vectors), read from the index itself
       val queries = ix.assignments.filter(col("neighbor_id") < 20)
@@ -754,31 +755,32 @@ private[graft] object AnnEntries {
       emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", 5)
   }
 
-  // PERSISTED IVF-PQ INDEX SERVE — the SEVENTH persistence seam
-  // (build-once/serve-many for the COMPRESSED family): the coarse
-  // centroids, PQ codebook, coded corpus rows and the full-width
-  // refine store are staged once per embeddings fingerprint
-  // (SimilarityOps.buildPqIndex/savePqIndex through the shared seam
-  // contract) and the entry serves rerank=32 → top-5 from the LOADED
-  // index — the per-run corpus encode of the fused entries never
-  // runs at query time. Oracle is IDENTICAL to q_ann_ivfpq_rerank's:
-  // "the persisted coded index serves bit-identically to the
-  // in-session build+refine" is the hash-compared surface.
+  // PERSISTED IVF-PQ INDEX SERVE — the coded form of the one persisted
+  // ANN index (build-once/serve-many for the COMPRESSED family, the
+  // seventh persistence seam): the coarse centroids, PQ codebook, coded
+  // corpus rows and the full-width refine store are staged once per
+  // embeddings fingerprint (SimilarityOps.buildPqIndex/saveAnnIndex
+  // through the shared seam contract) and the entry serves rerank=32 →
+  // top-5 from the LOADED index — the per-run corpus encode of the
+  // fused entries never runs at query time. Oracle is IDENTICAL to
+  // q_ann_ivfpq_rerank's: "the persisted coded index serves
+  // bit-identically to the in-session build+refine" is the
+  // hash-compared surface.
   private def pqIndexStaged(s: SparkSession, dir: String): String =
-    // _v2: coded rows carry the label attribute (filtered serves push
+    // coded rows carry the label attribute (filtered serves push
     // predicates into the persisted scan) and the per-row encoding
     // error + meta baseline (the drift gate's stats) — the seam
     // contract's layout-change rule: bump the version literal
-    graft.sources.Staging.staged("graft_pq_index_v2", dir,
+    graft.sources.Staging.staged("graft_pq_index_v3", dir,
         Seq("embeddings")) { tmp =>
-      graft.llm.SimilarityOps.savePqIndex(
+      graft.llm.SimilarityOps.saveAnnIndex(
         graft.llm.SimilarityOps.buildPqIndex(
           embT(s, dir), "vec_id", "embedding",
           attrCols = Seq("label")), tmp)
     }
   private val annIvfPqServe: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
-    val ix = graft.llm.SimilarityOps.loadPqIndex(s, pqIndexStaged(s, dir))
+    val ix = graft.llm.SimilarityOps.loadAnnIndex(s, pqIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfPqServeTopK(ix,
       embT(s, dir).coalesce(4).filter(col("vec_id") < 20),
       "vec_id", "embedding", 5, rerank = Some(32))
@@ -851,11 +853,12 @@ private[graft] object AnnEntries {
       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) <= 5""".stripMargin
 
   // ---------------------------------------------------------------
-  // IVF-PQ index MAINTENANCE (r18, VERDICT r17 #4/#5): the seventh
-  // seam stops being build-once — incremental append under the
-  // existing model, a drift gate with the PQ-specific failure mode
-  // (encoding-error growth against the build-time baseline), and a
-  // filtered serve pushing the predicate below the coded scan.
+  // IVF-PQ index MAINTENANCE (r18, VERDICT r17 #4/#5): the coded
+  // index goes through the one index's maintenance path — incremental
+  // append under the existing model, the drift gate with its
+  // PQ-specific axis (encoding-error growth against the build-time
+  // baseline), and a filtered serve pushing the predicate below the
+  // coded scan.
   // ---------------------------------------------------------------
 
   // Parametrized DuckDB mirror of one IVF-PQ model + ADC serve: the
@@ -918,7 +921,7 @@ private[graft] object AnnEntries {
   // INCREMENTAL PQ-INDEX UPDATE — the staged artifact is built over
   // 75% of the corpus (vec_id % 4 != 0: coarse centroids, codebook,
   // coded rows, refine store, the frozen qerr baseline), then the
-  // remaining 25% APPENDS through SimilarityOps.appendToPqIndex —
+  // remaining 25% APPENDS through SimilarityOps.appendToAnnIndex —
   // encoded under the EXISTING model, coded+refine rows appended in
   // place. The ORACLE picks the model from the BASE subset but codes
   // the WHOLE corpus — i.e. it IS the rebuilt-with-same-model index —
@@ -926,19 +929,19 @@ private[graft] object AnnEntries {
   // hash-compared surface (the q_ann_index_update story on the
   // compressed family).
   private def pqUpdatedIndexStaged(s: SparkSession, dir: String): String =
-    graft.sources.Staging.staged("graft_pq_upd_v1", dir,
+    graft.sources.Staging.staged("graft_pq_upd_v2", dir,
         Seq("embeddings")) { tmp =>
       val So = graft.llm.SimilarityOps
-      So.savePqIndex(So.buildPqIndex(
+      So.saveAnnIndex(So.buildPqIndex(
         embT(s, dir).filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding"), tmp)
-      So.appendToPqIndex(s, tmp,
+      So.appendToAnnIndex(s, tmp,
         embT(s, dir).filter(col("vec_id") % 4 === 0),
         "vec_id", "embedding")
     }
   private val annPqIndexUpdate: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
-    val ix = graft.llm.SimilarityOps.loadPqIndex(s,
+    val ix = graft.llm.SimilarityOps.loadAnnIndex(s,
       pqUpdatedIndexStaged(s, dir))
     graft.llm.SimilarityOps.ivfPqServeTopK(ix,
       embT(s, dir).coalesce(4).filter(col("vec_id") < 20),
@@ -959,11 +962,11 @@ private[graft] object AnnEntries {
   // gate axis: a batch can spread across cells exactly like the
   // corpus (the coarse gate stays quiet) while a STALE CODEBOOK
   // quantizes its drifted vectors with exploding encoding error —
-  // silently degrading every later ADC serve. pqUpdateDecision
-  // measures BOTH stats from the append's own encode pass (max cell
-  // share, and the batch's total own-codes ADC error against the
-  // build-time baseline frozen in meta/); the gate rebuilds when
-  // either fires. Two regimes, branch AND both stats AND the served
+  // silently degrading every later ADC serve. The gated update
+  // (SimilarityOps.annGatedUpdate) measures BOTH stats from the
+  // append's own encode pass (max cell share, and the batch's total
+  // own-codes ADC error against the build-time baseline frozen in
+  // meta/); the gate rebuilds when either fires. Two regimes, branch AND both stats AND the served
   // neighbors hash-compared:
   //   iid:   the %4 split — spreads like the corpus, qerr ratio ~1x
   //          -> append; serve == rebuilt-same-model;
@@ -974,11 +977,11 @@ private[graft] object AnnEntries {
   //          hash-order model over the grown (scaled) corpus.
   private def pqGatedIndexStaged(s: SparkSession, dir: String,
       regime: String): String =
-    graft.sources.Staging.staged(s"graft_pq_gated_${regime}_v1", dir,
+    graft.sources.Staging.staged(s"graft_pq_gated_${regime}_v2", dir,
         Seq("embeddings")) { tmp =>
       val So = graft.llm.SimilarityOps
       val emb = embT(s, dir)
-      So.savePqIndex(So.buildPqIndex(
+      So.saveAnnIndex(So.buildPqIndex(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding"), tmp)
       val batch =
         if (regime == "drift")
@@ -987,7 +990,7 @@ private[graft] object AnnEntries {
               .as("embedding"))
         else emb.filter(col("vec_id") % 4 === 0)
           .select("vec_id", "embedding")
-      So.pqGatedUpdate(s, tmp, batch, "vec_id", "embedding")
+      So.annGatedUpdate(s, tmp, batch, "vec_id", "embedding")
     }
   private val annPqIndexRebuild: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
@@ -1032,7 +1035,7 @@ private[graft] object AnnEntries {
     // the branch this entry uniquely exercises (a fresh hash-order
     // model over the grown, scaled corpus)
     val (droot, driftDrift) = decision("drift")
-    val ix = So.loadPqIndex(s, droot)
+    val ix = So.loadAnnIndex(s, droot)
     // queries = the regime corpus's own rows read from the index's
     // refine store (the drifted batch queries with its drifted
     // vectors — the annIndexRebuild move)
@@ -1144,7 +1147,7 @@ private[graft] object AnnEntries {
   private val annIvfPqFilteredServe: Q = (s, dir) =>
     withSmallShuffle(s, dir, Seq("embeddings")) {
     val So = graft.llm.SimilarityOps
-    val ix = So.loadPqIndex(s, pqIndexStaged(s, dir))
+    val ix = So.loadAnnIndex(s, pqIndexStaged(s, dir))
     val queries = embT(s, dir).coalesce(4).filter(col("vec_id") < 20)
     val predBroad = col("label") % 4 =!= 0
     val predSel = col("neighbor_id") % 200 === 0

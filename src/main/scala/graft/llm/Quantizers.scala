@@ -14,13 +14,14 @@ import org.apache.spark.storage.StorageLevel
   * nondeterminism pinned:
   *
   *   - the training sample is the hash-order top-`trainSize` corpus
-  *     vectors (the same Knuth-multiplicative order the hash-order
-  *     defaults use — a deterministic pseudo-random sample,
-  *     reproducible across runs, engines, and partitionings), and
+  *     vectors (the serving defaults' own pick,
+  *     [[SimilarityOps.hashOrderPick]] — a deterministic pseudo-random
+  *     sample, reproducible across runs, engines, and partitionings), and
   *     FAISS-style training on a bounded sample is also what makes the
   *     cost shape scale-safe: the full corpus is never shuffled or
   *     iterated, only the sample is;
-  *   - vectors are floor(x·1000)-quantized longs; assignment uses the
+  *   - vectors are quantized by the serving path's own quantizer
+  *     ([[SimilarityOps.quantize]], floor(x·1000) longs); assignment uses the
   *     SAME exact-integer kernel the serving path uses
   *     ([[graft.functions.VecFunctions.nearest_cells_q]] for IVF,
   *     [[graft.functions.VecFunctions.pq_encode]] for PQ), so a vector
@@ -49,11 +50,11 @@ object Quantizers {
 
   private val V = graft.functions.VecFunctions
 
-  private def hashOrder(id: Column): Column =
-    id.bitwiseAND(lit(2147483647L)) * lit(2654435761L) % lit(1000000007L)
-
-  private def quantCol(c: Column): Column =
-    transform(c, x => floor(x.cast("double") * 1000).cast("long"))
+  /** Driver-side quantized centroids as a literal of the folded
+    * centroid row the serving kernels read positionally:
+    * (cell, cq, cnq) structs, cnq the squared norm. */
+  private def centroidLit(cents: Seq[(Long, Array[Long])]): Column =
+    typedlit(cents.map { case (cell, q) => (cell, q.toSeq, q.map(v => v * v).sum) })
 
   /** floats whose floor(x·1000) quantization is exactly `q` */
   private def exactFloats(q: Array[Long]): Array[Float] =
@@ -66,10 +67,8 @@ object Quantizers {
     */
   private def sampleQ(corpus: DataFrame, idCol: String, embCol: String,
       n: Int): DataFrame =
-    corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .orderBy(hashOrder(col("id")), col("id"))
-      .limit(n)
-      .select(col("id"), quantCol(col("emb")).as("q"))
+    SimilarityOps.hashOrderPick(corpus, idCol, embCol, n, "id", "emb")
+      .select(col("id"), SimilarityOps.quantize(col("emb")).as("q"))
 
   /** Element-wise floor-of-mean update, shared by both trainers: for
     * each (cluster, dim), floor(Σv / n) — with missing (cluster, dim)
@@ -116,17 +115,14 @@ object Quantizers {
     try {
       val seed =
         if (seeding == "hash")
-          sample.orderBy(hashOrder(col("id")), col("id")).limit(k)
+          sample.orderBy(SimilarityOps.hashOrder(col("id")), col("id")).limit(k)
             .select(col("q")).as[Array[Long]].collect()
         else maximinSeed(sample, k)
       var cents: Array[(Long, Array[Long])] =
         seed.zipWithIndex.map { case (q, i) => (i.toLong, q) }
       var it = 0
       while (it < iters) {
-        // struct fields read positionally by the kernel: (cell, cq, cnq)
-        val centsLit = typedlit(cents.toSeq.map { case (cell, q) =>
-          (cell, q.toSeq, q.map(v => v * v).sum)
-        })
+        val centsLit = centroidLit(cents.toSeq)
         val update = sample
           .select(element_at(V.nearest_cells_q(col("q"), centsLit, 1), 1).as("cell"),
             posexplode(col("q")))
@@ -241,14 +237,12 @@ object Quantizers {
     require(trainSize >= ksub, s"trainSize ($trainSize) must be >= ksub ($ksub)")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cents = centroids.select(col("cell").cast("long"), col("centroid"))
-      .as[(Long, Array[Float])].collect()
+    val cents = centroids.select(col("cell").cast("long"),
+        SimilarityOps.quantize(col("centroid")))
+      .as[(Long, Array[Long])].collect()
     if (cents.isEmpty)
       return Seq.empty[(Long, Array[Float])].toDF("cid", "cvec")
-    val centsLit = typedlit(cents.toSeq.map { case (cell, v) =>
-      val q = v.map(x => math.floor(x.toDouble * 1000).toLong)
-      (cell, q.toSeq, q.map(x => x * x).sum)
-    })
+    val centsLit = centroidLit(cents.toSeq)
     val residuals = sampleQ(corpus, idCol, embCol, trainSize)
       .select(col("id"),
         V.residual_q(col("q"), centsLit,

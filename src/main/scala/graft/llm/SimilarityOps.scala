@@ -11,8 +11,57 @@ import org.apache.spark.sql.functions._
   * the pair space is per-bucket; [[bruteForceTopK]] is the exact
   * baseline (query-set × corpus, corpus side broadcast-friendly when
   * the query set is small, never corpus × corpus).
+  *
+  * Every engine-exact form shares ONE vector quantizer ([[quantize]],
+  * floor(x·1000) as a long), ONE deterministic model pick
+  * ([[hashOrderPick]]) and ONE folded centroid row ([[centroidRow]]),
+  * so no two operators can quantize or sample differently. The IVF and
+  * IVF-PQ indexes are ONE persisted type, [[AnnIndex]] — a compressed
+  * index is the same index with a codebook and coded rows — with one
+  * save/load, one append, one drift-gated update and one drift reader;
+  * [[ivfServeTopK]] (exact) and [[ivfPqServeTopK]] (ADC) are its two
+  * serve algorithms.
   */
 object SimilarityOps {
+
+  /** The vector quantizer every ANN operator and trainer shares: each
+    * component x becomes floor(x·1000) as a long — a single
+    * correctly-rounded multiply and a floor, so an external SQL engine
+    * reproduces it bit-for-bit. */
+  private[llm] def quantize(v: Column): Column =
+    transform(v, x => floor(x.cast("double") * 1000).cast("long"))
+
+  /** floor(10^6 · dot / √(na·nb)) from a quantized dot product and the
+    * two squared norms; zero-norm vectors score 0. */
+  private def qcosX1e6(dot: Column, na: Column, nb: Column): Column =
+    when(na === 0 || nb === 0, 0L).otherwise(
+      floor(dot.cast("double") * lit(1e6) / sqrt((na * nb).cast("double")))
+        .cast("long"))
+
+  /** Each row's quantized vector and its squared norm as
+    * (`idAs`, `qAs`, `nqAs`) — computed once per row, not per pair. */
+  private def quantNormed(df: DataFrame, idCol: String, embCol: String,
+      idAs: String, qAs: String, nqAs: String): DataFrame =
+    df.select(col(idCol).as(idAs), quantize(col(embCol)).as(qAs))
+      .select(col(idAs), col(qAs),
+        graft.functions.VecFunctions.dot_long(col(qAs), col(qAs)).as(nqAs))
+
+  /** The order every default model pick shares: an overflow-safe Knuth
+    * multiplicative hash of the id (the 31-bit mask keeps the multiply
+    * inside a Long for any id); callers break ties by id. */
+  private[llm] def hashOrder(id: Column): Column =
+    id.bitwiseAND(lit(2147483647L)) * lit(2654435761L) % lit(1000000007L)
+
+  /** The first `n` corpus rows in [[hashOrder]] as (`idAs`, `vecAs`): a
+    * deterministic pseudo-random sample, reproducible across runs,
+    * engines and partitionings (unlike limit() on an unordered frame).
+    * Plans as TakeOrderedAndProject — a distributed partial top-k, no
+    * count() pre-scan and no dense-id assumption. */
+  private[llm] def hashOrderPick(corpus: DataFrame, idCol: String,
+      embCol: String, n: Int, idAs: String, vecAs: String): DataFrame =
+    corpus.select(col(idCol).as(idAs), col(embCol).as(vecAs))
+      .orderBy(hashOrder(col(idAs)), col(idAs))
+      .limit(n)
 
   /** Exact integer dot product of two float vectors quantized with
     * floor(x*1000) — IEEE-identical across engines, used for
@@ -40,15 +89,9 @@ object SimilarityOps {
     * vectors score 0.
     */
   def quantizedCosineX1e6(a: Column, b: Column): Column = {
-    def q(c: Column) = transform(c, x => floor(x.cast("double") * 1000).cast("long"))
     val V = graft.functions.VecFunctions
-    val qa = q(a); val qb = q(b)
-    val dot = V.dot_long(qa, qb)
-    val na = V.dot_long(qa, qa)
-    val nb = V.dot_long(qb, qb)
-    when(na === 0 || nb === 0, 0L).otherwise(
-      floor(dot.cast("double") * lit(1e6) / sqrt((na * nb).cast("double")))
-        .cast("long"))
+    val qa = quantize(a); val qb = quantize(b)
+    qcosX1e6(V.dot_long(qa, qb), V.dot_long(qa, qa), V.dot_long(qb, qb))
   }
 
   /** Exact top-k neighbors of each query vector by `score` (a column
@@ -78,18 +121,12 @@ object SimilarityOps {
   def bruteForceTopKPortable(corpus: DataFrame, queries: DataFrame,
       idCol: String, embCol: String, k: Int): DataFrame = {
     val V = graft.functions.VecFunctions
-    val quant = transform(col(embCol), x => floor(x.cast("double") * 1000).cast("long"))
-    def base(df: DataFrame, idAs: String, qAs: String, nqAs: String) =
-      df.select(col(idCol).as(idAs), quant.as(qAs))
-        .select(col(idAs), col(qAs), V.dot_long(col(qAs), col(qAs)).as(nqAs))
-    val q = base(queries, "query_id", "qq", "nq1")
-    val c = base(corpus, "neighbor_id", "cq", "nq2")
+    val q = quantNormed(queries, idCol, embCol, "query_id", "qq", "nq1")
+    val c = quantNormed(corpus, idCol, embCol, "neighbor_id", "cq", "nq2")
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        when(col("nq1") === 0 || col("nq2") === 0, 0L)
-          .otherwise(floor(V.dot_long(col("qq"), col("cq")).cast("double") * lit(1e6) /
-            sqrt((col("nq1") * col("nq2")).cast("double"))).cast("long"))
+        qcosX1e6(V.dot_long(col("qq"), col("cq")), col("nq1"), col("nq2"))
           .as("score_x1e6"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score_x1e6").desc, col("neighbor_id").asc)
@@ -105,8 +142,7 @@ object SimilarityOps {
     * count) so the op is hash-comparable.
     */
   def int8QuantStats(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    val q = transform(col(embCol), x => floor(x.cast("double") * 1000).cast("long"))
-    val base = df.select(col(idCol), q.as("q"))
+    val base = df.select(col(idCol), quantize(col(embCol)).as("q"))
       .select(col(idCol), col("q"),
         array_max(transform(col("q"), v => abs(v))).as("max_q"))
     val codes = transform(col("q"), v =>
@@ -172,9 +208,8 @@ object SimilarityOps {
     */
   def lshTopKPortable(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, k: Int, planes: Int = 6, tables: Int = 4): DataFrame = {
-    val quant = transform(col(embCol), x => floor(x.cast("double") * 1000).cast("long"))
     def banded(df: DataFrame, idAs: String, qAs: String): DataFrame =
-      df.select(col(idCol).as(idAs), quant.as(qAs))
+      df.select(col(idCol).as(idAs), quantize(col(embCol)).as(qAs))
         .select(col(idAs), col(qAs),
           posexplode(array((0 until tables).map(tbl =>
             portableBucket(col(qAs), planes, tbl)): _*)))
@@ -186,11 +221,8 @@ object SimilarityOps {
       // score BEFORE dedup (see cosineNearDupPairs: the dedup aggregate
       // keeps the dot from being re-evaluated inside the rank window)
       .select(col("query_id"), col("neighbor_id"),
-        when(V.dot_long(col("qq"), col("qq")) === 0 ||
-             V.dot_long(col("cq"), col("cq")) === 0, 0L)
-          .otherwise(floor(V.dot_long(col("qq"), col("cq")).cast("double") * lit(1e6) /
-            sqrt((V.dot_long(col("qq"), col("qq")) *
-              V.dot_long(col("cq"), col("cq"))).cast("double"))).cast("long"))
+        qcosX1e6(V.dot_long(col("qq"), col("cq")),
+          V.dot_long(col("qq"), col("qq")), V.dot_long(col("cq"), col("cq")))
           .as("score_x1e6"))
       .dropDuplicates("query_id", "neighbor_id")
     val w = Window.partitionBy("query_id")
@@ -215,10 +247,7 @@ object SimilarityOps {
   def cosineNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
       tNum: Long = 3, tDen: Long = 10,
       planes: Int = 6, tables: Int = 4): DataFrame = {
-    val q = transform(col(embCol), x => floor(x.cast("double") * 1000).cast("long"))
-    val base = corpus.select(col(idCol).as("id"), q.as("q"))
-      .select(col("id"), col("q"),
-        graft.functions.VecFunctions.dot_long(col("q"), col("q")).as("nq"))
+    val base = quantNormed(corpus, idCol, embCol, "id", "q", "nq")
     val banded = base.select(col("id"), col("q"), col("nq"),
         posexplode(array((0 until tables).map(tbl =>
           portableBucket(col("q"), planes, tbl)): _*)))
@@ -305,78 +334,101 @@ object SimilarityOps {
     ivfServeTopK(buildIvfIndex(corpus, idCol, embCol, nlist, centroids),
       queries, idCol, embCol, k, nprobe, score)
 
-  /** A built IVF index — the train-once / serve-many artifact every
-    * production vector store persists: `centroids` (cell, centroid)
-    * is model-sized (nlist·d floats); `assignments` (neighbor_id,
-    * emb, cell) is the corpus partitioned into cells, corpus-sized
-    * multi-part parquet on disk. Serving from a loaded index skips
-    * the assignment pass entirely — the probe-side work is all that
-    * remains, which is what makes build-once/probe-many the right
-    * shape at 100 TB (re-assigning the corpus per query batch would
-    * re-scan everything). */
-  case class IvfIndex(centroids: DataFrame, assignments: DataFrame)
+  /** ONE ANN index, exact or compressed — the train-once / serve-many
+    * artifact every production vector store persists:
+    *
+    *  - `centroids` (cell, centroid): the coarse quantizer, model-sized
+    *    (nlist·d floats);
+    *  - `codebook` (cid, cvec): the PQ codebook when the index is CODED
+    *    (IVF-PQ, [[buildPqIndex]]); None for a plain IVF index
+    *    ([[buildIvfIndex]]);
+    *  - `assignments`: the corpus partitioned into cells, corpus-sized
+    *    multi-part parquet on disk — (neighbor_id, emb, cell), plus,
+    *    when coded, each row's m-int PQ `codes` and its `qerr` (its
+    *    ENCODING error, the own-codes ADC distance: the drift gate's
+    *    per-row stat), plus any `attrCols` carried for filtered
+    *    serves. The full-width `emb` is the refine store of a coded
+    *    index and what a rebuild reconstructs the corpus from;
+    *  - the geometry the index owns: `nlist` always; `m`, `ksub`,
+    *    `residual` when coded — so neither a serve nor a rebuild can
+    *    silently mismatch the build;
+    *  - `qerrSum`/`qerrRows`: a coded index's BUILD-time encoding-error
+    *    baseline, frozen between rebuilds (the reference a gated update
+    *    compares incoming batches against); -1 when the index is not
+    *    coded or was built in-session and never persisted.
+    *
+    * [[ivfServeTopK]] serves either form exactly; [[ivfPqServeTopK]]
+    * serves a coded one by ADC. Serving from a loaded index skips the
+    * assignment pass entirely — the probe-side work is all that
+    * remains, which is what makes build-once/probe-many the right shape
+    * at 100 TB (re-assigning the corpus per query batch would re-scan
+    * everything). */
+  case class AnnIndex(centroids: DataFrame, assignments: DataFrame,
+      nlist: Int, codebook: Option[DataFrame] = None, m: Int = 0,
+      ksub: Int = 0, residual: Boolean = false, qerrSum: Long = -1L,
+      qerrRows: Long = -1L)
 
-  private def quant1000(c: Column): Column =
-    transform(c, x => floor(x.cast("double") * 1000).cast("long"))
-
-  /** All nlist centroids folded into one array row; BNL-joining this
-    * single row broadcasts it to every partition without exploding
-    * either side ×nlist. The agg consumes orderBy+limit DIRECTLY so
-    * default centroid selection keeps planning as
-    * TakeOrderedAndProject (a projection in between gets pushed
-    * through the limit and degrades it to a full global sort);
-    * quantization + norming then run once, on the single aggregated
-    * row, before broadcast. */
-  private def centArrOf(cents: DataFrame): DataFrame = {
+  /** All centroids folded into ONE array row of (cell, cq, cnq) — the
+    * quantized centroid and its squared norm. BNL-joining this single
+    * row broadcasts it to every partition without exploding either side
+    * ×nlist. The agg consumes orderBy+limit DIRECTLY so default
+    * centroid selection keeps planning as TakeOrderedAndProject (a
+    * projection in between gets pushed through the limit and degrades
+    * it to a full global sort); quantization + norming then run once,
+    * on the single aggregated row, before broadcast. Array order never
+    * matters: nearest_cells_q tie-breaks on the cell VALUE. */
+  private def centroidRow(cents: DataFrame): DataFrame = {
     val V = graft.functions.VecFunctions
     cents
       .agg(collect_list(struct(col("cell"), col("centroid"))).as("raw"))
       .select(transform(col("raw"), c => {
-        val cq = quant1000(c("centroid"))
+        val cq = quantize(c("centroid"))
         struct(c("cell").cast("long").as("cell"), cq.as("cq"),
           V.dot_long(cq, cq).as("cnq"))
       }).as("cents"))
   }
 
-  /** Build the IVF index: pick/accept centroids, then the map-only
+  /** `rows` joined with the corpus's `attrCols` on the id, so filtered
+    * serves can push their predicates into the persisted assignment
+    * scan. */
+  private def withAttrs(rows: DataFrame, corpus: DataFrame, idCol: String,
+      attrCols: Seq[String]): DataFrame =
+    if (attrCols.isEmpty) rows
+    else rows.join(corpus.select(
+      (col(idCol).as("neighbor_id") +: attrCols.map(col)): _*), "neighbor_id")
+
+  /** Build a plain IVF index: pick/accept centroids, then the map-only
     * assignment pass (each corpus vector → nearest centroid; one
     * codegen'd kernel call per row, no corpus×nlist explode, no
-    * shuffle). */
+    * shuffle). `attrCols` rides into the assignment rows. */
   def buildIvfIndex(corpus: DataFrame, idCol: String, embCol: String,
-      nlist: Int = 16, centroids: Option[DataFrame] = None): IvfIndex = {
+      nlist: Int = 16, centroids: Option[DataFrame] = None,
+      attrCols: Seq[String] = Nil): AnnIndex = {
     val V = graft.functions.VecFunctions
-    val cents = centroids.getOrElse {
-      // hash order, id tie-break: reproducible across runs, engines,
-      // and partitionings (unlike limit() on an unordered frame); the
-      // 31-bit mask keeps the multiply inside a Long for any id
-      corpus.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-        .orderBy(col("cell").bitwiseAND(lit(2147483647L)) * lit(2654435761L)
-          % lit(1000000007L), col("cell"))
-        .limit(nlist)
-    }
+    val cents = centroids.getOrElse(
+      hashOrderPick(corpus, idCol, embCol, nlist, "cell", "centroid"))
     val assigned = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("emb"))
-      .crossJoin(broadcast(centArrOf(cents)))
+      .crossJoin(broadcast(centroidRow(cents)))
       .select(col("neighbor_id"), col("emb"),
-        element_at(V.nearest_cells_q(quant1000(col("emb")), col("cents"), 1), 1)
+        element_at(V.nearest_cells_q(quantize(col("emb")), col("cents"), 1), 1)
           .as("cell"))
-    IvfIndex(cents, assigned)
+    AnnIndex(cents, withAttrs(assigned, corpus, idCol, attrCols), nlist)
   }
 
-  /** Serve top-k from a (possibly loaded-from-disk) IVF index: each
-    * query probes its `nprobe` nearest cells and exact-ranks only
-    * those cells' members. Identical results to [[ivfTopK]] — the
-    * batch entry IS build + serve — so a persisted index serves
-    * bit-identically to an in-session one. */
-  def ivfServeTopK(index: IvfIndex, queries: DataFrame, idCol: String,
+  /** Serve top-k from a (possibly loaded-from-disk) index: each query
+    * probes its `nprobe` nearest cells and exact-ranks only those
+    * cells' members. Identical results to [[ivfTopK]] — the batch entry
+    * IS build + serve — so a persisted index serves bit-identically to
+    * an in-session one. */
+  def ivfServeTopK(index: AnnIndex, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nprobe: Int = 4,
       score: (Column, Column) => Column = cosine): DataFrame = {
     val V = graft.functions.VecFunctions
-    val centArr = centArrOf(index.centroids)
     // probe pass: each query -> its nprobe nearest cells
     val probes = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .crossJoin(broadcast(centArr))
+      .crossJoin(broadcast(centroidRow(index.centroids)))
       .select(col("query_id"), col("q_emb"),
-        explode(V.nearest_cells_q(quant1000(col("q_emb")), col("cents"), nprobe))
+        explode(V.nearest_cells_q(quantize(col("q_emb")), col("cents"), nprobe))
           .as("cell"))
     // probe side is queries × nprobe — usually the small side, but
     // gated: a large probe frame falls back to a shuffle join
@@ -390,102 +442,151 @@ object SimilarityOps {
     cands.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Persist an IVF index under `path` — `centroids/` through the
-    * model seam's single-part layout, `assign/` as plain multi-part
-    * parquet (corpus-derived state), plus a top-level `_SUCCESS` once
-    * BOTH halves are complete (the marker `Staging.stageOnce`
-    * publication keys on). */
-  def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    Quantizers.saveModel(index.centroids, s"$path/centroids")
-    index.assignments.write.mode("overwrite").parquet(s"$path/assign")
+  // ------------------------------------------------------------------
+  // THE INDEX LIFECYCLE — one save/load, one append, one plain-index
+  // guard, one drift decision, one gated update and one drift reader
+  // for both forms of [[AnnIndex]]; the coded form only adds the
+  // codebook half and the encoding-error gate axis.
+  // ------------------------------------------------------------------
+
+  /** The `meta/` row of a persisted [[AnnIndex]]: `nlist` always; the
+    * coded geometry and the frozen qerr baseline only when coded. */
+  private[llm] case class AnnMeta(nlist: Int, m: Option[Int],
+      ksub: Option[Int], residual: Option[Boolean],
+      qerr_sum: Option[Long], qerr_rows: Option[Long])
+
+  /** Persist an [[AnnIndex]] under `path`: `centroids/`, `codebook/`
+    * (coded only) and the 1-row `meta/` through the model seam's
+    * single-part layout, `assign/` as plain multi-part parquet
+    * (corpus-derived state), then a top-level `_SUCCESS` once every
+    * half is complete (the marker `Staging.stageOnce` publication keys
+    * on). */
+  def saveAnnIndex(index: AnnIndex, path: String): Unit = {
+    saveAnnIndexParts(index, path)
     // the marker goes through the Hadoop FileSystem API (as the parquet
-    // writers above do) — a java.io.File touch is a silent no-op on any
+    // writers do) — a java.io.File touch is a silent no-op on any
     // non-local path, and a forever-missing marker would make stageOnce
     // rebuild the index on every call
     graft.sources.Staging.touchMarker(path)
   }
 
-  /** Load an index persisted by [[saveIvfIndex]]. Float arrays
-    * round-trip parquet bit-exactly, so serving from the loaded index
-    * equals serving from the in-session one (ModelSeamSpec). */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfIndex =
-    IvfIndex(Quantizers.loadModel(spark, s"$path/centroids"),
-      spark.read.parquet(s"$path/assign"))
-
-  /** INCREMENTAL index update — a corpus APPENDS between rebuilds:
-    * assign ONLY the new batch to the EXISTING centroids and union
-    * the assignment lists (the incremental-dedup banded-projection
-    * precedent applied to ANN). The assignment pass is the same
-    * map-only kernel as the build, so the update is linear in the
-    * BATCH — never a corpus rebuild. Serving after the update is
-    * IDENTICAL to serving over an index rebuilt with the SAME
-    * centroids over the grown corpus (ModelSeamSpec pins it: cell
-    * assignment is a pure per-row function of (vector, centroids)).
-    * What degrades is RECALL, not correctness: the centroids were
-    * laid out for the pre-append distribution, so as the appended
-    * fraction grows the cells partition the new mass less well —
-    * the r16 drift curve is recorded in COVERAGE; rebuild when
-    * it crosses budget.
-    *
-    * PRECONDITION: the batch's ids must be DISJOINT from the ids
-    * already in the index — an id assigned twice would serve as the
-    * same neighbor at two ranks. The caller owns the contract (an
-    * append stream naturally satisfies it); this in-memory form adds
-    * no anti-join so the update stays a pure batch-linear union. */
-  def updateIvfIndex(index: IvfIndex, batch: DataFrame, idCol: String,
-      embCol: String): IvfIndex =
-    index.copy(assignments = index.assignments.unionByName(
-      buildIvfIndex(batch, idCol, embCol,
-        centroids = Some(index.centroids)).assignments))
-
-  /** [[updateIvfIndex]] against a PERSISTED index: the new batch's
-    * assignment rows APPEND to the `assign/` half in place (plain
-    * multi-part parquet — the append-only contract the banded
-    * projection established); `centroids/` is immutable between
-    * rebuilds. Same disjoint-id precondition as [[updateIvfIndex]].
-    *
-    * NOT crash-atomic on its own: the index's top-level `_SUCCESS`
-    * is dropped before the append and recreated after, so a crash
-    * mid-append (or a concurrent completeness probe) sees the index
-    * as incomplete rather than serving a torn half-appended
-    * `assign/` dir. A caller that needs full atomicity stages the
-    * whole update under a tmp dir and publishes by rename (the
-    * `Staging.stageOnce` pattern the catalog entry uses). */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      embCol: String): Unit = {
-    val ix = loadIvfIndex(spark, path)
-    requirePlainIndex(ix, "appendToIvfIndex")
-    graft.sources.Staging.withMarkerDropped(path) {
-      buildIvfIndex(batch, idCol, embCol, centroids = Some(ix.centroids))
-        .assignments.write.mode("append").parquet(s"$path/assign")
+  /** [[saveAnnIndex]] WITHOUT the completeness marker — for the gated
+    * rebuild, already inside a
+    * [[graft.sources.Staging.withMarkerDropped]] window: re-creating
+    * `_SUCCESS` mid-window let a crash between the rebuild and the
+    * drift append leave a complete-looking artifact missing its
+    * decision row (r18 ADVICE). The window's own exit restores the
+    * marker once, after everything has landed. A coded index's meta row
+    * freezes the build-time encoding-error baseline: one counter-sized
+    * aggregate over the coded rows the save has just written. */
+  private def saveAnnIndexParts(index: AnnIndex, path: String): Unit = {
+    val spark = index.centroids.sparkSession
+    import spark.implicits._
+    Quantizers.saveModel(index.centroids, s"$path/centroids")
+    index.codebook.foreach(Quantizers.saveModel(_, s"$path/codebook"))
+    index.assignments.write.mode("overwrite").parquet(s"$path/assign")
+    val meta = index.codebook.fold(
+        AnnMeta(index.nlist, None, None, None, None, None)) { _ =>
+      val qe = spark.read.parquet(s"$path/assign")
+        .agg(sum("qerr"), count(lit(1))).head()
+      AnnMeta(index.nlist, Some(index.m), Some(index.ksub),
+        Some(index.residual), Some(if (qe.isNullAt(0)) 0L else qe.getLong(0)),
+        Some(qe.getLong(1)))
     }
+    Quantizers.saveModel(Seq(meta).toDF(), s"$path/meta")
   }
 
-  /** The in-place maintainers ([[appendToIvfIndex]],
-    * [[ivfGatedUpdate]]) operate on PLAIN indexes only — an index
-    * built with [[buildIvfIndexWithAttrs]] carries attribute columns
-    * in `assign/` that an append would silently null out (the batch
-    * has no attrs channel) and a rebuild would silently drop (the
-    * corpus is reconstructed as (neighbor_id, emb) alone), degrading
-    * every later filtered serve. Enforced, not just documented:
-    * rebuild an attr-carrying index through its original staging
-    * path instead. */
-  private def requirePlainIndex(ix: IvfIndex, op: String): Unit = {
+  /** Load an index persisted by [[saveAnnIndex]]. Codes are integers
+    * and floats round-trip parquet bit-exactly, so serving from the
+    * loaded index equals serving from the in-session one
+    * (ModelSeamSpec). */
+  def loadAnnIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String): AnnIndex = {
+    import spark.implicits._
+    val meta = Quantizers.loadModel(spark, s"$path/meta").as[AnnMeta].head()
+    AnnIndex(Quantizers.loadModel(spark, s"$path/centroids"),
+      spark.read.parquet(s"$path/assign"), meta.nlist,
+      meta.m.map(_ => Quantizers.loadModel(spark, s"$path/codebook")),
+      meta.m.getOrElse(0), meta.ksub.getOrElse(0),
+      meta.residual.getOrElse(false), meta.qerr_sum.getOrElse(-1L),
+      meta.qerr_rows.getOrElse(-1L))
+  }
+
+  /** The in-place maintainers ([[appendToAnnIndex]], [[annGatedUpdate]])
+    * operate on PLAIN indexes only — an index built with `attrCols`
+    * carries attribute columns in `assign/` that an append would
+    * silently null out (the batch has no attrs channel) and a rebuild
+    * would silently drop (the corpus is reconstructed as (id, emb)
+    * alone), degrading every later filtered serve. Enforced, not just
+    * documented: rebuild an attr-carrying index through its original
+    * staging path instead. */
+  private def requirePlainIndex(ix: AnnIndex, op: String): Unit = {
+    val plain = Seq("neighbor_id", "emb", "cell") ++
+      (if (ix.codebook.isDefined) Seq("codes", "qerr") else Nil)
     val cols = ix.assignments.columns.toSet
-    require(cols == Set("neighbor_id", "emb", "cell"),
-      s"$op requires a plain index (assign columns neighbor_id/emb/cell); " +
+    require(cols == plain.toSet,
+      s"$op requires a plain index (assign columns ${plain.mkString("/")}); " +
         s"this index carries ${cols.mkString(", ")} — attr-carrying " +
         "indexes must be rebuilt through their staging path")
   }
 
+  /** `corpus` built with `ix`'s geometry — under `ix`'s own model when
+    * `keepModel` (an update batch: assignment and codes are pure per-row
+    * functions of (vector, model)), else under a fresh hash-order model
+    * (a rebuild). */
+  private def buildLike(ix: AnnIndex, corpus: DataFrame, idCol: String,
+      embCol: String, keepModel: Boolean): AnnIndex = {
+    val cents = if (keepModel) Some(ix.centroids) else None
+    ix.codebook match {
+      case None => buildIvfIndex(corpus, idCol, embCol, ix.nlist, cents)
+      case Some(cb) => buildPqIndex(corpus, idCol, embCol, ix.nlist, ix.m,
+        ix.ksub, cents, if (keepModel) Some(cb) else None, ix.residual)
+    }
+  }
+
+  /** INCREMENTAL update of a PERSISTED index — the corpus APPENDS
+    * between rebuilds: the new batch is assigned (and, when coded,
+    * encoded) under the EXISTING model and its rows append to `assign/`
+    * in place (the banded-projection append-only contract applied to
+    * ANN); `centroids/`, `codebook/` and `meta/` are immutable between
+    * rebuilds. The pass is the build's own map-only kernel projection,
+    * so the update is linear in the BATCH — never a corpus rebuild.
+    * Serving after the update is IDENTICAL to serving over an index
+    * rebuilt with the SAME model over the grown corpus (ModelSeamSpec
+    * pins it). What degrades is RECALL and COMPRESSION QUALITY, not
+    * correctness: the model was laid out for the pre-append
+    * distribution — the r16 drift curve is recorded in COVERAGE, and
+    * [[annGatedUpdate]] measures it per batch. Writes no compaction.
+    *
+    * PRECONDITION: the batch's ids must be DISJOINT from the ids
+    * already in the index — an id assigned twice would serve as the
+    * same neighbor at two ranks. The caller owns the contract (an
+    * append stream naturally satisfies it); no anti-join is added, so
+    * the update stays a pure batch-linear append.
+    *
+    * NOT crash-atomic on its own: the index's top-level `_SUCCESS` is
+    * dropped before the append and recreated after, so a crash
+    * mid-append (or a concurrent completeness probe) sees the index as
+    * incomplete rather than serving a torn half-appended `assign/` dir.
+    * A caller that needs full atomicity stages the whole update under a
+    * tmp dir and publishes by rename (the `Staging.stageOnce` pattern
+    * the catalog entries use). */
+  def appendToAnnIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, batch: DataFrame, idCol: String,
+      embCol: String): Unit = {
+    val ix = loadAnnIndex(spark, path)
+    requirePlainIndex(ix, "appendToAnnIndex")
+    graft.sources.Staging.withMarkerDropped(path) {
+      buildLike(ix, batch, idCol, embCol, keepModel = true).assignments
+        .write.mode("append").parquet(s"$path/assign")
+    }
+  }
+
   /** Size-gated compaction of an append-maintained index's `assign/`
-    * dir (r18 VERDICT #7): every [[appendToIvfIndex]] /
-    * [[appendToPqIndex]] adds one parquet file group, so after N
-    * daily appends every serve scans N+1 small file groups — the
-    * small-file problem `Layout.compactBins` exists to fix, landed on
-    * the index seams. When the part-file count crosses `maxFiles`,
+    * dir (r18 VERDICT #7): every append adds one parquet file group,
+    * so after N daily appends every serve scans N+1 small file groups —
+    * the small-file problem `Layout.compactBins` exists to fix, landed
+    * on the index seam. When the part-file count crosses `maxFiles`,
     * the rows are read, materialized (localCheckpoint — the rewrite
     * overwrites its own input, the gated-rebuild precedent), and
     * rewritten as max(1, ceil(bytes / 64 MiB)) files. Content-only
@@ -515,69 +616,94 @@ object SimilarityOps {
     true
   }
 
-  /** The drift verdict of one gated update: the branch taken and the
-    * measured drift stat it was gated on — the appended batch's
-    * largest single-cell assignment count over the batch row count. */
-  case class IvfUpdateDecision(branch: String, maxCellCnt: Long,
-      batchRows: Long)
+  /** The verdict of one gated update: the branch taken and the measured
+    * stats it was gated on — the batch's largest single-cell assignment
+    * count over its row count (the coarse layout's failure mode) and,
+    * when the index is coded, the batch's total encoding error against
+    * the build-time baseline (the CODEBOOK's failure mode: drifted mass
+    * a stale codebook quantizes badly serves with degraded ADC quality
+    * while cell shares still look i.i.d.). The three qerr stats are -1
+    * on an uncoded index, whose `drift/` row carries nulls there. All
+    * integers, so the whole decision row is oracle-comparable. */
+  case class AnnUpdateDecision(branch: String, maxCellCnt: Long,
+      batchRows: Long, batchQerrSum: Long = -1L, baseQerrSum: Long = -1L,
+      baseRows: Long = -1L)
 
-  /** Measure an incoming batch's DRIFT against an index and gate
-    * append vs rebuild — the consumer of the r16 drift finding
-    * (append stays recall-flat on i.i.d. arrivals but the centroids
-    * were laid out for the pre-append distribution, so concentrated
-    * new mass degrades cell balance). The drift stat is the batch's
-    * max single-cell share under the EXISTING centroids: the batch is
-    * assigned (the same map-only kernel an append runs anyway — the
-    * measurement is free), the per-cell histogram is ≤ nlist rows
-    * (driver-side reduce, counter-sized), and the gate fires rebuild
-    * when maxCellCnt·shareDen ≥ batchRows·shareNum (default ≥ 1/2: an
-    * i.i.d. batch spreads like the corpus — ≤ 13% on the demo corpora
-    * at every SF — while drifted mass concentrating in one cell
-    * crosses half immediately). Integer arithmetic only, so the stat
-    * itself is oracle-comparable. Returns the decision plus the
-    * already-computed batch assignments (an append reuses them). */
-  def ivfUpdateDecision(index: IvfIndex, batch: DataFrame, idCol: String,
-      embCol: String, shareNum: Long = 1, shareDen: Long = 2)
-      : (IvfUpdateDecision, DataFrame) = {
-    require(shareNum > 0 && shareDen > 0)
-    val assign = buildIvfIndex(batch, idCol, embCol,
-      centroids = Some(index.centroids)).assignments
-    val hist = assign.groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .agg(max("cnt").as("mx"), sum("cnt").as("tot")).head()
-    require(!hist.isNullAt(0), "gated update needs a non-empty batch")
-    val (mx, tot) = (hist.getLong(0), hist.getLong(1))
-    val branch = if (BigInt(mx) * shareDen >= BigInt(tot) * shareNum)
-      "rebuild" else "append"
-    (IvfUpdateDecision(branch, mx, tot), assign)
+  /** Measure an incoming batch's DRIFT against an index and gate append
+    * vs rebuild — the consumer of the r16 drift finding (append stays
+    * recall-flat on i.i.d. arrivals, but the model was laid out for the
+    * pre-append distribution). The batch is assigned (and encoded)
+    * under the EXISTING model — the pass an append runs anyway,
+    * materialized once, so the measurement is free and an append reuses
+    * the rows; the per-cell histogram is ≤ nlist rows. Rebuild fires
+    * when EITHER
+    *   - cell share: the batch's max single-cell count is ≥ 1/2 of its
+    *     rows (an i.i.d. batch spreads like the corpus — ≤ 13% on the
+    *     demo corpora at every SF — while drifted mass concentrating in
+    *     one cell crosses half immediately), or
+    *   - coded indexes only, encoding-error growth: the batch's MEAN
+    *     qerr is ≥ 2× the build-time baseline mean, cross-multiplied in
+    *     BigInt so the gate stays integer-exact:
+    *     batchQerrSum·baseRows ≥ 2·baseQerrSum·batchRows.
+    * Returns the decision plus the batch's rows. */
+  private def updateDecision(ix: AnnIndex, batch: DataFrame,
+      idCol: String, embCol: String): (AnnUpdateDecision, DataFrame) = {
+    val coded = ix.codebook.isDefined
+    require(!coded || ix.qerrRows > 0,
+      "gated update of a coded index needs a persisted qerr baseline " +
+        "(saveAnnIndex writes it)")
+    val rows = buildLike(ix, batch, idCol, embCol, keepModel = true)
+      .assignments.localCheckpoint() // measured once, appended as-is
+    val st = rows.groupBy("cell").agg(count(lit(1)).as("cnt"),
+        (if (coded) sum("qerr") else lit(0L)).as("qe"))
+      .agg(max("cnt"), sum("cnt"), sum("qe")).head()
+    require(!st.isNullAt(0), "gated update needs a non-empty batch")
+    val (mx, tot, qes) = (st.getLong(0), st.getLong(1), st.getLong(2))
+    // degenerate baseline guard (r18 ADVICE): a perfectly encodable
+    // base corpus freezes qerrSum = 0, making the cross-multiplied
+    // comparison trivially true for EVERY batch (0 >= 0) — including
+    // one with zero encoding error. The axis then fires only when the
+    // batch actually encodes with error (any error is infinite growth
+    // over a zero baseline).
+    val qerrFires = coded && (
+      if (ix.qerrSum == 0L) qes > 0L
+      else BigInt(qes) * ix.qerrRows >= BigInt(2) * ix.qerrSum * tot)
+    val branch =
+      if (BigInt(mx) * 2 >= tot || qerrFires) "rebuild" else "append"
+    (if (coded) AnnUpdateDecision(branch, mx, tot, qes, ix.qerrSum,
+      ix.qerrRows) else AnnUpdateDecision(branch, mx, tot), rows)
   }
 
-  /** Drift-GATED update of a PERSISTED index — the measured-scalar
-    * gate shape (q_ann_filtered_topk, skewGatedJoin) applied to the
-    * index lifecycle: [[ivfUpdateDecision]] measures the batch, then
+  /** Drift-GATED update of a PERSISTED index — the measured-scalar gate
+    * shape (q_ann_filtered_topk, skewGatedJoin) applied to the index
+    * lifecycle: [[updateDecision]] measures the batch, then
     *
-    *  - `append`: the batch's assignment rows append in place (the
-    *    [[appendToIvfIndex]] path — centroids immutable);
-    *  - `rebuild`: FRESH hash-order centroids over the grown corpus
-    *    (reconstructed from the assignment rows ∪ the batch — the
-    *    assignments carry the vectors) and both halves rewritten.
+    *  - `append`: the measured rows append in place (the
+    *    [[appendToAnnIndex]] path — model and baseline immutable), and
+    *    `assign/` is compacted once it holds more than `maxAssignFiles`
+    *    part files (0 turns compaction off);
+    *  - `rebuild`: a FRESH hash-order model of the index's own geometry
+    *    (read from `meta/`) over the grown corpus — reconstructed from
+    *    the assignment rows ∪ the batch, since the rows carry the
+    *    vectors — with every half rewritten and, when coded, the qerr
+    *    baseline re-frozen at the new build.
     *
-    * Either way the decision row (branch, max_cell_cnt, batch_rows)
-    * APPENDS to the artifact's `drift/` half — the index carries its
-    * own drift history, so a later consumer can audit every gate call
-    * without re-measuring. Same crash-atomicity contract as
-    * [[appendToIvfIndex]] (marker dropped during the mutation), same
-    * disjoint-id precondition on append. */
-  def ivfGatedUpdate(spark: org.apache.spark.sql.SparkSession,
+    * Either way the decision row (branch, max_cell_cnt, batch_rows,
+    * batch_qerr_sum, base_qerr_sum, base_rows — the last three null on
+    * an uncoded index) APPENDS to the artifact's `drift/` half, so the
+    * index carries its own drift history and a later consumer can audit
+    * every gate call without re-measuring. Crash contract and
+    * disjoint-id precondition as [[appendToAnnIndex]]; the marker comes
+    * back once, after the drift row has landed. */
+  def annGatedUpdate(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, embCol: String,
-      shareNum: Long = 1, shareDen: Long = 2,
-      nlist: Int = 16, maxAssignFiles: Int = 16): IvfUpdateDecision = {
-    val ix = loadIvfIndex(spark, path)
-    requirePlainIndex(ix, "ivfGatedUpdate")
-    val (d, batchAssign) =
-      ivfUpdateDecision(ix, batch, idCol, embCol, shareNum, shareDen)
+      maxAssignFiles: Int = 16): AnnUpdateDecision = {
+    val ix = loadAnnIndex(spark, path)
+    requirePlainIndex(ix, "annGatedUpdate")
+    val (d, rows) = updateDecision(ix, batch, idCol, embCol)
     graft.sources.Staging.withMarkerDropped(path) {
       if (d.branch == "append") {
-        batchAssign.write.mode("append").parquet(s"$path/assign")
+        rows.write.mode("append").parquet(s"$path/assign")
         compactAssignDir(spark, path, maxAssignFiles)
       } else {
         // localCheckpoint: the rebuild OVERWRITES the assign/ dir its
@@ -586,21 +712,23 @@ object SimilarityOps {
           .select(col("neighbor_id").as(idCol), col("emb").as(embCol))
           .unionByName(batch.select(col(idCol), col(embCol)))
           .localCheckpoint()
-        val fresh = buildIvfIndex(grown, idCol, embCol, nlist)
-        Quantizers.saveModel(fresh.centroids, s"$path/centroids")
-        fresh.assignments.write.mode("overwrite").parquet(s"$path/assign")
+        saveAnnIndexParts(
+          buildLike(ix, grown, idCol, embCol, keepModel = false), path)
       }
       import spark.implicits._
-      Seq((d.branch, d.maxCellCnt, d.batchRows))
-        .toDF("branch", "max_cell_cnt", "batch_rows")
+      def qerr(v: Long) = if (ix.codebook.isDefined) Some(v) else None
+      Seq((d.branch, d.maxCellCnt, d.batchRows, qerr(d.batchQerrSum),
+          qerr(d.baseQerrSum), qerr(d.baseRows)))
+        .toDF("branch", "max_cell_cnt", "batch_rows", "batch_qerr_sum",
+          "base_qerr_sum", "base_rows")
         .write.mode("append").parquet(s"$path/drift")
     }
     d
   }
 
-  /** The drift history a [[ivfGatedUpdate]]-maintained index carries:
-    * one (branch, max_cell_cnt, batch_rows) row per gated update. */
-  def loadIvfDrift(spark: org.apache.spark.sql.SparkSession,
+  /** The drift history an [[annGatedUpdate]]-maintained index carries:
+    * one decision row per gated update. */
+  def loadAnnDrift(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(s"$path/drift")
 
   /** Filtered serve from a PREBUILT index — the other half of the
@@ -623,27 +751,12 @@ object SimilarityOps {
     * hot. With `nprobe = nlist` this degenerates to exact brute force
     * over the qualifying set (the differential the spec pins).
     */
-  def ivfServeFilteredTopK(index: IvfIndex, queries: DataFrame,
+  def ivfServeFilteredTopK(index: AnnIndex, queries: DataFrame,
       idCol: String, embCol: String, k: Int, predicate: Column,
       nprobe: Int = 8,
       score: (Column, Column) => Column = cosine): DataFrame =
     ivfServeTopK(index.copy(assignments = index.assignments.filter(predicate)),
       queries, idCol, embCol, k, nprobe, score)
-
-  /** [[buildIvfIndex]] carrying attribute columns into the assignment
-    * lists, so filtered serves can push their predicates into the
-    * persisted parquet scan. */
-  def buildIvfIndexWithAttrs(corpus: DataFrame, idCol: String,
-      embCol: String, attrCols: Seq[String], nlist: Int = 16,
-      centroids: Option[DataFrame] = None): IvfIndex = {
-    val base = buildIvfIndex(corpus, idCol, embCol, nlist, centroids)
-    if (attrCols.isEmpty) base
-    else {
-      val attrs = corpus.select(
-        (col(idCol).as("neighbor_id") +: attrCols.map(col)): _*)
-      base.copy(assignments = base.assignments.join(attrs, "neighbor_id"))
-    }
-  }
 
   /** Filtered ANN — attribute predicate + vector top-k, the shape
     * production vector search almost always takes ("top-k among rows
@@ -719,27 +832,8 @@ object SimilarityOps {
   def clusterSample(corpus: DataFrame, idCol: String, embCol: String,
       quota: Int, nlist: Int = 16,
       centroids: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse {
-      corpus.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-        .orderBy(col("cell").bitwiseAND(lit(2147483647L)) * lit(2654435761L)
-          % lit(1000000007L), col("cell"))
-        .limit(nlist)
-    }
-    val V = graft.functions.VecFunctions
-    def quant(c: Column) =
-      transform(c, x => floor(x.cast("double") * 1000).cast("long"))
-    val centArr = cents
-      .agg(collect_list(struct(col("cell"), col("centroid"))).as("raw"))
-      .select(transform(col("raw"), c => {
-        val cq = quant(c("centroid"))
-        struct(c("cell").cast("long").as("cell"), cq.as("cq"),
-          V.dot_long(cq, cq).as("cnq"))
-      }).as("cents"))
-    val assigned = corpus.select(col(idCol).as("vec_id"), col(embCol).as("c_emb"))
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id"),
-        element_at(V.nearest_cells_q(quant(col("c_emb")), col("cents"), 1), 1)
-          .as("cell"))
+    val assigned = buildIvfIndex(corpus, idCol, embCol, nlist, centroids)
+      .assignments.select(col("neighbor_id").as("vec_id"), col("cell"))
     val w = Window.partitionBy("cell")
       .orderBy(col("vec_id").bitwiseAND(lit(2147483647L)) * lit(2654435761L),
         col("vec_id"))
@@ -773,36 +867,22 @@ object SimilarityOps {
       embCol: String, k: Int, m: Int = 8, ksub: Int = 16,
       codebook: Option[DataFrame] = None): DataFrame = {
     val V = graft.functions.VecFunctions
-    def quant(c: Column) =
-      transform(c, x => floor(x.cast("double") * 1000).cast("long"))
-    val cb = codebook.getOrElse {
-      corpus.select(col(idCol).as("cid"), col(embCol).as("cvec"))
-        .orderBy(col("cid").bitwiseAND(lit(2147483647L)) * lit(2654435761L)
-          % lit(1000000007L), col("cid"))
-        .limit(ksub)
-    }
-    // aggregate orderBy+limit directly (keeps TakeOrderedAndProject),
-    // quantize on the single array row before broadcast — see ivfTopK.
-    // pq_encode indexes codewords by ARRAY POSITION, so a
-    // caller-provided codebook is canonicalized to cid order —
-    // collect_list order is partition-dependent, and a model loaded
-    // from storage must serve exactly like the in-session frame
-    // (ModelSeamSpec); trained codebooks already carry cid 0..ksub-1.
-    // The default hash-order path keeps its own deterministic
-    // TakeOrderedAndProject order (cids there are corpus ids).
-    val cbArr = cb
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("raw0"))
-      .select((if (codebook.isDefined) sort_array(col("raw0"))
-        else col("raw0")).as("raw"))
-      .select(transform(col("raw"), c =>
-        struct(c("cid").cast("long").as("cid"), quant(c("cvec")).as("cq"))).as("cb"))
+    // a caller-provided codebook is canonicalized to cid order (a model
+    // loaded from storage must serve exactly like the in-session frame
+    // — ModelSeamSpec; trained codebooks already carry cid
+    // 0..ksub-1). The default hash-order path keeps its own
+    // deterministic TakeOrderedAndProject order (cids there are corpus
+    // ids), which its oracle mirrors.
+    val cbArr = codebookRow(codebook.getOrElse(
+        hashOrderPick(corpus, idCol, embCol, ksub, "cid", "cvec")),
+      canonical = codebook.isDefined)
     val codes = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("emb"))
       .crossJoin(broadcast(cbArr))
       .select(col("neighbor_id"),
-        V.pq_encode(quant(col("emb")), col("cb"), m).as("codes"))
+        V.pq_encode(quantize(col("emb")), col("cb"), m).as("codes"))
     val tables = queries.select(col(idCol).as("query_id"), col(embCol).as("qemb"))
       .crossJoin(broadcast(cbArr))
-      .select(col("query_id"), V.pq_table(quant(col("qemb")), col("cb"), m).as("tbl"))
+      .select(col("query_id"), V.pq_table(quantize(col("qemb")), col("cb"), m).as("tbl"))
     val scored = graft.operators.Hints.maybeBroadcast(tables).crossJoin(codes)
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -848,56 +928,38 @@ object SimilarityOps {
     ivfPqTopKImpl(corpus, queries, idCol, embCol, k, nlist, nprobe, m,
       ksub, centroids, codebook, residual, carryVectors = false)
 
-  /** [[ivfPqTopK]] with `carryVectors`: when set, the candidate rows
-    * CARRY the full-width query and corpus vectors (`qemb`, `emb`)
-    * through the ADC stage, so a refine tier can exact-rescore with a
-    * pure projection — no join back to either table. The carried
-    * width only rides the candidate frame (|queries|·k rows), never
-    * the corpus-sized scored stream's shuffle (the window rank is the
-    * only exchange and it sees the same rows either way). */
-  private def quantL(c: Column): Column =
-    transform(c, x => floor(x.cast("double") * 1000).cast("long"))
+  /** The codebook folded into ONE array row of (cid, cq), quantized
+    * on that single row before broadcast; like [[centroidRow]], the agg
+    * consumes a default pick's orderBy+limit directly. pq_encode
+    * indexes codewords by ARRAY POSITION, collect_list order is
+    * partition-dependent, and an equidistant-codeword tie resolves by
+    * position, so `canonical` sorts the array into cid order: encode
+    * and every later table build must share ONE total order or a tie
+    * could yield different codes across paths (r17 ADVICE). */
+  private def codebookRow(cb: DataFrame, canonical: Boolean): DataFrame =
+    cb.agg(collect_list(struct(col("cid"), col("cvec"))).as("raw"))
+      .select(transform(
+        if (canonical) sort_array(col("raw")) else col("raw"),
+        c => struct(c("cid").cast("long").as("cid"),
+          quantize(c("cvec")).as("cq"))).as("cb"))
 
-  /** Deterministic model-row pick shared by the IVF-PQ defaults:
-    * hash order with id tie-break — reproducible across runs, engines
-    * and partitionings (unlike limit() on an unordered frame); the
-    * 31-bit mask keeps the multiply inside a Long for any id. */
-  private def hashOrderPick(corpus: DataFrame, idCol: String,
-      embCol: String, n: Int, cidAs: String, vecAs: String): DataFrame =
-    corpus.select(col(idCol).as(cidAs), col(embCol).as(vecAs))
-      .orderBy(col(cidAs).bitwiseAND(lit(2147483647L)) * lit(2654435761L)
-        % lit(1000000007L), col(cidAs))
-      .limit(n)
-
-  /** The ONE-row lookup frame every IVF-PQ pass scores against:
-    * quantized centroid array + codebook array folded together
+  /** The ONE-row lookup frame every IVF-PQ pass scores against: the
+    * [[centroidRow]] and the canonical [[codebookRow]] folded together
     * (two stacked BNL joins would square the plan-size estimate and
     * trip the probe-side broadcast gate into a needless sort-merge
-    * join). The codebook array is ALWAYS sorted into cid order:
-    * pq_encode indexes by array position, collect_list order is
-    * partition-dependent, and an equidistant-codeword tie resolves by
-    * position — so encode and every later table build must share ONE
-    * total order (cid) or a tie could yield different codes across
-    * paths (r17 ADVICE). Centroid array order never matters
-    * (nearest_cells_q tie-breaks on the cell VALUE). Callers
-    * broadcast the result. */
-  private def pqLookupArrays(cents: DataFrame, cb: DataFrame): DataFrame = {
-    val V = graft.functions.VecFunctions
-    val centArr = cents.select(col("cell"), col("centroid"))
-      .agg(collect_list(struct(col("cell"), col("centroid"))).as("raw"))
-      .select(transform(col("raw"), c => {
-        val cq = quantL(c("centroid"))
-        struct(c("cell").cast("long").as("cell"), cq.as("cq"),
-          V.dot_long(cq, cq).as("cnq"))
-      }).as("cents"))
-    val cbArr = cb.select(col("cid"), col("cvec"))
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("raw0"))
-      .select(sort_array(col("raw0")).as("raw"))
-      .select(transform(col("raw"), c =>
-        struct(c("cid").cast("long").as("cid"),
-          quantL(c("cvec")).as("cq"))).as("cb"))
-    centArr.crossJoin(cbArr)
-  }
+    * join). Callers broadcast the result. */
+  private def pqLookupArrays(cents: DataFrame, cb: DataFrame): DataFrame =
+    centroidRow(cents).crossJoin(codebookRow(cb, canonical = true))
+
+  /** An IVF-PQ model: the given centroids/codebook, or the default
+    * hash-order picks of `nlist` centroids and `ksub` codewords. */
+  private def pqModel(corpus: DataFrame, idCol: String, embCol: String,
+      nlist: Int, ksub: Int, centroids: Option[DataFrame],
+      codebook: Option[DataFrame]): (DataFrame, DataFrame) =
+    (centroids.map(_.select(col("cell"), col("centroid"))).getOrElse(
+        hashOrderPick(corpus, idCol, embCol, nlist, "cell", "centroid")),
+      codebook.map(_.select(col("cid"), col("cvec"))).getOrElse(
+        hashOrderPick(corpus, idCol, embCol, ksub, "cid", "cvec")))
 
   /** Encode the corpus against a (broadcast) lookup frame:
     * (neighbor_id, cell, codes[, emb]) — exactly what an IVF-PQ index
@@ -909,13 +971,13 @@ object SimilarityOps {
       lookups: DataFrame, m: Int, residual: Boolean,
       carryEmb: Boolean, qerrKsub: Int = 0): DataFrame = {
     val V = graft.functions.VecFunctions
-    val qe = quantL(col("emb"))
+    val qe = quantize(col("emb"))
     val cell = element_at(V.nearest_cells_q(qe, col("cents"), 1), 1)
     val enc = if (residual) V.residual_q(qe, col("cents"), cell) else qe
     val codes = V.pq_encode(enc, col("cb"), m)
     // qerr = the row's ENCODING error — the ADC distance of its own
     // codes against its own vector's table (Σ_j d2(subvec_j, chosen
-    // codeword)); the PQ-specific drift stat [[pqUpdateDecision]]
+    // codeword)); the PQ-specific drift stat [[updateDecision]]
     // gates on. The duplicated `enc` stays one kernel call via
     // whole-stage subexpression elimination (same Project).
     val base = Seq(col("neighbor_id"), cell.as("cell"),
@@ -940,9 +1002,9 @@ object SimilarityOps {
     val V = graft.functions.VecFunctions
     if (!residual) {
       val base = Seq(col("query_id"),
-        explode(V.nearest_cells_q(quantL(col("qemb")), col("cents"), nprobe))
+        explode(V.nearest_cells_q(quantize(col("qemb")), col("cents"), nprobe))
           .as("cell"),
-        V.pq_table(quantL(col("qemb")), col("cb"), m).as("tbl"))
+        V.pq_table(quantize(col("qemb")), col("cb"), m).as("tbl"))
       queries.select(col(idCol).as("query_id"), col(embCol).as("qemb"))
         .crossJoin(lookups)
         .select((if (carryQemb) base :+ col("qemb") else base): _*)
@@ -950,10 +1012,10 @@ object SimilarityOps {
       queries.select(col(idCol).as("query_id"), col(embCol).as("qemb"))
         .crossJoin(lookups)
         .select(col("query_id"), col("qemb"), col("cents"), col("cb"),
-          explode(V.nearest_cells_q(quantL(col("qemb")), col("cents"), nprobe))
+          explode(V.nearest_cells_q(quantize(col("qemb")), col("cents"), nprobe))
             .as("cell"))
         .select((Seq(col("query_id"), col("cell"),
-          V.pq_table(V.residual_q(quantL(col("qemb")), col("cents"), col("cell")),
+          V.pq_table(V.residual_q(quantize(col("qemb")), col("cents"), col("cell")),
             col("cb"), m).as("tbl")) ++
           (if (carryQemb) Seq(col("qemb")) else Nil)): _*)
   }
@@ -986,17 +1048,21 @@ object SimilarityOps {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
+  /** [[ivfPqTopK]] with `carryVectors`: when set, the candidate rows
+    * CARRY the full-width query and corpus vectors (`qemb`, `emb`)
+    * through the ADC stage, so a refine tier can exact-rescore with a
+    * pure projection — no join back to either table. The carried
+    * width only rides the candidate frame (|queries|·k rows), never
+    * the corpus-sized scored stream's shuffle (the window rank is the
+    * only exchange and it sees the same rows either way). */
   private def ivfPqTopKImpl(corpus: DataFrame, queries: DataFrame,
       idCol: String, embCol: String, k: Int, nlist: Int, nprobe: Int,
       m: Int, ksub: Int,
       centroids: Option[DataFrame],
       codebook: Option[DataFrame],
       residual: Boolean, carryVectors: Boolean): DataFrame = {
-    val cents = centroids.map(_.select(col("cell"), col("centroid")))
-      .getOrElse(hashOrderPick(corpus, idCol, embCol, nlist, "cell",
-        "centroid"))
-    val cb = codebook.map(_.select(col("cid"), col("cvec")))
-      .getOrElse(hashOrderPick(corpus, idCol, embCol, ksub, "cid", "cvec"))
+    val (cents, cb) =
+      pqModel(corpus, idCol, embCol, nlist, ksub, centroids, codebook)
     // ALWAYS canonicalize (r17 ADVICE): ADC distances are
     // permutation-invariant, but the CODES are not — an equidistant-
     // codeword tie resolves by array position, so the fused path and
@@ -1012,49 +1078,23 @@ object SimilarityOps {
       ksub, k)
   }
 
-  // ------------------------------------------------------------------
-  // PERSISTED IVF-PQ INDEX — the SEVENTH persistence seam, closing the
-  // build-once/serve-many gap for the compressed family: the IVF index
-  // (fifth seam) persists cells but serves full-width vectors; this
-  // persists what a FAISS-style store actually keeps — coarse
-  // centroids, the PQ codebook, and the CODED corpus rows (with the
-  // full-width vector alongside as the refine store) — so serving pays
-  // the probe-side work only and the per-run corpus encode disappears.
-  // ------------------------------------------------------------------
-
-  /** A persisted IVF-PQ index: `centroids` (cell, centroid) and
-    * `codebook` (cid, cvec) are model-sized; `assignments`
-    * (neighbor_id, cell, codes, emb, qerr[, attrs…]) is the coded
-    * corpus with the full-width vector kept as the refine store and
-    * each row's ENCODING error (its own-codes ADC distance) kept as
-    * the drift gate's per-row stat; (nlist, m, ksub, residual) pin
-    * the build's geometry so serving cannot silently mismatch it.
-    * `qerrSum`/`qerrRows` are the BUILD-time encoding-error baseline
-    * (frozen between rebuilds — the reference distribution a gated
-    * update compares incoming batches against); -1 when the index
-    * was built in-session and never persisted. */
-  case class PqIndex(centroids: DataFrame, codebook: DataFrame,
-      assignments: DataFrame, nlist: Int, m: Int, ksub: Int,
-      residual: Boolean, qerrSum: Long = -1L, qerrRows: Long = -1L)
-
-  /** Build an IVF-PQ index over the corpus — the same construction
-    * [[ivfPqTopK]] runs inline (default hash-order centroid/codebook
-    * picks, or trained quantizers via `centroids`/`codebook`), with
-    * the coded rows kept as a frame instead of consumed. `attrCols`
-    * carries attribute columns into the coded rows so filtered
-    * serves can push predicates into the persisted scan (the
-    * [[buildIvfIndexWithAttrs]] move on the compressed family). */
+  /** Build a CODED (IVF-PQ) [[AnnIndex]] over the corpus — the same
+    * construction [[ivfPqTopK]] runs inline (default hash-order
+    * centroid/codebook picks, or trained quantizers via
+    * `centroids`/`codebook`), with the coded rows kept as a frame
+    * instead of consumed: each row carries its codes, its encoding
+    * error and the full-width vector as the refine store, so serving
+    * pays the probe-side work only and the per-run corpus encode
+    * disappears. `attrCols` rides into the coded rows as in
+    * [[buildIvfIndex]]. */
   def buildPqIndex(corpus: DataFrame, idCol: String, embCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16,
       centroids: Option[DataFrame] = None,
       codebook: Option[DataFrame] = None,
       residual: Boolean = false,
-      attrCols: Seq[String] = Nil): PqIndex = {
-    val cents = centroids.map(_.select(col("cell"), col("centroid")))
-      .getOrElse(hashOrderPick(corpus, idCol, embCol, nlist, "cell",
-        "centroid"))
-    val cb = codebook.map(_.select(col("cid"), col("cvec")))
-      .getOrElse(hashOrderPick(corpus, idCol, embCol, ksub, "cid", "cvec"))
+      attrCols: Seq[String] = Nil): AnnIndex = {
+    val (cents, cb) =
+      pqModel(corpus, idCol, embCol, nlist, ksub, centroids, codebook)
     // the persisted codebook frame carries no position column, so the
     // build's code positions and every later serve's table positions
     // both derive from the same total order — cid (pqLookupArrays
@@ -1062,217 +1102,11 @@ object SimilarityOps {
     val lookups = broadcast(pqLookupArrays(cents, cb))
     val coded = pqEncode(corpus, idCol, embCol, lookups, m, residual,
       carryEmb = true, qerrKsub = ksub)
-    val assigned =
-      if (attrCols.isEmpty) coded
-      else coded.join(corpus.select(
-        (col(idCol).as("neighbor_id") +: attrCols.map(col)): _*),
-        "neighbor_id")
-    PqIndex(cents, cb, assigned, nlist, m, ksub, residual)
+    AnnIndex(cents, withAttrs(coded, corpus, idCol, attrCols), nlist,
+      Some(cb), m, ksub, residual)
   }
 
-  /** Persist a [[PqIndex]] under `path`: `centroids/`, `codebook/`
-    * and the 1-row `meta/` through the model seam's single-part
-    * layout; `assign/` as plain multi-part parquet (corpus-derived);
-    * the top-level `_SUCCESS` lands once every half is complete.
-    * The meta row records the build-time encoding-error baseline
-    * (one counter-sized aggregate over the coded rows the save
-    * materializes anyway) — what [[pqGatedUpdate]] gates against. */
-  def savePqIndex(index: PqIndex, path: String): Unit = {
-    savePqIndexParts(index, path)
-    graft.sources.Staging.touchMarker(path)
-  }
-
-  /** [[savePqIndex]] WITHOUT the trailing completeness marker — for
-    * callers already inside a
-    * [[graft.sources.Staging.withMarkerDropped]] window
-    * ([[pqGatedUpdate]]'s rebuild branch): the full savePqIndex there
-    * re-created `_SUCCESS` mid-window, so a crash between the rebuild
-    * and the drift append left a complete-looking artifact missing
-    * its decision row (r18 ADVICE). The window's own exit restores
-    * the marker exactly once, after everything has landed. */
-  private[graft] def savePqIndexParts(index: PqIndex,
-      path: String): Unit = {
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    Quantizers.saveModel(index.centroids, s"$path/centroids")
-    Quantizers.saveModel(index.codebook, s"$path/codebook")
-    index.assignments.write.mode("overwrite").parquet(s"$path/assign")
-    val qe = spark.read.parquet(s"$path/assign")
-      .agg(sum("qerr"), count(lit(1))).head()
-    Quantizers.saveModel(
-      Seq((index.nlist, index.m, index.ksub, index.residual,
-        if (qe.isNullAt(0)) 0L else qe.getLong(0), qe.getLong(1)))
-        .toDF("nlist", "m", "ksub", "residual", "qerr_sum", "qerr_rows"),
-      s"$path/meta")
-  }
-
-  /** Load an index persisted by [[savePqIndex]]. Codes are integers
-    * and floats round-trip parquet bit-exactly, so serving from the
-    * loaded index equals serving from the in-session one
-    * (ModelSeamSpec). */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): PqIndex = {
-    val meta = Quantizers.loadModel(spark, s"$path/meta").head()
-    PqIndex(Quantizers.loadModel(spark, s"$path/centroids"),
-      Quantizers.loadModel(spark, s"$path/codebook"),
-      spark.read.parquet(s"$path/assign"),
-      meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getBoolean(3),
-      meta.getLong(4), meta.getLong(5))
-  }
-
-  /** The PLAIN coded-row schema the in-place PQ maintainers require —
-    * the [[requirePlainIndex]] contract on the compressed family: an
-    * attr-carrying index appended to in place would silently null its
-    * attribute columns. */
-  private def requirePlainPqIndex(ix: PqIndex, op: String): Unit = {
-    val cols = ix.assignments.columns.toSet
-    require(cols == Set("neighbor_id", "cell", "codes", "emb", "qerr"),
-      s"$op requires a plain coded index (neighbor_id/cell/codes/emb/" +
-        s"qerr); this index carries ${cols.mkString(", ")} — " +
-        "attr-carrying indexes must be rebuilt through their staging path")
-  }
-
-  /** INCREMENTAL PQ-index update — the corpus APPENDS between
-    * rebuilds: encode ONLY the new batch under the EXISTING coarse
-    * centroids AND codebook and append the coded+refine rows to
-    * `assign/` in place ([[appendToIvfIndex]] on the compressed
-    * family; `centroids/`, `codebook/` and the meta baseline stay
-    * immutable between rebuilds). Serving after the update is
-    * IDENTICAL to serving over an index rebuilt with the SAME
-    * quantizers over the grown corpus (codes are a pure per-row
-    * function of (vector, centroids, codebook) — ModelSeamSpec pins
-    * it). What degrades is COMPRESSION QUALITY, not correctness: a
-    * codebook trained on the pre-append distribution encodes drifted
-    * mass with growing ADC error — exactly the stat
-    * [[pqUpdateDecision]] measures. Same crash contract
-    * ([[graft.sources.Staging.withMarkerDropped]]) and disjoint-id
-    * precondition as the IVF append. */
-  def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      embCol: String): Unit = {
-    val ix = loadPqIndex(spark, path)
-    requirePlainPqIndex(ix, "appendToPqIndex")
-    val lookups = broadcast(pqLookupArrays(ix.centroids, ix.codebook))
-    graft.sources.Staging.withMarkerDropped(path) {
-      pqEncode(batch, idCol, embCol, lookups, ix.m, ix.residual,
-        carryEmb = true, qerrKsub = ix.ksub)
-        .write.mode("append").parquet(s"$path/assign")
-    }
-  }
-
-  /** One gated PQ update's verdict: the branch and BOTH measured
-    * drift stats — the batch's max single-cell share (the coarse
-    * layout's failure mode, shared with the IVF gate) and the batch's
-    * total encoding error against the index's build-time baseline
-    * (the CODEBOOK's failure mode: drifted mass a stale codebook
-    * quantizes badly serves with degraded ADC quality while cell
-    * shares still look i.i.d.). All integers, so the whole decision
-    * row is oracle-comparable. */
-  case class PqUpdateDecision(branch: String, maxCellCnt: Long,
-      batchRows: Long, batchQerrSum: Long, baseQerrSum: Long,
-      baseRows: Long)
-
-  /** Measure an incoming batch against a PQ index and gate append vs
-    * rebuild. The batch is encoded under the EXISTING model (the same
-    * pass an append runs — the measurement is free); rebuild fires
-    * when EITHER
-    *   - cell share: maxCellCnt·shareDen ≥ batchRows·shareNum
-    *     (default ≥ 1/2 — the [[ivfUpdateDecision]] gate), or
-    *   - encoding-error growth: the batch's MEAN qerr is ≥
-    *     qerrNum/qerrDen × the build-time baseline mean (default 2×),
-    *     compared cross-multiplied in BigInt so the whole gate stays
-    *     integer-exact: batchQerrSum·baseRows·qerrDen ≥
-    *     qerrNum·baseQerrSum·batchRows.
-    * Returns the decision plus the already-encoded batch rows (an
-    * append reuses them). */
-  def pqUpdateDecision(index: PqIndex, batch: DataFrame, idCol: String,
-      embCol: String, shareNum: Long = 1, shareDen: Long = 2,
-      qerrNum: Long = 2, qerrDen: Long = 1)
-      : (PqUpdateDecision, DataFrame) = {
-    require(shareNum > 0 && shareDen > 0 && qerrNum > 0 && qerrDen > 0)
-    require(index.qerrRows > 0,
-      "gated PQ update needs a persisted index with a qerr baseline " +
-        "(savePqIndex writes it)")
-    val lookups = broadcast(pqLookupArrays(index.centroids, index.codebook))
-    val coded = pqEncode(batch, idCol, embCol, lookups, index.m,
-      index.residual, carryEmb = true, qerrKsub = index.ksub)
-      .localCheckpoint() // measured once, appended as-is
-    val st = coded.groupBy("cell").agg(count(lit(1)).as("cnt"),
-        sum("qerr").as("qe"))
-      .agg(max("cnt").as("mx"), sum("cnt").as("tot"), sum("qe").as("qes"))
-      .head()
-    require(!st.isNullAt(0), "gated update needs a non-empty batch")
-    val (mx, tot, qes) = (st.getLong(0), st.getLong(1), st.getLong(2))
-    val cellFires = BigInt(mx) * shareDen >= BigInt(tot) * shareNum
-    // degenerate baseline guard (r18 ADVICE): a perfectly encodable
-    // base corpus freezes qerrSum = 0, making the cross-multiplied
-    // comparison trivially true for EVERY batch (0 >= 0) — including
-    // one with zero encoding error. The axis then fires only when
-    // the batch actually encodes with error (any error is infinite
-    // growth over a zero baseline).
-    val qerrFires =
-      if (index.qerrSum == 0L) qes > 0L
-      else BigInt(qes) * index.qerrRows * qerrDen >=
-        BigInt(qerrNum) * index.qerrSum * tot
-    val branch = if (cellFires || qerrFires) "rebuild" else "append"
-    (PqUpdateDecision(branch, mx, tot, qes, index.qerrSum,
-      index.qerrRows), coded)
-  }
-
-  /** Drift-GATED update of a persisted PQ index — [[ivfGatedUpdate]]
-    * on the compressed family, composing this round's two seams:
-    *
-    *  - `append`: the encoded batch rows append in place (model and
-    *    baseline immutable);
-    *  - `rebuild`: FRESH hash-order centroids AND codebook over the
-    *    grown corpus (reconstructed from the refine store ∪ the
-    *    batch), every half rewritten, the qerr baseline re-frozen at
-    *    the new build.
-    *
-    * Either way the decision row (branch + both stats) APPENDS to the
-    * artifact's `drift/` half. Crash contract and disjoint-id
-    * precondition as [[appendToPqIndex]]. */
-  def pqGatedUpdate(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, embCol: String,
-      shareNum: Long = 1, shareDen: Long = 2, qerrNum: Long = 2,
-      qerrDen: Long = 1, maxAssignFiles: Int = 16): PqUpdateDecision = {
-    val ix = loadPqIndex(spark, path)
-    requirePlainPqIndex(ix, "pqGatedUpdate")
-    val (d, coded) = pqUpdateDecision(ix, batch, idCol, embCol,
-      shareNum, shareDen, qerrNum, qerrDen)
-    graft.sources.Staging.withMarkerDropped(path) {
-      if (d.branch == "append") {
-        coded.write.mode("append").parquet(s"$path/assign")
-        compactAssignDir(spark, path, maxAssignFiles)
-      } else {
-        // localCheckpoint: the rebuild OVERWRITES the assign/ dir its
-        // own input lineage reads — materialize first
-        val grown = ix.assignments
-          .select(col("neighbor_id").as(idCol), col("emb").as(embCol))
-          .unionByName(batch.select(col(idCol), col(embCol)))
-          .localCheckpoint()
-        // Parts-only save: the full savePqIndex would re-create the
-        // completeness marker INSIDE this dropped-marker window
-        // (r18 ADVICE) — the window exit restores it once the drift
-        // row below has landed too
-        savePqIndexParts(buildPqIndex(grown, idCol, embCol, ix.nlist,
-          ix.m, ix.ksub, residual = ix.residual), path)
-      }
-      import spark.implicits._
-      Seq((d.branch, d.maxCellCnt, d.batchRows, d.batchQerrSum,
-        d.baseQerrSum, d.baseRows))
-        .toDF("branch", "max_cell_cnt", "batch_rows", "batch_qerr_sum",
-          "base_qerr_sum", "base_rows")
-        .write.mode("append").parquet(s"$path/drift")
-    }
-    d
-  }
-
-  /** The drift history a [[pqGatedUpdate]]-maintained index carries. */
-  def loadPqDrift(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = spark.read.parquet(s"$path/drift")
-
-  /** Filtered serve from a prebuilt PQ index —
+  /** Filtered serve from a prebuilt coded index —
     * [[ivfServeFilteredTopK]] on the compressed family: the predicate
     * lands BELOW the coded scan (a pushable parquet filter when the
     * index was built with `attrCols`), and only the probed cells'
@@ -1296,7 +1130,7 @@ object SimilarityOps {
     *    standard deployment mitigation, documented tradeoff).
     * Both branches emit the same schema; `bruteGateRows = 0` turns
     * the gate off (ModelSeamSpec's pure-ADC differential). */
-  def ivfPqServeFilteredTopK(index: PqIndex, queries: DataFrame,
+  def ivfPqServeFilteredTopK(index: AnnIndex, queries: DataFrame,
       idCol: String, embCol: String, k: Int, predicate: Column,
       nprobe: Int = 8, rerank: Option[Int] = None,
       bruteGateRows: Long = 1000L): DataFrame =
@@ -1307,7 +1141,7 @@ object SimilarityOps {
     * (`"brute"` | `"adc"`) and the qualifying-row count, for callers
     * that put the decision in an oracled output (the catalog entry)
     * or a measurement table. */
-  def ivfPqServeFilteredGated(index: PqIndex, queries: DataFrame,
+  def ivfPqServeFilteredGated(index: AnnIndex, queries: DataFrame,
       idCol: String, embCol: String, k: Int, predicate: Column,
       nprobe: Int = 8, rerank: Option[Int] = None,
       bruteGateRows: Long = 1000L,
@@ -1344,7 +1178,7 @@ object SimilarityOps {
         rerank), "adc", nQualifying)
   }
 
-  /** Serve top-k from a (possibly loaded) IVF-PQ index: probes score
+  /** Serve top-k from a (possibly loaded) coded index: probes score
     * only the probed cells' CODED rows by ADC — the corpus encode
     * never re-runs — and with `rerank = Some(r)` the top-`r`
     * candidates refine against the full-width vectors the index
@@ -1352,13 +1186,14 @@ object SimilarityOps {
     * to the fused [[ivfPqTopK]]/[[ivfPqRerankTopK]] over the same
     * quantizers, which is what lets the serve entry share the fused
     * oracle. */
-  def ivfPqServeTopK(index: PqIndex, queries: DataFrame, idCol: String,
+  def ivfPqServeTopK(index: AnnIndex, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nprobe: Int = 4,
       rerank: Option[Int] = None): DataFrame = {
     rerank.foreach(r => require(r >= k,
       s"rerank ($r) must be >= k ($k)"))
-    val lookups = broadcast(
-      pqLookupArrays(index.centroids, index.codebook))
+    val cb = index.codebook.getOrElse(throw new IllegalArgumentException(
+      "ADC serving needs a coded index (buildPqIndex)"))
+    val lookups = broadcast(pqLookupArrays(index.centroids, cb))
     val carry = rerank.isDefined
     val probes = pqProbes(queries, idCol, embCol, lookups, nprobe,
       index.m, index.residual, carryQemb = carry)
@@ -1431,19 +1266,13 @@ object SimilarityOps {
       queries: DataFrame, idCol: String, embCol: String,
       k: Int): DataFrame = {
     val V = graft.functions.VecFunctions
-    val quant = transform(col(embCol), x => floor(x.cast("double") * 1000).cast("long"))
-    def base(df: DataFrame, idAs: String, qAs: String, nqAs: String) =
-      df.select(col(idCol).as(idAs), quant.as(qAs))
-        .select(col(idAs), col(qAs), V.dot_long(col(qAs), col(qAs)).as(nqAs))
-    val c = base(corpus, "neighbor_id", "cq", "cnq")
-    val q = base(queries, "query_id", "qq", "qnq")
+    val c = quantNormed(corpus, idCol, embCol, "neighbor_id", "cq", "cnq")
+    val q = quantNormed(queries, idCol, embCol, "query_id", "qq", "qnq")
     val exact = graft.operators.Hints.maybeBroadcast(cands)
       .join(c, Seq("neighbor_id"))
       .join(graft.operators.Hints.maybeBroadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        when(col("qnq") === 0 || col("cnq") === 0, 0L)
-          .otherwise(floor(V.dot_long(col("qq"), col("cq")).cast("double") * lit(1e6) /
-            sqrt((col("qnq") * col("cnq")).cast("double"))).cast("long"))
+        qcosX1e6(V.dot_long(col("qq"), col("cq")), col("qnq"), col("cnq"))
           .as("score_x1e6"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score_x1e6").desc, col("neighbor_id").asc)

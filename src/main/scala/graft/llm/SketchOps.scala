@@ -1077,7 +1077,7 @@ object SketchOps {
     * `counters/` through the model seam's single-part layout (both
     * halves are catalog-sized), plus a top-level `_SUCCESS` once both
     * are complete, written through the Hadoop FileSystem API
-    * (filesystem-agnostic — the saveIvfIndex precedent). */
+    * (filesystem-agnostic — the saveAnnIndex precedent). */
   def saveTableStats(ts: TableStats, path: String): Unit = {
     Quantizers.saveModel(ts.cols, s"$path/cols")
     Quantizers.saveModel(ts.counters, s"$path/counters")

@@ -45,9 +45,9 @@ class ModelSeamSpec extends SparkSpec {
     val ix = SimilarityOps.buildIvfIndex(emb, "vec_id", "embedding",
       nlist = 8)
     val path = graft.sources.Staging.sessionTempDir("graft_ivf_index")
-    SimilarityOps.saveIvfIndex(ix, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    def serve(i: SimilarityOps.IvfIndex) =
+    SimilarityOps.saveAnnIndex(ix, path)
+    val loaded = SimilarityOps.loadAnnIndex(spark, path)
+    def serve(i: SimilarityOps.AnnIndex) =
       SimilarityOps.ivfServeTopK(i, queries, "vec_id", "embedding",
         k = 5, nprobe = 3).collect().map(_.toSeq).toSet
     val direct = SimilarityOps.ivfTopK(emb, queries, "vec_id", "embedding",
@@ -70,31 +70,27 @@ class ModelSeamSpec extends SparkSpec {
     val ix = SimilarityOps.buildIvfIndex(base, "vec_id", "embedding",
       nlist = 8)
     val path = graft.sources.Staging.sessionTempDir("graft_ivf_update")
-    SimilarityOps.saveIvfIndex(ix, path)
+    SimilarityOps.saveAnnIndex(ix, path)
     val centFiles = new java.io.File(s"$path/centroids").listFiles().toSet
     val assignBefore = new java.io.File(s"$path/assign").listFiles()
       .count(_.getName.endsWith(".parquet"))
-    SimilarityOps.appendToIvfIndex(spark, path, batch, "vec_id", "embedding")
+    SimilarityOps.appendToAnnIndex(spark, path, batch, "vec_id", "embedding")
     // append-only: centroids untouched, assign/ grew
     assert(new java.io.File(s"$path/centroids").listFiles().toSet ==
       centFiles, "centroids/ must be immutable between rebuilds")
     assert(new java.io.File(s"$path/assign").listFiles()
       .count(_.getName.endsWith(".parquet")) > assignBefore,
       "assign/ must gain the batch's part files")
-    def serve(i: SimilarityOps.IvfIndex) =
+    def serve(i: SimilarityOps.AnnIndex) =
       SimilarityOps.ivfServeTopK(i, queries, "vec_id", "embedding",
         k = 5, nprobe = 3).collect().map(_.toSeq).toSet
-    val updated = serve(SimilarityOps.loadIvfIndex(spark, path))
+    val updated = serve(SimilarityOps.loadAnnIndex(spark, path))
     // the rebuilt-same-centroids index over the grown corpus
     val rebuilt = serve(SimilarityOps.buildIvfIndex(emb, "vec_id",
       "embedding", nlist = 8, centroids = Some(ix.centroids)))
     assert(updated == rebuilt,
       "serve-after-append must equal serve-over-rebuilt (same centroids)")
     assert(updated.nonEmpty)
-    // the in-memory form agrees too
-    val inMem = serve(SimilarityOps.updateIvfIndex(ix, batch, "vec_id",
-      "embedding"))
-    assert(inMem == rebuilt)
   }
 
   test("DRIFT-GATED update (r17): an i.i.d. batch APPENDS (centroids " +
@@ -107,20 +103,20 @@ class ModelSeamSpec extends SparkSpec {
       .select("vec_id", "embedding")
     def stage(): String = {
       val path = graft.sources.Staging.sessionTempDir("graft_ivf_gated")
-      SimilarityOps.saveIvfIndex(
+      SimilarityOps.saveAnnIndex(
         SimilarityOps.buildIvfIndex(base, "vec_id", "embedding",
           nlist = 8), path)
       path
     }
-    def serve(i: SimilarityOps.IvfIndex) =
+    def serve(i: SimilarityOps.AnnIndex) =
       SimilarityOps.ivfServeTopK(i, queries, "vec_id", "embedding",
         k = 5, nprobe = 3).collect().map(_.toSeq).toSet
 
     // --- i.i.d. regime: gate stays append -------------------------
     val pIid = stage()
     val centFiles = new java.io.File(s"$pIid/centroids").listFiles().toSet
-    val dIid = SimilarityOps.ivfGatedUpdate(spark, pIid, iidBatch,
-      "vec_id", "embedding", nlist = 8)
+    val dIid = SimilarityOps.annGatedUpdate(spark, pIid, iidBatch,
+      "vec_id", "embedding")
     assert(dIid.branch == "append", s"iid branch ${dIid.branch}")
     assert(dIid.maxCellCnt * 2 < dIid.batchRows,
       "iid batch must spread below the half-share gate")
@@ -128,7 +124,7 @@ class ModelSeamSpec extends SparkSpec {
       centFiles, "append must leave centroids/ immutable")
     val baseIx = SimilarityOps.buildIvfIndex(base, "vec_id", "embedding",
       nlist = 8)
-    assert(serve(SimilarityOps.loadIvfIndex(spark, pIid)) ==
+    assert(serve(SimilarityOps.loadAnnIndex(spark, pIid)) ==
       serve(SimilarityOps.buildIvfIndex(emb, "vec_id", "embedding",
         nlist = 8, centroids = Some(baseIx.centroids))),
       "gated append must serve like the rebuilt-same-centroids index")
@@ -140,21 +136,21 @@ class ModelSeamSpec extends SparkSpec {
       .select(col("vec_id")).crossJoin(broadcast(donor))
       .select(col("vec_id"), col("demb").as("embedding"))
     val pDrift = stage()
-    val dDrift = SimilarityOps.ivfGatedUpdate(spark, pDrift, driftBatch,
-      "vec_id", "embedding", nlist = 8)
+    val dDrift = SimilarityOps.annGatedUpdate(spark, pDrift, driftBatch,
+      "vec_id", "embedding")
     assert(dDrift.branch == "rebuild", s"drift branch ${dDrift.branch}")
     assert(dDrift.maxCellCnt == dDrift.batchRows,
       "the planted batch must land in exactly one cell")
     // rebuild == a from-scratch build over the grown (drifted) corpus
     val grown = base.select("vec_id", "embedding").unionByName(driftBatch)
-    assert(serve(SimilarityOps.loadIvfIndex(spark, pDrift)) ==
+    assert(serve(SimilarityOps.loadAnnIndex(spark, pDrift)) ==
       serve(SimilarityOps.buildIvfIndex(grown, "vec_id", "embedding",
         nlist = 8)),
       "gated rebuild must serve like a fresh build over the grown corpus")
     // the artifact carries its own drift history
-    val hist = SimilarityOps.loadIvfDrift(spark, pDrift).collect()
+    val hist = SimilarityOps.loadAnnDrift(spark, pDrift).collect()
     assert(hist.length == 1 && hist.head.getString(0) == "rebuild")
-    assert(SimilarityOps.loadIvfDrift(spark, pIid).collect()
+    assert(SimilarityOps.loadAnnDrift(spark, pIid).collect()
       .map(_.getString(0)).toSeq == Seq("append"))
   }
 
@@ -162,10 +158,10 @@ class ModelSeamSpec extends SparkSpec {
       "serve == the fused build+serve, with and without the refine " +
       "tier, raw and residual encodings; meta pins the geometry") {
     val path = graft.sources.Staging.sessionTempDir("graft_pq_index")
-    SimilarityOps.savePqIndex(
+    SimilarityOps.saveAnnIndex(
       SimilarityOps.buildPqIndex(emb, "vec_id", "embedding", nlist = 8,
         m = 4, ksub = 8), path)
-    val loaded = SimilarityOps.loadPqIndex(spark, path)
+    val loaded = SimilarityOps.loadAnnIndex(spark, path)
     assert(loaded.nlist == 8 && loaded.m == 4 && loaded.ksub == 8 &&
       !loaded.residual, "meta must round-trip")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -185,10 +181,10 @@ class ModelSeamSpec extends SparkSpec {
       "persisted refine serve must equal the fused rerank")
     // residual geometry persists and serves identically too
     val pr = graft.sources.Staging.sessionTempDir("graft_pq_index_res")
-    SimilarityOps.savePqIndex(
+    SimilarityOps.saveAnnIndex(
       SimilarityOps.buildPqIndex(emb, "vec_id", "embedding", nlist = 8,
         m = 4, ksub = 8, residual = true), pr)
-    val lr = SimilarityOps.loadPqIndex(spark, pr)
+    val lr = SimilarityOps.loadAnnIndex(spark, pr)
     assert(lr.residual, "residual flag must round-trip")
     assert(rows(SimilarityOps.ivfPqServeTopK(lr, queries, "vec_id",
         "embedding", k = 3, nprobe = 3)) ==
@@ -199,14 +195,14 @@ class ModelSeamSpec extends SparkSpec {
 
   test("filtered serve from the prebuilt index: persisted == in-session; " +
       "nprobe = nlist degenerates to exact brute over the qualifying set") {
-    val ix = SimilarityOps.buildIvfIndexWithAttrs(emb, "vec_id",
-      "embedding", Seq("label"), nlist = 8)
+    val ix = SimilarityOps.buildIvfIndex(emb, "vec_id",
+      "embedding", nlist = 8, attrCols = Seq("label"))
     val path = graft.sources.Staging.sessionTempDir("graft_ivf_fserve")
-    SimilarityOps.saveIvfIndex(ix, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
+    SimilarityOps.saveAnnIndex(ix, path)
+    val loaded = SimilarityOps.loadAnnIndex(spark, path)
     val pred = col("label") % 3 =!= 0
     val sc = SimilarityOps.quantizedCosineX1e6 _
-    def serve(i: SimilarityOps.IvfIndex, np: Int) =
+    def serve(i: SimilarityOps.AnnIndex, np: Int) =
       SimilarityOps.ivfServeFilteredTopK(i, queries, "vec_id",
         "embedding", 5, pred, np, sc).collect().map(_.toSeq).toSet
     assert(serve(loaded, 3) == serve(ix, 3),
@@ -404,12 +400,13 @@ class ModelSeamSpec extends SparkSpec {
             emb, "vec_id", "embedding", nlist = 4)
           ix.assignments.join(ix.centroids, Seq("cell"))
         },
-        (m, p) => graft.llm.SimilarityOps.saveIvfIndex(
-          graft.llm.SimilarityOps.IvfIndex(
+        (m, p) => graft.llm.SimilarityOps.saveAnnIndex(
+          graft.llm.SimilarityOps.AnnIndex(
             m.select(col("cell"), col("centroid")).distinct(),
-            m.select(col("neighbor_id"), col("emb"), col("cell"))), p),
+            m.select(col("neighbor_id"), col("emb"), col("cell")),
+            nlist = 4), p),
         p => {
-          val ix = graft.llm.SimilarityOps.loadIvfIndex(spark, p)
+          val ix = graft.llm.SimilarityOps.loadAnnIndex(spark, p)
           ix.assignments.join(ix.centroids, Seq("cell"))
         }),
       // the sixth seam (r16): the table-stats artifact the join
@@ -501,11 +498,11 @@ class ModelSeamSpec extends SparkSpec {
     val ix = SimilarityOps.buildPqIndex(base, "vec_id", "embedding",
       nlist = 8, m = 4, ksub = 8)
     val path = graft.sources.Staging.sessionTempDir("graft_pq_update")
-    SimilarityOps.savePqIndex(ix, path)
+    SimilarityOps.saveAnnIndex(ix, path)
     val metaBefore = java.nio.file.Files.readAllBytes(
       new java.io.File(s"$path/meta").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath).toSeq
-    SimilarityOps.appendToPqIndex(spark, path, batch, "vec_id",
+    SimilarityOps.appendToAnnIndex(spark, path, batch, "vec_id",
       "embedding")
     val metaAfter = java.nio.file.Files.readAllBytes(
       new java.io.File(s"$path/meta").listFiles()
@@ -514,13 +511,13 @@ class ModelSeamSpec extends SparkSpec {
       "meta (geometry + qerr baseline) must be immutable across appends")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    val updated = SimilarityOps.loadPqIndex(spark, path)
+    val updated = SimilarityOps.loadAnnIndex(spark, path)
     val served = rows(SimilarityOps.ivfPqServeTopK(updated, queries,
       "vec_id", "embedding", k = 3, nprobe = 3, rerank = Some(8)))
     // rebuilt with the SAME quantizers over the grown corpus
     val rebuilt = SimilarityOps.buildPqIndex(emb, "vec_id", "embedding",
       nlist = 8, m = 4, ksub = 8, centroids = Some(ix.centroids),
-      codebook = Some(ix.codebook))
+      codebook = ix.codebook)
     assert(served == rows(SimilarityOps.ivfPqServeTopK(rebuilt, queries,
       "vec_id", "embedding", k = 3, nprobe = 3, rerank = Some(8))),
       "serve-after-append must equal serve-over-rebuilt (same model)")
@@ -534,7 +531,7 @@ class ModelSeamSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 4 =!= 0)
     def stage(): String = {
       val path = graft.sources.Staging.sessionTempDir("graft_pq_gated")
-      SimilarityOps.savePqIndex(SimilarityOps.buildPqIndex(base,
+      SimilarityOps.saveAnnIndex(SimilarityOps.buildPqIndex(base,
         "vec_id", "embedding", nlist = 8, m = 4, ksub = 8), path)
       path
     }
@@ -542,7 +539,7 @@ class ModelSeamSpec extends SparkSpec {
     val pIid = stage()
     val iidBatch = emb.filter(col("vec_id") % 4 === 0)
       .select("vec_id", "embedding")
-    val dIid = SimilarityOps.pqGatedUpdate(spark, pIid, iidBatch,
+    val dIid = SimilarityOps.annGatedUpdate(spark, pIid, iidBatch,
       "vec_id", "embedding")
     assert(dIid.branch == "append", s"iid batch must append: $dIid")
     assert(BigInt(dIid.batchQerrSum) * dIid.baseRows <
@@ -556,7 +553,7 @@ class ModelSeamSpec extends SparkSpec {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double") * 3)
           .as("embedding"))
-    val dDrift = SimilarityOps.pqGatedUpdate(spark, pDrift, driftBatch,
+    val dDrift = SimilarityOps.annGatedUpdate(spark, pDrift, driftBatch,
       "vec_id", "embedding")
     assert(dDrift.branch == "rebuild", s"scaled batch must rebuild: $dDrift")
     assert(BigInt(dDrift.maxCellCnt) * 2 < BigInt(dDrift.batchRows),
@@ -566,10 +563,10 @@ class ModelSeamSpec extends SparkSpec {
       s"the qerr axis must be what fired: $dDrift")
     // the rebuild re-froze the baseline over the grown corpus and the
     // drift history carries both decisions' stats
-    val reloaded = SimilarityOps.loadPqIndex(spark, pDrift)
+    val reloaded = SimilarityOps.loadAnnIndex(spark, pDrift)
     assert(reloaded.qerrRows == emb.count(),
       "rebuild must re-freeze the qerr baseline over the grown corpus")
-    assert(SimilarityOps.loadPqDrift(spark, pDrift).count() == 1L)
+    assert(SimilarityOps.loadAnnDrift(spark, pDrift).count() == 1L)
     // serve after the rebuild == a fresh from-scratch build over the
     // grown (scaled) corpus
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -583,14 +580,24 @@ class ModelSeamSpec extends SparkSpec {
       rows(SimilarityOps.ivfPqServeTopK(fresh, queries, "vec_id",
         "embedding", k = 3, nprobe = 3)),
       "post-rebuild serve must equal a from-scratch build")
-    // gated updates refuse an attr-carrying index
+    // the in-place maintainers refuse an attr-carrying index, coded
+    // or not: both the append and the gated update, on both forms
     val pAttr = graft.sources.Staging.sessionTempDir("graft_pq_attr")
-    SimilarityOps.savePqIndex(SimilarityOps.buildPqIndex(base, "vec_id",
+    SimilarityOps.saveAnnIndex(SimilarityOps.buildPqIndex(base, "vec_id",
       "embedding", nlist = 8, m = 4, ksub = 8,
       attrCols = Seq("label")), pAttr)
-    intercept[IllegalArgumentException] {
-      SimilarityOps.appendToPqIndex(spark, pAttr, iidBatch, "vec_id",
-        "embedding")
+    val pIvfAttr = graft.sources.Staging.sessionTempDir("graft_ivf_attr")
+    SimilarityOps.saveAnnIndex(SimilarityOps.buildIvfIndex(base, "vec_id",
+      "embedding", nlist = 8, attrCols = Seq("label")), pIvfAttr)
+    for (p <- Seq(pAttr, pIvfAttr)) {
+      intercept[IllegalArgumentException] {
+        SimilarityOps.appendToAnnIndex(spark, p, iidBatch, "vec_id",
+          "embedding")
+      }
+      intercept[IllegalArgumentException] {
+        SimilarityOps.annGatedUpdate(spark, p, iidBatch, "vec_id",
+          "embedding")
+      }
     }
   }
 
@@ -599,15 +606,15 @@ class ModelSeamSpec extends SparkSpec {
     val ix = SimilarityOps.buildPqIndex(emb, "vec_id", "embedding",
       nlist = 8, m = 4, ksub = 8, attrCols = Seq("label"))
     val path = graft.sources.Staging.sessionTempDir("graft_pq_fserve")
-    SimilarityOps.savePqIndex(ix, path)
-    val loaded = SimilarityOps.loadPqIndex(spark, path)
+    SimilarityOps.saveAnnIndex(ix, path)
+    val loaded = SimilarityOps.loadAnnIndex(spark, path)
     val pred = col("label") % 3 =!= 0
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
     // bruteGateRows = 0: the pure-ADC differential needs the gate
     // OFF — the spec corpus's qualifying set is below the deployed
     // default, which would (correctly) serve it exactly instead
-    def serve(i: SimilarityOps.PqIndex, np: Int) =
+    def serve(i: SimilarityOps.AnnIndex, np: Int) =
       rows(SimilarityOps.ivfPqServeFilteredTopK(i, queries, "vec_id",
         "embedding", 5, pred, np, bruteGateRows = 0L))
     assert(serve(loaded, 3) == serve(ix, 3),
@@ -619,7 +626,7 @@ class ModelSeamSpec extends SparkSpec {
     val exact = rows(SimilarityOps.ivfPqTopK(emb.filter(pred), queries,
       "vec_id", "embedding", 5, nlist = 8, nprobe = 8, m = 4, ksub = 8,
       centroids = Some(loaded.centroids),
-      codebook = Some(loaded.codebook)))
+      codebook = loaded.codebook))
     assert(serve(loaded, 8) == exact,
       "full-probe filtered serve must equal exact filtered ADC")
   }
@@ -666,12 +673,12 @@ class ModelSeamSpec extends SparkSpec {
     def stage(maxFiles: Int): String = {
       val path = graft.sources.Staging.sessionTempDir(
         s"graft_pq_compact_$maxFiles")
-      SimilarityOps.savePqIndex(SimilarityOps.buildPqIndex(
+      SimilarityOps.saveAnnIndex(SimilarityOps.buildPqIndex(
         emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding",
         nlist = 8, m = 4, ksub = 8), path)
       // four disjoint i.i.d. appends — each adds one file group
       for (r <- 1 to 4) {
-        val d = SimilarityOps.pqGatedUpdate(spark, path,
+        val d = SimilarityOps.annGatedUpdate(spark, path,
           emb.filter(col("vec_id") % 5 === r), "vec_id", "embedding",
           maxAssignFiles = maxFiles)
         assert(d.branch == "append", s"round $r unexpectedly rebuilt")
@@ -687,7 +694,7 @@ class ModelSeamSpec extends SparkSpec {
       s"compacted assign/ still holds ${partCount(tight)} part files")
     // content parity: the compacted index serves bit-identically
     def serve(path: String) = SimilarityOps.ivfPqServeTopK(
-        SimilarityOps.loadPqIndex(spark, path), queries, "vec_id",
+        SimilarityOps.loadAnnIndex(spark, path), queries, "vec_id",
         "embedding", 5, nprobe = 8)
       .collect().map(_.toSeq).toSet
     assert(serve(tight) == serve(loose),
