@@ -164,7 +164,7 @@ object Quantizers {
     val rows: Array[(Long, Array[Long])] = sample
       .select(col("id").cast("long"), col("q"))
       .as[(Long, Array[Long])].collect()
-      .sortBy { case (id, _) => ((id & 2147483647L) * 2654435761L % 1000000007L, id) }
+      .sortBy { case (id, _) => (SimilarityOps.hashOrder(id), id) }
     if (rows.isEmpty) return Array.empty
     val norms = rows.map { case (_, q) => q.map(v => v * v).sum }
     // mc(i) = max quantized cosine of sample i to the chosen set so

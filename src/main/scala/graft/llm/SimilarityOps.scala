@@ -46,11 +46,19 @@ object SimilarityOps {
       .select(col(idAs), col(qAs),
         graft.functions.VecFunctions.dot_long(col(qAs), col(qAs)).as(nqAs))
 
+  private val HashMask = 2147483647L
+  private val HashMul = 2654435761L
+  private val HashMod = 1000000007L
+
   /** The order every default model pick shares: an overflow-safe Knuth
     * multiplicative hash of the id (the 31-bit mask keeps the multiply
     * inside a Long for any id); callers break ties by id. */
-  private[llm] def hashOrder(id: Column): Column =
-    id.bitwiseAND(lit(2147483647L)) * lit(2654435761L) % lit(1000000007L)
+  private[graft] def hashOrder(id: Column): Column =
+    id.bitwiseAND(lit(HashMask)) * lit(HashMul) % lit(HashMod)
+
+  /** [[hashOrder]] of one id on the driver, bit-identical to the Column
+    * form, for picks made over a collected sample. */
+  private[graft] def hashOrder(id: Long): Long = (id & HashMask) * HashMul % HashMod
 
   /** The first `n` corpus rows in [[hashOrder]] as (`idAs`, `vecAs`): a
     * deterministic pseudo-random sample, reproducible across runs,

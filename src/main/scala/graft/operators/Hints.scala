@@ -15,26 +15,23 @@ import org.apache.spark.sql.{Dataset, functions => F}
 object Hints {
 
   /** Attach a broadcast hint iff the plan-size estimate fits the
-    * session threshold (or unconditionally / never when `force` is
-    * given — used by differential specs to prove both paths equal).
+    * session threshold.
     *
     * The threshold is read from the session that owns `df`'s plan
     * (not the thread-local active session, which can differ on
     * background threads). Sizing forces an extra Catalyst
     * analyze+optimize pass of the subplan — driver-only cost, cheap
-    * for the small key-set frames this gates, but worth caching the
-    * decision if a call site ever becomes per-micro-batch hot.
-    * Streaming Datasets can't be sized this way and pass through
-    * un-hinted.
+    * for the small key-set frames this gates, but paid on every call,
+    * which is why no per-micro-batch path uses it (the commit's ZK
+    * prune is a window, `TraceEtl.pruneNonZk`). Streaming Datasets
+    * can't be sized this way and pass through un-hinted.
     */
-  def maybeBroadcast[T](df: Dataset[T], force: Option[Boolean] = None): Dataset[T] = {
-    val use = force.getOrElse {
-      !df.isStreaming && {
-        val threshold =
-          df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        threshold > 0 &&
-          df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)
-      }
+  def maybeBroadcast[T](df: Dataset[T]): Dataset[T] = {
+    val use = !df.isStreaming && {
+      val threshold =
+        df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      threshold > 0 &&
+        df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)
     }
     if (use) F.broadcast(df) else df
   }

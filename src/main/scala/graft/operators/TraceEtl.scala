@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch/micro-batch trace pipeline: normalized traces in, committed
@@ -43,33 +44,28 @@ object TraceEtl {
   }
 
   /** J1 pushed below the aggregation: transactions that never touch
-    * ecRecover/ecPairing (99%+ of traffic at mainnet scale) die at the
-    * scan via a semi-join against the set of qualifying tx keys.
-    * (Correct because `commit` emits nothing for such txs anyway —
-    * reference: trace_tree.rs:67-70.)
+    * a first-degree precompile (99%+ of traffic at mainnet scale) are
+    * dropped before the fold. (Correct because `commit` emits nothing
+    * for such txs anyway — reference: trace_tree.rs:67-70.)
     *
-    * The key set is broadcast ONLY when the plan-time size estimate of
-    * the filtered scan fits `spark.sql.autoBroadcastJoinThreshold` —
-    * at 100× mainnet scale the qualifying keys are tens of millions of
-    * rows and an unconditional broadcast hint would OOM the driver.
-    * Above the threshold the join is a plain shuffle left-semi, and
-    * AQE's runtime join selection still converts it back to broadcast
-    * if the ACTUAL built size turns out small (the estimate is the
-    * un-filtered upper bound, so the gate errs toward shuffle — the
-    * safe direction). `broadcastKeys` forces a side for differential
-    * testing (ScaleSpec proves both paths identical).
+    * A row is kept iff `max(to_address ∈ FirstDegreeFilter)` over its
+    * transaction — a window partitioned by (chain_id, transaction_hash)
+    * — is true, so the input is read once. The window's hash exchange
+    * on the transaction key is the one [[commitTraces]]' aggregation
+    * needs, so the prune adds no exchange of its own, collects no key
+    * set and broadcasts nothing; unlike a size gate, it needs no extra
+    * optimizer pass per batch. Rows with a null key belong to no
+    * transaction and are dropped. Works over any frame with
+    * `chain_id`, `transaction_hash` and `to_address` columns.
     */
-  def pruneNonZk(traces: Dataset[TraceRow],
-      broadcastKeys: Option[Boolean] = None): Dataset[TraceRow] = {
-    // no distinct(): that's a full shuffle of the key set, and the
-    // semi-join's build-side hash table collapses duplicate keys
-    // anyway — same result, one exchange fewer
-    val zkTx = traces
-      .filter(col("to_address").isin(Addresses.FirstDegreeFilter: _*))
-      .select("chain_id", "transaction_hash")
-    traces.join(Hints.maybeBroadcast(zkTx, broadcastKeys),
-        Seq("chain_id", "transaction_hash"), "left_semi")
-      .as[TraceRow](traces.encoder)
+  def pruneNonZk[T](ds: Dataset[T]): Dataset[T] = {
+    val tx = Window.partitionBy("chain_id", "transaction_hash")
+    ds.filter(col("chain_id").isNotNull && col("transaction_hash").isNotNull)
+      .withColumn("_zk",
+        max(col("to_address").isin(Addresses.FirstDegreeFilter: _*)).over(tx))
+      .filter(col("_zk"))
+      .drop("_zk")
+      .as[T](ds.encoder)
   }
 
   /** Relational pre-computation feeding the fused aggregator: the
@@ -111,18 +107,25 @@ object TraceEtl {
     )
   }
 
-  /** The fused per-tx commit: one shuffle on (chain_id, tx_hash),
-    * map-side partial aggregation, graph traversal inside `finish`.
+  /** The fused per-tx commit: [[prepare]], the [[pruneNonZk]] window,
+    * then one untyped aggregation on (chain_id, transaction_hash) with
+    * the graph traversal inside `finish`. One read of the input and one
+    * exchange: the window's hash exchange on the transaction key also
+    * serves the aggregation (a typed `groupByKey` would add a second
+    * one on its appended key columns). With [[prepare]] first, non-root
+    * rows cross that exchange without their payload strings.
+    * `prefilter = false` skips the prune, and the exchange then carries
+    * map-side partial buffers instead of prepared rows.
     */
   def commitTraces(traces: Dataset[TraceRow], prefilter: Boolean = true): Dataset[TxCommit] = {
-    val spark = traces.sparkSession
-    import spark.implicits._
-    val in = traces.filter(col("transaction_hash").isNotNull).as[TraceRow]
-    val pruned = if (prefilter) pruneNonZk(in) else in
-    prepare(pruned)
-      .groupByKey(t => (t.chain_id, t.transaction_hash))
-      .agg(new TraceTreeAggregator().toColumn.name("commit"))
-      .map(_._2)
+    val prepared = prepare(traces.filter(col("transaction_hash").isNotNull))
+    val in = if (prefilter) pruneNonZk(prepared) else prepared
+    val aggRow = Encoders.product[AggRow]
+    val commit = udaf(new TraceTreeAggregator, aggRow)
+    in.groupBy("chain_id", "transaction_hash")
+      .agg(commit(aggRow.schema.fieldNames.toSeq.map(col): _*).as("commit"))
+      .select("commit.*")
+      .as(Encoders.product[TxCommit])
   }
 
   /** Split a committed stream into the (transactions, contracts)

@@ -95,13 +95,15 @@ object TreeBuf {
   * are already codegen'd column values, so `reduce` does no string
   * work and non-root rows carry no payload strings.
   *
-  * Spark shape: ONE shuffle on (chain_id, transaction_hash) with
-  * map-side partial aggregation — the degree-graph traversal (J2/J3),
-  * degree union (J4), enrichment (J5) and closest-address pick (J6)
-  * all happen inside `finish` on the per-tx buffer, so no self-joins
-  * reach the physical plan. At 100 TB this is the minimum-exchange
-  * formulation: shuffle volume is the partially-aggregated tree
-  * buffers, not the raw traces.
+  * Spark shape: ONE shuffle on (chain_id, transaction_hash) — the
+  * degree-graph traversal (J2/J3), degree union (J4), enrichment (J5)
+  * and closest-address pick (J6) all happen inside `finish` on the
+  * per-tx buffer, so no self-joins reach the physical plan. On the
+  * pruned path the shuffle is the [[TraceEtl.pruneNonZk]] window's and
+  * carries the prepared rows (payload strings only on roots); the
+  * buffers fold after it. With `prefilter = false` the aggregation
+  * partially aggregates map-side and the shuffle carries the partial
+  * tree buffers, not the raw traces.
   *
   * Deliberate deltas from the reference (documented in SURVEY §7.1):
   * grouping is by key, not stream order, so late/reordered traces
@@ -175,12 +177,17 @@ class TraceTreeAggregator extends Aggregator[AggRow, TreeBuf, TxCommit] {
   override def finish(buf: TreeBuf): TxCommit =
     TraceTreeAggregator.commit(buf, buf.chainId.getOrElse(-1L), buf.txHash.orNull)
 
-  override def bufferEncoder: Encoder[TreeBuf] = Encoders.product[TreeBuf]
-  override def outputEncoder: Encoder[TxCommit] = Encoders.product[TxCommit]
+  override def bufferEncoder: Encoder[TreeBuf] = TraceTreeAggregator.bufEncoder
+  override def outputEncoder: Encoder[TxCommit] = TraceTreeAggregator.commitEncoder
 }
 
 object TraceTreeAggregator {
   import TraceOps._
+
+  // built once per JVM: `Encoders.product` reflects over the case class
+  // on every call, and each task's copy of the aggregation asks for both
+  private val bufEncoder: Encoder[TreeBuf] = Encoders.product[TreeBuf]
+  private val commitEncoder: Encoder[TxCommit] = Encoders.product[TxCommit]
 
   /** The reference's `commit` (trace_tree.rs:72-245) over a completed
     * per-tx buffer. Returns no transaction when the commit filter

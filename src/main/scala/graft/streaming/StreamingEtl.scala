@@ -95,7 +95,9 @@ object StreamingEtl {
     * (transactions, contracts) pair ([[TraceEtl.transform]]) to the
     * sink callback. Nothing is persisted: each action the callback
     * takes re-runs the commit over the batch, so a sink should take
-    * one (`App.sinkCommits` does).
+    * one (`App.sinkCommits` does). That one action reads the batch
+    * once: the commit's ZK prune is a window on its own exchange, which
+    * both of the sink's table branches reuse.
     */
   def microBatchCommit(rawTraces: DataFrame,
       sink: (Dataset[TransactionOut], Dataset[ContractOut], Long) => Unit) = {

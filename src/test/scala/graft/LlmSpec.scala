@@ -1421,6 +1421,21 @@ class LlmSpec extends SparkSpec {
     assert(out.count() == 9)
   }
 
+  test("hashOrder: the driver-side scalar equals the Column form") {
+    import spark.implicits._
+    // the edges of the 31-bit mask and of Long, then seeded ids
+    val rnd = new scala.util.Random(7)
+    val ids = Seq(0L, 1L, Int.MaxValue.toLong, 1L << 31, -1L, Long.MinValue, Long.MaxValue) ++
+      Seq.fill(1000)(rnd.nextLong())
+    val viaColumn = ids.toDF("id")
+      .select(col("id"), SimilarityOps.hashOrder(col("id")))
+      .as[(Long, Long)].collect()
+    assert(viaColumn.length == ids.size)
+    viaColumn.foreach { case (id, h) =>
+      assert(SimilarityOps.hashOrder(id) == h, s"id $id: scalar ≠ column $h")
+    }
+  }
+
   test("trained quantizers beat hash-order defaults; rerank beats plain ivf-pq") {
     // sf0.01 (500 vectors): large enough that k-means has structure to
     // fit, small enough to train in seconds. Everything below is exact

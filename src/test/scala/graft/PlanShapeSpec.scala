@@ -274,11 +274,11 @@ class PlanShapeSpec extends SparkSpec {
       graft.operators.TraceEtl.normalize(traces))
     val p = plan(commits.toDF())
     assert(!p.contains("CartesianProduct"), s"commit plan went cartesian:\n$p")
-    // one exchange for the typed aggregation; the J1 semi-join adds at
-    // most a broadcast (gated) or one more hash exchange above the
-    // threshold — never more
-    assert(count(p, "Exchange hashpartitioning") <= 2,
-      s"commit must keep its single data shuffle (+ at most the gated semi-join):\n$p")
+    // the J1 prune's window exchange on the transaction key is the
+    // aggregation's too: one exchange, no broadcast key set
+    assert(count(p, "Exchange hashpartitioning") == 1,
+      s"commit must keep its single data shuffle:\n$p")
+    assert(!p.contains("BroadcastExchange"), s"commit plan broadcasts:\n$p")
   }
 
   test("bm25/tfidf vocab-broadcast gate: hinted and gate-off (shuffled) " +

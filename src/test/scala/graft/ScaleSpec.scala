@@ -136,29 +136,41 @@ class ScaleSpec extends SparkSpec {
     assert(tx.head.gas_used_first_degree > 0)
   }
 
-  test("pruneNonZk: broadcast and shuffle semi-join paths identical; size gate flips") {
+  test("pruneNonZk == in-Scala ZK key filter; split txs kept whole") {
+    import graft.model._
     import graft.operators.TraceEtl
+    import spark.implicits._
     val traces = TraceEtl.normalize(
       graft.sources.SyntheticTraces.fromTpch(spark, "/root/testdata/sf0.001"))
-    def rows(b: Option[Boolean]) =
-      TraceEtl.pruneNonZk(traces, b).collect().map(_.toString).sorted.toSeq
-    val viaBroadcast = rows(Some(true))
-    val viaShuffle = rows(Some(false))
-    assert(viaBroadcast.nonEmpty)
-    assert(viaBroadcast == viaShuffle)
-    // the auto gate: key-set estimate over the threshold → shuffle
-    // left-semi (no driver-sized broadcast); under it → broadcast
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-      val shuffled = TraceEtl.pruneNonZk(traces).queryExecution.executedPlan.toString
-      assert(!shuffled.contains("BroadcastHashJoin"),
-        s"gate failed to fall back to shuffle:\n${shuffled.take(600)}")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (1L << 30).toString)
-      val bcast = TraceEtl.pruneNonZk(traces).queryExecution.executedPlan.toString
-      assert(bcast.contains("BroadcastHashJoin"),
-        s"gate failed to broadcast a small key set:\n${bcast.take(600)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    def call(hash: String, to: Option[String], root: Boolean) =
+      TraceRow(1L, hash, Some(0), Some("0xeoa"), to, Some("0"), Some("0x1234567890"),
+        None, Some(5L), root, Some(1L), Some(100L), Some("0xb"), None)
+    val planted = Seq(
+      // a ZK transaction whose root and ecRecover call land in two input partitions
+      call("0xsplit", Some("0xentry"), root = true),
+      call("0xsplit", Some(Addresses.EcRecover), root = false),
+      // a ZK transaction with a null-callee trace, kept with it
+      call("0xnullzk", Some(Addresses.EcPairing), root = true),
+      call("0xnullzk", None, root = false),
+      // a transaction whose only callee is null: no ZK call, dropped
+      call("0xnullonly", None, root = true))
+    val input = traces.unionByName(planted.toDS().coalesce(1)).repartition(4)
+    val parts = input.filter(col("transaction_hash") === "0xsplit")
+      .select(spark_partition_id()).as[Int].collect()
+    assert(parts.distinct.length == 2, s"split tx not split across partitions: $parts")
+
+    // the reference: the ZK keys collected, the rows filtered in Scala
+    val all = input.collect().toSeq
+    val zkKeys = all.filter(_.to_address.exists(Addresses.FirstDegreeFilter.contains))
+      .map(t => (t.chain_id, t.transaction_hash)).toSet
+    val expected = all.filter(t =>
+      t.transaction_hash != null && zkKeys((t.chain_id, t.transaction_hash)))
+    val got = TraceEtl.pruneNonZk(input).collect().toSeq
+    assert(expected.nonEmpty && expected.size < all.size)
+    assert(got.map(_.toString).sorted == expected.map(_.toString).sorted)
+    assert(got.count(_.transaction_hash == "0xsplit") == 2)
+    assert(got.count(_.transaction_hash == "0xnullzk") == 2)
+    assert(!got.exists(_.transaction_hash == "0xnullonly"))
   }
 
   test("bronze layer: partition pruning reaches the scan") {
@@ -210,9 +222,12 @@ class ShuffleVolumeSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     val traces = graft.operators.TraceEtl.normalize(
       graft.sources.SyntheticTraces.fromTpch(spark, "/root/testdata/sf0.01"))
-    val pruned = graft.operators.TraceEtl.pruneNonZk(
-      traces.filter(org.apache.spark.sql.functions.col("transaction_hash").isNotNull)
-        .as[graft.model.TraceRow](traces.encoder))
+    // the pruned rows, stored: the prune's own window exchange would
+    // otherwise be the commit's one exchange, carrying the unpruned rows
+    val stored = Files.createTempDirectory("graft_pruned").toString
+    graft.operators.TraceEtl.pruneNonZk(traces)
+      .write.mode("overwrite").parquet(stored)
+    val pruned = spark.read.parquet(stored).as[graft.model.TraceRow](traces.encoder)
     val inputRows = pruned.count()
 
     var shuffleRecords = 0L
